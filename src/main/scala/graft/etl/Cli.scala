@@ -1,5 +1,7 @@
 package graft.etl
 
+import org.apache.spark.sql.SparkSession
+
 import graft.GraftSession
 
 /** Batch CLI — the reference's entry contract
@@ -8,17 +10,25 @@ import graft.GraftSession
   *
   * Usage:
   *   runMain graft.etl.Cli --input in.json --app-config app.yaml \
-  *     --mapping-config mapping.yaml [--parquet-sink DIR | --sink pgwire]
+  *     --mapping-config mapping.yaml [--parquet-sink DIR]
   *
   * With `--parquet-sink` the run writes parquet tables under DIR
-  * (local/test mode). `--sink pgwire` targets Postgres per the app
+  * (local/test mode). Otherwise it targets Postgres per the app
   * config's database section over the built-in wire-protocol client
-  * (partition-parallel COPY — no JDBC driver jar needed; q312's live
-  * path). Default targets Postgres via Spark JDBC (requires the
-  * driver on the classpath).
+  * (partition-parallel COPY, no JDBC driver jar), first creating the
+  * database when `create_if_missing` is on (K3).
   */
 object Cli {
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.get("graft-etl")
+    try { val _ = run(spark, args) }
+    finally spark.stop()
+  }
+
+  /** Parse `args`, run the pipeline once on `spark` and print the
+    * summary; the session stays open for the caller.
+    */
+  def run(spark: SparkSession, args: Array[String]): Pipeline.PipelineResult = {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
     }.toMap
@@ -30,15 +40,12 @@ object Cli {
     val mapping = EtlConfig.mappingConfig(EtlConfig.loadRaw(mappingPath))
     EtlConfig.validateMappingTypes(mapping, app.runtime.typeMappings)
 
-    val spark = GraftSession.get("graft-etl")
     val sink: TableSink = opts.get("parquet-sink") match {
       case Some(dir) => new ParquetSink(dir)
-      case None if opts.get("sink").contains("pgwire") =>
-        new PgWireSink(PgConn(app.database.host, app.database.port,
-          app.database.user, app.database.name, app.database.password))
       case None =>
-        val s = new JdbcPostgresSink(app.database)
-        s.ensureDatabase() // K3: fresh deployment → CREATE DATABASE first
+        val db = app.database
+        val s = new PgWireSink(PgConn(db.host, db.port, db.user, db.name, db.password))
+        EnsureDatabase.overWire(db) // K3: fresh deployment → CREATE DATABASE first
         s
     }
     val result = Pipeline.run(spark, Ingestion.loadEnvelope(spark, input), app, mapping, sink)
@@ -60,6 +67,6 @@ object Cli {
         println(f"${r.getString(0)}%-20s ${r.getLong(1)}%9d ${r.getLong(2)}%7d ${r.getLong(3)}%11d")
       }
     }
-    spark.stop()
+    result
   }
 }

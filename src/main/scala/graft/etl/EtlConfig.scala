@@ -123,6 +123,19 @@ object EtlConfig {
 
   // --- app config ---------------------------------------------------------
 
+  /** The wire client speaks cleartext only: the libpq modes that may
+    * fall back to cleartext pass, the TLS-demanding ones are refused
+    * rather than silently downgraded.
+    */
+  private def sslmode(mode: String): String = mode match {
+    case "disable" | "allow" | "prefer" => mode
+    case "require" | "verify-ca" | "verify-full" => throw new ConfigError(
+      s"Unsupported database sslmode '$mode': the Postgres wire client " +
+        "does not speak TLS, so the connection cannot be encrypted.")
+    case other => throw new ConfigError(
+      s"Invalid database config value for 'sslmode': '$other'.")
+  }
+
   /** `config_loader.validate_app_config` + typed decode. */
   def appConfig(tree: ListMap[String, Any]): AppConfig = {
     for (s <- Seq("database", "runtime", "audit", "logging"))
@@ -200,7 +213,7 @@ object EtlConfig {
         name = str(db, "name", "Missing database config key: name"),
         user = str(db, "user", "Missing database config key: user"),
         password = str(db, "password", "Missing database config key: password"),
-        sslmode = db.get("sslmode").map(String.valueOf(_)).getOrElse("disable"),
+        sslmode = sslmode(db.get("sslmode").map(String.valueOf(_)).getOrElse("disable")),
         // absent → true, matching the reference's .get("create_if_missing", True)
         createIfMissing = db.get("create_if_missing").forall(v => String.valueOf(v).toBoolean),
         adminDb = db.get("admin_db").map(String.valueOf(_)).getOrElse("postgres")),

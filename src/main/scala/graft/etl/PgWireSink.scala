@@ -1,10 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.sources.PgWireClient
+import graft.sources.{PgWireClient, PgWireSource}
 
 /** Serializable connection descriptor for the wire-protocol plane —
   * shipped to executors, each of which opens its own connection (the
@@ -28,23 +27,18 @@ final case class PgConn(host: String, port: Int, user: String,
   * COPY-vs-INSERT is the 100 TB decision, not a convenience: COPY
   * bypasses per-statement parse/plan and is the documented PostgreSQL
   * bulk path, and partition-parallelism multiplies it by the cluster's
-  * cores. DDL (K2/K3) goes through one driver-side connection exactly
-  * like [[JdbcPostgresSink]].
+  * cores. DDL (K2/K3) goes through one driver-side connection.
   *
-  * Typed values ride as COPY text: Spark's cast-to-string rendering for
-  * dates/timestamps/booleans/decimals is accepted by Postgres' input
-  * functions, array columns land as JSON text into JSONB targets (the
-  * same convention as the other sinks).
-  *
-  * Task-retry semantics match Spark's own JDBC writer: each partition's
-  * COPY runs in its own implicit transaction, so a task that dies
-  * mid-stream disconnects and Postgres rolls the partial COPY back —
-  * the retry starts clean. The residual at-least-once window (a task
-  * dying AFTER its COPY commits but before reporting success) is the
-  * same one `write.jdbc` has; [[appendExactlyOnce]] closes it with a
-  * ledger-arbitrated commit when the caller can supply a stable batch
-  * id (plain [[append]] keeps the JDBC-writer contract for ad-hoc
-  * loads with no ledger side table).
+  * The appends are the DSv2 writer (`df.write.format(PgWireSource)`,
+  * see `PgWireWrite.scala`) — the one executor-side COPY path, with its
+  * typed COPY text rendering (arrays as JSON text into JSONB targets).
+  * Each partition's COPY runs in its own transaction, so a task that
+  * dies mid-stream disconnects and Postgres rolls the partial COPY back
+  * — the retry starts clean. Plain [[append]] keeps the `write.jdbc`
+  * contract (no ledger side table; a task dying AFTER its COPY commits
+  * but before reporting success is re-run); [[appendExactlyOnce]]
+  * closes that window with a ledger-arbitrated commit when the caller
+  * can supply a stable batch id.
   */
 final class PgWireSink(conn: PgConn) extends TableSink {
 
@@ -53,12 +47,6 @@ final class PgWireSink(conn: PgConn) extends TableSink {
   private def withClient[A](f: PgWireClient => A): A = {
     val c = conn.open()
     try f(c) finally c.close()
-  }
-
-  private def quoted(tableName: String): String = {
-    val (schema, table) = SchemaScript.splitTableName(tableName)
-    "\"" + schema.replace("\"", "\"\"") + "\".\"" +
-      table.replace("\"", "\"\"") + "\""
   }
 
   override def tableExists(tableName: String): Boolean = {
@@ -83,37 +71,15 @@ final class PgWireSink(conn: PgConn) extends TableSink {
   /** Convenience for gates/tests: run one simple statement driver-side. */
   def execute(sql: String): Unit = withClient { c => val _ = c.query(sql) }
 
-  override def append(df: DataFrame, tableName: String): Unit = {
-    // Stringify inside the plan (codegen'd) so executors only escape and
-    // frame bytes: arrays → JSON text (JSONB convention shared with the
-    // parquet/JDBC sinks), everything else → Spark's cast-to-string.
-    val stringified = df.select(df.schema.fields.map { f =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          to_json(col(f.name)).as(f.name)
-        case _ => col(f.name).cast("string").as(f.name)
-      }
-    }.toSeq: _*)
-    val cols = stringified.schema.fieldNames.toSeq
-    val colList = cols.map(c => "\"" + c.replace("\"", "\"\"") + "\"").mkString(", ")
-    val copySql = s"COPY ${quoted(tableName)} ($colList) FROM STDIN"
-    val cn = conn
-    val width = cols.length
-    stringified.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val client = cn.open()
-        try {
-          val _ = client.copyIn(copySql, rows.map { r =>
-            val vs = new Array[String](width)
-            var i = 0
-            while (i < width) { vs(i) = r.getString(i); i += 1 }
-            PgWireClient.encodeCopyRow(scala.collection.immutable.ArraySeq
-              .unsafeWrapArray(vs))
-          })
-        } finally client.close()
-      }
-    }
-  }
+  private def writer(df: DataFrame, tableName: String): DataFrameWriter[Row] =
+    df.write.format(classOf[PgWireSource].getName)
+      .option("host", conn.host).option("port", conn.port.toLong)
+      .option("user", conn.user).option("database", conn.database)
+      .option("password", conn.password)
+      .option("table", tableName).mode("append")
+
+  override def append(df: DataFrame, tableName: String): Unit =
+    writer(df, tableName).option("ledger", "false").save()
 
   /** Drop ledger entries older than `olderThanDays` — the retention
     * companion to [[appendExactlyOnce]] (the ledger otherwise grows by
@@ -128,7 +94,7 @@ final class PgWireSink(conn: PgConn) extends TableSink {
       if (!tableExists(ledgerTable)) 0L
       else {
         val r = c.query(
-          s"""DELETE FROM ${quoted(ledgerTable)}
+          s"""DELETE FROM ${PgWireSource.quoteTable(ledgerTable)}
               WHERE committed_at < now() - interval '$olderThanDays days'""")
         // CommandComplete tag is "DELETE <n>"
         r.tags.lastOption.map(_.split(" ").last.toLong).getOrElse(0L)
@@ -152,8 +118,7 @@ final class PgWireSink(conn: PgConn) extends TableSink {
     *   - a task that dies mid-COPY aborts its transaction, deleting
     *     its ledger row with it — the retry starts clean.
     *
-    * The same protocol shape as the DSv2 commit coordinator, but the
-    * arbiter is the target database, so it also holds across JOB
+    * The arbiter is the target database, so this also holds across JOB
     * re-runs: pass a caller-stable `batchId` (a Structured Streaming
     * `foreachBatch` epoch id, an orchestrator run key) and a
     * re-delivered batch dedupes per partition — PROVIDED the frame's
@@ -161,69 +126,9 @@ final class PgWireSink(conn: PgConn) extends TableSink {
     * repartition by a key column, not round-robin, if in doubt).
     */
   def appendExactlyOnce(df: DataFrame, tableName: String, batchId: String,
-      ledgerTable: String = "graft_meta.copy_ledger"): Unit = {
-    val (ledgerSchema, _) = SchemaScript.splitTableName(ledgerTable)
-    withClient { c =>
-      val _ = c.query(SchemaManager.createSchemaSql(ledgerSchema))
-      val _2 = c.query(
-        s"""CREATE TABLE IF NOT EXISTS ${quoted(ledgerTable)} (
-              batch_id TEXT NOT NULL,
-              partition_id INT NOT NULL,
-              n_rows BIGINT,
-              committed_at TIMESTAMPTZ NOT NULL DEFAULT now(),
-              PRIMARY KEY (batch_id, partition_id))""")
-    }
-    val stringified = df.select(df.schema.fields.map { f =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          to_json(col(f.name)).as(f.name)
-        case _ => col(f.name).cast("string").as(f.name)
-      }
-    }.toSeq: _*)
-    val cols = stringified.schema.fieldNames.toSeq
-    val colList = cols.map(c => "\"" + c.replace("\"", "\"\"") + "\"").mkString(", ")
-    val copySql = s"COPY ${quoted(tableName)} ($colList) FROM STDIN"
-    val ledger = quoted(ledgerTable)
-    val batchLit = "'" + batchId.replace("'", "''") + "'"
-    val cn = conn
-    val width = cols.length
-    stringified.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val client = cn.open()
-        try {
-          val claimed =
-            try {
-              val _ = client.query(
-                s"""BEGIN;
-                    INSERT INTO $ledger (batch_id, partition_id)
-                    VALUES ($batchLit, $pid)""")
-              true
-            } catch {
-              case e: PgWireClient.PgServerException if e.sqlState == "23505" =>
-                // Another attempt of THIS (batch, partition) already
-                // committed — this attempt is the duplicate; succeed
-                // without sending a row.
-                val _ = client.query("ROLLBACK")
-                false
-            }
-          if (claimed) {
-            val n = client.copyIn(copySql, rows.map { r =>
-              val vs = new Array[String](width)
-              var i = 0
-              while (i < width) { vs(i) = r.getString(i); i += 1 }
-              PgWireClient.encodeCopyRow(scala.collection.immutable.ArraySeq
-                .unsafeWrapArray(vs))
-            })
-            val _ = client.query(
-              s"""UPDATE $ledger SET n_rows = $n
-                  WHERE batch_id = $batchLit AND partition_id = $pid;
-                  COMMIT""")
-          }
-        } finally client.close()
-      }
-    }
-  }
+      ledgerTable: String = "graft_meta.copy_ledger"): Unit =
+    writer(df, tableName).option("batchId", batchId)
+      .option("ledgerTable", ledgerTable).save()
 }
 
 object PgWireSink {
@@ -232,7 +137,7 @@ object PgWireSink {
     * partition (the caller supplies disjoint predicates — hash-mod of a
     * key, range bounds), each partition COPYing its slice over its own
     * connection. Values come back as text; the caller casts. This is
-    * the wire-level analog of `spark.read.jdbc(..., predicates, ...)`.
+    * the wire-level analog of a predicate-partitioned JDBC read.
     */
   def readPartitioned(spark: SparkSession, conn: PgConn,
       partitionSqls: Seq[String], columns: Seq[String]): DataFrame = {

@@ -464,7 +464,7 @@ object ConnectorQueries {
     "q312_pg_live_roundtrip" -> QuerySpec(
       (s, dir) => {
         import graft.etl._
-        import graft.sources.LivePostgres
+        import graft.sources.{LivePostgres, PgWireSource}
         val h = LivePostgres.get()
         val conn = PgConn(h.host, h.port, h.user, h.database)
         val sink = new PgWireSink(conn)
@@ -473,7 +473,8 @@ object ConnectorQueries {
 
         // K2/K3 DDL against the real grammar; idempotent per bench pass.
         sink.execute("DROP TABLE IF EXISTS \"public\".\"orders_t\"")
-        sink.execute(s"DROP TABLE IF EXISTS ${lit2(audit.auditTable)}")
+        sink.execute(
+          s"DROP TABLE IF EXISTS ${PgWireSource.quoteTable(audit.auditTable)}")
         sink.createSchema(audit.auditSchema)
         sink.createTable(cm.targetTable, SchemaManager.buildTableColumns(
           cm, EtlDefaults.runtime.typeMappings,
@@ -752,10 +753,4 @@ object ConnectorQueries {
       },
       ConnectorQueries.roundTripOracle)
   )
-
-  /** `schema.table` → `"schema"."table"` for gate-side DROPs. */
-  private def lit2(tableName: String): String = {
-    val (sch, tbl) = graft.etl.SchemaScript.splitTableName(tableName)
-    "\"" + sch.replace("\"", "\"\"") + "\".\"" + tbl.replace("\"", "\"\"") + "\""
-  }
 }

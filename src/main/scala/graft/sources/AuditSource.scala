@@ -1,31 +1,18 @@
 package graft.sources
 
-import java.util.Properties
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-import graft.etl.DatabaseConfig
 
 /** S6 — the audit-table scan feeding the analytics layer (reference
   * `repositories/postgres_audit_repository.py:24-37`): project the audit
   * columns plus `ingested_at::date`, newest first.
   *
   * The projection/sort is a combinator over ANY DataFrame so the same
-  * logic runs against the JDBC-read production table or a parquet test
-  * double; when reading over JDBC, Catalyst pushes the column pruning
-  * into the remote query.
+  * logic runs against the production table read through [[PgWireSource]]
+  * or a parquet test double; over the wire source, Catalyst pushes the
+  * column pruning into the remote query.
   */
 object AuditSource {
-
-  def readJdbc(spark: SparkSession, db: DatabaseConfig, table: String): DataFrame = {
-    val url = s"jdbc:postgresql://${db.host}:${db.port}/${db.name}"
-    val props = new Properties()
-    props.setProperty("user", db.user)
-    props.setProperty("password", db.password)
-    props.setProperty("driver", "org.postgresql.Driver")
-    spark.read.jdbc(url, table, props)
-  }
 
   /** `fetch_ingestion_audit`: selected columns + ingestion_date cast,
     * ordered newest-first.

@@ -3,49 +3,22 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.etl.{ConfigError, HostGuard}
+import graft.etl.HostGuard
 
 /** S2/S3 — MongoDB collection source (reference `ui/mongo_ingest.py:94-105`
   * / preview `ui/mapping_editor.py:391-409`).
   *
-  * Uses the mongo-spark-connector's `format("mongodb")` (string-bound, so
-  * this compiles without the connector jar; deployments add it to the
-  * classpath). The BSON→JSON normalization the reference applies
-  * (ObjectId→str, datetime→ISO) happens on read: `_id` is cast to
-  * string and the full document is re-serialized with `to_json`, which
-  * renders timestamps in ISO form — feeding the same raw-doc transform
-  * path as the file source.
+  * The live read is the from-scratch wire client ([[readRawWire]],
+  * [[readRawWirePartitioned]]; no connector jar). The BSON→JSON
+  * normalization the reference applies (ObjectId→str, datetime→ISO)
+  * feeds the same raw-doc transform path as the file source; the
+  * frame- and extended-JSON forms of it are below.
   */
 object MongoSource {
 
-  def read(
-      spark: SparkSession,
-      uri: String,
-      database: String,
-      collection: String): DataFrame = {
-    requireLocalUri(uri)
-    spark.read
-      .format("mongodb")
-      .option("spark.mongodb.read.connection.uri", uri)
-      .option("spark.mongodb.read.database", database)
-      .option("spark.mongodb.read.collection", collection)
-      .load()
-  }
-
-  /** The collection as raw-JSON document strings (column `raw`) — the
-    * transform plane's input contract, with `_id` stringified first the
-    * way the reference's serializer does.
-    */
-  def readRaw(
-      spark: SparkSession,
-      uri: String,
-      database: String,
-      collection: String): DataFrame =
-    normalizeRaw(read(spark, uri, database, collection))
-
-  /** The BSON→raw-JSON normalization on its own (testable without a
-    * live connector): `_id` stringified, whole document re-serialized
-    * to one `raw` string column.
+  /** The BSON→raw-JSON normalization of a document-shaped frame:
+    * `_id` stringified, whole document re-serialized to one `raw`
+    * string column.
     */
   def normalizeRaw(df: DataFrame): DataFrame = {
     val normalized =
@@ -163,8 +136,8 @@ object MongoSource {
     }
   }
 
-  /** S2's LIVE leg over the from-scratch wire client — `readRaw`
-    * without any connector jar: one [[MongoWireClient]] cursor streams
+  /** S2's LIVE leg over the from-scratch wire client, without any
+    * connector jar: one [[MongoWireClient]] cursor streams
     * the collection (`find` + `getMore`, memory bounded by one server
     * batch) and each BSON document is rendered to the reference's
     * serialized JSON form ([[BsonCodec.toReferenceJson]]: ObjectId →
@@ -316,42 +289,5 @@ object MongoSource {
           if (range.fields.isEmpty) BDoc() else BDoc("_id" -> range)
         }.toVector
       }
-  }
-
-  /** S3 — 1-document preview per collection for mapping inference. */
-  def preview(
-      spark: SparkSession,
-      uri: String,
-      database: String,
-      collection: String): DataFrame =
-    readRaw(spark, uri, database, collection).limit(1)
-
-  /** F5 — the reference rejects non-local Mongo hosts
-    * (`ui/mongo_ingest.py:27-29`).
-    *
-    * RFC 3986 authority parsing: the host is what follows the LAST '@'
-    * of the authority (userinfo may contain ':' — a naive first-colon
-    * cut would let `mongodb://localhost:pw@evil.example.com/db` pass as
-    * 'localhost'). Multi-host seed lists are rejected outright: every
-    * seed would have to be vetted and the guard's policy is one local
-    * host.
-    */
-  private[sources] def requireLocalUri(uri: String): Unit = {
-    val rest =
-      if (uri.startsWith("mongodb+srv://")) uri.stripPrefix("mongodb+srv://")
-      else if (uri.startsWith("mongodb://")) uri.stripPrefix("mongodb://")
-      else throw new ConfigError(s"Unsupported MongoDB URI scheme in '$uri'")
-    val authority = rest.takeWhile(c => c != '/' && c != '?')
-    val hostList = authority.substring(authority.lastIndexOf('@') + 1)
-    val seeds = hostList.split(',')
-    if (seeds.length != 1 || hostList.isEmpty)
-      throw new ConfigError(
-        s"Exactly one MongoDB host is required (got '$hostList'); " +
-          "multi-host seed lists are not allowed")
-    val hp = seeds.head.trim
-    val host =
-      if (hp.startsWith("[")) hp.drop(1).takeWhile(_ != ']') // IPv6 literal
-      else hp.takeWhile(_ != ':')
-    HostGuard.requireLocal(host, "MongoDB")
   }
 }

@@ -130,7 +130,7 @@ object MongoWireSource {
 
   final class MongoSourceException(msg: String) extends RuntimeException(msg)
 
-  /** Serializable connection recipe (mirrors [[PgWireSource.Conn]]). */
+  /** Serializable connection recipe (mirrors [[graft.etl.PgConn]]). */
   final case class Conn(host: String, port: Int) extends Serializable {
     def open(): MongoWireClient = MongoWireClient.connect(host, port)
   }

@@ -6,9 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 /** Minimal PostgreSQL Frontend/Backend Protocol 3.0 client — simple
   * query + COPY in/out, enough to drive a live Postgres without any
-  * JDBC driver on the classpath (the container ships a Postgres 15
-  * server but no pgjdbc jar; Spark's `write.jdbc` needs
-  * `org.postgresql.Driver`, so the live half of K1 rides this).
+  * JDBC driver on the classpath (the deployment ships a Postgres 15
+  * server but no pgjdbc jar, so the live half of K1 rides this).
   *
   * Protocol per the public spec (PostgreSQL docs, "Frontend/Backend
   * Protocol", protocol-message-formats): every backend message is a

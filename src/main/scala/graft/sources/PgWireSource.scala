@@ -15,6 +15,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.etl.PgConn
+
 /** DSv2 table over the Postgres wire protocol — the live analog of
   * `spark.read.jdbc`/`df.write.jdbc` for a classpath with no JDBC
   * driver jar. One `TableProvider` serves both planes: reads through
@@ -77,22 +79,12 @@ class PgWireSource extends TableProvider {
 
 object PgWireSource {
 
-  /** Serializable connection recipe (the source cannot reuse
-    * [[graft.etl.PgConn]] without an etl→sources→etl package cycle).
-    */
-  final case class Conn(host: String, port: Int, user: String,
-      database: String, password: String) extends Serializable {
-    def open(): PgWireClient =
-      PgWireClient.connect(host, port, user, database, password,
-        params = Map("TimeZone" -> "UTC", "DateStyle" -> "ISO"))
-  }
-
-  private[sources] def connOf(o: CaseInsensitiveStringMap): Conn = {
+  private[sources] def connOf(o: CaseInsensitiveStringMap): PgConn = {
     val host = Option(o.get("host")).getOrElse("127.0.0.1")
     graft.etl.HostGuard.requireLocal(host) // F5
     require(o.containsKey("port"), "option 'port' is required")
     require(o.containsKey("table"), "option 'table' is required")
-    Conn(host, o.get("port").toInt,
+    PgConn(host, o.get("port").toInt,
       Option(o.get("user")).getOrElse("postgres"),
       Option(o.get("database")).getOrElse("postgres"),
       Option(o.get("password")).getOrElse(""))
@@ -101,7 +93,7 @@ object PgWireSource {
   private[sources] def quoteIdent(name: String): String =
     "\"" + name.replace("\"", "\"\"") + "\""
 
-  private[sources] def quoteTable(table: String): String = {
+  private[graft] def quoteTable(table: String): String = {
     val (schema, t) = graft.etl.SchemaScript.splitTableName(table)
     s"${quoteIdent(schema)}.${quoteIdent(t)}"
   }
@@ -121,7 +113,7 @@ object PgWireSource {
     * explicit collation the catalog cannot resolve reads as
     * nondeterministic (the safe direction: the filter stays in Spark).
     */
-  private[sources] def probeSchema(conn: Conn, table: String)
+  private[sources] def probeSchema(conn: PgConn, table: String)
       : (StructType, Seq[String], Seq[Boolean]) = {
     val (schema, t) = graft.etl.SchemaScript.splitTableName(table)
     val c = conn.open()
@@ -157,10 +149,10 @@ object PgWireSource {
     * scan builder declines pushdown on 'character' columns.
     */
   private val pgTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Conn, String),
+    new java.util.concurrent.ConcurrentHashMap[(PgConn, String),
       (Map[String, String], Map[String, Boolean])]()
 
-  private def pgProbeOf(conn: Conn, table: String)
+  private def pgProbeOf(conn: PgConn, table: String)
       : (Map[String, String], Map[String, Boolean]) =
     pgTypeCache.computeIfAbsent((conn, table), { key =>
       val (schema, types, collOk) = probeSchema(key._1, key._2)
@@ -168,7 +160,7 @@ object PgWireSource {
         schema.fieldNames.zip(collOk).toMap)
     })
 
-  private[sources] def pgTypesOf(conn: Conn, table: String): Map[String, String] =
+  private[sources] def pgTypesOf(conn: PgConn, table: String): Map[String, String] =
     pgProbeOf(conn, table)._1
 
   /** Column → collation is absent-or-deterministic (see [[probeSchema]]);
@@ -176,7 +168,7 @@ object PgWireSource {
     * gate. Ranges/TopN/min-max are unaffected: they ride an explicit
     * COLLATE "C", which overrides any column collation.
     */
-  private[sources] def pgCollationOkOf(conn: Conn, table: String)
+  private[sources] def pgCollationOkOf(conn: PgConn, table: String)
       : Map[String, Boolean] =
     pgProbeOf(conn, table)._2
 
@@ -188,9 +180,9 @@ object PgWireSource {
     * errs away from broadcasting — the safe direction).
     */
   private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(Conn, String), (Long, Long)]()
+    new java.util.concurrent.ConcurrentHashMap[(PgConn, String), (Long, Long)]()
 
-  private[sources] def tableStats(conn: Conn, table: String): (Long, Long) =
+  private[sources] def tableStats(conn: PgConn, table: String): (Long, Long) =
     statsCache.computeIfAbsent((conn, table), { key =>
       val (schema, t) = graft.etl.SchemaScript.splitTableName(key._2)
       val c = key._1.open()
@@ -216,9 +208,9 @@ object PgWireSource {
     * declined rather than silently reordered.
     */
   private val encodingCache =
-    new java.util.concurrent.ConcurrentHashMap[Conn, String]()
+    new java.util.concurrent.ConcurrentHashMap[PgConn, String]()
 
-  private[sources] def serverEncoding(conn: Conn): String =
+  private[sources] def serverEncoding(conn: PgConn): String =
     encodingCache.computeIfAbsent(conn, { c =>
       val client = c.open()
       try client.query("SHOW server_encoding").rows.head.head
@@ -464,7 +456,7 @@ object PgWireSource {
   }
 }
 
-final class PgWireTable(conn: PgWireSource.Conn, table: String,
+final class PgWireTable(conn: PgConn, table: String,
     tableSchema: StructType, partCol: Option[String], numParts: Int,
     lower: Option[Long], upper: Option[Long])
     extends Table with SupportsRead
@@ -491,7 +483,7 @@ final class PgWireTable(conn: PgWireSource.Conn, table: String,
 final case class PushedPgAgg(selectExprs: Seq[String],
     groupByCols: Seq[String], schema: StructType)
 
-final class PgScanBuilder(conn: PgWireSource.Conn, table: String,
+final class PgScanBuilder(conn: PgConn, table: String,
     tableSchema: StructType, partCol: Option[String], numParts: Int,
     lower: Option[Long], upper: Option[Long])
     extends ScanBuilder
@@ -790,7 +782,7 @@ final class PgScanBuilder(conn: PgWireSource.Conn, table: String,
   }
 }
 
-final class PgScan(conn: PgWireSource.Conn, table: String, out: StructType,
+final class PgScan(conn: PgConn, table: String, out: StructType,
     wheres: Seq[String], limit: Option[Int], partCol: Option[String],
     numParts: Int, lower: Option[Long], upper: Option[Long],
     agg: Option[PushedPgAgg] = None, orderBy: Seq[String] = Nil,
@@ -957,7 +949,7 @@ final class PgScan(conn: PgWireSource.Conn, table: String, out: StructType,
 
 final case class PgSqlPartition(sql: String) extends InputPartition
 
-final class PgReaderFactory(conn: PgWireSource.Conn, out: StructType)
+final class PgReaderFactory(conn: PgConn, out: StructType)
     extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {

@@ -7,9 +7,11 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
+import graft.etl.PgConn
+
 /** DSv2 write path over the Postgres wire protocol — the `SupportsWrite`
-  * half of [[PgWireTable]], promoting [[graft.etl.PgWireSink]]'s library
-  * `appendExactlyOnce` protocol to Spark's standard write surface:
+  * half of [[PgWireTable]] and the one executor-side COPY writer
+  * ([[graft.etl.PgWireSink]]'s appends delegate here):
   *
   * {{{
   * df.write.format("graft.sources.PgWireSource")
@@ -27,10 +29,8 @@ import org.apache.spark.sql.types._
   * with the same `batchId`): a duplicate claim hits unique_violation
   * BEFORE any data is streamed and the attempt no-ops. A task that dies
   * mid-COPY drops its connection; the server aborts the transaction and
-  * the ledger claim vanishes with it, so the retry starts clean — the
-  * same three-way arbitration [[graft.etl.PgWireSink.appendExactlyOnce]]
-  * proves at the wire level (PgLiveRoundTripSpec), now driven by Spark's
-  * own coordinator through `df.write`/`df.writeTo`.
+  * the ledger claim vanishes with it, so the retry starts clean (the
+  * three-way arbitration PgLiveRoundTripSpec drives at the wire level).
   *
   * `batchId` defaults to the query's own id (fresh per run): in-job
   * retries and speculation dedup, distinct jobs append independently.
@@ -41,11 +41,11 @@ import org.apache.spark.sql.types._
   * Values ride as COPY text rendered from the typed InternalRow
   * (timestamps as ISO-8601 UTC instants, decimals as plain strings,
   * bytea as `\x` hex, arrays as JSON text into JSONB targets — the same
-  * convention as the library sinks); rendering is validated against the
+  * convention as the parquet sink); rendering is validated against the
   * input schema at build() time so unsupported nesting fails at plan
   * time, not mid-COPY.
   */
-final class PgWriteBuilder(conn: PgWireSource.Conn, table: String,
+final class PgWriteBuilder(conn: PgConn, table: String,
     info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
 
   private var truncateFirst = false
@@ -75,7 +75,7 @@ final class PgWriteBuilder(conn: PgWireSource.Conn, table: String,
   }
 }
 
-final class PgWrite(conn: PgWireSource.Conn, table: String,
+final class PgWrite(conn: PgConn, table: String,
     schema: StructType, batchId: String, ledgerTable: Option[String],
     truncateFirst: Boolean = false)
     extends Write {
@@ -104,7 +104,7 @@ final class PgWrite(conn: PgWireSource.Conn, table: String,
       (if (truncateFirst) " truncate" else "")
 }
 
-final class PgStreamingWrite(conn: PgWireSource.Conn, table: String,
+final class PgStreamingWrite(conn: PgConn, table: String,
     schema: StructType, baseBatchId: String, ledgerTable: Option[String])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
@@ -128,7 +128,7 @@ final class PgStreamingWrite(conn: PgWireSource.Conn, table: String,
       messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-final case class PgStreamingDataWriterFactory(conn: PgWireSource.Conn,
+final case class PgStreamingDataWriterFactory(conn: PgConn,
     table: String, schema: StructType, baseBatchId: String,
     ledgerTable: Option[String])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
@@ -138,7 +138,7 @@ final case class PgStreamingDataWriterFactory(conn: PgWireSource.Conn,
       ledgerTable, partitionId)
 }
 
-final class PgBatchWrite(conn: PgWireSource.Conn, table: String,
+final class PgBatchWrite(conn: PgConn, table: String,
     schema: StructType, batchId: String, ledgerTable: Option[String],
     truncateFirst: Boolean = false)
     extends BatchWrite {
@@ -201,7 +201,7 @@ private[sources] object PgWriteSupport {
     * before any executor claims into it (per-partition CREATE IF NOT
     * EXISTS would race inside the claim transactions).
     */
-  def ensureLedger(conn: PgWireSource.Conn, ledgerTable: String): Unit = {
+  def ensureLedger(conn: PgConn, ledgerTable: String): Unit = {
     val (ledgerSchema, _) = graft.etl.SchemaScript.splitTableName(ledgerTable)
     val c = conn.open()
     try {
@@ -218,7 +218,7 @@ private[sources] object PgWriteSupport {
   }
 }
 
-final case class PgDataWriterFactory(conn: PgWireSource.Conn,
+final case class PgDataWriterFactory(conn: PgConn,
     table: String, schema: StructType, batchId: String,
     ledgerTable: Option[String]) extends DataWriterFactory {
   override def createWriter(partitionId: Int,
@@ -226,7 +226,7 @@ final case class PgDataWriterFactory(conn: PgWireSource.Conn,
     new PgDataWriter(conn, table, schema, batchId, ledgerTable, partitionId)
 }
 
-final class PgDataWriter(conn: PgWireSource.Conn, table: String,
+final class PgDataWriter(conn: PgConn, table: String,
     schema: StructType, batchId: String, ledgerTable: Option[String],
     partitionId: Int) extends DataWriter[InternalRow] {
 
@@ -242,8 +242,7 @@ final class PgDataWriter(conn: PgWireSource.Conn, table: String,
   private var duplicate = false
   private var started = false
 
-  /** Lazy on the first row (an empty partition never connects — the
-    * same contract as the library sink's `rows.hasNext` guard): claim
+  /** Lazy on the first row (an empty partition never connects): claim
     * the ledger slot inside BEGIN, then open the COPY stream. A lost
     * claim (23505) means another attempt of this (batch, partition)
     * already committed — swallow rows and no-op.
@@ -315,7 +314,8 @@ final class PgDataWriter(conn: PgWireSource.Conn, table: String,
 
 /** InternalRow → COPY text rendering, one converter per column, chosen
   * once from the schema (no per-row type dispatch). Conventions match
-  * the library sinks' plan-side `cast(string)`/`to_json`:
+  * Spark's plan-side `cast(string)`/`to_json` (pinned differentially by
+  * PgRenderingDifferentialSpec):
   * timestamps render as ISO-8601 UTC instants (PG's timestamptz input
   * accepts the `T`/`Z` forms), dates as `yyyy-MM-dd`, decimals as plain
   * (non-scientific) strings, booleans as true/false, bytea as `\x` hex

@@ -92,6 +92,23 @@ class EtlConfigSpec extends AnyFunSuite {
     assert(e.getMessage.contains("Invalid database config value for 'port'"))
   }
 
+  test("TLS sslmode values rejected (cleartext-only wire client); fallback modes load") {
+    def withMode(mode: String) = validAppYaml.replace(
+      "  password: p\n", s"  password: p\n  sslmode: $mode\n")
+    for (mode <- Seq("require", "verify-ca", "verify-full")) {
+      val e = intercept[ConfigError](
+        EtlConfig.appConfig(EtlConfig.loadRaw(write(withMode(mode), ".yaml"))))
+      assert(e.getMessage.contains(s"sslmode '$mode'") && e.getMessage.contains("TLS"),
+        e.getMessage)
+    }
+    assert(intercept[ConfigError](
+      EtlConfig.appConfig(EtlConfig.loadRaw(write(withMode("bogus"), ".yaml"))))
+      .getMessage.contains("'sslmode': 'bogus'"))
+    for (mode <- Seq("disable", "allow", "prefer"))
+      assert(EtlConfig.appConfig(EtlConfig.loadRaw(write(withMode(mode), ".yaml")))
+        .database.sslmode == mode)
+  }
+
   test("empty date_formats rejected") {
     val broken = validAppYaml.replace("""date_formats: ["%Y-%m-%d", "%m/%d/%Y"]""", "date_formats: []")
     val e = intercept[ConfigError](EtlConfig.appConfig(EtlConfig.loadRaw(write(broken, ".yaml"))))

@@ -12,8 +12,8 @@ import graft.SparkTestSession
 
 /** K1–K3 end-to-end statement stream: drive the FULL `Pipeline.run` →
   * DDL synthesis → batched append sequence through a statement-
-  * rendering double and assert the exact ordered SQL the JDBC sink
-  * would issue — CREATE SCHEMA, then CREATE TABLE (audit + reports +
+  * rendering double and assert the exact ordered SQL stream a Postgres
+  * sink issues — CREATE SCHEMA, then CREATE TABLE (audit + reports +
   * auto-created target), then batched INSERTs with the raw-JSON column
   * riding as a JSON string for the JSONB target (reference flow:
   * `etl_pipeline/pipeline.py:299-338` ensure-audit, `:128-284`
@@ -28,10 +28,11 @@ import graft.SparkTestSession
   */
 class JdbcStatementStreamSpec extends AnyFunSuite with SparkTestSession {
 
-  /** Renders every sink call as the SQL statement the JDBC sink would
-    * execute. `append` replicates `JdbcPostgresSink.append`'s
-    * array→to_json conversion, then renders `batchSize`-row INSERT
-    * batches in the DataFrame's column order.
+  /** Renders every sink call as the SQL statement it stands for.
+    * `append` applies the Postgres sinks' array→JSON convention (array
+    * columns land as JSON text in JSONB targets, as `PgWireSink`'s
+    * COPY rendering does), then renders `batchSize`-row INSERT batches
+    * in the DataFrame's column order.
     */
   private final class StatementCaptureSink(batchSize: Int) extends TableSink {
     val statements = ArrayBuffer.empty[String]
@@ -49,7 +50,7 @@ class JdbcStatementStreamSpec extends AnyFunSuite with SparkTestSession {
     }
 
     override def append(df: DataFrame, tableName: String): Unit = {
-      // same conversion JdbcPostgresSink.append applies before .jdbc()
+      // arrays → JSON text, the JSONB convention of the Postgres sink
       val jsonified = df.schema.fields.foldLeft(df) { (acc, f) =>
         f.dataType match {
           case _: org.apache.spark.sql.types.ArrayType =>

@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +13,24 @@ import graft.SparkTestSession
 import graft.etl._
 
 class StreamingEtlSpec extends AnyFunSuite with SparkTestSession {
+
+  /** A parquet sink that records, per append, the cached relations the
+    * appended frame's plan reads.
+    */
+  private final class CacheRecordingSink(base: String) extends TableSink {
+    val inner = new ParquetSink(base)
+    val cachedReads = ArrayBuffer.empty[Seq[InMemoryRelation]]
+    override def tableExists(tableName: String): Boolean = inner.tableExists(tableName)
+    override def createSchema(schemaName: String): Unit = inner.createSchema(schemaName)
+    override def createTable(tableName: String, columns: Seq[ColumnDef]): Unit =
+      inner.createTable(tableName, columns)
+    override def append(df: DataFrame, tableName: String): Unit = {
+      cachedReads += df.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r
+      }
+      inner.append(df, tableName)
+    }
+  }
 
   test("streaming ETL drains staged JSONL through the shared transform into the sink") {
     val staging = Files.createTempDirectory("graft-staging")
@@ -24,14 +45,22 @@ class StreamingEtlSpec extends AnyFunSuite with SparkTestSession {
       "_id" -> AttributeMapping("person_id", "integer"),
       "name" -> AttributeMapping("full_name", "text"),
       "joined" -> AttributeMapping("joined_date", "date")))
-    val sink = new ParquetSink(base)
+    val recording = new CacheRecordingSink(base)
+    val sink = recording.inner
     sink.createTable("public.people_s", Seq.empty)
 
     val q = StreamingEtl.run(
       spark, staging.toString, checkpoint, "people", cm,
-      EtlDefaults.runtime, EtlDefaults.audit, sink,
+      EtlDefaults.runtime, EtlDefaults.audit, recording,
       clock = lit("2026-01-01 00:00:00").cast("timestamp"))
     q.awaitTermination(60000)
+
+    // One micro-batch, transformed once: the target and audit write
+    // plans both read the same persisted shared projection.
+    assert(recording.cachedReads.size == 2)
+    assert(recording.cachedReads.forall(_.size == 1), recording.cachedReads)
+    val Seq(Seq(targetRead), Seq(auditRead)) = recording.cachedReads.toSeq: @unchecked
+    assert(targetRead.cacheBuilder eq auditRead.cacheBuilder)
 
     val target = sink.read(spark, "public.people_s").orderBy("person_id").collect()
     assert(target.length == 2)
