@@ -1,68 +1,159 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.io.{BufferedOutputStream, OutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.immutable.ListMap
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable
 
+import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException, JsonToken}
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.JsonNodeType
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.TempDirs
 
 /** S1/S7 — the collection-envelope JSON source, reference
   * `etl_pipeline/ingestion.py:7-30`: one JSON object keyed by collection
   * name, each value a list of document objects; anything else is an
   * InputError naming the offending collection/index.
   *
-  * The envelope format is inherently whole-file (the reference
-  * materializes it in driver memory too), so the split happens on the
-  * driver and each collection becomes a Dataset of per-document JSON
-  * strings. For 100 TB-scale ingestion use [[fromJsonLines]]: one
-  * JSONL directory per collection, read distributed by `spark.read.text`
-  * with no driver materialization — the transform plane accepts either.
+  * The envelope is read in ONE streaming pass ([[splitEnvelope]]): a
+  * Jackson parser walks it a document at a time and appends each
+  * document as one line to its collection's JSONL staging directory, so
+  * driver memory holds one document plus the current collection's part
+  * buffers, never the file. Each collection is then read by
+  * [[fromJsonLines]] in at least `defaultParallelism` splits, and the
+  * transform runs in executor tasks instead of being folded into a
+  * driver-local relation. The staging directory lives on the driver's
+  * filesystem, which every executor of graft's `local[N]` session
+  * shares; a multi-node deployment stages JSONL on shared storage and
+  * calls [[fromJsonLines]] directly.
   */
 object Ingestion {
 
   private val mapper = new ObjectMapper()
     .configure(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS, true)
 
+  /** Where a walk sends the documents of one collection occurrence. */
+  private trait Docs {
+    def add(doc: String): Unit
+    def close(): Unit = ()
+  }
+
+  /** The one envelope validator: a single pass over `p` that checks the
+    * shape and hands every document, rendered as `writeValueAsString` of
+    * its `readTree`, to the [[Docs]] that `open(ordinal, name)` returns
+    * for that key occurrence (`ordinal` is the key's first-occurrence
+    * position). It keeps whole-tree `readTree` semantics: malformed JSON
+    * anywhere wins over a shape error, and a repeated top-level key
+    * replaces the earlier value in the earlier position — so `open` must
+    * discard what an earlier occurrence of the ordinal received, and a
+    * shape error is final only once the walk ends.
+    */
+  private def walk[D <: Docs](p: JsonParser)(open: (Int, String) => D): ListMap[String, D] = {
+    val seen = mutable.LinkedHashMap.empty[String, Either[String, D]]
+    val ordinals = mutable.HashMap.empty[String, Int]
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) {
+        p.skipChildren()
+        throw new InputError("Input JSON must be an object keyed by collection name.")
+      }
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName
+        val docs = open(ordinals.getOrElseUpdate(name, ordinals.size), name)
+        seen(name) =
+          try {
+            if (p.nextToken() != JsonToken.START_ARRAY) {
+              p.skipChildren()
+              Left(s"Collection '$name' must map to a list of documents.")
+            } else {
+              var error: Option[String] = None
+              var i = 0
+              while (p.nextToken() != JsonToken.END_ARRAY) {
+                if (error.isEmpty && p.currentToken == JsonToken.START_OBJECT)
+                  docs.add(mapper.writeValueAsString(mapper.readTree[JsonNode](p)))
+                else {
+                  if (error.isEmpty)
+                    error = Some(s"Document at index $i in collection '$name' must be an object.")
+                  p.skipChildren()
+                }
+                i += 1
+              }
+              error.toLeft(docs)
+            }
+          } finally docs.close()
+      }
+    } catch {
+      case e: JsonProcessingException =>
+        throw new InputError(s"Input is not valid JSON: ${e.getMessage}")
+    } finally p.close()
+    seen.valuesIterator.collectFirst { case Left(msg) => msg }
+      .foreach(msg => throw new InputError(msg))
+    ListMap.from(seen.iterator.collect { case (name, Right(docs)) => name -> docs })
+  }
+
+  private final class Collected extends Docs {
+    val docs = Vector.newBuilder[String]
+    def add(doc: String): Unit = docs += doc
+  }
+
   /** Parse + shape-validate an envelope string into per-collection lists
     * of document-JSON strings (declaration order preserved).
     */
-  def parseEnvelope(content: String): ListMap[String, Seq[String]] = {
-    val root =
-      try mapper.readTree(content)
-      catch {
-        case e: Exception => throw new InputError(s"Input is not valid JSON: ${e.getMessage}")
-      }
-    if (root == null || root.getNodeType != JsonNodeType.OBJECT)
-      throw new InputError("Input JSON must be an object keyed by collection name.")
-    var result = ListMap.empty[String, Seq[String]]
-    for (name <- root.fieldNames.asScala) {
-      val docs = root.get(name)
-      if (!docs.isArray)
-        throw new InputError(s"Collection '$name' must map to a list of documents.")
-      val rendered = docs.elements.asScala.zipWithIndex.map { case (doc: JsonNode, i) =>
-        if (!doc.isObject)
-          throw new InputError(
-            s"Document at index $i in collection '$name' must be an object.")
-        mapper.writeValueAsString(doc)
-      }.toSeq
-      result = result + (name -> rendered)
+  def parseEnvelope(content: String): ListMap[String, Seq[String]] =
+    walk(mapper.createParser(content))((_, _) => new Collected)
+      .map { case (name, c) => name -> c.docs.result() }
+
+  /** One collection's JSONL part files: document n goes to part
+    * n % parts, and a part is created on its first document, so a
+    * collection smaller than `parts` writes no empty files.
+    */
+  private final class PartFiles(val dir: Path, parts: Int) extends Docs {
+    private val out = new Array[OutputStream](parts)
+    private var n = 0L
+
+    def add(doc: String): Unit = {
+      val k = (n % parts).toInt
+      if (out(k) == null)
+        out(k) = new BufferedOutputStream(Files.newOutputStream(dir.resolve(f"part-$k%05d.jsonl")))
+      // String.getBytes turns a lone surrogate into '?', as Spark's
+      // UTF8String.fromString does; a strict encoder would throw
+      out(k).write(doc.getBytes(UTF_8))
+      out(k).write('\n')
+      n += 1
     }
-    result
+
+    override def close(): Unit = out.foreach(o => if (o != null) o.close())
   }
 
+  /** The Spark-free half of [[loadEnvelope]]: one streaming pass over
+    * `input` that validates it like [[parseEnvelope]] and writes each
+    * collection as JSONL under `staging` (a directory per collection, up
+    * to `parts` part files each, only the current collection's open at
+    * a time). Returns each collection's directory, in envelope order.
+    */
+  def splitEnvelope(input: Path, staging: Path, parts: Int): ListMap[String, Path] =
+    walk(mapper.createParser(input.toFile)) { (ordinal, _) =>
+      val dir = staging.resolve(s"c$ordinal")
+      TempDirs.deleteRecursively(dir) // a repeated key replaces its earlier value
+      new PartFiles(Files.createDirectories(dir), parts)
+    }.map { case (name, files) => name -> files.dir }
+
   /** `load_input_json` + distribution: envelope file → one DataFrame of
-    * raw-document strings (column `raw`) per collection.
+    * raw-document strings (column `raw`) per collection, each read from
+    * `defaultParallelism` JSONL parts staged in a fresh directory under
+    * `java.io.tmpdir` that is deleted at JVM exit (the frames read it
+    * lazily).
     */
   def loadEnvelope(spark: SparkSession, inputPath: String): ListMap[String, DataFrame] = {
     val path = Paths.get(inputPath)
     if (!Files.exists(path))
       throw new InputError(s"Input file not found: $inputPath")
-    import spark.implicits._
-    parseEnvelope(Files.readString(path)).map { case (name, docs) =>
-      name -> docs.toDF("raw")
-    }
+    val staging = TempDirs.create("graft-envelope")
+    val dirs =
+      try splitEnvelope(path, staging, spark.sparkContext.defaultParallelism)
+      catch { case e: Throwable => TempDirs.deleteRecursively(staging); throw e }
+    dirs.map { case (name, dir) => name -> fromJsonLines(spark, dir.toString) }
   }
 
   /** Scale path: a directory of JSONL files per collection (one document

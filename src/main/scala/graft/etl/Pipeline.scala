@@ -163,10 +163,11 @@ object Pipeline {
             missingTablesDb += cc.targetTable
 
           // Fan the transform plane out when the input arrives in fewer
-          // splits than the session has cores (a whole-file envelope or
-          // a one-file JSONL drop plans ONE split; Spark sizes splits by
-          // bytes, and this plane's cost is per-row CPU). No-op on
-          // well-split inputs — see Ingestion.fanOutForCpu.
+          // splits than the session has cores (a one-file JSONL drop
+          // plans ONE split; Spark sizes splits by bytes, and this
+          // plane's cost is per-row CPU). No-op on well-split inputs,
+          // envelopes included: loadEnvelope stages every collection in
+          // defaultParallelism parts — see Ingestion.fanOutForCpu.
           val tc = Transform.transformCollection(
             Ingestion.fanOutForCpu(rawDf), "raw", collectionName, cc,
             app.runtime, audit, objectStatus = objectStatus, clock = runClock)

@@ -1,11 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
+import graft.{Tables, TempDirs}
 import graft.llm.Multimodal
 import graft.streaming.{StreamingEtl, StreamingUpsert}
 
@@ -16,20 +14,6 @@ import graft.streaming.{StreamingEtl, StreamingUpsert}
   * outputs DuckDB can recompute from the same base columns.
   */
 object ExtQueries {
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(p)
-      val all = try walk.iterator().asScala.toSeq finally walk.close()
-      all.reverse.foreach(f => Files.deleteIfExists(f))
-    }
-
-  private val exitReaper = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  sys.addShutdownHook(exitReaper.forEach(p =>
-    try deleteRecursively(p) catch { case _: Throwable => () }))
-
-  private def deleteOnExit(p: java.nio.file.Path): Unit = exitReaper.add(p)
 
   /** Run `start` with the session's shuffle-partition count scoped to
     * `n`: streaming state lives in one store per shuffle partition and
@@ -85,9 +69,8 @@ object ExtQueries {
         // drop them now; `out` must outlive the returned (lazy) frame,
         // so the whole tempdir is reaped at JVM exit instead of leaking
         // across warmup+timed bench passes (round-4 advice).
-        deleteRecursively(tmpPath.resolve("staging"))
-        deleteRecursively(tmpPath.resolve("checkpoint"))
-        deleteOnExit(tmpPath)
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("doc_id")
       },
       "SELECT doc_id FROM documents ORDER BY doc_id"),
@@ -123,9 +106,8 @@ object ExtQueries {
             .start()
         }
         q.awaitTermination()
-        deleteRecursively(tmpPath.resolve("staging"))
-        deleteRecursively(tmpPath.resolve("checkpoint"))
-        deleteOnExit(tmpPath)
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out")
           .filter(col("event_type") =!= "__flush")
           .select(
@@ -190,9 +172,8 @@ object ExtQueries {
             .start()
         }
         q.awaitTermination()
-        deleteRecursively(tmpPath.resolve("staging"))
-        deleteRecursively(tmpPath.resolve("checkpoint"))
-        deleteOnExit(tmpPath)
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("user_id", "session_idx")
       },
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events),
@@ -246,10 +227,9 @@ object ExtQueries {
             .start()
         }
         q.awaitTermination()
-        deleteRecursively(tmpPath.resolve("clicks"))
-        deleteRecursively(tmpPath.resolve("purchases"))
-        deleteRecursively(tmpPath.resolve("checkpoint"))
-        deleteOnExit(tmpPath)
+        TempDirs.deleteRecursively(tmpPath.resolve("clicks"))
+        TempDirs.deleteRecursively(tmpPath.resolve("purchases"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("click_id", "purchase_id")
       },
       """WITH c AS (SELECT user_id, epoch_us(ts) AS c_us, event_id AS click_id
@@ -303,10 +283,9 @@ object ExtQueries {
             .start()
         }
         q.awaitTermination()
-        deleteRecursively(tmpPath.resolve("clicks"))
-        deleteRecursively(tmpPath.resolve("purchases"))
-        deleteRecursively(tmpPath.resolve("checkpoint"))
-        deleteOnExit(tmpPath)
+        TempDirs.deleteRecursively(tmpPath.resolve("clicks"))
+        TempDirs.deleteRecursively(tmpPath.resolve("purchases"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("click_id", "purchase_id")
       },
       """WITH c AS (SELECT user_id, epoch_us(ts) AS c_us, event_id AS click_id
@@ -400,9 +379,8 @@ object ExtQueries {
           .option("path", s"$tmp/out")
           .start()
         q.awaitTermination()
-        deleteRecursively(tmpPath.resolve("staging"))
-        deleteRecursively(tmpPath.resolve("checkpoint"))
-        deleteOnExit(tmpPath)
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("event_id")
       },
       """SELECT e.event_id, e.user_id, c.c_mktsegment AS segment,
@@ -441,9 +419,8 @@ object ExtQueries {
         val out = StreamingUpsert.finalSnapshot(s, snapshot)
           .select(col("user_id"), col("__seq").as("src_seq"), col("v_e2"))
           .orderBy("user_id")
-        deleteRecursively(tmpPath.resolve("staging"))
-        deleteRecursively(tmpPath.resolve("checkpoint"))
-        deleteOnExit(tmpPath)
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         out
       },
       """WITH c AS (SELECT user_id, CAST(event_id AS BIGINT) AS seq,

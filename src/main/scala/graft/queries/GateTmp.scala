@@ -2,27 +2,15 @@ package graft.queries
 
 import java.nio.file.{Files, Path}
 
+import graft.TempDirs
+
 /** Per-invocation temp directories for gate queries that materialize
   * files (bucketed tables, format roundtrips): unique per call — two
   * concurrent runs never share a path, and nothing stale survives into
-  * a later comparison — and reaped at JVM exit (results are read
-  * lazily, so the data must outlive the returned frame).
+  * a later comparison — and reaped at JVM exit by [[TempDirs]] (results
+  * are read lazily, so the data must outlive the returned frame).
   */
 private[queries] object GateTmp {
-
-  private val reaper = new java.util.concurrent.ConcurrentLinkedQueue[Path]
-
-  sys.addShutdownHook(reaper.forEach { p =>
-    try deleteRecursively(p) catch { case _: Throwable => () }
-  })
-
-  def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(p)
-      val all = try walk.iterator().asScala.toSeq finally walk.close()
-      all.reverse.foreach(f => Files.deleteIfExists(f))
-    }
 
   /** Memory-backed scratch when the host offers it: gate artifacts
     * (stream staging/checkpoints, bucketed tables, roundtrip files)
@@ -37,12 +25,5 @@ private[queries] object GateTmp {
   }
 
   /** A fresh temp dir, deleted at JVM exit. */
-  def dir(prefix: String): Path = {
-    val p = base match {
-      case Some(b) => Files.createTempDirectory(b, prefix)
-      case None => Files.createTempDirectory(prefix)
-    }
-    reaper.add(p)
-    p
-  }
+  def dir(prefix: String): Path = TempDirs.create(prefix, base)
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Tables, TempDirs}
 
 /** Round-9 statistics / experimentation surface: the hypothesis-test,
   * sampling, and view-maintenance operators a training-data platform
@@ -1213,8 +1213,8 @@ object StatQueries {
             col("valid_to"), col("a").as("tier"),
             col("n_changes"), col("is_current"))
           .orderBy("user_id", "valid_from")
-        GateTmp.deleteRecursively(tmpPath.resolve("staging"))
-        GateTmp.deleteRecursively(tmpPath.resolve("checkpoint"))
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         out
       },
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.{CacheScope, Tables}
+import graft.{CacheScope, Tables, TempDirs}
 import graft.streaming.StreamingUpsert
 
 /** The streaming STATE introspection plane — Spark's state data
@@ -29,12 +29,6 @@ object StateInspectionQueries {
       s: org.apache.spark.sql.SparkSession, n: Int)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
     SqlConfScope.withShufflePartitions(s, n)(start.awaitTermination())
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(f => java.nio.file.Files.deleteIfExists(f))
-  }
 
   val specs: Map[String, QuerySpec] = Map(
 
@@ -81,7 +75,7 @@ object StateInspectionQueries {
             col("value.count").cast("long").as("n"),
             col("value.sum").cast("long").as("cents"))
           .collect().toSeq // ≤ |status domain| rows
-        deleteRecursively(tmp)
+        TempDirs.deleteRecursively(tmp)
         import s.implicits._
         state.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
           .toDF("status", "n", "cents")
@@ -132,7 +126,7 @@ object StateInspectionQueries {
             col("numPartitions").cast("long"),
             col("minBatchId").cast("long"), col("maxBatchId").cast("long"))
           .collect().toSeq // one row per stateful operator
-        deleteRecursively(tmp)
+        TempDirs.deleteRecursively(tmp)
         import s.implicits._
         meta.map(r => (r.getLong(0), r.getString(1), r.getString(2),
             r.getLong(3), r.getLong(4), r.getLong(5)))
@@ -195,7 +189,7 @@ object StateInspectionQueries {
         // so nothing below references tmp — safe to delete first
         val v0 = rollup(StreamingUpsert.snapshotAt(s, snap, 0L))
         val v1 = rollup(StreamingUpsert.finalSnapshot(s, snap))
-        deleteRecursively(tmp)
+        TempDirs.deleteRecursively(tmp)
         import s.implicits._
         Seq((0L, v0._1, v0._2), (1L, v1._1, v1._2))
           .toDF("version", "n_live", "cents").orderBy("version")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
+import graft.{Tables, TempDirs}
 
 /** SQL-surface and engine-native-operator gates that round out the
   * declarative surface a reference user would reach for:
@@ -72,7 +72,7 @@ object SurfaceQueries {
       Files.move(src, dst)
       Files.setLastModifiedTime(
         dst, FileTime.fromMillis(now - (parts.size - i) * 10000L))
-      GateTmp.deleteRecursively(scratch)
+      TempDirs.deleteRecursively(scratch)
     }
   }
 
@@ -132,8 +132,8 @@ object SurfaceQueries {
             .start()
         }
         q.awaitTermination()
-        GateTmp.deleteRecursively(tmpPath.resolve("staging"))
-        GateTmp.deleteRecursively(tmpPath.resolve("checkpoint"))
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out")
           .filter(col("user_id") >= 0)
           .orderBy("user_id", "start_us")
@@ -277,8 +277,8 @@ object SurfaceQueries {
             .start()
         }
         q.awaitTermination()
-        GateTmp.deleteRecursively(tmpPath.resolve("staging"))
-        GateTmp.deleteRecursively(tmpPath.resolve("checkpoint"))
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("user_id", "session_idx")
       },
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events),
@@ -338,8 +338,8 @@ object SurfaceQueries {
             .start()
         }
         q.awaitTermination()
-        GateTmp.deleteRecursively(tmpPath.resolve("staging"))
-        GateTmp.deleteRecursively(tmpPath.resolve("checkpoint"))
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out")
           .filter(col("user_id") >= 0)
           .orderBy("user_id", "session_idx")
@@ -484,8 +484,8 @@ object SurfaceQueries {
             .start()
         }
         q.awaitTermination()
-        GateTmp.deleteRecursively(tmpPath.resolve("staging"))
-        GateTmp.deleteRecursively(tmpPath.resolve("checkpoint"))
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("user_id", "rank")
       },
       """WITH p AS (SELECT user_id,
@@ -531,8 +531,8 @@ object SurfaceQueries {
             .start()
         }
         q.awaitTermination()
-        GateTmp.deleteRecursively(tmpPath.resolve("staging"))
-        GateTmp.deleteRecursively(tmpPath.resolve("checkpoint"))
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("user_id", "event_type")
       },
       """SELECT user_id, event_type, count(*) AS n
@@ -666,8 +666,8 @@ object SurfaceQueries {
             .start()
         }
         q.awaitTermination()
-        GateTmp.deleteRecursively(tmpPath.resolve("staging"))
-        GateTmp.deleteRecursively(tmpPath.resolve("checkpoint"))
+        TempDirs.deleteRecursively(tmpPath.resolve("staging"))
+        TempDirs.deleteRecursively(tmpPath.resolve("checkpoint"))
         s.read.parquet(s"$tmp/out").orderBy("user_id", "event_type")
       },
       """SELECT user_id, event_type, count(*) AS n
