@@ -50,7 +50,7 @@ object Cli {
     }
     val result = Pipeline.run(spark, Ingestion.loadEnvelope(spark, input), app, mapping, sink)
 
-    // log_summary analog (reporting.py:36-95), derived from the result frames
+    // log_summary analog (reporting.py:36-95)
     println(s"ETL Summary")
     println(s"Ingestion date: ${result.ingestionDate}")
     def fmt(s: Set[String]) = if (s.isEmpty) "None" else s.toSeq.sorted.mkString(", ")
@@ -61,10 +61,10 @@ object Cli {
     result.objectStatuses.toSeq.sorted.foreach { case (name, status) =>
       println(s"  - $name: $status")
     }
-    result.counters.foreach { c =>
+    if (result.counters.nonEmpty) {
       println(f"${"Collection"}%-20s ${"Processed"}%9s ${"Errors"}%7s ${"InsertFail"}%11s")
-      c.orderBy("collection").collect().foreach { r =>
-        println(f"${r.getString(0)}%-20s ${r.getLong(1)}%9d ${r.getLong(2)}%7d ${r.getLong(3)}%11d")
+      result.counters.sortBy(_.collection).foreach { c =>
+        println(f"${c.collection}%-20s ${c.processed}%9d ${c.errors}%7d ${c.insertFailures}%11d")
       }
     }
     result

@@ -173,7 +173,8 @@ object Ingestion {
     * input whose cost is per-row CPU rather than I/O (round-15,
     * measured: the full transform at sf0.1 ran 8.1 s on the fixture's
     * single split vs 1.6 s fanned out to 32). No-op whenever the input
-    * already carries at least the session's parallelism — at production
+    * has no splits (an empty collection) or already carries at least the
+    * session's parallelism — at production
     * scale inputs arrive in many splits and nothing is inserted; the
     * exchange, when it does fire, hash-partitions on a CONTENT hash of
     * the full row (r20) rather than round-robin: keyless
@@ -190,7 +191,8 @@ object Ingestion {
     */
   def fanOutForCpu(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
+    val splits = df.rdd.getNumPartitions
+    if (splits == 0 || splits >= target) df
     else df.repartition(target,
       org.apache.spark.sql.functions.xxhash64(
         df.columns.map(org.apache.spark.sql.functions.col).toSeq: _*))

@@ -94,7 +94,7 @@ final class PgWireSink(conn: PgConn) extends TableSink {
       if (!tableExists(ledgerTable)) 0L
       else {
         val r = c.query(
-          s"""DELETE FROM ${PgWireSource.quoteTable(ledgerTable)}
+          s"""DELETE FROM ${SchemaManager.quoteTable(ledgerTable)}
               WHERE committed_at < now() - interval '$olderThanDays days'""")
         // CommandComplete tag is "DELETE <n>"
         r.tags.lastOption.map(_.split(" ").last.toLong).getOrElse(0L)

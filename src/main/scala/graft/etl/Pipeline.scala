@@ -2,9 +2,8 @@ package graft.etl
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The batch ETL pipeline (reference `etl_pipeline/pipeline.py:21-297`,
   * lifecycle traced in SURVEY §3.1), re-expressed as dataflow:
@@ -14,8 +13,10 @@ import org.apache.spark.storage.StorageLevel
   *  - stage 5's per-document interpret loop becomes ONE lazily-planned
   *    DataFrame per collection (`Transform.transformCollection`), written
   *    through a [[TableSink]] as partition-parallel batched appends;
-  *  - stage 6's report derives every number from the audit rows (the
-  *    single source of truth) instead of mutated counters
+  *  - stage 6's report comes from metrics observed on each collection's
+  *    audit append (one `Observation` per collection: document, error
+  *    and insert-failure counts, and which mapped columns any document
+  *    misses), so the audit rows are written once and never re-read
   *    (SURVEY §7.4.6).
   *
   * Per-document transactionality is intentionally replaced by
@@ -26,12 +27,17 @@ import org.apache.spark.storage.StorageLevel
   */
 object Pipeline {
 
-  /** The run report — sets from the planning phase plus the audit rows
-    * and the per-collection counters (A8) derived from them.
-    *
-    * The per-collection audit frames stay persisted (they back `audit`,
-    * `counters` and the report tables without re-running the transform);
-    * call [[PipelineResult.release]] when done with them.
+  /** One collection's run counters (A8, `reporting.py:5-28`): documents
+    * landed or rejected as errors, and documents whose target table is
+    * missing from the database (insert failures, not processed).
+    */
+  final case class CollectionCounters(
+      collection: String, processed: Long, errors: Long, insertFailures: Long) {
+    def successful: Long = math.max(processed - errors, 0L)
+  }
+
+  /** The run report: sets from the planning phase plus the counters of
+    * every mapped collection that had documents, in input order.
     */
   final case class PipelineResult(
       ingestionDate: String,
@@ -40,11 +46,12 @@ object Pipeline {
       missingTablesInput: Set[String],
       missingTablesDb: Set[String],
       objectStatuses: Map[String, String],
-      audit: Option[DataFrame],
-      counters: Option[DataFrame],
-      private[etl] val persisted: Seq[DataFrame] = Nil) {
-    /** Unpersist the cached audit frames held by this result. */
-    def release(): Unit = persisted.foreach(_.unpersist())
+      counters: Seq[CollectionCounters]) {
+    /** No-op: a run holds no cached frames once it returns. Kept only
+      * because `perfbench/` calls it; delete it with the next change to
+      * the benchmark.
+      */
+    def release(): Unit = ()
   }
 
   /** Pinned run timestamp: ONE driver-side instant, so `ingested_at` is
@@ -102,17 +109,8 @@ object Pipeline {
     var objectStatuses = Map.empty[String, String]
     var missingTablesDb = Set.empty[String]
     var unmapped = Set.empty[String]
-    var auditFrames = List.empty[DataFrame]
-    var counterFrames = List.empty[DataFrame]
-    var persistedFrames = List.empty[DataFrame]
-
-    // Everything below runs under a failure handler: when an exception
-    // propagates, every cache registered in persistedFrames so far is
-    // released — otherwise MEMORY_AND_DISK entries accumulate across
-    // failed runs in a long-lived session and the caller never gets a
-    // PipelineResult to call release() on (round-4 advice). On success
-    // the caller owns the frames via [[PipelineResult.release]].
-    def body(): PipelineResult = {
+    var counters = Vector.empty[CollectionCounters]
+    var missingByObject = Map.empty[String, Set[String]]
 
     // MISSING rows for schema tables absent from the input (pipeline.py:103-126)
     if (missingInputTables.nonEmpty) {
@@ -129,7 +127,6 @@ object Pipeline {
         lit(null).cast("array<string>").as(ac("missing_columns")),
         lit(audit.statusValues("missing")).as(ac("processing_status")))
       sink.append(missingDf, audit.auditTable)
-      auditFrames ::= missingDf
       objectStatuses ++= rows.map { case (_, obj) =>
         obj -> audit.objectStatusValues("missing")
       }
@@ -179,35 +176,34 @@ object Pipeline {
               tc.audit.withColumn(
                 ac("processing_status"), lit(audit.statusValues("missing")))
 
-          // One materialization of the scan+parse+cast projection feeds
-          // the target append, the audit append, and (via the persisted
-          // audit rows) the report derivation — at 100 TB the unpersisted
-          // plan would re-run the dominant scan+parse per consumer.
-          tc.shared.persist(StorageLevel.MEMORY_AND_DISK)
-          auditRows.persist(StorageLevel.MEMORY_AND_DISK)
-          // Registered BEFORE the appends: if one throws, the failure
-          // handler below still releases this frame's cache.
-          persistedFrames ::= auditRows
-          try {
+          // The report's inputs, observed on the audit append itself:
+          // bounded by the mapping's size, whatever the document count.
+          val status = col(ac("processing_status"))
+          val mappedColumns = cc.mappings.values.map(_.column).toSeq.distinct
+          val obs = Observation()
+          val observed = auditRows.observe(obs,
+            count(lit(1)).as("docs"),
+            count(when(status === audit.statusValues("error"), 1)).as("errors") +:
+              count(when(status === audit.statusValues("missing"), 1))
+                .as("insert_failures") +:
+              mappedColumns.indices.map(i => coalesce(
+                max(array_contains(col(ac("missing_columns")), mappedColumns(i))),
+                lit(false)).as(s"missing_$i")): _*)
+          tc.withSharedCached {
             if (tableExists) sink.append(tc.target, cc.targetTable)
-            sink.append(auditRows, audit.auditTable) // also fills auditRows' cache
-          } finally tc.shared.unpersist()
-          auditFrames ::= auditRows
-          counterFrames ::= auditRows.select(
-            lit(collectionName).as("collection"),
-            col(ac("processing_status")).as("status"))
+            sink.append(observed, audit.auditTable)
+          }
+          val m = obs.get
+          val docs = m("docs").asInstanceOf[Long]
+          val insertFailures = m("insert_failures").asInstanceOf[Long]
+          // an empty collection has no counters row, as in A8's group-by
+          if (docs > 0) counters :+= CollectionCounters(collectionName,
+            docs - insertFailures, m("errors").asInstanceOf[Long], insertFailures)
+          val missing = mappedColumns.indices
+            .filter(i => m(s"missing_$i").asInstanceOf[Boolean]).map(mappedColumns)
+          if (missing.nonEmpty) missingByObject = missingByObject.updated(
+            cc.targetTable, missingByObject.getOrElse(cc.targetTable, Set.empty) ++ missing)
       }
-    }
-
-    // --- report derivation (reporting.py via A8 expressions) --------------
-    val counters = counterFrames match {
-      case Nil => None
-      case fs =>
-        val all = fs.reduce(_ unionByName _)
-        Some(graft.analytics.AuditAnalytics.runCounters(
-          all, col("collection"),
-          errorCond = col("status") === audit.statusValues("error"),
-          insertFailureCond = col("status") === audit.statusValues("missing")))
     }
 
     // --- K5 report tables (ui/run_pipeline.py:395-433) --------------------
@@ -219,17 +215,17 @@ object Pipeline {
           col("object_name"), col("object_status"))
       sink.append(statusDf, s"${audit.auditSchema}.missing_collections_report")
     }
-    auditFrames.reverse.reduceOption(_ unionByName _).foreach { allAudit =>
-      // A9: per-object set-union of missing columns, only objects with any
-      val missingByObject = allAudit
-        .filter(size(col(ac("missing_columns"))) > 0)
-        .groupBy(col(ac("object_name")).as("object_name"))
-        .agg(array_sort(array_distinct(flatten(
-          collect_list(col(ac("missing_columns")))))).as("missing_columns"))
+    // appended whenever audit rows were, even when no column is missing
+    if (missingInputTables.nonEmpty || input.keys.exists(mapping.collections.contains)) {
+      import spark.implicits._
+      // A9: per-object set-union of missing columns, only objects with any;
+      // one partition, so the report lands in one COPY transaction
+      val missingAttrs = missingByObject.toSeq.map { case (o, cs) => (o, cs.toSeq) }
+        .toDF("object_name", "missing_columns").coalesce(1)
         .select(
           lit(ingestionDate).cast("date").as("ingestion_date"),
-          col("object_name"), col("missing_columns"))
-      sink.append(missingByObject, s"${audit.auditSchema}.missing_attributes_report")
+          col("object_name"), array_sort(col("missing_columns")).as("missing_columns"))
+      sink.append(missingAttrs, s"${audit.auditSchema}.missing_attributes_report")
     }
 
     PipelineResult(
@@ -239,18 +235,7 @@ object Pipeline {
       missingTablesInput = missingInputTables.map(t => tableLookup.getOrElse(t, t)),
       missingTablesDb = missingTablesDb,
       objectStatuses = objectStatuses,
-      audit = auditFrames.reverse.reduceOption(_ unionByName _),
-      counters = counters,
-      persisted = persistedFrames.reverse)
-    }
-
-    try body()
-    catch {
-      case e: Throwable =>
-        persistedFrames.foreach(df =>
-          try df.unpersist() catch { case _: Throwable => () })
-        throw e
-    }
+      counters = counters)
   }
 
   /** File-based overload — the reference's single-function contract

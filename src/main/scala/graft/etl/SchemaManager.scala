@@ -7,13 +7,23 @@ import scala.collection.mutable
   * (`pipeline.py:299-338`).
   */
 final case class ColumnDef(name: String, sqlType: String, notNull: Boolean = false) {
-  def ddl: String = {
-    val quoted = "\"" + name.replace("\"", "\"\"") + "\""
-    s"$quoted $sqlType" + (if (notNull) " NOT NULL" else "")
-  }
+  def ddl: String =
+    s"${SchemaManager.quoteIdent(name)} $sqlType" + (if (notNull) " NOT NULL" else "")
 }
 
 object SchemaManager {
+
+  /** A Postgres quoted identifier: embedded `"` doubled, as psycopg2's
+    * `sql.Identifier` does, so a name cannot break out of its quotes.
+    * Every DDL statement and the COPY target quote through this.
+    */
+  def quoteIdent(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""
+
+  /** `schema.table` (schema defaults to `public`) as `"schema"."table"`. */
+  def quoteTable(tableName: String): String = {
+    val (schema, table) = SchemaScript.splitTableName(tableName)
+    s"${quoteIdent(schema)}.${quoteIdent(table)}"
+  }
 
   /** `build_table_columns`: mapped columns (nullable, declaration order),
     * then the raw-JSON column (`JSONB NOT NULL`), then the business-audit
@@ -77,14 +87,11 @@ object SchemaManager {
     */
   def createTableSql(tableName: String, columns: Seq[ColumnDef]): String = {
     if (columns.isEmpty) throw new LoadError("Cannot create table without columns.")
-    val (schema, table) = SchemaScript.splitTableName(tableName)
-    val ident = "\"" + schema + "\".\"" + table + "\""
-    s"CREATE TABLE IF NOT EXISTS $ident (${columns.map(_.ddl).mkString(", ")})"
+    s"CREATE TABLE IF NOT EXISTS ${quoteTable(tableName)} (${columns.map(_.ddl).mkString(", ")})"
   }
 
   def createSchemaSql(schemaName: String): String = {
     if (schemaName.isEmpty) throw new LoadError("Schema name is required.")
-    // Same identifier escaping as EnsureDatabase.createDatabaseSql.
-    "CREATE SCHEMA IF NOT EXISTS \"" + schemaName.replace("\"", "\"\"") + "\""
+    s"CREATE SCHEMA IF NOT EXISTS ${quoteIdent(schemaName)}"
   }
 }

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{MultiFormatTimestamp, VariantTypeTag}
 
@@ -49,13 +50,22 @@ object Transform {
 
   /** Target rows + audit rows for one collection, both derived from the
     * single-pass `shared` projection (scan + parse_json + all casts).
-    * Callers writing both MUST persist `shared` around the two actions —
-    * Spark's CacheManager substitutes the cached relation into both
-    * children by plan match — or the dominant scan+parse cost runs once
-    * per consumer. `Pipeline.run` does this.
+    * Callers writing both run the writes inside [[withSharedCached]], or
+    * the dominant scan+parse cost runs once per consumer.
     */
   final case class TransformedCollection(
-      target: DataFrame, audit: DataFrame, shared: DataFrame)
+      target: DataFrame, audit: DataFrame, shared: DataFrame) {
+
+    /** Runs `body` with `shared` persisted, so every action in it reads
+      * one materialization of the projection (Spark's CacheManager
+      * substitutes the cached relation into `target` and `audit` by plan
+      * match); the cache is released when `body` returns or throws.
+      */
+    def withSharedCached[A](body: => A): A = {
+      shared.persist(StorageLevel.MEMORY_AND_DISK)
+      try body finally shared.unpersist()
+    }
+  }
 
   private val V = "__graft_variant"
   private def vgCol(i: Int): String = s"__graft_vg_$i"
@@ -333,6 +343,34 @@ object Transform {
         when(vg.try_cast("boolean"), "True").otherwise("False"))
         .otherwise(vg.try_cast("string")))
 
+  /** The projection both public transforms select from: the raw
+    * document, every typed target column, and the audit-derived
+    * `__missing_columns`, `__errors`, `__object_id` and `__status`.
+    */
+  private def baseProjection(
+      raw: DataFrame,
+      rawCol: String,
+      cm: CollectionMapping,
+      runtime: RuntimeConfig,
+      audit: AuditSettings): (DataFrame, Seq[AttrExprs]) = {
+    val ext = parseStage(extractAttrs(raw, rawCol, cm), cm, runtime)
+    val attrs = cm.mappings.toSeq.zipWithIndex.map { case ((attr, am), i) =>
+      attrExprs(col(vgCol(i)),
+        if (needsParse(am)) Some(col(pCol(i))) else None, attr, am, runtime)
+    }
+    val base = stagedValues(ext, rawCol, attrs).select(
+      Seq(col(RawCol)) ++
+        attrs.map(a => col(a.targetColumn)) ++
+        Seq(
+          stagedMissingColumns(attrs).as("__missing_columns"),
+          stagedErrors(attrs).as("__errors"),
+          col(OidCol).as("__object_id")): _*)
+      .withColumn("__status",
+        when(size(col("__errors")) > 0, audit.statusValues("error"))
+          .otherwise(audit.statusValues("success")))
+    (base, attrs)
+  }
+
   /** Full single-collection transform: returns the target-row DataFrame
     * and the audit-row DataFrame (K4 shape, `audit.py:13-31`), both
     * derived from one shared projection.
@@ -356,24 +394,7 @@ object Transform {
       audit: AuditSettings,
       objectStatus: String = "ALREADY_EXISTS",
       clock: Column = current_timestamp()): TransformedCollection = {
-
-    val ext = parseStage(extractAttrs(raw, rawCol, cm), cm, runtime)
-    val attrs = cm.mappings.toSeq.zipWithIndex.map { case ((attr, am), i) =>
-      attrExprs(col(vgCol(i)),
-        if (needsParse(am)) Some(col(pCol(i))) else None, attr, am, runtime)
-    }
-    val staged = stagedValues(ext, rawCol, attrs)
-
-    val base = staged.select(
-      Seq(col(RawCol)) ++
-        attrs.map(a => col(a.targetColumn)) ++
-        Seq(
-          stagedMissingColumns(attrs).as("__missing_columns"),
-          stagedErrors(attrs).as("__errors"),
-          col(OidCol).as("__object_id")): _*)
-      .withColumn("__status",
-        when(size(col("__errors")) > 0, audit.statusValues("error"))
-          .otherwise(audit.statusValues("success")))
+    val (base, attrs) = baseProjection(raw, rawCol, cm, runtime, audit)
 
     val bc = audit.businessColumns
     val target = base.select(
@@ -407,27 +428,14 @@ object Transform {
       cm: CollectionMapping,
       runtime: RuntimeConfig,
       audit: AuditSettings): DataFrame = {
-    val ext = parseStage(extractAttrs(raw, rawCol, cm), cm, runtime)
-    val attrs = cm.mappings.toSeq.zipWithIndex.map { case ((attr, am), i) =>
-      attrExprs(col(vgCol(i)),
-        if (needsParse(am)) Some(col(pCol(i))) else None, attr, am, runtime)
-    }
-    val staged = stagedValues(ext, rawCol, attrs)
-    staged.select(
+    val (base, attrs) = baseProjection(raw, rawCol, cm, runtime, audit)
+    base.select(
       attrs.map(a => col(a.targetColumn)) ++
         Seq(
           col(RawCol).as(cm.rawJsonColumn),
-          to_json(stagedMissingColumns(attrs)).as("missing_columns"),
-          stagedErrors(attrs).as("__errors"),
-          col(OidCol).as("object_id")): _*)
-      .select(
-        attrs.map(a => col(a.targetColumn)) ++
-          Seq(
-            col(cm.rawJsonColumn),
-            col("missing_columns"),
-            size(col("__errors")).as("n_errors"),
-            when(size(col("__errors")) > 0, audit.statusValues("error"))
-              .otherwise(audit.statusValues("success")).as("status"),
-            col("object_id")): _*)
+          to_json(col("__missing_columns")).as("missing_columns"),
+          size(col("__errors")).as("n_errors"),
+          col("__status").as("status"),
+          col("__object_id").as("object_id")): _*)
   }
 }

@@ -16,6 +16,9 @@ trait TableSink {
   def tableExists(tableName: String): Boolean
   def createSchema(schemaName: String): Unit
   def createTable(tableName: String, columns: Seq[ColumnDef]): Unit
+  /** Writes every row of `df` before returning. `Pipeline.run` reads its
+    * run report from metrics observed on the audit frame it passes here.
+    */
   def append(df: DataFrame, tableName: String): Unit
 }
 
@@ -122,9 +125,7 @@ object EnsureDatabase {
 
   def createDatabaseSql(dbName: String): String = {
     if (dbName.isEmpty) throw new LoadError("Database name is required.")
-    // Double embedded quotes, as psycopg2's sql.Identifier does
-    // (postgres_loader.py:119) — a '"' in a config-supplied name must
-    // not break out of the quoted identifier.
-    "CREATE DATABASE \"" + dbName.replace("\"", "\"\"") + "\""
+    // postgres_loader.py:119 quotes with sql.Identifier
+    s"CREATE DATABASE ${SchemaManager.quoteIdent(dbName)}"
   }
 }

@@ -464,7 +464,7 @@ object ConnectorQueries {
     "q312_pg_live_roundtrip" -> QuerySpec(
       (s, dir) => {
         import graft.etl._
-        import graft.sources.{LivePostgres, PgWireSource}
+        import graft.sources.LivePostgres
         val h = LivePostgres.get()
         val conn = PgConn(h.host, h.port, h.user, h.database)
         val sink = new PgWireSink(conn)
@@ -474,7 +474,7 @@ object ConnectorQueries {
         // K2/K3 DDL against the real grammar; idempotent per bench pass.
         sink.execute("DROP TABLE IF EXISTS \"public\".\"orders_t\"")
         sink.execute(
-          s"DROP TABLE IF EXISTS ${PgWireSource.quoteTable(audit.auditTable)}")
+          s"DROP TABLE IF EXISTS ${SchemaManager.quoteTable(audit.auditTable)}")
         sink.createSchema(audit.auditSchema)
         sink.createTable(cm.targetTable, SchemaManager.buildTableColumns(
           cm, EtlDefaults.runtime.typeMappings,
@@ -486,13 +486,10 @@ object ConnectorQueries {
           EtlQueries.rawOrdersDocs(s, dir), "raw", "orders", cm,
           EtlDefaults.runtime, audit,
           clock = to_timestamp(lit("2024-01-01 00:00:00")))
-        // Same persist contract as Pipeline.run/q309: one parse+cast
-        // pass feeds both plane writes.
-        tc.shared.persist()
-        try {
+        tc.withSharedCached {
           sink.append(tc.target, cm.targetTable)
           sink.append(tc.audit, audit.auditTable)
-        } finally tc.shared.unpersist(blocking = false)
+        }
 
         // Read back through a live PG join of the two landed planes,
         // partitioned over 4 disjoint key slices (the wire analog of
@@ -702,10 +699,7 @@ object ConnectorQueries {
         val tc = Transform.transformCollection(raw, "raw", "orders", cm,
           EtlDefaults.runtime, audit,
           clock = to_timestamp(lit("2024-01-01 00:00:00")))
-        // one parse+cast pass feeds both plane writes (the Pipeline.run
-        // persist contract)
-        tc.shared.persist()
-        try {
+        tc.withSharedCached {
           tc.target.write.format("graft.sources.PgWireSource")
             .option("host", h.host).option("port", h.port)
             .option("user", h.user).option("database", h.database)
@@ -713,7 +707,7 @@ object ConnectorQueries {
             .option("batchId", "q315-e2e")
             .mode("append").save()
           sink.append(tc.audit, audit.auditTable)
-        } finally tc.shared.unpersist(blocking = false)
+        }
         // ANALYZE the landed tables so the DSv2 read-back below gets
         // pg_class statistics at PLAN time (reltuples is -1 until the
         // first analyze → the scans would size as "huge" and the join

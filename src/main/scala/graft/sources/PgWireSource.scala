@@ -16,6 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.etl.PgConn
+import graft.etl.SchemaManager.{quoteIdent, quoteTable}
 
 /** DSv2 table over the Postgres wire protocol — the live analog of
   * `spark.read.jdbc`/`df.write.jdbc` for a classpath with no JDBC
@@ -88,14 +89,6 @@ object PgWireSource {
       Option(o.get("user")).getOrElse("postgres"),
       Option(o.get("database")).getOrElse("postgres"),
       Option(o.get("password")).getOrElse(""))
-  }
-
-  private[sources] def quoteIdent(name: String): String =
-    "\"" + name.replace("\"", "\"\"") + "\""
-
-  private[graft] def quoteTable(table: String): String = {
-    val (schema, t) = graft.etl.SchemaScript.splitTableName(table)
-    s"${quoteIdent(schema)}.${quoteIdent(t)}"
   }
 
   private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
@@ -493,7 +486,6 @@ final class PgScanBuilder(conn: PgConn, table: String,
     with SupportsPushDownLimit
     with SupportsPushDownTopN {
 
-  import PgWireSource.quoteIdent
 
   private var out: StructType = tableSchema
   private var accepted: Array[Filter] = Array.empty
@@ -884,14 +876,14 @@ final class PgScan(conn: PgConn, table: String, out: StructType,
 
   private def selectSql(extra: Option[String]): String = {
     val cols = agg.map(_.selectExprs.mkString(", ")).getOrElse(
-      out.fieldNames.map(PgWireSource.quoteIdent).mkString(", "))
+      out.fieldNames.map(quoteIdent).mkString(", "))
     val conds = Seq(baseWhere).filter(_.nonEmpty) ++ extra
     val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
     val grp = agg.filter(_.groupByCols.nonEmpty)
       .map(a => s" GROUP BY ${a.groupByCols.mkString(", ")}").getOrElse("")
     val ord = if (orderBy.isEmpty) "" else s" ORDER BY ${orderBy.mkString(", ")}"
     val lim = limit.map(n => s" LIMIT $n").getOrElse("")
-    s"SELECT $cols FROM ${PgWireSource.quoteTable(table)}$where$grp$ord$lim"
+    s"SELECT $cols FROM ${quoteTable(table)}$where$grp$ord$lim"
   }
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -900,7 +892,7 @@ final class PgScan(conn: PgConn, table: String, out: StructType,
         val (lo, hi) = bounds(col)
         if (lo > hi) Array(PgSqlPartition(selectSql(None)))
         else {
-          val q = PgWireSource.quoteIdent(col)
+          val q = quoteIdent(col)
           val n = math.min(numParts.toLong, hi - lo + 1).toInt
           val width = (hi - lo + 1 + n - 1) / n
           (0 until n).map { i =>
@@ -930,13 +922,13 @@ final class PgScan(conn: PgConn, table: String, out: StructType,
   private def bounds(col: String): (Long, Long) = (lower, upper) match {
     case (Some(a), Some(b)) => (a, b)
     case _ =>
-      val q = PgWireSource.quoteIdent(col)
+      val q = quoteIdent(col)
       val where = if (baseWhere.isEmpty) "" else s" WHERE $baseWhere"
       val c = conn.open()
       try {
         val r = c.query(
           s"SELECT min($q)::text, max($q)::text FROM " +
-            s"${PgWireSource.quoteTable(table)}$where")
+            s"${quoteTable(table)}$where")
         val Seq(mn, mx) = r.rows.head: @unchecked
         if (mn == null) (1L, 0L) // empty table → single-partition plan
         else (lower.getOrElse(mn.toLong), upper.getOrElse(mx.toLong))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.etl.PgConn
+import graft.etl.{PgConn, SchemaManager}
 
 /** DSv2 write path over the Postgres wire protocol — the `SupportsWrite`
   * half of [[PgWireTable]] and the one executor-side COPY writer
@@ -166,10 +166,10 @@ final class PgBatchWrite(conn: PgConn, table: String,
       // history), same as with write.jdbc.
       val c = conn.open()
       try {
-        val _ = c.query(s"TRUNCATE TABLE ${PgWireSource.quoteTable(table)}")
+        val _ = c.query(s"TRUNCATE TABLE ${SchemaManager.quoteTable(table)}")
         ledgerTable.foreach { lt =>
           val batchLit = "'" + batchId.replace("'", "''") + "'"
-          val _2 = c.query(s"DELETE FROM ${PgWireSource.quoteTable(lt)} " +
+          val _2 = c.query(s"DELETE FROM ${SchemaManager.quoteTable(lt)} " +
             s"WHERE batch_id = $batchLit")
         }
       } finally c.close()
@@ -206,9 +206,9 @@ private[sources] object PgWriteSupport {
     val c = conn.open()
     try {
       val _ = c.query(
-        graft.etl.SchemaManager.createSchemaSql(ledgerSchema))
+        SchemaManager.createSchemaSql(ledgerSchema))
       val _2 = c.query(
-        s"""CREATE TABLE IF NOT EXISTS ${PgWireSource.quoteTable(ledgerTable)} (
+        s"""CREATE TABLE IF NOT EXISTS ${SchemaManager.quoteTable(ledgerTable)} (
               batch_id TEXT NOT NULL,
               partition_id INT NOT NULL,
               n_rows BIGINT,
@@ -231,11 +231,7 @@ final class PgDataWriter(conn: PgConn, table: String,
     partitionId: Int) extends DataWriter[InternalRow] {
 
   private val render = PgRowText.converters(schema)
-  private val copySql = {
-    val colList = schema.fieldNames
-      .map(PgWireSource.quoteIdent).mkString(", ")
-    s"COPY ${PgWireSource.quoteTable(table)} ($colList) FROM STDIN"
-  }
+  private val copySql = PgDataWriter.copySql(table, schema.fieldNames.toSeq)
 
   private var client: PgWireClient = null
   private var stream: PgWireClient#CopyInStream = null
@@ -252,7 +248,7 @@ final class PgDataWriter(conn: PgConn, table: String,
     client = conn.open()
     ledgerTable match {
       case Some(lt) =>
-        val ledger = PgWireSource.quoteTable(lt)
+        val ledger = SchemaManager.quoteTable(lt)
         val batchLit = "'" + batchId.replace("'", "''") + "'"
         try {
           val _ = client.query(
@@ -289,7 +285,7 @@ final class PgDataWriter(conn: PgConn, table: String,
         val n = stream.finish()
         val _ = ledgerTable match {
           case Some(lt) =>
-            val ledger = PgWireSource.quoteTable(lt)
+            val ledger = SchemaManager.quoteTable(lt)
             val batchLit = "'" + batchId.replace("'", "''") + "'"
             client.query(
               s"""UPDATE $ledger SET n_rows = $n
@@ -436,4 +432,11 @@ private[sources] object PgRowText {
     }
     sb.append('"').toString
   }
+}
+
+object PgDataWriter {
+  /** The COPY statement a partition streams `columns` of `table` into. */
+  private[graft] def copySql(table: String, columns: Seq[String]): String =
+    s"COPY ${SchemaManager.quoteTable(table)} " +
+      s"(${columns.map(SchemaManager.quoteIdent).mkString(", ")}) FROM STDIN"
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
 
 import graft.etl.{AuditSettings, CollectionMapping, RuntimeConfig, TableSink, Transform}
 
@@ -41,12 +40,10 @@ object StreamingEtl {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val tc = Transform.transformCollection(
           batch, "raw", collectionName, cm, runtime, audit, objectStatus, clock)
-        // One parse+cast pass feeds both appends (as in Pipeline.run).
-        tc.shared.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+        tc.withSharedCached {
           sink.append(tc.target, cm.targetTable)
           sink.append(tc.audit, audit.auditTable)
-        } finally tc.shared.unpersist()
+        }
       }
       .start()
 

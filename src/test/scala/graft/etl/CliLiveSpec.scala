@@ -88,7 +88,7 @@ class CliLiveSpec extends AnyFunSuite with SparkTestSession {
     def cli(adminDb: String): Unit = {
       val app = write(appYaml(h, dbName, adminDb, schemaSql), ".yaml")
       Cli.run(spark, Array("--input", input, "--app-config", app,
-        "--mapping-config", mapping)).release()
+        "--mapping-config", mapping))
     }
 
     cli(adminDb = h.database)

@@ -121,10 +121,9 @@ class JdbcStatementStreamSpec extends AnyFunSuite with SparkTestSession {
       """{"customer_id": 3, "name": "Cyd", "signup_date": "2024-03-04", "email": "c@x"}""")
       .toDF("raw"))
     val sink = new StatementCaptureSink(batchSize = 2)
-    val result = Pipeline.run(spark, input, app, mapping, sink,
+    Pipeline.run(spark, input, app, mapping, sink,
       clock = lit("2026-02-03 04:05:06").cast("timestamp"),
       ingestionDate = "2026-02-03")
-    result.release()
 
     val st = sink.statements.toSeq
     val kinds = st.map(s => s.split(" ").take(3).mkString(" "))

@@ -2,8 +2,13 @@ package graft.etl
 
 import java.nio.file.Files
 import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,6 +34,35 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
       "customer_id" -> AttributeMapping("customer_id", "integer"),
       "order_date" -> AttributeMapping("order_date", "date"),
       "amount" -> AttributeMapping("amount", "numeric")))
+
+  /** A parquet sink that records the executed plan of every frame it
+    * appends.
+    */
+  private final class RecordingSink(base: String) extends TableSink {
+    val parquet = new ParquetSink(base)
+    val plans = ArrayBuffer.empty[(String, SparkPlan)]
+    def tableExists(t: String) = parquet.tableExists(t)
+    def createSchema(s: String) = parquet.createSchema(s)
+    def createTable(t: String, c: Seq[ColumnDef]) = parquet.createTable(t, c)
+    def append(df: DataFrame, t: String): Unit = {
+      parquet.append(df, t)
+      plans += t -> df.queryExecution.executedPlan
+    }
+  }
+
+  private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] = plan.flatMap {
+    case a: AdaptiveSparkPlanExec => shuffles(a.inputPlan)
+    case m: InMemoryTableScanExec => shuffles(m.relation.cachedPlan)
+    case e: ShuffleExchangeExec => Seq(e)
+    case _ => Nil
+  }
+
+  private def appConfig(schemaSql: String) = {
+    val path = Files.createTempFile("graft-schema", ".sql")
+    Files.writeString(path, schemaSql)
+    EtlDefaults.appConfig.copy(
+      runtime = EtlDefaults.runtime.copy(schemaPath = path.toString))
+  }
 
   // --- S1 shape validation -------------------------------------------------
 
@@ -74,6 +108,17 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(SchemaManager.buildAuditTableColumns(EtlDefaults.audit).map(_.name) ==
       Seq("ingested_at", "object_id", "source_collection", "object_name",
         "object_status", "missing_columns", "processing_status"))
+  }
+
+  test("DDL and COPY quote identifiers the same way, doubling embedded quotes") {
+    val cols = Seq(ColumnDef("c\"1", "TEXT"))
+    assert(SchemaManager.quoteIdent("a\"b") == "\"a\"\"b\"")
+    val ddl = SchemaManager.createTableSql("s\"x.t\"y", cols)
+    assert(ddl == "CREATE TABLE IF NOT EXISTS \"s\"\"x\".\"t\"\"y\" (\"c\"\"1\" TEXT)")
+    assert(graft.sources.PgDataWriter.copySql("s\"x.t\"y", cols.map(_.name)) ==
+      "COPY \"s\"\"x\".\"t\"\"y\" (\"c\"\"1\") FROM STDIN")
+    assert(SchemaManager.createSchemaSql("s\"x") == "CREATE SCHEMA IF NOT EXISTS \"s\"\"x\"")
+    assert(EnsureDatabase.createDatabaseSql("d\"b") == "CREATE DATABASE \"d\"\"b\"")
   }
 
   // --- E2E golden run ------------------------------------------------------
@@ -153,10 +198,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
       r.getAs[String]("object_name") -> r.getAs[String]("missing_columns")).toMap
     assert(ma == Map("public.customers" -> """["email"]"""))
 
-    // counters (A8 over audit rows)
-    val counters = result.counters.get.orderBy("collection").collect()
-    assert(counters.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-      r.getLong(3), r.getLong(4))).toSeq == Seq(
+    // counters (A8, observed on the audit appends)
+    assert(ReportReference.observed(result) == Seq(
       ("customers", 3L, 1L, 0L, 2L),
       ("orders", 1L, 0L, 0L, 1L)))
   }
@@ -181,8 +224,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     val audit = sink.read(spark, "doc_audit.ingestion_audit")
     assert(audit.head().getAs[String]("processing_status") == "missing")
     // counters: the doc counts as insert failure, not processed
-    val c = result.counters.get.head()
-    assert((c.getLong(1), c.getLong(3)) == (0L, 1L))
+    val c = result.counters.head
+    assert((c.processed, c.insertFailures) == (0L, 1L))
   }
 
   test("a failing append releases every cache registered by the run") {
@@ -211,8 +254,100 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
         clock = lit("2026-02-03 04:05:06").cast("timestamp"),
         ingestionDate = "2026-02-03")
     }
-    // round-4 advice: the just-persisted audit frame (registered before
-    // the append) must be released when the run fails
+    // the shared projection cached for the two appends is released
+    // when one of them throws
     assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+  }
+
+  test("the observed report equals the audit-row derivation it replaced") {
+    val base = Files.createTempDirectory("graft-observed").toString
+    // stale: declared, absent from the sink → MISSING, rows rejected;
+    // ghosts: declared and mapped, absent from the input → a MISSING row
+    val app = appConfig(
+      """CREATE TABLE IF NOT EXISTS public.stale (x TEXT);
+        |CREATE TABLE IF NOT EXISTS public.ghosts (x TEXT);
+        |""".stripMargin)
+    val mapping = MappingConfig(ListMap(
+      "customers" -> customersMapping,
+      "vip" -> customersMapping, // a second collection into public.customers
+      "stale" -> ordersMapping.copy(targetTable = "public.stale"),
+      "empty" -> ordersMapping.copy(targetTable = "public.empty_t"),
+      "ghosts" -> customersMapping.copy(targetTable = "public.ghosts")))
+    val envelope =
+      """{"customers": [
+        |  {"customer_id": 1, "name": "Ada", "signup_date": "03/04/2025", "email": "a@x"},
+        |  {"customer_id": 2, "name": "Bob", "signup_date": "bad-date"},
+        |  {"customer_id": 3, "name": "Cy", "email": "c@x"},
+        |  {"customer_id": 4, "name": "Di", "signup_date": "2025-01-15", "email": "d@x"},
+        |  {"customer_id": 5, "name": "Ed", "signup_date": "2025-01-16", "email": "e@x"}
+        |],
+        |"vip": [
+        |  {"customer_id": 6, "signup_date": "2025-01-17", "email": "f@x"},
+        |  {"customer_id": 7, "name": "Gil", "signup_date": "2025-01-18", "email": "g@x"},
+        |  {"customer_id": 8, "name": "Hal", "signup_date": "2025-01-19", "email": "h@x"},
+        |  {"customer_id": 9, "name": "Ivy", "signup_date": "2025-01-20", "email": "i@x"}
+        |],
+        |"stale": [
+        |  {"order_id": 10, "customer_id": 1, "order_date": "2025-02-01", "amount": 5.5},
+        |  {"order_id": 11, "customer_id": 1, "order_date": "2025-02-02"},
+        |  {"order_id": 12, "customer_id": 2, "order_date": "2025-02-03", "amount": "junk"},
+        |  {"order_id": 13, "customer_id": 3, "order_date": "2025-02-04", "amount": 1}
+        |],
+        |"empty": [],
+        |"strays": [{"s": 1}]}""".stripMargin
+    val inputPath = Files.createTempFile("graft-observed", ".json")
+    Files.writeString(inputPath, envelope)
+
+    val sink = new RecordingSink(base)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val result = Pipeline.run(
+      spark, Ingestion.loadEnvelope(spark, inputPath.toString), app, mapping, sink,
+      clock = lit("2026-02-03 04:05:06").cast("timestamp"), ingestionDate = "2026-02-03")
+    // the run leaves no cache behind
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+    assert(result.objectStatuses == Map(
+      "public.customers" -> "ALREADY_EXISTS", "public.stale" -> "MISSING",
+      "public.empty_t" -> "NEW", "public.ghosts" -> "MISSING"))
+
+    val audit = sink.parquet.read(spark, "doc_audit.ingestion_audit")
+    assert(audit.count() == 5 + 4 + 4 + 1)
+    val reference =
+      ReportReference.counters(audit, Seq("customers", "vip", "stale", "empty"))
+    assert(ReportReference.observed(result) == reference)
+    assert(reference == Seq( // no row for the empty collection
+      ("customers", 5L, 1L, 0L, 4L),
+      ("stale", 0L, 0L, 4L, 0L),
+      ("vip", 4L, 0L, 0L, 4L)))
+
+    val report = sink.parquet.read(spark, "doc_audit.missing_attributes_report")
+    assert(report.select("ingestion_date").distinct().collect().map(_.get(0).toString)
+      .toSeq == Seq("2026-02-03"))
+    val attributes = ReportReference.missingAttributes(audit)
+    assert(ReportReference.report(report) == attributes)
+    assert(attributes == Map( // merged across customers and vip
+      "public.customers" -> Seq("email", "name", "signup_date"),
+      "public.stale" -> Seq("amount")))
+
+    // the report needs no pass over the data of its own: no appended
+    // plan shuffles (the envelope arrives in defaultParallelism splits)
+    val appended = sink.plans.map(_._1).toSet
+    assert(appended.contains("doc_audit.missing_attributes_report"))
+    sink.plans.foreach { case (t, plan) =>
+      assert(shuffles(plan).isEmpty, s"$t:\n$plan")
+    }
+  }
+
+  test("an empty missing-attributes report is still appended and readable") {
+    val sink = new ParquetSink(Files.createTempDirectory("graft-no-missing").toString)
+    import spark.implicits._
+    val input = ListMap("customers" -> Seq(
+      """{"customer_id": 1, "name": "Ada", "signup_date": "2025-01-01", "email": "a@x"}""")
+      .toDF("raw"))
+    Pipeline.run(spark, input, appConfig(""), MappingConfig(ListMap(
+      "customers" -> customersMapping)), sink,
+      clock = lit("2026-02-03 04:05:06").cast("timestamp"), ingestionDate = "2026-02-03")
+    val report = sink.read(spark, "doc_audit.missing_attributes_report")
+    assert(report.columns.toSeq == Seq("ingestion_date", "object_name", "missing_columns"))
+    assert(report.count() == 0)
   }
 }

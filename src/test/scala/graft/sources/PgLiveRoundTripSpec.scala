@@ -461,5 +461,17 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
            WHERE object_name = 'public.customers'""")
         .rows.head.head == """["email"]""")
     } finally client.close()
+
+    // The observed report equals the old derivation over the LIVE rows.
+    def landed(table: String) = spark.read.format(classOf[PgWireSource].getName)
+      .option("host", conn.host).option("port", conn.port.toLong)
+      .option("user", conn.user).option("database", conn.database)
+      .option("table", table).load()
+    val audit = landed("doc_audit.ingestion_audit")
+    val reference = ReportReference.counters(audit, Seq("customers"))
+    assert(ReportReference.observed(result) == reference)
+    assert(reference == Seq(("customers", 3L, 1L, 0L, 2L)))
+    assert(ReportReference.report(landed("doc_audit.missing_attributes_report")) ==
+      ReportReference.missingAttributes(audit))
   }
 }
