@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.io.{BufferedOutputStream, OutputStream}
+import java.io.BufferedOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.immutable.ListMap
@@ -19,15 +19,18 @@ import graft.TempDirs
   *
   * The envelope is read in ONE streaming pass ([[splitEnvelope]]): a
   * Jackson parser walks it a document at a time and appends each
-  * document as one line to its collection's JSONL staging directory, so
-  * driver memory holds one document plus the current collection's part
-  * buffers, never the file. Each collection is then read by
-  * [[fromJsonLines]] in at least `defaultParallelism` splits, and the
+  * document as one line to its collection's JSONL staging file, so
+  * driver memory holds one document plus one file buffer, never the
+  * file. Each collection is then read by [[fromJsonLines]], and the
   * transform runs in executor tasks instead of being folded into a
   * driver-local relation. The staging directory lives on the driver's
   * filesystem, which every executor of graft's `local[N]` session
   * shares; a multi-node deployment stages JSONL on shared storage and
   * calls [[fromJsonLines]] directly.
+  *
+  * Every frame this object returns arrives split: at least
+  * `defaultParallelism` partitions, whatever the number and size of the
+  * files behind it, so the transform plane needs no repartition.
   */
 object Ingestion {
 
@@ -104,71 +107,69 @@ object Ingestion {
     walk(mapper.createParser(content))((_, _) => new Collected)
       .map { case (name, c) => name -> c.docs.result() }
 
-  /** One collection's JSONL part files: document n goes to part
-    * n % parts, and a part is created on its first document, so a
-    * collection smaller than `parts` writes no empty files.
+  /** One collection's JSONL staging file, one document per line; a
+    * repeated key truncates the file its earlier value wrote.
     */
-  private final class PartFiles(val dir: Path, parts: Int) extends Docs {
-    private val out = new Array[OutputStream](parts)
-    private var n = 0L
+  private final class JsonlFile(val path: Path) extends Docs {
+    private val out = new BufferedOutputStream(Files.newOutputStream(path))
 
     def add(doc: String): Unit = {
-      val k = (n % parts).toInt
-      if (out(k) == null)
-        out(k) = new BufferedOutputStream(Files.newOutputStream(dir.resolve(f"part-$k%05d.jsonl")))
       // String.getBytes turns a lone surrogate into '?', as Spark's
       // UTF8String.fromString does; a strict encoder would throw
-      out(k).write(doc.getBytes(UTF_8))
-      out(k).write('\n')
-      n += 1
+      out.write(doc.getBytes(UTF_8))
+      out.write('\n')
     }
 
-    override def close(): Unit = out.foreach(o => if (o != null) o.close())
+    override def close(): Unit = out.close()
   }
 
   /** The Spark-free half of [[loadEnvelope]]: one streaming pass over
     * `input` that validates it like [[parseEnvelope]] and writes each
-    * collection as JSONL under `staging` (a directory per collection, up
-    * to `parts` part files each, only the current collection's open at
-    * a time). Returns each collection's directory, in envelope order.
+    * collection as one JSONL file under `staging` (only the current
+    * collection's open at a time; an empty collection's file is empty).
+    * Returns each collection's file, in envelope order.
     */
-  def splitEnvelope(input: Path, staging: Path, parts: Int): ListMap[String, Path] =
+  def splitEnvelope(input: Path, staging: Path): ListMap[String, Path] = {
+    val _ = Files.createDirectories(staging)
     walk(mapper.createParser(input.toFile)) { (ordinal, _) =>
-      val dir = staging.resolve(s"c$ordinal")
-      TempDirs.deleteRecursively(dir) // a repeated key replaces its earlier value
-      new PartFiles(Files.createDirectories(dir), parts)
-    }.map { case (name, files) => name -> files.dir }
+      new JsonlFile(staging.resolve(s"c$ordinal.jsonl"))
+    }.map { case (name, file) => name -> file.path }
+  }
 
   /** `load_input_json` + distribution: envelope file → one DataFrame of
-    * raw-document strings (column `raw`) per collection, each read from
-    * `defaultParallelism` JSONL parts staged in a fresh directory under
-    * `java.io.tmpdir` that is deleted at JVM exit (the frames read it
-    * lazily).
+    * raw-document strings (column `raw`) per collection, each read by
+    * [[fromJsonLines]] from the collection's JSONL file, staged in a
+    * fresh directory under `java.io.tmpdir` that is deleted at JVM exit
+    * (the frames read it lazily).
     */
   def loadEnvelope(spark: SparkSession, inputPath: String): ListMap[String, DataFrame] = {
     val path = Paths.get(inputPath)
     if (!Files.exists(path))
       throw new InputError(s"Input file not found: $inputPath")
     val staging = TempDirs.create("graft-envelope")
-    val dirs =
-      try splitEnvelope(path, staging, spark.sparkContext.defaultParallelism)
+    val files =
+      try splitEnvelope(path, staging)
       catch { case e: Throwable => TempDirs.deleteRecursively(staging); throw e }
-    dirs.map { case (name, dir) => name -> fromJsonLines(spark, dir.toString) }
+    files.map { case (name, file) => name -> fromJsonLines(spark, file.toString) }
   }
 
-  /** Scale path: a directory of JSONL files per collection (one document
-    * per line), read distributed — no driver materialization, shape
-    * errors surface per-row in the transform (absent keys / parse_json
-    * failures).
+  /** Scale path: JSONL per collection (one document per line; a file, a
+    * directory or a glob), read distributed — no driver materialization,
+    * shape errors surface per-row in the transform (absent keys /
+    * parse_json failures). The frame arrives split: its lines are read
+    * in `max(defaultParallelism, total / 128 MB)` byte ranges of equal
+    * size, so one large file is cut into many splits and many small
+    * files share one ([[SplitLines]]). The path is listed now: a missing
+    * one is an [[InputError]] naming it.
     */
   def fromJsonLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path).withColumnRenamed("value", "raw")
+    SplitLines.read(spark, path)
 
   /** Fan a per-row-CPU-bound plane out to the session's full parallelism
     * when the input's split count would otherwise serialize it. A
-    * single-file scan (or a one-file JSONL drop) plans ONE split, so the
-    * downstream parse/cast plane runs on one core no matter how many the
-    * cluster has — Spark sizes splits by BYTES
+    * single-file scan by one of Spark's file sources plans ONE split, so
+    * the downstream parse/cast plane runs on one core no matter how many
+    * the cluster has — Spark sizes splits by BYTES
     * (`spark.sql.files.maxPartitionBytes`), which under-partitions any
     * input whose cost is per-row CPU rather than I/O (round-15,
     * measured: the full transform at sf0.1 ran 8.1 s on the fixture's
@@ -186,8 +187,10 @@ object Ingestion {
     * CONSTRUCTION, so it needs no such sort. Distribution caveat: rows
     * duplicated many times co-locate; the ingestion plane's documents
     * carry unique ids, and a 64-bit hash over 32–1024 partitions
-    * spreads unique rows uniformly. `Pipeline.run` applies this to
-    * every collection before the transform plane.
+    * spreads unique rows uniformly. The ingestion plane does not need
+    * it: [[fromJsonLines]] and [[loadEnvelope]] return frames that
+    * already hold `defaultParallelism` splits, and `Pipeline.run` plans
+    * no repartition. It serves inputs read by Spark's own file sources.
     */
   def fanOutForCpu(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism

@@ -62,6 +62,14 @@ object Pipeline {
   private def pinnedClock(): Column =
     lit(java.sql.Timestamp.from(java.time.Instant.now()))
 
+  /** Runs the pipeline over `input`, one raw-document frame (column
+    * `raw`) per collection. The frames are taken as they arrive: those
+    * of [[Ingestion]] are already split for the session's cores, and
+    * the run plans no repartition. Each collection's target append
+    * parses, caches and writes in one stage, and its audit append reads
+    * that cache; the MISSING audit rows of schema tables absent from the
+    * input ride along with the first mapped collection's audit append.
+    */
   def run(
       spark: SparkSession,
       input: ListMap[String, DataFrame],
@@ -112,7 +120,10 @@ object Pipeline {
     var counters = Vector.empty[CollectionCounters]
     var missingByObject = Map.empty[String, Set[String]]
 
-    // MISSING rows for schema tables absent from the input (pipeline.py:103-126)
+    // MISSING rows for schema tables absent from the input
+    // (pipeline.py:103-126): appended with the first mapped collection's
+    // audit rows, or alone when no mapped collection is in the input
+    var pendingMissing = Option.empty[DataFrame]
     if (missingInputTables.nonEmpty) {
       import spark.implicits._
       val rows = missingInputTables.toSeq.sorted.map { t =>
@@ -126,7 +137,7 @@ object Pipeline {
         lit(audit.objectStatusValues("missing")).as(ac("object_status")),
         lit(null).cast("array<string>").as(ac("missing_columns")),
         lit(audit.statusValues("missing")).as(ac("processing_status")))
-      sink.append(missingDf, audit.auditTable)
+      pendingMissing = Some(missingDf)
       objectStatuses ++= rows.map { case (_, obj) =>
         obj -> audit.objectStatusValues("missing")
       }
@@ -159,14 +170,8 @@ object Pipeline {
           if (tableInSchema && !tableExists)
             missingTablesDb += cc.targetTable
 
-          // Fan the transform plane out when the input arrives in fewer
-          // splits than the session has cores (a one-file JSONL drop
-          // plans ONE split; Spark sizes splits by bytes, and this
-          // plane's cost is per-row CPU). No-op on well-split inputs,
-          // envelopes included: loadEnvelope stages every collection in
-          // defaultParallelism parts — see Ingestion.fanOutForCpu.
           val tc = Transform.transformCollection(
-            Ingestion.fanOutForCpu(rawDf), "raw", collectionName, cc,
+            rawDf, "raw", collectionName, cc,
             app.runtime, audit, objectStatus = objectStatus, clock = runClock)
 
           val auditRows =
@@ -176,8 +181,10 @@ object Pipeline {
               tc.audit.withColumn(
                 ac("processing_status"), lit(audit.statusValues("missing")))
 
-          // The report's inputs, observed on the audit append itself:
-          // bounded by the mapping's size, whatever the document count.
+          // The report's inputs, observed on the audit append itself
+          // (below the union with any MISSING rows, so they count only
+          // this collection's rows): bounded by the mapping's size,
+          // whatever the document count.
           val status = col(ac("processing_status"))
           val mappedColumns = cc.mappings.values.map(_.column).toSeq.distinct
           val obs = Observation()
@@ -189,9 +196,11 @@ object Pipeline {
               mappedColumns.indices.map(i => coalesce(
                 max(array_contains(col(ac("missing_columns")), mappedColumns(i))),
                 lit(false)).as(s"missing_$i")): _*)
+          val auditAppend = pendingMissing.fold(observed)(observed.unionByName(_))
+          pendingMissing = None
           tc.withSharedCached {
             if (tableExists) sink.append(tc.target, cc.targetTable)
-            sink.append(observed, audit.auditTable)
+            sink.append(auditAppend, audit.auditTable)
           }
           val m = obs.get
           val docs = m("docs").asInstanceOf[Long]
@@ -205,6 +214,8 @@ object Pipeline {
             cc.targetTable, missingByObject.getOrElse(cc.targetTable, Set.empty) ++ missing)
       }
     }
+
+    pendingMissing.foreach(sink.append(_, audit.auditTable))
 
     // --- K5 report tables (ui/run_pipeline.py:395-433) --------------------
     if (objectStatuses.nonEmpty) {

@@ -4,17 +4,20 @@ import java.io.{BufferedOutputStream, InputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.TimeUnit
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeType
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,8 +25,9 @@ import graft.{SparkTestSession, TempDirs}
 
 /** The streaming envelope split behind `Ingestion.loadEnvelope`: the
   * same documents and errors as a whole-tree `readTree` parse, a
-  * distributed (not driver-local) plan, and driver memory bounded by
-  * one document rather than the file.
+  * distributed (not driver-local) plan that `Pipeline.run` runs without
+  * a shuffle, and driver memory bounded by one document rather than the
+  * file.
   */
 class EnvelopeIngestionSpec extends AnyFunSuite with SparkTestSession {
 
@@ -159,24 +163,15 @@ class EnvelopeIngestionSpec extends AnyFunSuite with SparkTestSession {
     val ordersDf = loaded("orders")
     assert(ordersDf.rdd.getNumPartitions >= parallelism)
     assert(Ingestion.fanOutForCpu(ordersDf) eq ordersDf)
-    val staging = Paths.get(System.getProperty("java.io.tmpdir")).toUri.toString
-    assert(ordersDf.inputFiles.length == parallelism &&
-      ordersDf.inputFiles.forall(_.startsWith(staging)))
 
-    // One part per document up to `parts`: no empty part files.
-    val split = Ingestion.splitEnvelope(
-      envelopeFile(fixture), Files.createTempDirectory(work, "staging"), parallelism)
-    assert(split.map { case (name, dir) => name -> Files.list(dir).count() } ==
-      ListMap("orders" -> parallelism, "empty" -> 0, "repeated" -> 2, "other" -> 2))
-
-    // Pipeline.run on the envelope plans no REPARTITION_BY_NUM exchange;
-    // the same documents from a one-split JSONL file do (the detector's
-    // control).
-    assert(fanOutExchanges(ordersDf).isEmpty)
-    val oneSplit = Files.createTempDirectory(work, "jsonl")
-    Files.write(oneSplit.resolve("part-0.jsonl"),
-      Ingestion.parseEnvelope(fixture)("orders").asJava, UTF_8)
-    assert(fanOutExchanges(Ingestion.fromJsonLines(spark, oneSplit.toString)).nonEmpty)
+    // One JSONL file per collection, a repeated key's file rewritten in
+    // place; an empty collection stages an empty file.
+    val staging = Files.createTempDirectory(work, "staging")
+    val split = Ingestion.splitEnvelope(envelopeFile(fixture), staging)
+    assert(split.values.forall(f => Files.isRegularFile(f) && f.getParent == staging))
+    assert(split.map { case (name, f) => name -> Files.readAllLines(f, UTF_8).size } ==
+      ListMap("orders" -> 40, "empty" -> 0, "repeated" -> 2, "other" -> 2))
+    assert(Files.list(staging).count() == 4)
   }
 
   private val ordersMapping = MappingConfig(ListMap("orders" -> CollectionMapping(
@@ -184,28 +179,43 @@ class EnvelopeIngestionSpec extends AnyFunSuite with SparkTestSession {
       "order_id" -> AttributeMapping("order_id", "integer"),
       "amount" -> AttributeMapping("amount", "numeric")))))
 
-  /** Runs the collection through `Pipeline.run` into a parquet sink and
-    * returns the fan-out exchanges in the plans of the frames it appends.
+  /** One append of a `Pipeline.run`: its table, its executed plan and the
+    * Spark jobs it ran.
     */
-  private def fanOutExchanges(orders: DataFrame): Seq[ShuffleExchangeExec] = {
+  private final class Append(val table: String, val plan: SparkPlan, val jobs: Int)
+
+  /** Runs the collection through `Pipeline.run` into a parquet sink,
+    * counting the jobs of each append with a listener.
+    */
+  private def appends(orders: DataFrame): Seq[Append] = {
     val schemaSql = Files.createTempFile(work, "schema", ".sql")
     val app = EtlDefaults.appConfig.copy(
       runtime = EtlDefaults.runtime.copy(schemaPath = schemaSql.toString))
     val parquet = new ParquetSink(Files.createTempDirectory(work, "e2e").toString)
-    val plans = Seq.newBuilder[SparkPlan]
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val recorded = Seq.newBuilder[Append]
     val recording = new TableSink {
       def tableExists(t: String) = parquet.tableExists(t)
       def createSchema(s: String) = parquet.createSchema(s)
       def createTable(t: String, c: Seq[ColumnDef]) = parquet.createTable(t, c)
       def append(df: DataFrame, t: String): Unit = {
-        plans += df.queryExecution.executedPlan
+        ListenerBusDrain.drain(sc)
+        val before = jobs.get
         parquet.append(df, t)
+        ListenerBusDrain.drain(sc)
+        recorded += new Append(t, df.queryExecution.executedPlan, jobs.get - before)
       }
     }
-    Pipeline.run(spark, ListMap("orders" -> orders), app, ordersMapping, recording,
+    sc.addSparkListener(listener)
+    try Pipeline.run(spark, ListMap("orders" -> orders), app, ordersMapping, recording,
       clock = lit("2026-02-03 04:05:06").cast("timestamp"), ingestionDate = "2026-02-03")
+    finally sc.removeSparkListener(listener)
     assert(parquet.read(spark, "public.orders").count() == 40)
-    plans.result().flatMap(exchanges).filter(_.shuffleOrigin == REPARTITION_BY_NUM)
+    recorded.result()
   }
 
   private def exchanges(plan: SparkPlan): Seq[ShuffleExchangeExec] = plan.flatMap {
@@ -213,6 +223,22 @@ class EnvelopeIngestionSpec extends AnyFunSuite with SparkTestSession {
     case m: InMemoryTableScanExec => exchanges(m.relation.cachedPlan)
     case e: ShuffleExchangeExec => Seq(e)
     case _ => Nil
+  }
+
+  test("Pipeline.run plans no shuffle and one job per target append, from an envelope or one JSONL file") {
+    val oneFile = Files.createTempDirectory(work, "jsonl")
+    Files.write(oneFile.resolve("part-0.jsonl"),
+      Ingestion.parseEnvelope(fixture)("orders").asJava, UTF_8)
+    val inputs = Seq(
+      "envelope" -> Ingestion.loadEnvelope(spark, envelopeFile(fixture).toString)("orders"),
+      "one JSONL file" -> Ingestion.fromJsonLines(spark, oneFile.toString))
+    for ((name, orders) <- inputs) {
+      val runs = appends(orders)
+      for (a <- runs) assert(exchanges(a.plan).isEmpty, s"$name, ${a.table}:\n${a.plan}")
+      // the target append parses, caches and writes in one job
+      assert(runs.filter(_.table == "public.orders").map(_.jobs) == Seq(1),
+        s"$name: ${runs.map(a => a.table -> a.jobs)}")
+    }
   }
 
   test("the split runs in a heap a quarter the size of the envelope") {
@@ -274,30 +300,26 @@ class EnvelopeIngestionSpec extends AnyFunSuite with SparkTestSession {
 object EnvelopeSplitMain {
   def main(args: Array[String]): Unit = args match {
     case Array("split", input, staging) =>
-      val dirs = Ingestion.splitEnvelope(Paths.get(input), Paths.get(staging), 4)
-      for ((name, dir) <- dirs) println(s"lines $name=${lineCount(dir)}")
+      val files = Ingestion.splitEnvelope(Paths.get(input), Paths.get(staging))
+      for ((name, file) <- files) println(s"lines $name=${lineCount(file)}")
     case Array("readTree", input) =>
       val root = new ObjectMapper().readTree(Files.readString(Paths.get(input)))
       println(s"collections ${root.size}")
     case _ => sys.error(s"unknown arguments: ${args.mkString(" ")}")
   }
 
-  private def lineCount(dir: Path): Long = {
-    val listing = Files.list(dir)
-    val parts = try listing.iterator().asScala.toSeq finally listing.close()
-    parts.map { p =>
-      val in: InputStream = Files.newInputStream(p)
-      try {
-        val buf = new Array[Byte](1 << 16)
-        var lines = 0L
-        var n = in.read(buf)
-        while (n >= 0) {
-          var i = 0
-          while (i < n) { if (buf(i) == '\n') lines += 1; i += 1 }
-          n = in.read(buf)
-        }
-        lines
-      } finally in.close()
-    }.sum
+  private def lineCount(file: Path): Long = {
+    val in: InputStream = Files.newInputStream(file)
+    try {
+      val buf = new Array[Byte](1 << 16)
+      var lines = 0L
+      var n = in.read(buf)
+      while (n >= 0) {
+        var i = 0
+        while (i < n) { if (buf(i) == '\n') lines += 1; i += 1 }
+        n = in.read(buf)
+      }
+      lines
+    } finally in.close()
   }
 }

@@ -337,6 +337,44 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("MISSING rows ride along with the first mapped collection's audit append") {
+    import spark.implicits._
+    val app = appConfig("CREATE TABLE IF NOT EXISTS public.legacy_t (x TEXT);")
+    val mapping = MappingConfig(ListMap(
+      "customers" -> customersMapping, "orders" -> ordersMapping))
+    val clock = lit("2026-02-03 04:05:06").cast("timestamp")
+    def run(input: ListMap[String, DataFrame]) = {
+      val sink = new RecordingSink(Files.createTempDirectory("graft-ride-along").toString)
+      val result = Pipeline.run(spark, input, app, mapping, sink,
+        clock = clock, ingestionDate = "2026-02-03")
+      val audit = sink.parquet.read(spark, "doc_audit.ingestion_audit")
+      (result, sink.plans.count(_._1 == "doc_audit.ingestion_audit"), audit)
+    }
+
+    // one audit append per mapped collection, none of its own
+    val (result, auditAppends, audit) = run(ListMap(
+      "customers" -> Seq("""{"customer_id": 1, "name": "Ada"}""",
+        """{"customer_id": 2, "signup_date": "bad"}""").toDF("raw"),
+      "orders" -> Seq("""{"order_id": 10, "amount": 5.5}""").toDF("raw")))
+    assert(auditAppends == 2)
+    assert(audit.count() == 4)
+    assert(audit.filter(col("object_name") === "public.legacy_t")
+      .select("processing_status", "object_status").as[(String, String)].collect()
+      .toSeq == Seq(("missing", "MISSING")))
+    // the observed counters count only each collection's own rows
+    assert(ReportReference.observed(result) == Seq(
+      ("customers", 2L, 1L, 0L, 1L), ("orders", 1L, 0L, 0L, 1L)))
+    assert(ReportReference.observed(result) ==
+      ReportReference.counters(audit, Seq("customers", "orders")))
+
+    // no mapped collection in the input: the MISSING rows land alone
+    val (alone, aloneAppends, aloneAudit) =
+      run(ListMap("strays" -> Seq("""{"s": 1}""").toDF("raw")))
+    assert(aloneAppends == 1 && alone.counters.isEmpty)
+    assert(aloneAudit.select("object_name").as[String].collect().toSeq ==
+      Seq("public.legacy_t"))
+  }
+
   test("an empty missing-attributes report is still appended and readable") {
     val sink = new ParquetSink(Files.createTempDirectory("graft-no-missing").toString)
     import spark.implicits._
