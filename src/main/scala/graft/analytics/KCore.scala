@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
+
 /** k-core peeling: iteratively remove nodes of degree < k (with their
   * incident edges) until the remaining subgraph — the k-core — has
   * minimum degree ≥ k. The classic corpus-graph density filter: on a
@@ -10,17 +12,17 @@ import org.apache.spark.sql.functions._
   * periphery, on a near-dup graph it isolates the heavily-replicated
   * cores worth human review.
   *
-  * Scale shape: the edge list is materialized ONCE up front
-  * (`localCheckpoint` — at cluster scale, a reliable checkpoint), then
-  * each round costs one map-side-combined degree aggregate plus two
-  * BROADCAST ANTI joins against the round's DROP set — the nodes
-  * falling below k, which is the small periphery by construction
-  * (peeling converges precisely because few nodes fall per round).
-  * The surviving edge majority is never shuffled; rounds that drop
-  * nothing terminate the loop (a no-op round proves the fixpoint, so
-  * early exit is semantics-preserving for the bounded form too).
-  * Lineage is cut per round exactly like the CC/label-propagation
-  * operators.
+  * Scale shape: the edge list is persisted and counted ONCE up front,
+  * then each round costs one map-side-combined degree aggregate plus
+  * two anti joins against the round's DROP set — the nodes falling
+  * below k, which is the small periphery by construction (peeling
+  * converges precisely because few nodes fall per round), so the
+  * joins broadcast it and the surviving edge majority is never
+  * shuffled. Rounds run on [[graft.Fixpoint]]: the drop set is the
+  * counted cut (its count is the convergence test and the broadcast
+  * bound), the surviving edges are marked. A round that drops nothing
+  * ends the loop (a no-op round proves the fixpoint, so early exit is
+  * semantics-preserving for the bounded form too).
   */
 object KCore {
 
@@ -33,54 +35,29 @@ object KCore {
       edges: DataFrame, u: Column, v: Column,
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, s"need k >= 1, rounds >= 0; got $k, $rounds")
-    degrees(peelLoop(edges.select(u.as("u"), v.as("v")), k, rounds))
+    val input = persisted(edges, u, v)
+    val core = Fixpoint.rounds(rounds, input)(input.df)(peel(k))
+    Fixpoint.finish(input)(degrees(core))
   }
 
   /** Peel to the FIXPOINT — the true k-core. */
-  def kCore(edges: DataFrame, u: Column, v: Column, k: Int): DataFrame =
-    degrees(peelLoop(edges.select(u.as("u"), v.as("v")), k, Int.MaxValue))
+  def kCore(edges: DataFrame, u: Column, v: Column, k: Int): DataFrame = {
+    val input = persisted(edges, u, v)
+    // every round that goes on drops a node, and an edge has two
+    val core = Fixpoint.converge("KCore.kCore", input, cap = 2 * input.rows)(input.df)(peel(k))
+    Fixpoint.finish(input)(degrees(core))
+  }
 
-  /** Above this many dropped nodes the per-round anti join falls back
-    * from broadcast to a shuffled join: round 1 of a heavy-tailed
-    * graph can shed a large fraction of ALL nodes (high k, or a
-    * mostly-degree-1 periphery), and force-broadcasting a set that
-    * size would OOM the driver. 4M longs ≈ tens of MB broadcast —
-    * comfortably under executor/driver budgets; later rounds shrink
-    * and re-qualify for broadcast automatically.
-    */
-  private val BroadcastDropLimit = 4L * 1000 * 1000
+  private def persisted(edges: DataFrame, u: Column, v: Column): Fixpoint.Bounded =
+    Fixpoint.counted(graft.CacheScope.persist(edges.select(u.as("u"), v.as("v"))))
 
-  private def peelLoop(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // persist, don't checkpoint, the base: the first round's degree
-    // aggregate materializes it in cache and the first anti join reads
-    // the cache — a localCheckpoint here would write the whole edge
-    // list out BEFORE knowing whether round 1 even drops anything
-    // (measured 6.2 s → ~2 s on the sf0.1 token graph)
-    var e = graft.CacheScope.persist(edges)
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      // the drop set is materialized once: usually the small periphery
-      // (peeling converges because few nodes fall per round), and the
-      // count doubles as the convergence test; broadcast anti joins
-      // keep the surviving edge majority unshuffled — but only while
-      // the drop set is genuinely small (see BroadcastDropLimit)
-      val drop = degrees(e).filter(col("deg") < k).select("n").localCheckpoint()
-      val nDrop = drop.count()
-      if (nDrop == 0L) converged = true
-      else {
-        val side =
-          if (nDrop <= BroadcastDropLimit) (d: DataFrame) => broadcast(d)
-          else (d: DataFrame) => d
-        e = e
-          .join(side(drop.withColumnRenamed("n", "u")), Seq("u"), "left_anti")
-          .join(side(drop.withColumnRenamed("n", "v")), Seq("v"), "left_anti")
-          .select("u", "v")
-          .localCheckpoint()
-      }
-      r += 1
-    }
-    e
+  private def peel(k: Int)(e: DataFrame): Option[DataFrame] = {
+    val drop = Fixpoint.cut(degrees(e).filter(col("deg") < k).select("n"))
+    if (drop.rows == 0L) None
+    else Some(Fixpoint.mark(e
+      .join(drop.hinted.withColumnRenamed("n", "u"), Seq("u"), "left_anti")
+      .join(drop.hinted.withColumnRenamed("n", "v"), Seq("v"), "left_anti")
+      .select("u", "v")))
   }
 
   private def degrees(e: DataFrame): DataFrame =

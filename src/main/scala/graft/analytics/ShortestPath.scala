@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
+
 /** Hop-bounded single-source weighted shortest paths as iterated
   * min-plus products (distributed Bellman-Ford) — the weighted
   * companion to the unweighted BFS frontier operator
@@ -15,72 +17,39 @@ import org.apache.spark.sql.functions._
   * the graph's hop diameter).
   *
   * Scale shape (100 TB): the EDGE relation is the big side and is
-  * only ever equi-joined on its src key — hash-partition it once and
-  * every round reuses that partitioning. The dist relation is
-  * nodes-sized and shrinks to the reachable set; Spark broadcasts it
-  * when small (AQE decides), which makes each round a map-side join
-  * over the edge partitions. No per-round driver collect; the loop
-  * only builds the plan. For deep k, cut lineage every few rounds the
-  * way the PageRank operator does (localCheckpoint) — bounded k here
-  * keeps the plan linear and analyzable.
+  * only ever equi-joined on its src key; the dist relation is
+  * nodes-sized and shrinks to the reachable set, so each round is a
+  * map-side join over the edge partitions when it broadcasts. Rounds
+  * run on [[graft.Fixpoint]] (cut, count, broadcast gate and bracket);
+  * both operators count `edges` once up front, which materializes a
+  * caller's persist at session settings and bounds every round.
   */
 object ShortestPath {
 
   /** Full directed reachability from `source` (BFS to fixpoint):
     * returns (node) for every node reachable over `edges`
-    * (src: long, dst: long). Frontier expansion with an early exit on
-    * an empty frontier — one cheap isEmpty probe per round against
-    * the just-persisted frontier — and a per-round localCheckpoint on
-    * the visited set so lineage stays flat at any depth. Work per
-    * round is the frontier's out-degree sum (Pregel step), never
-    * all-pairs. `maxRounds` is a safety bound ≥ the graph's hop
-    * diameter, not a truncation in practice.
+    * (src: long, dst: long). Each round expands the frontier — work is
+    * its out-degree sum (Pregel step), never all-pairs — and stops on
+    * an empty one. `visited` is a union of counted frontiers, so its
+    * plan stays flat without a cut of its own.
     */
-  def reachable(edges: DataFrame, source: Long, maxRounds: Int = 64): DataFrame = {
+  def reachable(edges: DataFrame, source: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var visited = Seq(source).toDF("node").localCheckpoint()
-    var frontier = visited
-    // Running counts: the convergence probe below is folded into the
-    // materializing count, so frontier/visited sizes are driver-known
-    // for free and the broadcast hints can be size-gated.
-    var frontierRows = 1L
-    var visitedRows = 1L
-    var r = 0
-    var done = false
-    while (r < maxRounds && !done) {
-      // ONE job per round (r20): the localCheckpoint is LAZY and the
-      // count() both materializes it (persisting the blocks, cutting
-      // lineage) and IS the convergence probe — the old eager
-      // checkpoint + isEmpty paid two job launches per round for the
-      // same materialization. `visited` stays a union of materialized
-      // frontiers, so its plan stays flat without being checkpointed.
-      //
-      // frontier/visited are node-bounded and shrink/stay small by
-      // construction — broadcast both (guide §3.1) so the edge
-      // relation, the big side at corpus scale, is never shuffled per
-      // round; the statless checkpointed intermediates otherwise plan
-      // as SortMergeJoin (two exchanges + sorts each round). The hints
-      // are SIZE-GATED on the running counts (r19 verdict #3): visited
-      // grows monotonically, and past BroadcastGate's ceiling the join
-      // falls back to a shuffle instead of an OOM.
-      val next = graft.BroadcastGate.ifUnder(frontier, frontierRows).alias("f")
+    val input = Fixpoint.counted(edges)
+    val seed = Fixpoint.Bounded(Seq(source).toDF("node"), 1L)
+    // every round that goes on adds a node, and at most one per edge
+    // is reachable besides the source
+    val (visited, _) = Fixpoint.converge("ShortestPath.reachable", input, cap = input.rows)(
+        (seed, seed)) { case (visited, frontier) =>
+      val next = Fixpoint.cut(frontier.hinted.alias("f")
         .join(edges.alias("e"), col("f.node") === col("e.src"))
         .select(col("e.dst").as("node")).distinct()
-        .join(graft.BroadcastGate.ifUnder(visited, visitedRows),
-          Seq("node"), "left_anti")
-        .localCheckpoint(false)
-      val n = next.count()
-      if (n == 0) done = true
-      else {
-        visited = visited.unionByName(next)
-        frontier = next
-        frontierRows = n
-        visitedRows += n
-      }
-      r += 1
+        .join(visited.hinted, Seq("node"), "left_anti"))
+      if (next.rows == 0) None
+      else Some((Fixpoint.Bounded(visited.df.unionByName(next.df), visited.rows + next.rows), next))
     }
-    visited
+    visited.df
   }
 
   /** edges: (src: long, dst: long, w: long). Returns (node, dist)
@@ -90,34 +59,17 @@ object ShortestPath {
     require(rounds >= 0 && rounds <= 64, s"rounds must be in [0, 64], got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = Seq((source, 0L)).toDF("node", "dist")
-    var distRows = 1L
-    var r = 0
-    while (r < rounds) {
+    val input = Fixpoint.counted(edges)
+    val seed = Fixpoint.Bounded(Seq((source, 0L)).toDF("node", "dist"), 1L)
+    Fixpoint.rounds(rounds, input)(seed) { dist =>
       // alias both sides each round: dist derives from edges after the
-      // first relaxation, so unqualified refs would be ambiguous.
-      // The dist side is node-bounded; its broadcast hint is size-gated
-      // on the count the per-round cut already measures (r19 verdict
-      // #3 — reachable sets can outgrow a broadcast).
-      val relaxed = graft.BroadcastGate.ifUnder(dist, distRows).alias("d")
+      // first relaxation, so unqualified refs would be ambiguous
+      val relaxed = dist.hinted.alias("d")
         .join(edges.alias("e"), col("d.node") === col("e.src"))
         .select(col("e.dst").as("node"),
           (col("d.dist") + col("e.w")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("node").agg(min("dist").as("dist"))
-        // per-round cut (r19): round r references dist_{r-1} TWICE
-        // (the union and the relaxation), so the unrolled plan
-        // re-derived every earlier round — and the caller's edge
-        // build under it — 2^rounds times (q189's plan scanned the
-        // fact tables 56 times for 3 rounds). One node-sized
-        // materialization per round makes the work linear in rounds,
-        // the same shape [[reachable]] uses. Lazy mark + count (r20):
-        // an eager localCheckpoint is itself a count job, so the
-        // explicit count costs nothing and yields the size bound.
-        .localCheckpoint(false)
-      distRows = dist.count()
-      r += 1
-    }
-    dist
+      Some(Fixpoint.cut(dist.df.unionByName(relaxed)
+        .groupBy("node").agg(min("dist").as("dist"))))
+    }.df
   }
 }

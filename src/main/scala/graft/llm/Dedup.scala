@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
+
 import TextHash._
 
 /** Document deduplication for training-data pipelines: exact (hash
@@ -223,77 +225,56 @@ object Dedup {
     * component's smallest member id.
     *
     * Scale notes: rounds needed = graph diameter, and near-dup graphs
-    * are dense small clusters (diameter 2–3 in practice); `maxIter`
-    * bounds the worst case. Each round is one equi-join on the edge
-    * list + one min-aggregation — both shuffle on node id, map-side
-    * combined; labels persist per round (cluster scale: checkpoint
-    * every few rounds to truncate lineage). The production refinement
+    * are dense small clusters (diameter 2–3 in practice). Each round is
+    * one join of the edge list against the broadcast labels + one
+    * min-aggregation on node id, map-side combined; rounds run on
+    * [[graft.Fixpoint]] until no label moves. The production refinement
     * for adversarial long-chain graphs is large-star/small-star
-    * (Kiveris et al., "Connected Components in MapReduce"), same
-    * join-per-round shape.
+    * ([[connectedComponentsStars]]), same join-per-round shape.
     *
     * Returns (id, cluster_id) for every node on an edge; singleton
     * documents are absent by construction (no edge ⇒ no dup).
     */
-  def connectedComponents(
-      pairs: DataFrame,
-      id1: String,
-      id2: String,
-      maxIter: Int = 20): DataFrame =
-    connectedComponentsWithCount(pairs, id1, id2, maxIter)._1
+  def connectedComponents(pairs: DataFrame, id1: String, id2: String): DataFrame =
+    connectedComponentsWithCount(pairs, id1, id2)._1
 
   /** [[connectedComponents]] plus the label relation's EXACT row count
-    * (one row per node on an edge), which the convergence loop already
-    * materializes — callers gating a broadcast hint on the label size
+    * (one row per node on an edge), which the loop counts anyway —
+    * callers gating a broadcast hint on the label size
     * ([[graft.BroadcastGate]]) get the bound with zero extra jobs.
     */
   def connectedComponentsWithCount(
       pairs: DataFrame,
       id1: String,
-      id2: String,
-      maxIter: Int = 20): (DataFrame, Long) = {
+      id2: String): (DataFrame, Long) = {
     val edges = graft.CacheScope.persist(
       pairs.select(col(id1).as("src"), col(id2).as("dst"))
         .unionByName(pairs.select(col(id2).as("src"), col(id1).as("dst"))))
-    // Per-round lineage CUT, not just cache: `next` references `labels`
-    // twice (union + convergence test), so an uncut logical plan doubles
-    // every round and Catalyst re-analysis dominates the loop
-    // (measured: 27 s → 3 s at sf0.001). localCheckpoint materializes
-    // the round and replaces the plan with its blocks; on a cluster use
-    // reliable checkpoint() so rounds survive executor loss.
-    //
     // Round-0 seed: min(self, direct neighbors) straight off the edge
     // list — one aggregation buys the first propagation round (labels
     // after round k cover the (k+1)-hop neighborhood).
-    //
-    // Checkpoints are LAZY + an explicit count (r20): an eager
-    // localCheckpoint is itself a count job over the internal RDD, so
-    // eager-then-count paid two full job launches per round for one
-    // materialization. The lazy mark persists the blocks during the
-    // count that the loop needs anyway — the convergence probe and the
-    // materialization are ONE job per round (the label row count rides
-    // round 0's; "did anything move" rides each round's).
-    var labels = edges
+    val seed = Fixpoint.cut(edges
       .groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), first(col("src"))).as("cluster_id"))
-      .localCheckpoint(false)
-    val nodeCount = labels.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val neighborLabels = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("cluster_id"))
-      val next = labels.unionByName(neighborLabels)
-        .groupBy("id").agg(min("cluster_id").as("cluster_id"))
-        .join(labels.select(col("id"), col("cluster_id").as("__prev")), "id")
-        .localCheckpoint(false)
-      val changed = next.filter(col("cluster_id") =!= col("__prev")).count()
-      labels = next.drop("__prev")
-      converged = changed == 0
-      iter += 1
+      .agg(least(min(col("dst")), first(col("src"))).as("cluster_id")))
+    // a round moves labels only if some label is more than one hop
+    // from its component minimum: fewer rounds than nodes
+    val labels = Fixpoint.converge("Dedup.connectedComponents", seed, cap = seed.rows)(
+        seed.df) { labels =>
+      val current = Fixpoint.Bounded(labels, seed.rows)
+      // each node's own row carries its previous label, so one
+      // aggregate yields the new label and whether it moved
+      val (next, moved) = Fixpoint.cutCounting(
+        labels.withColumn("__own", lit(true))
+          .unionByName(edges
+            .join(current.hinted.withColumnRenamed("id", "src"), "src")
+            .select(col("dst").as("id"), col("cluster_id"), lit(false).as("__own")))
+          .groupBy("id")
+          .agg(min("cluster_id").as("cluster_id"),
+            max(when(col("__own"), col("cluster_id"))).as("__prev")),
+        col("cluster_id") =!= col("__prev"))
+      if (moved == 0) None else Some(next.drop("__prev"))
     }
-    (labels, nodeCount)
+    (labels, seed.rows)
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR
@@ -313,21 +294,16 @@ object Dedup {
     *
     * Each round is one groupBy(min) + one equi-join on the node id —
     * the SAME shuffle shape per round as label propagation, just
-    * fewer rounds. Per-round `localCheckpoint` cuts lineage exactly
-    * as in [[connectedComponents]] (reliable `checkpoint()` on a real
-    * cluster). At fixpoint the edge set IS the star (node → component
-    * min), so labels fall out without a final propagation pass.
+    * fewer rounds, run on [[graft.Fixpoint]]. At fixpoint the edge set
+    * IS the star (node → component min), so labels fall out without a
+    * final propagation pass.
     *
     * Returns (id, cluster_id) for every node on an edge — same
     * contract and same result as [[connectedComponents]] (gated
     * result-identical against the q36 oracle; the equivalence is also
     * property-tested on random graphs).
     */
-  def connectedComponentsStars(
-      pairs: DataFrame,
-      id1: String,
-      id2: String,
-      maxIter: Int = 16): DataFrame = {
+  def connectedComponentsStars(pairs: DataFrame, id1: String, id2: String): DataFrame = {
     // Canonical directed form: high → low, self-loops out, distinct.
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("src"), col("dst")).as("src"),
@@ -360,36 +336,27 @@ object Dedup {
         .distinct()
     }
 
-    // Lazy checkpoint + count (r20, same fold as connectedComponents):
-    // the count the loop needs materializes the checkpoint in ONE job
-    // instead of eager-checkpoint-then-count's two.
-    var edges = canon(
-      pairs.select(col(id1).as("src"), col(id2).as("dst")))
-      .localCheckpoint(false)
-    // r19: carry each round's cardinality forward instead of re-counting
-    // the PREVIOUS round's checkpoint every round — the convergence test
-    // was 3 jobs/round (next.count, edges.count, exceptAll), now 2, with
-    // identical semantics (the carried count IS last round's next.count).
-    var edgeCount = edges.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = canon(smallStar(largeStar(edges))).localCheckpoint(false)
-      val nextCount = next.count()
+    val seed = Fixpoint.cut(canon(pairs.select(col(id1).as("src"), col(id2).as("dst"))))
+    // neither star operation adds edges, and contraction takes
+    // O(log n) rounds: the edge count is a generous cap
+    val stars = Fixpoint.converge("Dedup.connectedComponentsStars", seed, cap = seed.rows)(
+        seed) { edges =>
+      // small-star reads large-star's output twice (its edges and their
+      // minima); the cut's job materializes it, so small-star's
+      // broadcasts read its blocks instead of each re-deriving it (a
+      // lazy mark alone would be computed by each of them at once)
+      val large = Fixpoint.cut(largeStar(edges.df))
+      val next = Fixpoint.cut(canon(smallStar(large.df)))
       // Both sides are DISTINCT sets, so equal-count + empty one-sided
-      // difference ⇔ set equality. At cluster scale swap the exceptAll
-      // for a (count, xor-of-hash) checksum to avoid the extra join.
-      converged = nextCount == edgeCount &&
-        next.exceptAll(edges).limit(1).count() == 0
-      edges = next
-      edgeCount = nextCount
-      iter += 1
-    }
+      // difference ⇔ set equality.
+      if (next.rows == edges.rows && next.df.exceptAll(edges.df).limit(1).count() == 0) None
+      else Some(next)
+    }.df
     // Fixpoint edge set is the star: src = member, dst = component min.
-    edges.select(col("src").as("id"), col("dst").as("cluster_id"))
+    Fixpoint.finish(seed)(stars.select(col("src").as("id"), col("dst").as("cluster_id"))
       .unionByName(
-        edges.select(col("dst").as("id"), col("dst").as("cluster_id")))
-      .distinct()
+        stars.select(col("dst").as("id"), col("dst").as("cluster_id")))
+      .distinct())
   }
 
   /** The end-to-end near-dup DROP: cluster the verified pairs, keep

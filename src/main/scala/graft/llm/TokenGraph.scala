@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.CacheScope
+import graft.{CacheScope, Fixpoint}
 
 /** Graph analytics over the token-adjacency (bigram) digraph of a
   * corpus — the centrality signal behind TextRank-style keyword and
@@ -18,10 +18,11 @@ import graft.CacheScope
   *
   * Scale shape: the edge aggregate is one map-side-combined shuffle at
   * vocabulary² granularity; each iteration is an equi-join of the
-  * (small) score relation against the persisted edge list plus one
-  * aggregate — vocabulary-sized, never corpus-sized. Iterations are
-  * unrolled; for deep iteration counts cut lineage per round
-  * (localCheckpoint) as the CC operator does.
+  * (small, broadcast) score relation against the persisted edge list
+  * plus one aggregate — vocabulary-sized, never corpus-sized. Every
+  * iteration runs on [[graft.Fixpoint]] (cut, broadcast gate and
+  * small-round bracket), bounded by the node or edge count each
+  * operator takes up front.
   */
 object TokenGraph {
 
@@ -61,87 +62,58 @@ object TokenGraph {
     * conserved up to integral-division quantization. Cost: one extra
     * anti-join + scalar broadcast per round, still vocabulary-sized.
     *
-    * Deep iteration: beyond [[LineageCutAfter]] rounds the score
-    * relation is localCheckpoint'ed each round — unrolled lineage grows
-    * a plan per iteration and the analyzer/optimizer cost goes
-    * quadratic around ~10 rounds otherwise (the same per-round cut the
-    * connected-components operator uses; at cluster scale prefer a
-    * reliable `checkpoint()` so executor loss can't orphan rounds).
-    * Below the threshold plans are left unrolled so the shallow gated
-    * shapes (q111/q128, 2 rounds) stay byte-identical.
+    * The node count is taken once up front: it is the uniform start
+    * score's divisor and the bound of every per-node relation.
     */
-  /** Rounds beyond which [[pagerankE6]] cuts lineage per round. */
-  val LineageCutAfter: Int = 4
-
   def pagerankE6(
       spark: SparkSession,
       docs: DataFrame,
       text: Column,
       iters: Int,
       redistributeSinks: Boolean = false): DataFrame = {
-    // Cut per-round lineage past the depth threshold — AND always for
-    // the redistribute-sinks variant (r20): that branch references the
-    // previous round's `pr` TWICE per round (sink-mass anti-join +
-    // incoming join), so an uncut unrolled plan re-derives every
-    // earlier round ~2^rounds times — the boundedMinPlus disease
-    // (q128's two-round plan carried 4 copies of round 1). The default
-    // branch references `pr` once per round, so its shallow plans stay
-    // uncut and byte-identical to the r19 receipts (q111).
-    val cutLineage = iters > LineageCutAfter || redistributeSinks
     val edges = CacheScope.persist(bigramEdges(docs, text))
     val nodes = CacheScope.persist(
       edges.select(col("w1").as("w"))
         .union(edges.select(col("w2").as("w")))
         .distinct())
-    val nCount = nodes.agg(count(lit(1)).as("n_nodes"))
+    val input = Fixpoint.counted(nodes)
+    // an empty graph has no rows to divide for; keep the literal legal
+    val n = math.max(input.rows, 1L)
+    // per-node relations (scores, in-flow, out-weights) join the
+    // up-to-vocab² edge side broadcast, gated on the node count
+    def perNode(df: DataFrame) = Fixpoint.Bounded(df, input.rows).hinted
     val outw = edges.groupBy(col("w1")).agg(sum(col("c")).as("outw"))
     val weighted = CacheScope.persist(
       edges.join(outw, "w1")
         .select(col("w1"), col("w2"), col("c"), col("outw")))
 
-    // Join-strategy note (r19, guide §3.1): every per-round join pairs
-    // the EDGE relation (the big side at corpus scale — up to vocab²)
-    // with a score/incoming relation bounded by the VOCABULARY (one row
-    // per node). The score side is hinted broadcast so the edge
-    // relation is never shuffled per round — without the hint the
-    // statless intermediate planned as SortMergeJoin, paying two
-    // exchanges + sorts per round (same sizing rule as q299's
-    // BROADCAST(w): right while one-row-per-node fits a broadcast;
-    // for graphs whose NODE set outgrows a broadcast, drop the hint).
-    var pr = nodes.crossJoin(broadcast(nCount))
-      .select(col("w"), expr("1000000L div n_nodes").as("pr"))
-    for (_ <- 1 to iters) {
-      val incoming = weighted.join(broadcast(pr), weighted("w1") === pr("w"))
+    val pr0 = nodes.select(col("w"), lit(1000000L / n).as("pr"))
+    val pr = Fixpoint.rounds(iters, input)(pr0) { pr =>
+      val incoming = weighted.join(perNode(pr), weighted("w1") === pr("w"))
         .select(col("w2"), expr("(pr * c) div outw").as("contrib"))
         .groupBy(col("w2"))
         .agg(sum(col("contrib")).as("inc"))
-      pr =
+      val next =
         if (redistributeSinks) {
-          val sinkMass = pr.join(broadcast(outw),
-              pr("w") === outw("w1"), "left_anti")
+          val sinkMass = pr.join(perNode(outw), pr("w") === outw("w1"), "left_anti")
             .agg(coalesce(sum(col("pr")), lit(0L)).as("sink_pr"))
-          nodes.crossJoin(broadcast(nCount)).crossJoin(broadcast(sinkMass))
-            .join(broadcast(incoming), nodes("w") === incoming("w2"), "left")
+          nodes.crossJoin(broadcast(sinkMass))
+            .join(perNode(incoming), nodes("w") === incoming("w2"), "left")
             .select(
               col("w"),
-              expr("""150000L div n_nodes
-                     + (850000L * (coalesce(inc, 0L) + sink_pr div n_nodes))
+              expr(s"""150000L div ${n}L
+                     + (850000L * (coalesce(inc, 0L) + sink_pr div ${n}L))
                        div 1000000L""").as("pr"))
         } else
-          nodes.crossJoin(broadcast(nCount))
-            .join(broadcast(incoming), nodes("w") === incoming("w2"), "left")
+          nodes.join(perNode(incoming), nodes("w") === incoming("w2"), "left")
             .select(
               col("w"),
-              expr("150000L div n_nodes + (850000L * coalesce(inc, 0L)) div 1000000L")
+              expr(s"150000L div ${n}L + (850000L * coalesce(inc, 0L)) div 1000000L")
                 .as("pr"))
-      // lazy mark (r20): the Dataset-level truncation kills the
-      // re-derivation; the blocks materialize inside the next round's
-      // broadcast-build job instead of a separate count job per round
-      if (cutLineage) pr = pr.localCheckpoint(false)
+      Some(Fixpoint.mark(next))
     }
-    nodes.join(broadcast(outw), nodes("w") === outw("w1"), "left")
-      .join(broadcast(pr.withColumnRenamed("w", "w_pr")),
-        nodes("w") === col("w_pr"))
+    nodes.join(perNode(outw), nodes("w") === outw("w1"), "left")
+      .join(perNode(pr.withColumnRenamed("w", "w_pr")), nodes("w") === col("w_pr"))
       .select(
         nodes("w").as("token"),
         coalesce(col("outw"), lit(0L)).as("out_w"),
@@ -167,13 +139,10 @@ object TokenGraph {
     * frontier (shrinking, vocabulary-bounded) against the persisted
     * adjacency and anti-joins the visited set — work per round is
     * proportional to the frontier's out-degree sum, the textbook
-    * Pregel/BSP step. The loop short-circuits as soon as a frontier
-    * comes back empty (one cheap `isEmpty` probe per round against the
-    * just-persisted frontier), so a graph whose component is exhausted
-    * early doesn't keep launching no-op join jobs out to `maxHops`.
-    * Rounds are bounded by `maxHops`, so lineage stays shallow; for
-    * unbounded BFS cut lineage per round (localCheckpoint) the way the
-    * connected-components operator does.
+    * Pregel/BSP step. Rounds run on [[graft.Fixpoint]] and stop as soon
+    * as a frontier comes back empty, so a graph whose component is
+    * exhausted early doesn't keep launching no-op join jobs out to
+    * `maxHops`.
     */
   def bfsHops(
       spark: SparkSession,
@@ -181,45 +150,25 @@ object TokenGraph {
       text: Column,
       maxHops: Int): DataFrame = {
     val adj = CacheScope.persist(undirectedAdjacency(docs, text))
-    val seed = adj.agg(min(col("u")).as("token"))
-      .filter(col("token").isNotNull)
-      .select(col("token"), lit(0).as("dist"))
-    var visited = CacheScope.persist(seed)
-    var frontier = visited
-    // Running row counts: the per-hop probe is a count() (same single
-    // job the old isEmpty paid, and it fully materializes the persisted
-    // frontier), so the frontier/visited sizes are driver-known for
-    // free and the broadcast hints below can be size-gated.
-    var frontierRows = 1L // seed is ≤ 1 row
-    var visitedRows = 1L
-    var h = 1
-    var exhausted = frontier.isEmpty
-    while (h <= maxHops && !exhausted) {
-      // §3.1: frontier and visited are node-bounded — broadcast them so
-      // the adjacency (the big side at corpus scale) is never shuffled
-      // per hop. SIZE-GATED (r19 verdict #3): `visited` grows
-      // monotonically with hops and on a high-diameter graph outgrows a
-      // broadcast — past BroadcastGate's ceiling the hint drops and the
-      // join falls back to a shuffle instead of an OOM.
-      val next = CacheScope.persist(
-        adj.join(graft.BroadcastGate.ifUnder(frontier, frontierRows),
-            adj("u") === frontier("token"))
-          .select(adj("v").as("token"))
-          .distinct()
-          .join(graft.BroadcastGate.ifUnder(visited, visitedRows),
-            Seq("token"), "left_anti")
-          .select(col("token"), lit(h).as("dist")))
-      val n = next.count()
-      if (n == 0) exhausted = true
-      else {
-        visited = CacheScope.persist(visited.unionAll(next))
-        frontier = next
-        frontierRows = n
-        visitedRows += n
-      }
-      h += 1
+    val input = Fixpoint.counted(adj)
+    val seed = Fixpoint.Bounded(
+      adj.agg(min(col("u")).as("token"))
+        .filter(col("token").isNotNull)
+        .select(col("token"), lit(0).as("dist")),
+      1L)
+    val (visited, _, _) = Fixpoint.rounds(maxHops, input)((seed, seed, 1)) {
+      case (visited, frontier, h) =>
+        val next = Fixpoint.cut(
+          adj.join(frontier.hinted, adj("u") === frontier.df("token"))
+            .select(adj("v").as("token"))
+            .distinct()
+            .join(visited.hinted, Seq("token"), "left_anti")
+            .select(col("token"), lit(h).as("dist")))
+        if (next.rows == 0) None
+        else Some((Fixpoint.Bounded(visited.df.unionAll(next.df), visited.rows + next.rows),
+          next, h + 1))
     }
-    visited
+    Fixpoint.finish(input)(visited.df)
   }
 
   /** `iters` rounds of HITS (hubs & authorities) over the DISTINCT
@@ -247,12 +196,11 @@ object TokenGraph {
     *
     * Scale shape: the persisted distinct-edge relation is joined twice
     * per round against vocabulary-sized score relations; each round is
-    * two equi-joins + two aggregates + two scalar-max broadcasts, with
-    * each half-round's sum aggregate localCheckpoint'ed (it is
-    * referenced twice — values and max — so the cut both truncates
-    * lineage at every depth and stops the double derivation; see the
-    * in-body note). Returns (token, auth_e6, hub_e6): 0 marks a node
-    * absent from that role's domain (no in-edges / no out-edges).
+    * two equi-joins + two aggregates + two scalar-max broadcasts on
+    * [[graft.Fixpoint]]. Each half-round's sum aggregate is the cut
+    * state: it is referenced twice (values and their max). Returns
+    * (token, auth_e6, hub_e6): 0 marks a node absent from that role's
+    * domain (no in-edges / no out-edges).
     */
   def hitsE6(
       spark: SparkSession,
@@ -261,43 +209,22 @@ object TokenGraph {
     require(iters >= 1, s"iters must be >= 1: $iters")
     val edges = CacheScope.persist(
       edgeList.select(col("w1"), col("w2")).distinct())
+    // every score relation has at most one row per edge
+    val input = Fixpoint.counted(edges)
+    def scores(df: DataFrame) = Fixpoint.Bounded(df, input.rows).hinted
     val e6 = "CAST((CAST(s AS DECIMAL(38,0)) * 1000000) div m AS BIGINT)"
-    // same §3.1 sizing rule as pagerankE6: the hub/auth score relation
-    // is one row per node — broadcast it so the (potentially vocab²)
-    // edge relation is never shuffled per round.
-    //
-    // Lineage cut placement (r20): each half-round references its sum
-    // aggregate TWICE (the values and their max), so the cut must land
-    // on `as`/`hs` — the twice-referenced subtree — not on the derived
-    // auth/hub. Cut on auth/hub (r19 shape, only past LineageCutAfter)
-    // the aggregate re-derived once per reference (2× work per
-    // half-round at q244's depth 6), and below the threshold nothing
-    // cut at all, so the unrolled plan re-derived every earlier round
-    // ~4^iters times — the boundedMinPlus disease: hitsE6(iters=3) on
-    // a 5-node graph measured 52.8 s, iters=2 21.2 s, pure
-    // plan-analysis blowup. One node-sized eager materialization per
-    // half-round makes the work linear in rounds at every depth; the
-    // derived auth/hub are cheap single-projection reads of the
-    // checkpointed blocks and need no cut of their own.
-    var hub = edges.select(col("w1").as("w")).distinct()
+    val hub0 = edges.select(col("w1").as("w")).distinct()
       .withColumn("v", lit(1000000L))
-    var auth: DataFrame = null
-    // Checkpoints are LAZY: the Dataset-level lineage truncation (what
-    // kills the 4^iters re-derivation) happens at the mark, and the
-    // blocks materialize inside the max-aggregate broadcast-build job
-    // that consumes each relation first — an eager mark would pay a
-    // separate count job per half-round for the same materialization.
-    for (_ <- 1 to iters) {
-      val as = edges.join(broadcast(hub), edges("w1") === hub("w"))
-        .groupBy(edges("w2")).agg(sum(col("v")).cast("long").as("s"))
-        .localCheckpoint(false)
-      auth = as.crossJoin(broadcast(as.agg(max(col("s")).as("m"))))
+    // round 1 replaces the placeholder authority scores
+    val (auth, hub) = Fixpoint.rounds(iters, input)((hub0, hub0)) { case (_, hub) =>
+      val as = Fixpoint.mark(edges.join(scores(hub), edges("w1") === hub("w"))
+        .groupBy(edges("w2")).agg(sum(col("v")).cast("long").as("s")))
+      val auth = as.crossJoin(broadcast(as.agg(max(col("s")).as("m"))))
         .select(col("w2").as("w"), expr(e6).as("v"))
-      val hs = edges.join(broadcast(auth), edges("w2") === auth("w"))
-        .groupBy(edges("w1")).agg(sum(col("v")).cast("long").as("s"))
-        .localCheckpoint(false)
-      hub = hs.crossJoin(broadcast(hs.agg(max(col("s")).as("m"))))
-        .select(col("w1").as("w"), expr(e6).as("v"))
+      val hs = Fixpoint.mark(edges.join(scores(auth), edges("w2") === auth("w"))
+        .groupBy(edges("w1")).agg(sum(col("v")).cast("long").as("s")))
+      Some((auth, hs.crossJoin(broadcast(hs.agg(max(col("s")).as("m"))))
+        .select(col("w1").as("w"), expr(e6).as("v"))))
     }
     // Final combine as union + groupBy, not FULL OUTER join: both sides
     // are uniquely keyed on w (groupBy outputs), so the two are
@@ -306,7 +233,7 @@ object TokenGraph {
     // exchange with map-side partials where the full-outer SortMergeJoin
     // cost two exchanges plus two sorts (full outer cannot broadcast;
     // r19 §3, the q244 plan's last remaining SMJ pair).
-    auth.select(col("w"), col("v").as("auth_e6"),
+    Fixpoint.finish(input)(auth.select(col("w"), col("v").as("auth_e6"),
         lit(null).cast("long").as("hub_e6"))
       .unionByName(hub.select(col("w"),
         lit(null).cast("long").as("auth_e6"), col("v").as("hub_e6")))
@@ -314,6 +241,6 @@ object TokenGraph {
       .agg(max(col("auth_e6")).as("auth_e6"), max(col("hub_e6")).as("hub_e6"))
       .select(col("w").as("token"),
         coalesce(col("auth_e6"), lit(0L)).as("auth_e6"),
-        coalesce(col("hub_e6"), lit(0L)).as("hub_e6"))
+        coalesce(col("hub_e6"), lit(0L)).as("hub_e6")))
   }
 }

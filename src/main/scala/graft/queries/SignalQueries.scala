@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{CacheScope, Tables}
+import graft.Tables
 import graft.llm.{RandomProjection, Similarity, TokenGraph}
 
 /** Round-10 session-3 signal operators: JL random-projection search
@@ -168,8 +168,7 @@ object SignalQueries {
     // sums/maxes/divisions exact, the 10⁶-scaled product routed
     // through DECIMAL(38,0)/HUGEINT. The oracle unrolls the same six
     // rounds as generated CTEs. Per round: two vocabulary-sized
-    // equi-joins against the persisted edge list — never corpus-sized,
-    // lineage cut per round past the shallow threshold.
+    // equi-joins against the persisted edge list — never corpus-sized.
     "q244_hits" -> QuerySpec(
       (s, dir) => {
         val weighted = TokenGraph.bigramEdges(
@@ -180,28 +179,8 @@ object SignalQueries {
         val backbone = weighted.crossJoin(broadcast(tot))
           .filter(col("c") * col("n_pairs") >= col("total"))
           .select(col("w1"), col("w2"))
-        // Iterative-BSP width scoping (the q299/q85 pattern, with the
-        // same single-threaded-runner contract documented there): 6
-        // HITS rounds × (2 joins + 2 aggs + 2 EAGER lineage cuts)
-        // schedule every exchange on a vocabulary-sized relation —
-        // 32-wide exchanges are pure per-round scheduling overhead.
-        // The lineage cuts execute inside the hitsE6 call, so the
-        // override brackets the call itself plus a persist+count of
-        // the result; later actions reuse the cache. At cluster scale
-        // drop the scope — width is the lever only when the per-round
-        // relation is driver-small.
-        SqlConfScope.withShufflePartitions(s, 8) {
-          // AQE off inside the bracket (r20, the q205/q299 pattern):
-          // per-stage materialization jobs are pure driver overhead on
-          // vocabulary-sized per-round exchanges (71 jobs/pass with
-          // AQE). Drop with the width scope at cluster scale.
-          SqlConfScope.withConf(s, "spark.sql.adaptive.enabled", "false") {
-            val out = TokenGraph.hitsE6(s, backbone, iters = 6)
-              .orderBy(desc("auth_e6"), col("token"))
-            CacheScope.persist(out).count()
-            out
-          }
-        }
+        TokenGraph.hitsE6(s, backbone, iters = 6)
+          .orderBy(desc("auth_e6"), col("token"))
       },
       hitsOracle(6)))
 }

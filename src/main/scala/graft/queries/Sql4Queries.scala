@@ -60,20 +60,20 @@ object Sql4Queries {
                  CAST(sum(cum) AS BIGINT) AS cum_cents
           FROM walk GROUP BY rn ORDER BY depth""")
         // Materialize the ~depth-bounded rollup (≤ orders/customer
-        // rows) under a NARROW shuffle width, the way the streaming
-        // gates scope drains: the recursion runs ~25 rounds and every
-        // round pays per-partition scheduling on each exchange —
-        // 32-wide exchanges are pure overhead when the per-round
-        // frontier is customer-count-sized (round-11 verdict item 4;
-        // the same trick measured 6.5 → 2.6 s on q85). Shuffle width
-        // is read at EXECUTION, not plan construction, so the
-        // override must bracket an action: persist + count here, and
-        // later actions reuse the cached rollup. At cluster scale
-        // this constant disappears (the recursion depth, not the
-        // width, is the invariant) — drop the scope together with the
-        // BROADCAST hint per the sizing rule above.
-        // (Concurrency contract lives on SqlConfScope: single-threaded
-        // runner, or clone the session first.)
+        // rows) under a NARROW shuffle width with AQE off: the recursion
+        // runs ~25 rounds and every round pays per-partition scheduling
+        // (and, under AQE, a job per stage) on exchanges that move a
+        // customer-count-sized frontier (measured 6.5 → 2.6 s on q85).
+        // Width and AQE are read at EXECUTION, so the override brackets
+        // an action: persist + count here, and later actions reuse the
+        // cached rollup. This is the one bracket outside graft.Fixpoint:
+        // Spark runs the recursion inside that single action, and no
+        // count the gate already runs bounds the frontier before it, so
+        // Fixpoint's bound-gated decision has nothing to decide on
+        // without an extra job. Drop the scope together with the
+        // BROADCAST hint per the sizing rule above. (Concurrency
+        // contract lives on SqlConfScope: single-threaded runner, or
+        // clone the session first.)
         SqlConfScope.withShufflePartitions(s, 8) {
           SqlConfScope.withConf(s, "spark.sql.adaptive.enabled", "false") {
             CacheScope.persist(out).count(); ()

@@ -1274,38 +1274,10 @@ object StatQueries {
           .withColumn("rn", row_number().over(
             Window.partitionBy("src").orderBy("w", "dst")))
           .filter(col("rn") <= 2).select("src", "dst"))
-        // Materialize the FACT-SCALE edge build here, outside the
-        // narrow bracket below, so the 4-table join runs at full
-        // session width with AQE — the bracket then scopes only the
-        // nation-sized (≤25-row) fixpoint rounds (r20).
-        edges.count()
-        // Iterative-BSP width scoping (q299/q244 pattern, same
-        // single-threaded-runner contract): both BFS directions run
-        // per-round localCheckpoints over a nation-sized (~25 node)
-        // graph — 32-wide exchanges are pure scheduling overhead
-        // there, and AQE's per-stage materialization jobs multiply the
-        // driver round-trips on exchanges that move tens of rows
-        // (measured 78 jobs/pass with AQE, every post-edge relation
-        // ≤25 rows). Bracket the rounds + a persist+count of the
-        // result; drop BOTH scopes at cluster scale — though note the
-        // iterated relations here are nation-bounded at ANY scale, so
-        // even at 100 TB this loop's rounds stay tiny.
-        SqlConfScope.withShufflePartitions(s, 8) {
-          SqlConfScope.withConf(s, "spark.sql.adaptive.enabled", "false") {
-            // Measured and declined (r20): ALSO forcing the per-round
-            // joins to SMJ (autoBroadcastJoinThreshold=-1 + gate off)
-            // cut jobs further, 48 → 24/pass, but wall-clock REGRESSED
-            // (4.0-4.9 s → 5.7-6.4 s at width 8; width 1 no better):
-            // the per-round sort+exchange stages cost more than the
-            // broadcast-collect jobs they replace. Broadcasts stay.
-            val fwd = graft.analytics.ShortestPath.reachable(edges, 0L)
-            val bwd = graft.analytics.ShortestPath.reachable(
-              edges.select(col("dst").as("src"), col("src").as("dst")), 0L)
-            val out = fwd.intersect(bwd).orderBy("node")
-            graft.CacheScope.persist(out).count()
-            out
-          }
-        }
+        val fwd = graft.analytics.ShortestPath.reachable(edges, 0L)
+        val bwd = graft.analytics.ShortestPath.reachable(
+          edges.select(col("dst").as("src"), col("src").as("dst")), 0L)
+        fwd.intersect(bwd).orderBy("node")
       },
       """WITH RECURSIVE
          e0 AS (SELECT CAST(c.c_nationkey AS BIGINT) AS src,

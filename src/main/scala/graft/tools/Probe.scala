@@ -13,10 +13,24 @@ package graft.tools
   * a probe of a persisting query times the CACHE BUILD and leaks the
   * cache into every later probe in the JVM — the numbers stop
   * predicting Bench.
+  *
+  * Jobs per pass are counted by a listener on `onJobStart`, registered
+  * once for the session. The status tracker is not a counter: it keeps
+  * only the jobs its store still retains (about the last 1,000), so a
+  * difference of its lengths goes wrong once a JVM has run that many.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.get("probe")
+    val jobsStarted = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobsStarted.incrementAndGet()
+    })
+    def jobs(): Long = {
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      jobsStarted.get
+    }
     var dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for (name <- args) {
       // `dir=<path>` switches the active data dir mid-run, so a multi-
@@ -39,10 +53,9 @@ object Probe {
           // (convergence probe riding the materializing count) change
           // job counts by construction but drown in ±60% wall-clock
           // noise — the job count is the noise-free receipt.
-          val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+          val jobsBefore = jobs()
           val two = Seq(onePass(), onePass())
-          val jobsPerPass =
-            (spark.sparkContext.statusTracker.getJobIdsForGroup(null).length - jobsBefore) / 2
+          val jobsPerPass = (jobs() - jobsBefore) / 2
           val dt =
             if (two.min >= 3.0) two.min
             else (two :+ onePass()).sorted.apply(1)

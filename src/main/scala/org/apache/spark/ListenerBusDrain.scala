@@ -1,6 +1,6 @@
 package org.apache.spark
 
-/** The listener bus is package-private; a test that counts jobs with a
+/** The listener bus is package-private; code that counts jobs with a
   * listener drains it before reading the count, so every event of the
   * action it measured has been delivered.
   */

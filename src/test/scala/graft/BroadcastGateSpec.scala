@@ -37,8 +37,14 @@ class BroadcastGateSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L))
       .toDF("src", "dst")
+    val weighted = Seq((0L, 1L, 10L), (0L, 2L, 100L), (1L, 2L, 5L), (2L, 3L, 1L))
+      .toDF("src", "dst", "w")
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("id1", "id2")
     val corpus = Seq(1L, 2L, 3L, 4L, 7L, 9L).toDF("doc_id")
+    // a triangle with a pendant chain: the 2-core is the triangle
+    val coreEdges = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e"))
+      .toDF("u", "v")
+    val docs = Seq("a b c d", "c e").toDF("text")
 
     def results() = CacheScope.scoped {
       val reach = graft.analytics.ShortestPath.reachable(edges, 0L)
@@ -46,7 +52,15 @@ class BroadcastGateSpec extends AnyFunSuite with SparkTestSession {
       val kept = graft.llm.Dedup
         .dropNearDuplicates(corpus, "doc_id", pairs)
         .collect().map(_.getLong(0)).toSet
-      (reach, kept)
+      val stars = graft.llm.Dedup.connectedComponentsStars(pairs, "id1", "id2")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val dist = graft.analytics.ShortestPath.boundedMinPlus(weighted, 0L, 3)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val core = graft.analytics.KCore.kCore(coreEdges, col("u"), col("v"), k = 2)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val hops = graft.llm.TokenGraph.bfsHops(spark, docs, col("text"), maxHops = 5)
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      (reach, kept, stars, dist, core, hops)
     }
 
     val hinted = results()
@@ -62,5 +76,9 @@ class BroadcastGateSpec extends AnyFunSuite with SparkTestSession {
     assert(hinted === unhinted)
     assert(hinted._1 === Set(0L, 1L, 2L))
     assert(hinted._2 === Set(1L, 4L, 7L))
+    assert(hinted._3 === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
+    assert(hinted._4 === Map(0L -> 0L, 1L -> 10L, 2L -> 15L, 3L -> 16L))
+    assert(hinted._5 === Map("a" -> 2L, "b" -> 2L, "c" -> 2L))
+    assert(hinted._6 === Map("a" -> 0, "b" -> 1, "c" -> 2, "d" -> 3, "e" -> 3))
   }
 }

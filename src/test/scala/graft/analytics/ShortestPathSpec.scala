@@ -36,7 +36,7 @@ class ShortestPathSpec extends AnyFunSuite with SparkTestSession {
 
   test("per-round cut keeps the unrolled plan linear, not 2^rounds") {
     // round r references dist_{r-1} twice (union + relaxation); without
-    // the eager per-round localCheckpoint the returned plan re-derived
+    // the per-round cut the returned plan re-derived
     // every earlier round — and the caller's edge build under it —
     // 2^rounds times (q189 scanned its fact tables 56 times). The
     // returned relation must be the round-3 materialization: a
@@ -64,6 +64,13 @@ class ShortestPathSpec extends AnyFunSuite with SparkTestSession {
       e.selectExpr("dst AS src", "src AS dst"), 0L)
       .collect().map(_.getLong(0)).toSet
     assert(bwd === Set(0L, 1L, 2L, 3L))
+  }
+
+  test("reachable runs past 64 rounds on a 70-node chain") {
+    // one round per hop: a loop capped at 64 rounds returned 65 nodes
+    val e = edges((0L until 69L).map(i => (i, i + 1, 1L)): _*).select("src", "dst")
+    assert(ShortestPath.reachable(e, 0L).collect().map(_.getLong(0)).toSet ===
+      (0L to 69L).toSet)
   }
 
   test("reachable on an isolated source is just the source") {

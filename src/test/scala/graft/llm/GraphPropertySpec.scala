@@ -21,7 +21,10 @@ object GraphPropertySpec extends Properties("GraphProperties") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withWorkers(4)
 
-  private lazy val spark = SparkTestSession.session
+  // One session per case: Fixpoint brackets small loops with session
+  // confs, which concurrent workers must not share (the SqlConfScope
+  // condition). The SparkContext and its caches are shared.
+  private def spark = SparkTestSession.session.newSession()
 
   private val graphGen: Gen[List[(Long, Long)]] = for {
     n <- Gen.choose(2, 25)
@@ -53,7 +56,8 @@ object GraphPropertySpec extends Properties("GraphProperties") {
       // cases leak 100 cache entries into the shared session (and every
       // later suite's CacheManager lookups)
       graft.CacheScope.scoped {
-        import spark.implicits._
+        val s = spark
+        import s.implicits._
         val pairs = edges.toDF("id1", "id2")
         val got = Dedup.connectedComponents(pairs, "id1", "id2")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -68,7 +72,8 @@ object GraphPropertySpec extends Properties("GraphProperties") {
   property("large-star/small-star labels equal the component minimum") =
     forAll(graphGen) { edges =>
       graft.CacheScope.scoped {
-        import spark.implicits._
+        val s = spark
+        import s.implicits._
         val pairs = edges.toDF("id1", "id2")
         val got = Dedup.connectedComponentsStars(pairs, "id1", "id2")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -78,9 +83,23 @@ object GraphPropertySpec extends Properties("GraphProperties") {
 
   property("star contraction resolves a 30-node chain") =
     graft.CacheScope.scoped {
-      import spark.implicits._
+      val s = spark
+      import s.implicits._
       val chain = (0L until 29L).map(i => (i, i + 1)).toDF("id1", "id2")
       Dedup.connectedComponentsStars(chain, "id1", "id2")
         .collect().forall(r => r.getLong(1) == 0L)
+    }
+
+  // A 30-node chain has diameter 29: label propagation needs 28 rounds
+  // past its seed, more than a fixed cap of 20 would run — a truncated
+  // loop leaves node 29 labeled 8.
+  property("label propagation resolves a 30-node chain") =
+    graft.CacheScope.scoped {
+      val s = spark
+      import s.implicits._
+      val chain = (0L until 29L).map(i => (i, i + 1)).toDF("id1", "id2")
+      val got = Dedup.connectedComponents(chain, "id1", "id2")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      got == (0L to 29L).map(_ -> 0L).toMap
     }
 }
