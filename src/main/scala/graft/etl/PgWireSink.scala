@@ -49,13 +49,16 @@ final class PgWireSink(conn: PgConn) extends TableSink {
     try f(c) finally c.close()
   }
 
-  override def tableExists(tableName: String): Boolean = {
+  override def tableExists(tableName: String): Boolean =
+    withClient(tableExistsOn(_, tableName))
+
+  private def tableExistsOn(c: PgWireClient, tableName: String): Boolean = {
     val (schema, table) = SchemaScript.splitTableName(tableName)
-    def lit(s: String) = "'" + s.replace("'", "''") + "'"
-    withClient(_.query(
+    c.query(
       s"""SELECT 1 FROM information_schema.tables
-          WHERE table_schema = ${lit(schema)} AND table_name = ${lit(table)}""")
-      .rows.nonEmpty)
+          WHERE table_schema = ${SchemaManager.quoteLiteral(schema)}
+            AND table_name = ${SchemaManager.quoteLiteral(table)}""")
+      .rows.nonEmpty
   }
 
   override def createSchema(schemaName: String): Unit =
@@ -91,7 +94,7 @@ final class PgWireSink(conn: PgConn) extends TableSink {
   def vacuumLedger(olderThanDays: Int,
       ledgerTable: String = "graft_meta.copy_ledger"): Long =
     withClient { c =>
-      if (!tableExists(ledgerTable)) 0L
+      if (!tableExistsOn(c, ledgerTable)) 0L
       else {
         val r = c.query(
           s"""DELETE FROM ${SchemaManager.quoteTable(ledgerTable)}

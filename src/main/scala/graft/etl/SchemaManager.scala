@@ -19,6 +19,13 @@ object SchemaManager {
     */
   def quoteIdent(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""
 
+  /** A Postgres string literal: embedded `'` doubled (under
+    * standard_conforming_strings, the server default, a backslash is
+    * literal). Every name or value inlined into a statement as a string
+    * quotes through this.
+    */
+  def quoteLiteral(s: String): String = "'" + s.replace("'", "''") + "'"
+
   /** `schema.table` (schema defaults to `public`) as `"schema"."table"`. */
   def quoteTable(tableName: String): String = {
     val (schema, table) = SchemaScript.splitTableName(tableName)

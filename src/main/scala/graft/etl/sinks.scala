@@ -116,8 +116,8 @@ object EnsureDatabase {
       try f(c) finally c.close()
     }
     override def databaseExists(dbName: String): Boolean = onAdmin(_.query(
-      "SELECT 1 FROM pg_database WHERE datname = '" +
-        dbName.replace("'", "''") + "'").rows.nonEmpty)
+      "SELECT 1 FROM pg_database WHERE datname = " +
+        SchemaManager.quoteLiteral(dbName)).rows.nonEmpty)
     override def createDatabase(dbName: String): Unit = onAdmin { c =>
       val _ = c.query(createDatabaseSql(dbName))
     }

@@ -228,13 +228,13 @@ object MongoWireSource {
       kinds: Map[String, FieldKind], count: Long,
       avgDocBytes: Long) extends Serializable
 
-  /** Probed once per (conn, db, collection, sampleSize) per JVM —
-    * same caching discipline as [[PgWireSource.pgTypesOf]]. The cache
-    * key carries sampleSize so readers asking for different probe
-    * depths never share a profile; entries are NOT invalidated, so a
-    * collection reshaped mid-JVM keeps serving the first probe's
-    * schema (the same per-JVM staleness contract the PG type cache
-    * documents) — reconnect on a new port, or a new JVM, to re-probe.
+  /** Probed once per (conn, db, collection, sampleSize) per JVM: a
+    * sampled profile costs a cursor walk over the collection, so reads
+    * share it. The key carries sampleSize so readers asking for
+    * different probe depths never share a profile. Entries are never
+    * invalidated: a collection reshaped mid-JVM keeps serving the first
+    * probe's schema and statistics until the JVM ends — reconnect on a
+    * new port, or start a new JVM, to re-probe.
     */
   private val profileCache = new java.util.concurrent.ConcurrentHashMap[
     (Conn, String, String, Int), CollProfile]()

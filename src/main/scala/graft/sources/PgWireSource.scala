@@ -7,16 +7,16 @@ import scala.collection.JavaConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference, NullOrdering, SortDirection, SortOrder => VSortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, Literal => VLiteral, NamedReference, NullOrdering, SortDirection, SortOrder => VSortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Avg, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.etl.PgConn
-import graft.etl.SchemaManager.{quoteIdent, quoteTable}
+import graft.etl.SchemaManager.{quoteIdent, quoteLiteral, quoteTable}
 
 /** DSv2 table over the Postgres wire protocol — the live analog of
   * `spark.read.jdbc`/`df.write.jdbc` for a classpath with no JDBC
@@ -26,12 +26,14 @@ import graft.etl.SchemaManager.{quoteIdent, quoteTable}
   * commit coordinator with a ledger-arbitrated exactly-once claim).
   * Catalyst gets a real connector, not an RDD of pre-rendered SQL:
   *
-  *  - schema comes typed from `information_schema.columns`;
-  *  - filter pushdown renders the supported `sources.Filter` subset to
-  *    a WHERE clause evaluated BY Postgres (comparisons, IN, null
-  *    tests, LIKE-shaped string matches, AND/OR/NOT) — rejected
-  *    filters stay in Spark, accepted ones are exact so Spark does not
-  *    re-evaluate them;
+  *  - one catalog query per read ([[PgProbe]]) returns the typed
+  *    schema, each column's PG type and collation, the server encoding
+  *    and the `pg_class` statistics; writes never probe;
+  *  - filter pushdown compiles the supported V2 predicate subset
+  *    ([[PgCompiler]]) to a WHERE clause evaluated BY Postgres
+  *    (comparisons, IN, null tests, LIKE-shaped string matches,
+  *    AND/OR/NOT) — rejected predicates stay in Spark, accepted ones
+  *    are exact so Spark does not re-evaluate them;
   *  - column pruning becomes the SELECT list (a 2-column projection
   *    ships 2 columns over the wire, not the table);
   *  - LIMIT pushes per partition (partial when partitioned: each slice
@@ -60,15 +62,26 @@ import graft.etl.SchemaManager.{quoteIdent, quoteTable}
   */
 class PgWireSource extends TableProvider {
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PgWireSource.probeSchema(PgWireSource.connOf(options),
-      options.get("table"))._1
+  /** The probe `inferSchema` took. Spark calls `inferSchema` and then
+    * `getTable` on one provider instance per `load()`, so the table
+    * reuses it instead of asking the catalog twice.
+    */
+  private var inferred: Option[(PgConn, String, PgProbe)] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val (conn, table) = (PgWireSource.connOf(options), options.get("table"))
+    val probe = PgProbe(conn, table)
+    inferred = Some((conn, table, probe))
+    probe.schema
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
     val conn = PgWireSource.connOf(opts)
-    new PgWireTable(conn, opts.get("table"), schema,
+    val table = opts.get("table")
+    new PgWireTable(conn, table, schema,
+      inferred.collect { case (c, t, p) if c == conn && t == table => p },
       Option(opts.get("partitionColumn")),
       Option(opts.get("numPartitions")).map(_.toInt).getOrElse(1),
       Option(opts.get("lowerBound")).map(_.toLong),
@@ -91,126 +104,7 @@ object PgWireSource {
       Option(o.get("password")).getOrElse(""))
   }
 
-  private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** Typed schema from information_schema, plus each column's PG
-    * data_type (the reader keys its text decoding on the CATALYST type,
-    * but bytea/decimal need the declared precision captured here) and
-    * whether its collation is absent-or-deterministic (resolved via
-    * pg_collation.collisdeterministic). Under a NONDETERMINISTIC
-    * collation (ICU, e.g. case-insensitive) server-side `=`/IN match
-    * more rows than Spark's bytewise equality and LIKE errors with
-    * 42P22 — so string equality pushdown is collation-gated, not just
-    * type-gated. A column with no explicit collation inherits the
-    * database default, which Postgres requires to be deterministic; an
-    * explicit collation the catalog cannot resolve reads as
-    * nondeterministic (the safe direction: the filter stays in Spark).
-    */
-  private[sources] def probeSchema(conn: PgConn, table: String)
-      : (StructType, Seq[String], Seq[Boolean]) = {
-    val (schema, t) = graft.etl.SchemaScript.splitTableName(table)
-    val c = conn.open()
-    try {
-      val r = c.query(
-        s"""SELECT c.column_name, c.data_type, c.numeric_precision,
-                   c.numeric_scale, c.is_nullable,
-                   CASE WHEN c.collation_name IS NULL THEN 'true'
-                        ELSE COALESCE(pc.collisdeterministic::text, 'false')
-                   END
-            FROM information_schema.columns c
-            LEFT JOIN pg_catalog.pg_collation pc
-              JOIN pg_catalog.pg_namespace pn ON pn.oid = pc.collnamespace
-              ON pc.collname = c.collation_name
-                AND pn.nspname = c.collation_schema
-            WHERE c.table_schema = ${sqlLit(schema)}
-              AND c.table_name = ${sqlLit(t)}
-            ORDER BY c.ordinal_position""")
-      require(r.rows.nonEmpty, s"table $table not found (or has no columns)")
-      val fields = r.rows.map { row =>
-        val Seq(name, dt, prec, scale, nullable, _) = row: @unchecked
-        StructField(name, sparkType(dt, Option(prec), Option(scale)),
-          nullable != "NO")
-      }
-      (StructType(fields), r.rows.map(_(1)), r.rows.map(_(5) == "true"))
-    } finally c.close()
-  }
-
-  /** Column → declared PG data_type, probed once per (conn, table) per
-    * JVM. The Catalyst schema alone cannot distinguish text from
-    * char(n): both map to StringType, but bpchar comparison is
-    * blank-padded ('a' = 'a  ' is TRUE where Spark says false), so the
-    * scan builder declines pushdown on 'character' columns.
-    */
-  private val pgTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[(PgConn, String),
-      (Map[String, String], Map[String, Boolean])]()
-
-  private def pgProbeOf(conn: PgConn, table: String)
-      : (Map[String, String], Map[String, Boolean]) =
-    pgTypeCache.computeIfAbsent((conn, table), { key =>
-      val (schema, types, collOk) = probeSchema(key._1, key._2)
-      (schema.fieldNames.zip(types).toMap,
-        schema.fieldNames.zip(collOk).toMap)
-    })
-
-  private[sources] def pgTypesOf(conn: PgConn, table: String): Map[String, String] =
-    pgProbeOf(conn, table)._1
-
-  /** Column → collation is absent-or-deterministic (see [[probeSchema]]);
-    * the gate string EQUALITY pushdown requires on top of the text-type
-    * gate. Ranges/TopN/min-max are unaffected: they ride an explicit
-    * COLLATE "C", which overrides any column collation.
-    */
-  private[sources] def pgCollationOkOf(conn: PgConn, table: String)
-      : Map[String, Boolean] =
-    pgProbeOf(conn, table)._2
-
-  /** Planner statistics probed once per (conn, table) per JVM:
-    * (reltuples row estimate, pg_table_size bytes) from pg_class —
-    * the estimates the server maintains via vacuum/analyze, at zero
-    * scan cost. reltuples is -1 until a table's first analyze; that
-    * maps to "unknown" (the planner then keeps its huge default, which
-    * errs away from broadcasting — the safe direction).
-    */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(PgConn, String), (Long, Long)]()
-
-  private[sources] def tableStats(conn: PgConn, table: String): (Long, Long) =
-    statsCache.computeIfAbsent((conn, table), { key =>
-      val (schema, t) = graft.etl.SchemaScript.splitTableName(key._2)
-      val c = key._1.open()
-      try {
-        val r = c.query(
-          s"""SELECT c.reltuples::int8::text, pg_table_size(c.oid)::text
-              FROM pg_class c JOIN pg_namespace n ON n.oid = c.relnamespace
-              WHERE n.nspname = ${sqlLit(schema)}
-                AND c.relname = ${sqlLit(t)}""")
-        r.rows.headOption match {
-          case Some(Seq(rows, bytes)) => (rows.toLong, bytes.toLong)
-          case _ => (-1L, -1L)
-        }
-      } catch { case _: Throwable => (-1L, -1L) }
-      finally c.close()
-    })
-
-  /** Server encoding, probed once per connection recipe per JVM. String
-    * ordering pushdown (TopN sort keys, MIN/MAX) is rendered with
-    * COLLATE "C" — byte order of the server encoding — which equals
-    * Spark's binary UTF-8 string order exactly when that encoding IS
-    * UTF-8; on any other server encoding string-ordered pushdown is
-    * declined rather than silently reordered.
-    */
-  private val encodingCache =
-    new java.util.concurrent.ConcurrentHashMap[PgConn, String]()
-
-  private[sources] def serverEncoding(conn: PgConn): String =
-    encodingCache.computeIfAbsent(conn, { c =>
-      val client = c.open()
-      try client.query("SHOW server_encoding").rows.head.head
-      finally client.close()
-    })
-
-  private def sparkType(pgType: String, prec: Option[String],
+  private[sources] def sparkType(pgType: String, prec: Option[String],
       scale: Option[String]): DataType = pgType match {
     case "smallint" => ShortType
     case "integer" => IntegerType
@@ -229,176 +123,6 @@ object PgWireSource {
     case "bytea" => BinaryType
     case _ => StringType // text/varchar/uuid/json[b]/arrays/user types
   }
-
-  // ---- sources.Filter → SQL ------------------------------------------
-
-  /** Render a filter to a WHERE fragment, or None if any piece is not
-    * exactly expressible (the filter then stays in Spark). SQL WHERE
-    * keeps only TRUE under the same three-valued logic Spark uses, so
-    * `NOT (...)` composes exactly — unlike the Mongo plane's `$nor`
-    * (see [[MongoWireSource.notToBson]]).
-    *
-    * String-valued comparisons are TYPE-GATED by `textCol` — true only
-    * for columns whose declared PG type is `text`/`character varying`.
-    * Every other string-backed column (uuid, json[b], xml, enums,
-    * arrays, user-defined types — all read as StringType) declines
-    * string comparisons outright: the server would compare in the
-    * TYPE's own semantics, not Spark's textual ones (uuid
-    * parse-equality matches a differently-cased literal, jsonb
-    * equality is structural, enum order is definition order), and a
-    * `COLLATE "C"` clause on a non-collatable type is a server error.
-    * On text columns, `utf8Strings` (server encoding is UTF-8) gates
-    * RANGE comparisons, which ride `COLLATE "C"` (byte order of the
-    * server encoding == Spark's binary UTF-8 order only then — the
-    * same guard the sort/min-max plane applies); equality/IN/LIKE are
-    * bytewise under any deterministic collation and carry no collate
-    * clause. Both flags are REQUIRED parameters on purpose — a caller
-    * that cannot answer them has no business pushing string filters.
-    */
-  private[sources] def filterToSql(f: Filter, utf8Strings: Boolean,
-      textCol: String => Boolean): Option[String] =
-    filterToSql(f, utf8Strings, textCol, textCol)
-
-  /** `textCol` is the TYPE gate (true text/varchar — range comparisons
-    * ride COLLATE "C", which overrides any column collation, so they
-    * need only the type); `eqTextCol` additionally requires the
-    * column's collation to be absent-or-deterministic — the gate for
-    * equality/IN/IS NOT DISTINCT FROM/LIKE, whose renderings carry no
-    * collate clause and would otherwise be evaluated in a
-    * nondeterministic column collation (wrong extra rows for `=`,
-    * 42P22 for LIKE). The 3-arg overload (specs, all-deterministic
-    * fixtures) passes the same predicate for both.
-    */
-  private[sources] def filterToSql(f: Filter, utf8Strings: Boolean,
-      textCol: String => Boolean,
-      eqTextCol: String => Boolean): Option[String] = f match {
-    case EqualTo(a, v) => binOp(a, "=", v, utf8Strings, textCol, eqTextCol)
-    // null-safe equality is SQL's IS NOT DISTINCT FROM, exactly
-    case EqualNullSafe(a, null) => Some(s"${quoteIdent(a)} IS NULL")
-    case EqualNullSafe(a, v) =>
-      if (isStringValue(v) && !eqTextCol(a)) None
-      else valueLit(v).map(lit =>
-        s"${quoteIdent(a)} IS NOT DISTINCT FROM $lit")
-    case GreaterThan(a, v) => binOp(a, ">", v, utf8Strings, textCol, eqTextCol)
-    case GreaterThanOrEqual(a, v) =>
-      binOp(a, ">=", v, utf8Strings, textCol, eqTextCol)
-    case LessThan(a, v) => binOp(a, "<", v, utf8Strings, textCol, eqTextCol)
-    case LessThanOrEqual(a, v) =>
-      binOp(a, "<=", v, utf8Strings, textCol, eqTextCol)
-    // the 10k cap mirrors the runtime (DPP) filter path's: a larger
-    // literal IN-list bloats the query text past any planning benefit
-    // — it stays in Spark instead
-    case In(a, vs) if vs.nonEmpty && vs.length <= 10000 =>
-      if (vs.exists(isStringValue) && !eqTextCol(a)) None
-      else {
-        val lits = vs.toSeq.map(valueLit)
-        if (lits.forall(_.isDefined))
-          Some(s"${quoteIdent(a)} IN (${lits.flatten.mkString(", ")})")
-        else None
-      }
-    case IsNull(a) => Some(s"${quoteIdent(a)} IS NULL")
-    case IsNotNull(a) => Some(s"${quoteIdent(a)} IS NOT NULL")
-    case StringStartsWith(a, v) if eqTextCol(a) =>
-      Some(s"${quoteIdent(a)} LIKE ${sqlLit(likeEscape(v) + "%")} ESCAPE '\\'")
-    case StringEndsWith(a, v) if eqTextCol(a) =>
-      Some(s"${quoteIdent(a)} LIKE ${sqlLit("%" + likeEscape(v))} ESCAPE '\\'")
-    case StringContains(a, v) if eqTextCol(a) =>
-      Some(s"${quoteIdent(a)} LIKE ${sqlLit("%" + likeEscape(v) + "%")} ESCAPE '\\'")
-    case And(l, r) =>
-      for (ls <- filterToSql(l, utf8Strings, textCol, eqTextCol);
-           rs <- filterToSql(r, utf8Strings, textCol, eqTextCol))
-        yield s"($ls AND $rs)"
-    case Or(l, r) =>
-      for (ls <- filterToSql(l, utf8Strings, textCol, eqTextCol);
-           rs <- filterToSql(r, utf8Strings, textCol, eqTextCol))
-        yield s"($ls OR $rs)"
-    case Not(child) =>
-      filterToSql(child, utf8Strings, textCol, eqTextCol)
-        .map(s => s"(NOT $s)")
-    case _ => None
-  }
-
-  /** The PG types whose server-side string comparison IS Spark's:
-    * plain text and varchar (bpchar is excluded separately — its
-    * blank-padded equality differs).
-    */
-  private[sources] def isTextType(pgType: String): Boolean =
-    pgType == "text" || pgType == "character varying"
-
-  private def isStringValue(v: Any): Boolean = v match {
-    case _: String | _: UTF8String => true
-    case _ => false
-  }
-
-  private def binOp(attr: String, op: String, v: Any,
-      utf8Strings: Boolean, textCol: String => Boolean,
-      eqTextCol: String => Boolean): Option[String] =
-    if (isStringValue(v)) {
-      if (!textCol(attr)) None // non-text semantics or collate error
-      else if (op == "=") {
-        // no collate clause → evaluated in the COLUMN's collation;
-        // byte equality only when that collation is deterministic
-        if (!eqTextCol(attr)) None
-        else valueLit(v).map(lit => s"${quoteIdent(attr)} $op $lit")
-      } else if (utf8Strings)
-        valueLit(v).map(lit =>
-          s"${quoteIdent(attr)} COLLATE \"C\" $op $lit")
-      else None // non-UTF-8 byte order ≠ Spark's string order
-    } else valueLit(v).map(lit => s"${quoteIdent(attr)} $op $lit")
-
-  private def likeEscape(s: String): String =
-    s.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
-
-  /** Exact SQL literal for a pushdown value, or None for a type whose
-    * rendering we cannot guarantee round-trips (then the filter is not
-    * accepted). Doubles/floats use Java's shortest-round-trip
-    * decimal form, which PG's float8/float4 input parses back to the
-    * identical bit pattern.
-    */
-  private def valueLit(v: Any): Option[String] = v match {
-    case null => None // comparisons to null are never true; leave to Spark
-    case s: String => Some(sqlLit(s))
-    case s: UTF8String => Some(sqlLit(s.toString))
-    case b: Boolean => Some(if (b) "TRUE" else "FALSE")
-    case n @ (_: Byte | _: Short | _: Int | _: Long) => Some(n.toString)
-    case f: Float => Some(s"'${f.toString}'::float4")
-    case d: Double => Some(s"'${d.toString}'::float8")
-    case d: java.math.BigDecimal => Some(d.toPlainString)
-    case d: BigDecimal => Some(d.bigDecimal.toPlainString)
-    // java.sql.Date/Timestamp pushdown values arrive CALENDAR-REBASED
-    // (hybrid Julian) from Spark's internal proleptic-Gregorian
-    // days/micros, while Postgres stores and compares proleptic
-    // Gregorian — the rebase is the identity only from 1582-10-15
-    // (dates) / 1900-01-01T00:00:00Z (timestamps; LMT zone offsets
-    // diverge at second precision before that, Spark's own
-    // parquet-rebase boundary). Earlier literals stay in Spark:
-    // "exact" pushdown of a rebased value would compare the wrong
-    // day/instant (the Mongo-plane divergence
-    // MongoPushdownPropertySpec found, closed on both planes).
-    // java.time.LocalDate/Instant (java8 datetime API) are exact at
-    // any epoch — no rebase on those paths.
-    case d: java.sql.Date =>
-      Some(d.toLocalDate).filter(!_.isBefore(gregorianDateFloor))
-        .map(ld => s"DATE '${ld.toString}'")
-    case d: java.time.LocalDate => Some(s"DATE '${d.toString}'")
-    case t: java.sql.Timestamp =>
-      Some(t.toInstant).filter(!_.isBefore(rebaseSafeFloor))
-        .map(i => s"TIMESTAMPTZ '${i.toString}'")
-    case t: java.time.Instant => Some(s"TIMESTAMPTZ '${t.toString}'")
-    case _ => None
-  }
-
-  private val gregorianDateFloor = java.time.LocalDate.of(1582, 10, 15)
-
-  /** Rebase-safe floor with a one-day guard band over Spark's
-    * 1900-01-01 boundary: the filter above tests the ALREADY-REBASED
-    * instant (`t.toInstant`), and in zones with LMT offsets an
-    * original instant slightly before the boundary can rebase to one
-    * at/above it — pushed wrong by the sub-hour rebase delta. LMT
-    * deltas are bounded well under a day, so declining everything
-    * before 1900-01-02 closes the band (r19, ADVICE item).
-    */
-  private val rebaseSafeFloor = java.time.Instant.parse("1900-01-02T00:00:00Z")
 
   // ---- COPY text → Catalyst value ------------------------------------
 
@@ -449,11 +173,240 @@ object PgWireSource {
   }
 }
 
+/** What one catalog query says about a table: the typed schema, each
+  * column's declared PG `data_type` and whether its collation is
+  * absent-or-deterministic, the server encoding, and the planner
+  * statistics `pg_class` keeps (`reltuples`, -1 until the first
+  * analyze, and `pg_table_size`). Taken once per read — by
+  * `inferSchema`, or on the first scan of a table read with a
+  * user-specified schema — so a table dropped and re-created with other
+  * types, or grown and re-analyzed, is seen as it is now by the next
+  * `load()`.
+  *
+  * A column with no explicit collation inherits the database default,
+  * which Postgres requires to be deterministic; an explicit collation
+  * the catalog cannot resolve reads as nondeterministic (the safe
+  * direction: its string filters stay in Spark).
+  */
+final case class PgProbe(schema: StructType, pgTypes: Map[String, String],
+    detCollation: Map[String, Boolean], utf8: Boolean, rows: Long,
+    bytes: Long)
+
+object PgProbe {
+
+  def apply(conn: PgConn, table: String): PgProbe = {
+    val (schema, t) = graft.etl.SchemaScript.splitTableName(table)
+    val c = conn.open()
+    try {
+      val r = c.query(
+        s"""SELECT c.column_name, c.data_type, c.numeric_precision,
+                   c.numeric_scale, c.is_nullable,
+                   CASE WHEN c.collation_name IS NULL THEN 'true'
+                        ELSE COALESCE(pc.collisdeterministic::text, 'false')
+                   END,
+                   current_setting('server_encoding'),
+                   COALESCE(s.reltuples::int8, -1),
+                   COALESCE(pg_table_size(s.oid), -1)
+            FROM information_schema.columns c
+            LEFT JOIN pg_catalog.pg_collation pc
+              JOIN pg_catalog.pg_namespace pn ON pn.oid = pc.collnamespace
+              ON pc.collname = c.collation_name
+                AND pn.nspname = c.collation_schema
+            LEFT JOIN pg_catalog.pg_class s
+              ON s.oid = to_regclass(${quoteLiteral(quoteTable(table))})
+            WHERE c.table_schema = ${quoteLiteral(schema)}
+              AND c.table_name = ${quoteLiteral(t)}
+            ORDER BY c.ordinal_position""")
+      require(r.rows.nonEmpty, s"table $table not found (or has no columns)")
+      val fields = r.rows.map { row =>
+        StructField(row(0),
+          PgWireSource.sparkType(row(1), Option(row(2)), Option(row(3))),
+          row(4) != "NO")
+      }
+      val names = fields.map(_.name)
+      val Seq(encoding, rows, bytes) = r.rows.head.drop(6): @unchecked
+      PgProbe(StructType(fields), names.zip(r.rows.map(_(1))).toMap,
+        names.zip(r.rows.map(_(5) == "true")).toMap,
+        encoding.equalsIgnoreCase("UTF8"), rows.toLong, bytes.toLong)
+    } finally c.close()
+  }
+}
+
+/** The one V2-expression → Postgres SQL compiler: pushed and runtime
+  * filters, aggregate arguments, group keys and sort keys all render
+  * through [[column]] and [[literal]], or are declined (None) when
+  * Postgres would not evaluate them exactly as Spark does. SQL WHERE
+  * keeps only TRUE under the same three-valued logic Spark uses, so
+  * `NOT (...)` composes exactly — unlike the Mongo plane's `$nor` (see
+  * [[MongoWireSource.notToBson]]).
+  */
+final class PgCompiler(schema: StructType, probe: PgProbe) {
+  import PgCompiler._
+
+  /** The table column a V2 reference names (top-level only). */
+  def field(e: VExpression): Option[StructField] = e match {
+    case ref: NamedReference if ref.fieldNames.length == 1 =>
+      schema.fields.find(_.name == ref.fieldNames()(0))
+    case _ => None
+  }
+
+  /** Plain text/varchar: the only StringType-backed PG types whose
+    * server-side comparison is Spark's textual one. uuid/json[b]/xml/
+    * enums/arrays read as StringType too, but the server compares them
+    * in the TYPE's semantics (uuid parse-equality matches a
+    * differently-cased literal, jsonb equality is structural, enum
+    * order is definition order) and rejects COLLATE outright.
+    */
+  private def isText(f: StructField): Boolean =
+    probe.pgTypes.get(f.name).exists(t => t == "text" || t == "character varying")
+
+  private def detCollation(f: StructField): Boolean =
+    probe.detCollation.getOrElse(f.name, false)
+
+  /** char(n): PG compares blank-padded ('a' = 'a  ' is TRUE), Spark
+    * does not — no filter touching one is pushed.
+    */
+  private def isBpchar(f: StructField): Boolean =
+    probe.pgTypes.get(f.name).contains("character")
+
+  /** The one column reference: a top-level column of the table,
+    * quoted, or None when Postgres cannot evaluate `use` on it exactly.
+    *
+    *  - Equal (`=`, IN, `<=>`, LIKE) renders no collate clause, so a
+    *    string column must be true text under a deterministic collation
+    *    (a nondeterministic ICU one makes `=` match case-insensitively
+    *    and LIKE fail with 42P22).
+    *  - Group merges keys under the column's collation: a string key
+    *    needs only a deterministic one (uuid/jsonb carry none and group
+    *    by their canonical wire text, which is what Spark groups by).
+    *  - Order (ranges, TopN keys, MIN/MAX) renders strings with
+    *    `COLLATE "C"` — byte order of the server encoding, which is
+    *    Spark's binary UTF-8 order only on a UTF-8 server, and which
+    *    overrides any column collation; bytea ordering stays in Spark.
+    */
+  def column(e: VExpression, use: Use): Option[String] = field(e).flatMap { f =>
+    val q = quoteIdent(f.name)
+    val string = f.dataType == StringType
+    use match {
+      case Plain => Some(q)
+      case Equal => Option.when(!string || (isText(f) && detCollation(f)))(q)
+      case Group => Option.when(!string || detCollation(f))(q)
+      case Order => f.dataType match {
+        case StringType =>
+          Option.when(isText(f) && probe.utf8)(q + " COLLATE \"C\"")
+        case BinaryType => None
+        case _ => Some(q)
+      }
+    }
+  }
+
+  /** The one literal: V2 literals carry Catalyst's internal values
+    * (UTF8String, Decimal, proleptic-Gregorian days and micros), which
+    * is also the calendar Postgres compares in — so dates and instants
+    * render exactly at any epoch PG's ISO input reads (years 1–9999).
+    * Doubles/floats use Java's shortest-round-trip decimal form, which
+    * PG's float8/float4 input parses back to the identical bit pattern.
+    * A null literal is None: comparisons to null are never true.
+    */
+  def literal(e: VExpression): Option[String] = e match {
+    case l: VLiteral[_] => (l.value: Any, l.dataType) match {
+      case (null, _) => None
+      case (s: UTF8String, StringType) => Some(quoteLiteral(s.toString))
+      case (b: Boolean, BooleanType) => Some(if (b) "TRUE" else "FALSE")
+      case (n, ByteType | ShortType | IntegerType | LongType) => Some(n.toString)
+      case (f: Float, FloatType) => Some(s"'$f'::float4")
+      case (d: Double, DoubleType) => Some(s"'$d'::float8")
+      case (d: Decimal, _: DecimalType) => Some(d.toJavaBigDecimal.toPlainString)
+      case (days: Int, DateType) =>
+        val d = java.time.LocalDate.ofEpochDay(days.toLong)
+        Option.when(d.getYear >= 1 && d.getYear <= 9999)(s"DATE '$d'")
+      case (micros: Long, TimestampType) =>
+        val i = java.time.Instant.ofEpochSecond(
+          Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
+        val year = i.atOffset(java.time.ZoneOffset.UTC).getYear
+        Option.when(year >= 1 && year <= 9999)(s"TIMESTAMPTZ '$i'")
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** A pushed or runtime filter as a WHERE fragment, or None if any
+    * piece is not exactly expressible (the filter then stays in Spark).
+    */
+  def predicate(p: Predicate): Option[String] =
+    if (p.references.exists(r => field(r).exists(isBpchar))) None
+    else condition(p)
+
+  private def condition(e: VExpression): Option[String] = e match {
+    case p: Predicate => (p.name, p.children.toSeq) match {
+      case ("AND", Seq(l, r)) =>
+        for (a <- condition(l); b <- condition(r)) yield s"($a AND $b)"
+      case ("OR", Seq(l, r)) =>
+        for (a <- condition(l); b <- condition(r)) yield s"($a OR $b)"
+      case ("NOT", Seq(c)) => condition(c).map(s => s"(NOT $s)")
+      case ("IS_NULL", Seq(c)) => column(c, Plain).map(_ + " IS NULL")
+      case ("IS_NOT_NULL", Seq(c)) => column(c, Plain).map(_ + " IS NOT NULL")
+      case ("<>", Seq(l, r)) => compare("=", l, r).map(s => s"(NOT $s)")
+      case (op, Seq(l, r)) if mirrored.contains(op) => compare(op, l, r)
+      // the 10k cap mirrors the runtime (DPP) filter path's: a larger
+      // literal IN-list bloats the query text past any planning benefit
+      // — it stays in Spark instead
+      case ("IN", c +: vs) if vs.nonEmpty && vs.length <= 10000 =>
+        val lits = vs.map(literal)
+        if (lits.exists(_.isEmpty)) None
+        else column(c, Equal).map(k => s"$k IN (${lits.flatten.mkString(", ")})")
+      case (like @ ("STARTS_WITH" | "ENDS_WITH" | "CONTAINS"),
+          Seq(c, v: VLiteral[_])) if v.value.isInstanceOf[UTF8String] =>
+        val needle = v.value.toString
+          .replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
+        val pattern = like match {
+          case "STARTS_WITH" => needle + "%"
+          case "ENDS_WITH" => "%" + needle
+          case _ => "%" + needle + "%"
+        }
+        column(c, Equal).map(k =>
+          s"$k LIKE ${quoteLiteral(pattern)} ESCAPE '\\'")
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** `column op literal`, either way round; `<=>` is SQL's IS NOT
+    * DISTINCT FROM, and `<=> NULL` is IS NULL on any column.
+    */
+  private def compare(op: String, l: VExpression, r: VExpression): Option[String] =
+    (l, r) match {
+      case (_: VLiteral[_], _: NamedReference) => compare(mirrored(op), r, l)
+      case (c, v: VLiteral[_]) if op == "<=>" && v.value == null =>
+        column(c, Plain).map(_ + " IS NULL")
+      case (c, v: VLiteral[_]) =>
+        val use = if (op == "=" || op == "<=>") Equal else Order
+        val sqlOp = if (op == "<=>") "IS NOT DISTINCT FROM" else op
+        for (k <- column(c, use); lit <- literal(v)) yield s"$k $sqlOp $lit"
+      case _ => None
+    }
+}
+
+object PgCompiler {
+  sealed trait Use
+  case object Plain extends Use
+  case object Equal extends Use
+  case object Group extends Use
+  case object Order extends Use
+
+  private val mirrored = Map("=" -> "=", "<=>" -> "<=>", "<" -> ">",
+    "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+}
+
 final class PgWireTable(conn: PgConn, table: String,
-    tableSchema: StructType, partCol: Option[String], numParts: Int,
+    tableSchema: StructType, inferred: Option[PgProbe],
+    partCol: Option[String], numParts: Int,
     lower: Option[Long], upper: Option[Long])
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
+
+  /** Probed on the first scan when `load()` did not infer the schema. */
+  private lazy val probe = inferred.getOrElse(PgProbe(conn, table))
 
   override def name(): String = s"graft_pg[$table]"
   override def schema(): StructType = tableSchema
@@ -461,7 +414,7 @@ final class PgWireTable(conn: PgConn, table: String,
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.STREAMING_WRITE).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PgScanBuilder(conn, table, tableSchema, partCol, numParts,
+    new PgScanBuilder(conn, table, tableSchema, probe, partCol, numParts,
       lower, upper)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -477,81 +430,32 @@ final case class PushedPgAgg(selectExprs: Seq[String],
     groupByCols: Seq[String], schema: StructType)
 
 final class PgScanBuilder(conn: PgConn, table: String,
-    tableSchema: StructType, partCol: Option[String], numParts: Int,
-    lower: Option[Long], upper: Option[Long])
+    tableSchema: StructType, probe: PgProbe, partCol: Option[String],
+    numParts: Int, lower: Option[Long], upper: Option[Long])
     extends ScanBuilder
-    with SupportsPushDownFilters
+    with SupportsPushDownV2Filters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
     with SupportsPushDownLimit
     with SupportsPushDownTopN {
 
+  import PgCompiler._
 
+  private val sql = new PgCompiler(tableSchema, probe)
   private var out: StructType = tableSchema
-  private var accepted: Array[Filter] = Array.empty
+  private var accepted: Array[Predicate] = Array.empty
   private var whereSqls: Seq[String] = Nil
   private var limit: Option[Int] = None
   private var orderBySql: Seq[String] = Nil
   private var pushedAgg: Option[PushedPgAgg] = None
 
-  /** Declared PG type per column (lazy: probed only when a pushdown
-    * decision needs it, cached per (conn, table) JVM-wide).
-    */
-  private lazy val pgTypes: Map[String, String] =
-    PgWireSource.pgTypesOf(conn, table)
-
-  /** char(n): PG compares blank-padded ('a' = 'a  ' is TRUE), Spark
-    * does not — any filter touching one stays in Spark, and ordering
-    * pushdown on one is declined.
-    */
-  private def isBpchar(col: String): Boolean =
-    pgTypes.get(col).contains("character")
-
-  /** Column is true text (text/varchar) — the only StringType-backed
-    * PG types whose server-side comparison is Spark's textual one.
-    * uuid/json[b]/xml/enums/arrays read as StringType too, but the
-    * server compares them in the TYPE's semantics (uuid parse-
-    * equality, structural jsonb equality, definition-order enums) and
-    * rejects COLLATE outright — string filters and ordering on them
-    * stay in Spark (r18, found by review of the COLLATE hardening).
-    */
-  private def isTextCol(col: String): Boolean =
-    pgTypes.get(col).exists(PgWireSource.isTextType)
-
-  /** Text column whose collation is also absent-or-deterministic — the
-    * gate for equality/IN/`<=>`/LIKE pushdown (r19, judge-confirmed
-    * live: a nondeterministic ICU collation makes pushed `=` match
-    * case-insensitively and pushed LIKE throw 42P22). Ranges and
-    * TopN/min-max keep the plain type gate: their COLLATE "C" clause
-    * overrides the column collation.
-    */
-  private def isDetTextCol(col: String): Boolean =
-    isTextCol(col) &&
-      PgWireSource.pgCollationOkOf(conn, table).getOrElse(col, false)
-
-  private lazy val utf8Server =
-    PgWireSource.serverEncoding(conn).equalsIgnoreCase("UTF8")
-
-  /** String ordering pushdown is safe only on a true text column with
-    * COLLATE "C" on a UTF-8 server (byte order there == Spark's binary
-    * UTF-8 order); under the database collation 'a' < 'B' in e.g.
-    * en_US while Spark says 'B' < 'a', which silently corrupts TopN
-    * and MIN/MAX — and a COLLATE clause on uuid/jsonb/enum is a
-    * server error.
-    */
-  private def stringOrderPushable(col: String): Boolean =
-    isTextCol(col) && utf8Server
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rest) = filters.partition(f =>
-      PgWireSource.filterToSql(f, utf8Server, isTextCol, isDetTextCol)
-        .isDefined && !f.references.exists(isBpchar))
-    accepted = ok
-    whereSqls = ok.toSeq.flatMap(
-      PgWireSource.filterToSql(_, utf8Server, isTextCol, isDetTextCol))
-    rest // unsupported filters stay in Spark
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val compiled = predicates.map(p => (p, sql.predicate(p)))
+    accepted = compiled.collect { case (p, Some(_)) => p }
+    whereSqls = compiled.toSeq.flatMap(_._2)
+    compiled.collect { case (p, None) => p } // unsupported stay in Spark
   }
-  override def pushedFilters(): Array[Filter] = accepted
+  override def pushedPredicates(): Array[Predicate] = accepted
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     // With an aggregate pushed the output IS the agg schema; otherwise
@@ -562,42 +466,19 @@ final class PgScanBuilder(conn: PgConn, table: String,
         if (requiredSchema.fields.nonEmpty) requiredSchema
         else StructType(tableSchema.fields.take(1))
 
-  private def fieldName(e: VExpression): Option[String] = e match {
-    case ref: NamedReference if ref.fieldNames.length == 1 =>
-      Some(ref.fieldNames()(0))
-    case _ => None
-  }
-
-  private def fieldOf(col: String): Option[StructField] =
-    tableSchema.fields.find(_.name == col)
-
   private def singleSlice: Boolean = partCol.isEmpty || numParts <= 1
-
-  /** MIN/MAX argument rendering, or None when ordering pushdown on the
-    * column is unsafe: strings get COLLATE "C" (and require a UTF-8
-    * server — see [[stringOrderPushable]]); everything else passes
-    * through (numeric/temporal/bool ordering is collation-free).
-    */
-  private def minMaxArg(col: String, dt: DataType): Option[String] = dt match {
-    case StringType =>
-      if (stringOrderPushable(col)) Some(s"${quoteIdent(col)} COLLATE \"C\"")
-      else None
-    case BinaryType => None // bytea min/max exists but is rarely wanted; keep in Spark
-    case _ => if (isBpchar(col)) None else Some(quoteIdent(col))
-  }
 
   /** Compile the aggregation to server SQL, or None if any piece is
     * outside the exactly-translatable subset: COUNT(*)/COUNT(col)
     * (→ ::int8; PG count is int8 already), MIN/MAX (column's own
-    * type), SUM over integrals (→ ::int8 — PG widens int sums to
-    * numeric; on true int8 overflow PG raises where non-ANSI Spark
-    * would wrap, loud-over-silent), floats (→ ::float8, Spark's SUM
-    * result type for both float widths) and decimals (→ the
-    * ::numeric(p+10,s) widening Spark's SUM uses, while p+10 fits),
-    * and AVG on the single-slice (complete) path only. String MIN/MAX
-    * ride COLLATE "C" via [[minMaxArg]] or stay in Spark. DISTINCT
-    * aggregates are not pushed — per-slice DISTINCT partials do not
-    * merge.
+    * type, keyed like a sort — strings ride COLLATE "C"), SUM over
+    * integrals (→ ::int8 — PG widens int sums to numeric; on true int8
+    * overflow PG raises where non-ANSI Spark would wrap,
+    * loud-over-silent), floats (→ ::float8, Spark's SUM result type for
+    * both float widths) and decimals (→ the ::numeric(p+10,s) widening
+    * Spark's SUM uses, while p+10 fits), and AVG on the single-slice
+    * (complete) path only. DISTINCT aggregates are not pushed —
+    * per-slice DISTINCT partials do not merge.
     *
     * Zero-sign note: float MIN/MAX over a group holding both 0.0 and
     * -0.0 may return either sign from the server — but that is inside
@@ -608,93 +489,77 @@ final class PgScanBuilder(conn: PgConn, table: String,
     * in the Sum case replays (PG's bare sum(float8) preserves -0.0).
     */
   private def compileAgg(agg: Aggregation): Option[PushedPgAgg] = {
-    val groups = agg.groupByExpressions.toSeq.map(fieldName)
-    if (groups.exists(_.isEmpty)) return None
-    val groupCols = groups.flatten
-    if (groupCols.distinct.length != groupCols.length) return None
-    val groupFields = groupCols.map(fieldOf)
-    if (groupFields.exists(_.isEmpty)) return None
-    // a StringType group key under a NONDETERMINISTIC collation would
-    // server-side merge byte-distinct keys ('alpha'/'ALPHA' group as
-    // one under ICU ci) — same r19 collation gate as equality pushdown;
-    // uuid/jsonb carry no collation (collation_name NULL → ok) and
-    // group by their canonical wire text, which IS what Spark groups by
-    if (groupCols.zip(groupFields).exists { case (c, f) =>
-        f.exists(_.dataType == StringType) &&
-          !PgWireSource.pgCollationOkOf(conn, table).getOrElse(c, false)
-      }) return None
+    val groups = agg.groupByExpressions.toSeq
+    val groupKeys = groups.map(sql.column(_, Group))
+    val groupFields = groups.map(sql.field)
+    if (groupKeys.exists(_.isEmpty) ||
+        groupKeys.distinct.length != groupKeys.length) return None
 
+    def typed(e: VExpression, use: Use) =
+      for (f <- sql.field(e); k <- sql.column(e, use)) yield (f.dataType, k)
     val specs = agg.aggregateExpressions.toSeq.zipWithIndex.map {
       case (_: CountStar, i) =>
         Some(("count(*)::int8", StructField(s"agg_$i", LongType, nullable = false)))
       case (c: Count, i) if !c.isDistinct =>
-        fieldName(c.column).filter(fieldOf(_).isDefined).map(col =>
-          (s"count(${quoteIdent(col)})::int8",
-            StructField(s"agg_$i", LongType, nullable = false)))
+        sql.column(c.column, Plain).map(k =>
+          (s"count($k)::int8", StructField(s"agg_$i", LongType, nullable = false)))
       case (m: Min, i) =>
-        fieldName(m.column).flatMap(col => fieldOf(col).flatMap(f =>
-          minMaxArg(col, f.dataType).map(arg =>
-            (s"min($arg)", StructField(s"agg_$i", f.dataType)))))
+        typed(m.column, Order).map { case (dt, k) =>
+          (s"min($k)", StructField(s"agg_$i", dt)) }
       case (m: Max, i) =>
-        fieldName(m.column).flatMap(col => fieldOf(col).flatMap(f =>
-          minMaxArg(col, f.dataType).map(arg =>
-            (s"max($arg)", StructField(s"agg_$i", f.dataType)))))
+        typed(m.column, Order).map { case (dt, k) =>
+          (s"max($k)", StructField(s"agg_$i", dt)) }
       case (s: Sum, i) if !s.isDistinct =>
-        fieldName(s.column).flatMap(col => fieldOf(col).flatMap(f =>
-          f.dataType match {
-            case ShortType | IntegerType | LongType =>
-              Some((s"sum(${quoteIdent(col)})::int8",
-                StructField(s"agg_$i", LongType)))
-            case FloatType | DoubleType =>
-              // two exactness points (PgPushdownPropertySpec found the
-              // second): the cast sits INSIDE the sum — PG's sum(real)
-              // accumulates in float4 where Spark casts each float to
-              // double and accumulates in double; and `+ '0'` replays
-              // Spark's zero-initialized accumulator, so a group whose
-              // values are all -0.0 reads +0.0 exactly as Spark's
-              // 0.0 + (-0.0) does (x + 0 is the identity for every
-              // other float8, NULL and NaN included)
-              Some((s"(sum((${quoteIdent(col)})::float8) + '0'::float8)",
-                StructField(s"agg_$i", DoubleType)))
-            case d: DecimalType if d.precision + 10 <= 38 =>
-              Some((s"sum(${quoteIdent(col)})::numeric(${d.precision + 10},${d.scale})",
-                StructField(s"agg_$i", DecimalType(d.precision + 10, d.scale))))
-            case _ => None
-          }))
+        typed(s.column, Plain).flatMap {
+          case (ShortType | IntegerType | LongType, k) =>
+            Some((s"sum($k)::int8", StructField(s"agg_$i", LongType)))
+          case (FloatType | DoubleType, k) =>
+            // two exactness points (PgPushdownPropertySpec found the
+            // second): the cast sits INSIDE the sum — PG's sum(real)
+            // accumulates in float4 where Spark casts each float to
+            // double and accumulates in double; and `+ '0'` replays
+            // Spark's zero-initialized accumulator, so a group whose
+            // values are all -0.0 reads +0.0 exactly as Spark's
+            // 0.0 + (-0.0) does (x + 0 is the identity for every
+            // other float8, NULL and NaN included)
+            Some((s"(sum(($k)::float8) + '0'::float8)",
+              StructField(s"agg_$i", DoubleType)))
+          case (d: DecimalType, k) if d.precision + 10 <= 38 =>
+            Some((s"sum($k)::numeric(${d.precision + 10},${d.scale})",
+              StructField(s"agg_$i", DecimalType(d.precision + 10, d.scale))))
+          case _ => None
+        }
       case (a: Avg, i) if !a.isDistinct && singleSlice =>
         // AVG does not decompose into mergeable per-slice partials
         // (avg-of-avgs is wrong under uneven slice counts), so it is
         // compiled ONLY on the complete-pushdown path; when the scan is
         // partitioned this returns None and Spark re-plans avg as
         // sum/count partials, which the cases above accept.
-        fieldName(a.column).flatMap(col => fieldOf(col).flatMap(f =>
-          f.dataType match {
-            case ShortType | IntegerType | LongType | FloatType | DoubleType =>
-              // Spark's Average accumulates non-decimal inputs in
-              // DOUBLE; cast the input so PG runs the same IEEE
-              // arithmetic instead of exact numeric it would use for
-              // integer inputs.
-              Some((s"avg((${quoteIdent(col)})::float8)::float8",
-                StructField(s"agg_$i", DoubleType)))
-            // Decimal AVG is DECLINED even single-slice (r16 advice):
-            // PG computes the quotient at its internal ~16-digit scale
-            // and the ::numeric(p+4,s+4) cast rounds AGAIN, while Spark
-            // rounds an exact sum/count quotient once — adversarial
-            // values differ by 1 ulp at scale s+4. Declining complete
-            // pushdown makes Spark rewrite avg → sum+count, the Sum
-            // case above pushes the exact numeric sum, and Spark's own
-            // single-rounded division restores bit-exact decimals —
-            // the aggregate still evaluates server-side, just in its
-            // decomposed (and exact) form.
-            case _ => None
-          }))
+        typed(a.column, Plain).flatMap {
+          case (ShortType | IntegerType | LongType | FloatType | DoubleType, k) =>
+            // Spark's Average accumulates non-decimal inputs in
+            // DOUBLE; cast the input so PG runs the same IEEE
+            // arithmetic instead of exact numeric it would use for
+            // integer inputs.
+            Some((s"avg(($k)::float8)::float8", StructField(s"agg_$i", DoubleType)))
+          // Decimal AVG is DECLINED even single-slice (r16 advice):
+          // PG computes the quotient at its internal ~16-digit scale
+          // and the ::numeric(p+4,s+4) cast rounds AGAIN, while Spark
+          // rounds an exact sum/count quotient once — adversarial
+          // values differ by 1 ulp at scale s+4. Declining complete
+          // pushdown makes Spark rewrite avg → sum+count, the Sum
+          // case above pushes the exact numeric sum, and Spark's own
+          // single-rounded division restores bit-exact decimals —
+          // the aggregate still evaluates server-side, just in its
+          // decomposed (and exact) form.
+          case _ => None
+        }
       case _ => None
     }
     if (specs.isEmpty || specs.exists(_.isEmpty)) return None
     val aggExprs = specs.flatten
-    Some(PushedPgAgg(
-      groupCols.map(quoteIdent) ++ aggExprs.map(_._1),
-      groupCols.map(quoteIdent),
+    Some(PushedPgAgg(groupKeys.flatten ++ aggExprs.map(_._1),
+      groupKeys.flatten,
       StructType(groupFields.flatten ++ aggExprs.map(_._2))))
   }
 
@@ -704,7 +569,7 @@ final class PgScanBuilder(conn: PgConn, table: String,
     * exactly.
     */
   override def supportCompletePushDown(agg: Aggregation): Boolean =
-    (partCol.isEmpty || numParts <= 1) && compileAgg(agg).isDefined
+    singleSlice && compileAgg(agg).isDefined
 
   override def pushAggregation(agg: Aggregation): Boolean =
     compileAgg(agg) match {
@@ -722,31 +587,22 @@ final class PgScanBuilder(conn: PgConn, table: String,
   /** ORDER BY over plain columns with Spark's null ordering rendered
     * explicitly — PG's defaults (NULLS LAST for ASC) differ from
     * Spark's (NULLS FIRST for ASC), so the clause is never implicit.
-    * String keys carry COLLATE "C" (byte order = Spark's binary UTF-8
-    * order on a UTF-8 server); under the database collation en_US has
-    * 'a' < 'B' where Spark has 'B' < 'a', so an uncollated string key
-    * would return a silently different top-N.
+    * String keys carry COLLATE "C" (see [[PgCompiler.column]]): under
+    * the database collation en_US has 'a' < 'B' where Spark has
+    * 'B' < 'a', so an uncollated string key would return a silently
+    * different top-N.
     */
   override def pushTopN(orders: Array[VSortOrder], n: Int): Boolean = {
     if (pushedAgg.isDefined) return false
     val rendered = orders.toSeq.map(o =>
-      fieldName(o.expression).flatMap(col => fieldOf(col).flatMap { f =>
-        f.dataType match {
-          case StringType =>
-            if (stringOrderPushable(col))
-              Some(s"${quoteIdent(col)} COLLATE \"C\"")
-            else None
-          case BinaryType => None // bytea byte order ≠ guaranteed everywhere; keep in Spark
-          case _ => if (isBpchar(col)) None else Some(quoteIdent(col))
-        }
-      }.map { key =>
+      sql.column(o.expression, Order).map { key =>
         val dir =
           if (o.direction == SortDirection.ASCENDING) "ASC" else "DESC"
         val nulls =
           if (o.nullOrdering == NullOrdering.NULLS_FIRST) "NULLS FIRST"
           else "NULLS LAST"
         s"$key $dir $nulls"
-      }))
+      })
     if (rendered.isEmpty || rendered.exists(_.isEmpty)) return false
     orderBySql = rendered.flatten
     limit = Some(n)
@@ -769,18 +625,19 @@ final class PgScanBuilder(conn: PgConn, table: String,
         else math.min(1.0,
           out.fields.map(_.dataType.defaultSize.toLong).sum.toDouble / total)
       }
-    new PgScan(conn, table, out, whereSqls, limit, partCol, numParts,
-      lower, upper, pushedAgg, orderBySql, share)
+    new PgScan(conn, table, out, sql, probe, whereSqls, limit, partCol,
+      numParts, lower, upper, pushedAgg, orderBySql, share)
   }
 }
 
 final class PgScan(conn: PgConn, table: String, out: StructType,
-    wheres: Seq[String], limit: Option[Int], partCol: Option[String],
-    numParts: Int, lower: Option[Long], upper: Option[Long],
+    sql: PgCompiler, probe: PgProbe, wheres: Seq[String],
+    limit: Option[Int], partCol: Option[String], numParts: Int,
+    lower: Option[Long], upper: Option[Long],
     agg: Option[PushedPgAgg] = None, orderBy: Seq[String] = Nil,
     widthShare: Double = 1.0)
     extends Scan with Batch with SupportsReportStatistics
-    with SupportsRuntimeFiltering {
+    with SupportsRuntimeV2Filtering {
 
   /** Runtime (DPP-style) filtering: after a broadcast build side
     * materializes, Spark hands the scan the join keys' IN-set and the
@@ -794,38 +651,18 @@ final class PgScan(conn: PgConn, table: String, out: StructType,
     */
   private var runtimeWheres: Seq[String] = Nil
 
-  private def runtimeTextCol(col: String): Boolean =
-    PgWireSource.pgTypesOf(conn, table).get(col)
-      .exists(PgWireSource.isTextType)
-
-  /** Runtime join-key filters arrive as equality/IN sets, so string
-    * keys additionally require an absent-or-deterministic collation
-    * (same gate as the planned-filter path).
+  /** Join keys whose IN-set the compiler would render: the equality
+    * gate (a uuid/jsonb-backed or nondeterministic-collated string key
+    * would be declined anyway), no bytea.
     */
-  private def runtimeDetTextCol(col: String): Boolean =
-    runtimeTextCol(col) &&
-      PgWireSource.pgCollationOkOf(conn, table).getOrElse(col, false)
-
   override def filterAttributes(): Array[NamedReference] =
     if (agg.isDefined) Array.empty // WHERE injects below the GROUP BY
-    else out.fields.collect {
-      // string-typed join keys advertise only on true text columns —
-      // a uuid/jsonb-backed key's IN-set would be declined by the
-      // renderer anyway (type semantics ≠ Spark's textual equality)
-      case f if f.dataType != BinaryType &&
-          !PgWireSource.pgTypesOf(conn, table).get(f.name)
-            .contains("character") &&
-          (f.dataType != org.apache.spark.sql.types.StringType ||
-            runtimeDetTextCol(f.name)) =>
-        org.apache.spark.sql.connector.expressions.Expressions.column(f.name)
-    }
+    else out.fields.filter(_.dataType != BinaryType)
+      .map(f => Expressions.column(f.name))
+      .filter(sql.column(_, PgCompiler.Equal).isDefined)
 
-  // the renderer itself enforces the 10k IN cap and the text-column
-  // gate, so the runtime path needs no pre-filter of its own
-  override def filter(filters: Array[Filter]): Unit =
-    runtimeWheres = filters.toSeq.flatMap(PgWireSource.filterToSql(_,
-      PgWireSource.serverEncoding(conn).equalsIgnoreCase("UTF8"),
-      runtimeTextCol, runtimeDetTextCol))
+  override def filter(predicates: Array[Predicate]): Unit =
+    runtimeWheres = predicates.toSeq.flatMap(sql.predicate)
 
   override def readSchema(): StructType = out
   override def toBatch: Batch = this
@@ -838,10 +675,11 @@ final class PgScan(conn: PgConn, table: String, out: StructType,
     * scaled to the SELECT list's width share and capped by a pushed
     * LIMIT; a scan with a pushed aggregate or filter reports table-
     * level numbers — an over-estimate, which errs away from a wrong
-    * broadcast. Unknown (never-analyzed) tables report empty.
+    * broadcast. Unknown (never-analyzed) tables report empty: the
+    * planner then keeps its huge default, the safe direction.
     */
   override def estimateStatistics(): Statistics = {
-    val (rows, bytes) = PgWireSource.tableStats(conn, table)
+    val (rows, bytes) = (probe.rows, probe.bytes)
     new Statistics {
       override def numRows(): java.util.OptionalLong =
         if (rows < 0) java.util.OptionalLong.empty()

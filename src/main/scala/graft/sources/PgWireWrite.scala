@@ -168,9 +168,8 @@ final class PgBatchWrite(conn: PgConn, table: String,
       try {
         val _ = c.query(s"TRUNCATE TABLE ${SchemaManager.quoteTable(table)}")
         ledgerTable.foreach { lt =>
-          val batchLit = "'" + batchId.replace("'", "''") + "'"
           val _2 = c.query(s"DELETE FROM ${SchemaManager.quoteTable(lt)} " +
-            s"WHERE batch_id = $batchLit")
+            s"WHERE batch_id = ${SchemaManager.quoteLiteral(batchId)}")
         }
       } finally c.close()
     }
@@ -249,12 +248,11 @@ final class PgDataWriter(conn: PgConn, table: String,
     ledgerTable match {
       case Some(lt) =>
         val ledger = SchemaManager.quoteTable(lt)
-        val batchLit = "'" + batchId.replace("'", "''") + "'"
         try {
           val _ = client.query(
             s"""BEGIN;
                 INSERT INTO $ledger (batch_id, partition_id)
-                VALUES ($batchLit, $partitionId)""")
+                VALUES (${SchemaManager.quoteLiteral(batchId)}, $partitionId)""")
         } catch {
           case e: PgWireClient.PgServerException if e.sqlState == "23505" =>
             val _ = client.query("ROLLBACK")
@@ -286,10 +284,10 @@ final class PgDataWriter(conn: PgConn, table: String,
         val _ = ledgerTable match {
           case Some(lt) =>
             val ledger = SchemaManager.quoteTable(lt)
-            val batchLit = "'" + batchId.replace("'", "''") + "'"
             client.query(
               s"""UPDATE $ledger SET n_rows = $n
-                  WHERE batch_id = $batchLit AND partition_id = $partitionId;
+                  WHERE batch_id = ${SchemaManager.quoteLiteral(batchId)}
+                    AND partition_id = $partitionId;
                   COMMIT""")
           case None => client.query("COMMIT")
         }

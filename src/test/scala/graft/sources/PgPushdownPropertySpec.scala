@@ -13,14 +13,14 @@ import graft.etl.PgConn
   * #2 asked for exactly this pair): filter pushdown over the live
   * scratch Postgres must be INVISIBLE — for ANY row set (NULLs,
   * NaN/±Inf/-0.0 doubles, empty and quoted strings, year-1
-  * timestamps) and ANY filter tree over And/Or/Not/eq/null-safe-eq/
+  * timestamps, dates on both sides of 1582-10-15) and ANY filter tree over And/Or/Not/eq/null-safe-eq/
   * range/in/null-tests/LIKE-shapes, the DSv2 scan returns exactly
   * what Spark computes over the same rows in memory. The SQL plane is
   * structurally safer than Mongo's (WHERE shares Spark's three-valued
   * logic, float8 NaN sorts above all values and equals itself on both
-  * sides), but the rebased java.sql.Timestamp/Date literal hazard and
-  * the string-range collation hazard live here too — this property is
-  * what keeps their declines honest.
+  * sides), but the calendar of date/timestamp literals and the
+  * string-range collation hazard live here too — this property checks
+  * the pushed pre-Gregorian literals and keeps the declines honest.
   */
 object PgPushdownPropertySpec extends Properties("PgPushdown") {
 
@@ -49,6 +49,9 @@ object PgPushdownPropertySpec extends Properties("PgPushdown") {
     "TIMESTAMPTZ '2024-01-01 00:00:00+00'",
     "TIMESTAMPTZ '2024-01-01 00:00:00.000500+00'",
     "TIMESTAMPTZ '0001-01-01 00:00:00+00'"))
+  // both sides of the Julian/Gregorian cutover (1582-10-15)
+  private val dates = Seq("0001-01-01", "1500-01-01", "1582-10-15", "1990-06-15")
+  private val genD: Gen[String] = opt(Gen.oneOf(dates).map(d => s"DATE '$d'"))
 
   // uuid/jsonb read as StringType but carry NON-textual server
   // semantics — their string filters must decline (type-gated), which
@@ -72,8 +75,8 @@ object PgPushdownPropertySpec extends Properties("PgPushdown") {
     n <- Gen.choose(1, 16)
     rows <- Gen.sequence[Vector[String], String]((0 until n).map { i =>
       for (a <- genA; p <- genP; s <- genS; b <- genB; t <- genT;
-           u <- genU; j <- genJ; cs <- genC)
-        yield s"($i, $a, $p, $s, $b, $t, $u, $j, $cs)"
+           u <- genU; j <- genJ; cs <- genC; dt <- genD)
+        yield s"($i, $a, $p, $s, $b, $t, $u, $j, $cs, $dt)"
     }.toVector)
   } yield rows
 
@@ -94,8 +97,10 @@ object PgPushdownPropertySpec extends Properties("PgPushdown") {
   private val genTLit: Gen[Column] = Gen.oneOf(
     "1970-01-01T00:00:00Z", "2024-01-01T00:00:00Z",
     "2024-01-01T00:00:00.000500Z",
-    "0001-01-01T00:00:00Z") // pre-1900: the rebase-decline path
+    "0001-01-01T00:00:00Z") // pre-1900: pushed as its proleptic micros
     .map(s => lit(java.sql.Timestamp.from(java.time.Instant.parse(s))))
+  private val genDLit: Gen[Column] =
+    Gen.oneOf(dates).map(d => lit(java.sql.Date.valueOf(d)))
 
   private val genLeaf: Gen[Column] = {
     def cmp(c: String, lits: Gen[Column]): Gen[Column] =
@@ -108,10 +113,10 @@ object PgPushdownPropertySpec extends Properties("PgPushdown") {
     val inSLit: Gen[Any] = Gen.oneOf("", "a", "é☃", "zz", "missing")
     Gen.oneOf(
       cmp("a", genALit), cmp("p", genPLit), cmp("s", genSLit),
-      cmp("t", genTLit),
+      cmp("t", genTLit), cmp("dt", genDLit),
       Gen.oneOf(true, false).map(col("b") === _),
-      Gen.oneOf("a", "p", "s", "b", "t").map(col(_).isNull),
-      Gen.oneOf("a", "p", "s", "b", "t").map(col(_).isNotNull),
+      Gen.oneOf("a", "p", "s", "b", "t", "dt").map(col(_).isNull),
+      Gen.oneOf("a", "p", "s", "b", "t", "dt").map(col(_).isNotNull),
       in("a", inALit), in("s", inSLit),
       Gen.oneOf("a", "z", "x'").map(col("s").startsWith(_)),
       Gen.oneOf("a", "z", "'y").map(col("s").endsWith(_)),
@@ -186,7 +191,8 @@ object PgPushdownPropertySpec extends Properties("PgPushdown") {
             DROP TABLE IF EXISTS graft_t.prop;
             CREATE TABLE graft_t.prop (
               id BIGINT, a BIGINT, p DOUBLE PRECISION, s TEXT,
-              b BOOLEAN, t TIMESTAMPTZ, u UUID, doc JSONB, cs $csType);
+              b BOOLEAN, t TIMESTAMPTZ, u UUID, doc JSONB, cs $csType,
+              dt DATE);
             INSERT INTO graft_t.prop VALUES ${rows.mkString(", ")}""")
     } finally c.close()
   }
@@ -316,7 +322,7 @@ object PgPushdownPropertySpec extends Properties("PgPushdown") {
       // is deterministic and comparable
       val withNull = rows :+
         s"(NULL, 0, 0.0, 'nullkey', TRUE, " +
-          "TIMESTAMPTZ '2024-01-01 00:00:00+00', NULL, NULL, NULL)"
+          "TIMESTAMPTZ '2024-01-01 00:00:00+00', NULL, NULL, NULL, NULL)"
       seed(withNull)
       val base = spark.read.format("graft.sources.PgWireSource")
         .option("host", h.host).option("port", h.port)

@@ -358,6 +358,67 @@ class PgWireSourceSpec extends AnyFunSuite with SparkTestSession {
     assert(joined.count() == 100000)
   }
 
+  test("live: each load() reads the table's statistics as they are now") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    def exec(sql: String): Unit = {
+      val c = PgConn(h.host, h.port, h.user, h.database).open()
+      try { val _ = c.query(sql) } finally c.close()
+    }
+    exec("""CREATE SCHEMA IF NOT EXISTS graft_t;
+            DROP TABLE IF EXISTS graft_t.grows;
+            CREATE TABLE graft_t.grows (id BIGINT, pad TEXT);
+            INSERT INTO graft_t.grows
+            SELECT i, repeat('x', 200) FROM generate_series(1, 10) AS g(i);
+            ANALYZE graft_t.grows""")
+    def read() = reader.option("table", "graft_t.grows").load()
+    assert(read().queryExecution.optimizedPlan.stats.rowCount.contains(10))
+
+    // grow the table well past the broadcast threshold and re-analyze
+    val threshold =
+      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    val rows = threshold / 200 + 10000
+    exec(s"""INSERT INTO graft_t.grows
+             SELECT i, repeat('x', 200) FROM generate_series(11, $rows) AS g(i);
+             ANALYZE graft_t.grows""")
+    val grown = read()
+    val stats = grown.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(rows) && stats.sizeInBytes > threshold,
+      s"stats: $stats")
+    import org.apache.spark.sql.functions._
+    val big = spark.range(0, 4000000, 1, 4).withColumn("k", col("id") % 1000)
+    val plan = big.join(grown, col("k") === grown("id"))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastHashJoin"), plan)
+  }
+
+  test("live: each load() gates filters on the column types as they are now") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    import org.apache.spark.sql.functions._
+    def create(kType: String): Unit = {
+      val c = PgConn(h.host, h.port, h.user, h.database).open()
+      try {
+        val _ = c.query(
+          s"""CREATE SCHEMA IF NOT EXISTS graft_t;
+              DROP TABLE IF EXISTS graft_t.retyped;
+              CREATE TABLE graft_t.retyped (id BIGINT, k $kType);
+              INSERT INTO graft_t.retyped
+              VALUES (1, '550e8400-e29b-41d4-a716-446655440000')""")
+      } finally c.close()
+    }
+    def upper() = reader.option("table", "graft_t.retyped").load()
+      .filter(col("k") === "550E8400-E29B-41D4-A716-446655440000")
+    create("TEXT")
+    val asText = upper()
+    assert(asText.queryExecution.executedPlan.toString.contains("\"k\" ="))
+    assert(asText.count() == 0)
+    // the same column as uuid: Postgres's uuid equality would match the
+    // uppercase literal, Spark's textual equality does not
+    create("UUID")
+    val asUuid = upper()
+    assert(!asUuid.queryExecution.executedPlan.toString.contains("\"k\" ="))
+    assert(asUuid.count() == 0)
+  }
+
   test("live: runtime filtering ships the broadcast join keys to the server") {
     assume(LivePostgres.available, "postgres server binaries not installed")
     seed()
@@ -391,62 +452,95 @@ class PgWireSourceSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("filter rendering: exact subset, unsupported stays in Spark (no server)") {
-    import org.apache.spark.sql.sources._
-    def filterToSql(f: Filter, utf8Strings: Boolean = true,
-        textCol: String => Boolean = _ => true): Option[String] =
-      PgWireSource.filterToSql(f, utf8Strings, textCol)
-    assert(filterToSql(EqualTo("a", 5)).contains("\"a\" = 5"))
-    assert(filterToSql(In("a", Array("x'y", "z"))).contains(
+    import org.apache.spark.sql.connector.expressions.{Expression, Expressions, Literal}
+    import org.apache.spark.sql.connector.expressions.filter.{And, Not, Predicate}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    // a, t: text; u: uuid (StringType with non-textual server semantics)
+    val pgTypes = Map("a" -> "text", "b" -> "double precision",
+      "t" -> "text", "u" -> "uuid", "ts" -> "timestamp with time zone",
+      "d" -> "date")
+    val schema = StructType(pgTypes.toSeq.map { case (n, t) =>
+      StructField(n, PgWireSource.sparkType(t, None, None)) })
+    def filterToSql(p: Predicate, utf8Strings: Boolean = true): Option[String] =
+      new PgCompiler(schema, PgProbe(schema, pgTypes,
+        pgTypes.map { case (n, _) => n -> true }, utf8Strings, -1L, -1L))
+        .predicate(p)
+    def c(n: String): Expression = Expressions.column(n)
+    // V2 literals hold Catalyst's internal values
+    def typed(v: Any, t: DataType): Expression = new Literal[Any] {
+      override def value: Any = v
+      override def dataType: DataType = t
+    }
+    def lit(v: Any): Expression = v match {
+      case s: String => typed(UTF8String.fromString(s), StringType)
+      case i: Int => typed(i, IntegerType)
+      case l: Long => typed(l, LongType)
+      case d: Double => typed(d, DoubleType)
+      case b: Boolean => typed(b, BooleanType)
+      case null => typed(null, IntegerType)
+    }
+    def p(name: String, args: Expression*) = new Predicate(name, args.toArray)
+    assert(filterToSql(p("=", c("a"), lit(5))).contains("\"a\" = 5"))
+    assert(filterToSql(p("IN", c("a"), lit("x'y"), lit("z"))).contains(
       """"a" IN ('x''y', 'z')"""))
-    assert(filterToSql(And(IsNotNull("a"), LessThan("b", 2.5))).contains(
+    assert(filterToSql(new And(p("IS_NOT_NULL", c("a")),
+      p("<", c("b"), lit(2.5)))).contains(
       """("a" IS NOT NULL AND "b" < '2.5'::float8)"""))
-    assert(filterToSql(StringContains("t", "50%_x")).contains(
+    assert(filterToSql(p("CONTAINS", c("t"), lit("50%_x"))).contains(
       """"t" LIKE '%50\%\_x%' ESCAPE '\'"""))
-    assert(filterToSql(Not(EqualTo("a", true))).contains(
+    assert(filterToSql(new Not(p("=", c("a"), lit(true)))).contains(
       "(NOT \"a\" = TRUE)"))
-    assert(filterToSql(EqualTo("a", null)).isEmpty)
+    // Spark sends NOT(=) as <>; it renders as the same negation
+    assert(filterToSql(p("<>", c("a"), lit(true))).contains(
+      "(NOT \"a\" = TRUE)"))
+    // a literal on the left mirrors the comparison
+    assert(filterToSql(p("<", lit(2.5), c("b"))).contains(
+      """"b" > '2.5'::float8"""))
+    assert(filterToSql(p("=", c("a"), lit(null))).isEmpty)
     // null-safe equality is SQL's IS NOT DISTINCT FROM (r18)
-    assert(filterToSql(EqualNullSafe("a", 1)).contains(
+    assert(filterToSql(p("<=>", c("a"), lit(1))).contains(
       "\"a\" IS NOT DISTINCT FROM 1"))
-    assert(filterToSql(EqualNullSafe("a", null)).contains("\"a\" IS NULL"))
+    assert(filterToSql(p("<=>", c("a"), lit(null))).contains("\"a\" IS NULL"))
     // string RANGES ride COLLATE "C" (binary order == Spark's) and are
     // declined outright on a non-UTF-8 server encoding; equality and
     // IN are bytewise under any deterministic collation and stay bare
-    assert(filterToSql(GreaterThan("t", "abc")).contains(
+    assert(filterToSql(p(">", c("t"), lit("abc"))).contains(
       """"t" COLLATE "C" > 'abc'"""))
-    assert(filterToSql(GreaterThan("t", "abc"), utf8Strings = false).isEmpty)
-    assert(filterToSql(EqualTo("t", "abc"), utf8Strings = false).contains(
+    assert(filterToSql(p(">", c("t"), lit("abc")), utf8Strings = false).isEmpty)
+    assert(filterToSql(p("=", c("t"), lit("abc")), utf8Strings = false).contains(
       """"t" = 'abc'"""))
     // string comparisons are TYPE-GATED: a non-text StringType column
     // (uuid/jsonb/enum/…) declines eq/range/IN/LIKE/<=> — the server
     // would compare in the type's own semantics (or reject COLLATE),
     // not Spark's textual ones; null tests stay pushable
-    val noText: String => Boolean = _ => false
-    assert(filterToSql(EqualTo("u", "ABC"), textCol = noText).isEmpty)
-    assert(filterToSql(GreaterThan("u", "a"), textCol = noText).isEmpty)
-    assert(filterToSql(In("u", Array("x", "y")), textCol = noText).isEmpty)
-    assert(filterToSql(StringStartsWith("u", "a"), textCol = noText).isEmpty)
-    assert(filterToSql(EqualNullSafe("u", "x"), textCol = noText).isEmpty)
-    assert(filterToSql(IsNull("u"), textCol = noText).contains(
-      "\"u\" IS NULL"))
-    // pre-Gregorian/pre-1900 java.sql literals arrive calendar-rebased
-    // from Spark's proleptic internal form — declined, never inexact
-    assert(filterToSql(EqualTo("ts", java.sql.Timestamp.from(
-      java.time.Instant.parse("0001-01-01T00:00:00Z")))).isEmpty)
-    assert(filterToSql(EqualTo("d",
-      java.sql.Date.valueOf("1500-01-01"))).isEmpty)
-    assert(filterToSql(EqualTo("d",
-      java.sql.Date.valueOf("1990-06-15"))).contains(
-      "\"d\" = DATE '1990-06-15'"))
-    // the java8-API forms are exact at any epoch
-    assert(filterToSql(EqualTo("ts",
-      java.time.Instant.parse("0001-01-01T00:00:00Z"))).contains(
+    assert(filterToSql(p("=", c("u"), lit("ABC"))).isEmpty)
+    assert(filterToSql(p(">", c("u"), lit("a"))).isEmpty)
+    assert(filterToSql(p("IN", c("u"), lit("x"), lit("y"))).isEmpty)
+    assert(filterToSql(p("STARTS_WITH", c("u"), lit("a"))).isEmpty)
+    assert(filterToSql(p("<=>", c("u"), lit("x"))).isEmpty)
+    assert(filterToSql(p("IS_NULL", c("u"))).contains("\"u\" IS NULL"))
+    // V2 literals carry proleptic-Gregorian days and micros, the
+    // calendar Postgres compares in: pre-1582 dates and pre-1900
+    // instants render exactly
+    def micros(iso: String) = {
+      val i = java.time.Instant.parse(iso)
+      i.getEpochSecond * 1000000L + i.getNano / 1000
+    }
+    def days(iso: String) = java.time.LocalDate.parse(iso).toEpochDay.toInt
+    assert(filterToSql(p("=", c("ts"), typed(
+      micros("0001-01-01T00:00:00Z"), TimestampType))).contains(
       "\"ts\" = TIMESTAMPTZ '0001-01-01T00:00:00Z'"))
+    assert(filterToSql(p("=", c("d"), typed(
+      days("1500-01-01"), DateType))).contains("\"d\" = DATE '1500-01-01'"))
+    assert(filterToSql(p("=", c("d"), typed(
+      days("1990-06-15"), DateType))).contains("\"d\" = DATE '1990-06-15'"))
     // an IN-list past the 10k cap stays in Spark
-    assert(filterToSql(In("a", Array.tabulate(10050)(i =>
-      java.lang.Long.valueOf(i.toLong)))).isEmpty)
+    assert(filterToSql(p("IN", c("a") +: Seq.tabulate(10050)(i =>
+      lit(i.toLong)): _*)).isEmpty)
     // one unsupported leg poisons the conjunction (exactness contract)
-    assert(filterToSql(And(EqualTo("a", 1), EqualTo("b", null))).isEmpty)
+    assert(filterToSql(new And(p("=", c("a"), lit(1)),
+      p("=", c("b"), lit(null)))).isEmpty)
   }
 
   test("live: uuid/jsonb-backed string columns keep filters and ordering in Spark") {
