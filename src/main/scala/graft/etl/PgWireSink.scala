@@ -1,7 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 
 import graft.sources.{PgWireClient, PgWireSource}
 
@@ -39,6 +38,10 @@ final case class PgConn(host: String, port: Int, user: String,
   * but before reporting success is re-run); [[appendExactlyOnce]]
   * closes that window with a ledger-arbitrated commit when the caller
   * can supply a stable batch id.
+  *
+  * This sink only writes. Landed tables read back through the DSv2
+  * scan, `spark.read.format("graft.sources.PgWireSource")`
+  * (range-sliced COPY out, pushdown, the host guard).
   */
 final class PgWireSink(conn: PgConn) extends TableSink {
 
@@ -132,29 +135,4 @@ final class PgWireSink(conn: PgConn) extends TableSink {
       ledgerTable: String = "graft_meta.copy_ledger"): Unit =
     writer(df, tableName).option("batchId", batchId)
       .option("ledgerTable", ledgerTable).save()
-}
-
-object PgWireSink {
-
-  /** Partition-parallel read-back over COPY TO STDOUT: one SELECT per
-    * partition (the caller supplies disjoint predicates — hash-mod of a
-    * key, range bounds), each partition COPYing its slice over its own
-    * connection. Values come back as text; the caller casts. This is
-    * the wire-level analog of a predicate-partitioned JDBC read.
-    */
-  def readPartitioned(spark: SparkSession, conn: PgConn,
-      partitionSqls: Seq[String], columns: Seq[String]): DataFrame = {
-    require(partitionSqls.nonEmpty, "at least one partition SQL required")
-    val schema = StructType(columns.map(StructField(_, StringType, nullable = true)))
-    val cn = conn
-    val rdd = spark.sparkContext
-      .parallelize(partitionSqls, partitionSqls.size)
-      .flatMap { q =>
-        val client = cn.open()
-        try client.copyOutLines(s"COPY ($q) TO STDOUT")
-          .map(l => Row.fromSeq(PgWireClient.decodeCopyRow(l).toIndexedSeq))
-        finally client.close()
-      }
-    spark.createDataFrame(rdd, schema)
-  }
 }

@@ -1,6 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.sources.ChecksumSink
 
@@ -31,6 +33,47 @@ object ConnectorQueries {
                 CASE WHEN k%7=0 THEN 'error' ELSE 'success' END AS status,
                 CAST(CASE WHEN k%5=0 THEN 2 ELSE 1 END AS BIGINT) AS n_missing
          FROM doc ORDER BY order_id"""
+
+  /** Read back the two planes a round-trip gate landed, in
+    * [[roundTripOracle]]'s columns: the target range-sliced on
+    * `order_id` over 4 DSv2 scans, joined to the audit plane and
+    * rendered in Spark. The tables are ANALYZEd first so the scans
+    * carry `pg_class` statistics at plan time (`reltuples` is -1 until
+    * the first analyze, which sizes a scan as "huge" and keeps the
+    * join from broadcasting) — one metadata statement each.
+    */
+  private def roundTripReadBack(s: SparkSession, sink: graft.etl.PgWireSink,
+      h: graft.sources.LivePostgres.Handle, targetTable: String,
+      auditTable: String): DataFrame = {
+    import graft.etl.SchemaManager.quoteTable
+    sink.execute(s"ANALYZE ${quoteTable(targetTable)}")
+    sink.execute(s"ANALYZE ${quoteTable(auditTable)}")
+    def rd(table: String) = s.read.format("graft.sources.PgWireSource")
+      .option("host", h.host).option("port", h.port)
+      .option("user", h.user).option("database", h.database)
+      .option("table", table)
+    val t = rd(targetTable)
+      .option("partitionColumn", "order_id")
+      .option("numPartitions", "4")
+      .load()
+    val a = rd(auditTable).load()
+      .select(col("object_id"), col("missing_columns"))
+    t.join(a, a("object_id") === t("order_id").cast("string"))
+      .select(
+        t("order_id"),
+        date_format(t("order_date"), "yyyy-MM-dd").as("order_date"),
+        date_format(t("event_ts"), "yyyy-MM-dd'T'HH:mm:ss").as("event_ts"),
+        t("amount").cast("double").as("amount"),
+        t("amount2").cast("double").as("amount2"),
+        t("is_priority"),
+        t("priority_label"),
+        t("comment"),
+        get_json_object(t("raw_json"), "$._id").cast("int").as("raw_id"),
+        t("status"),
+        size(from_json(col("missing_columns"), ArrayType(StringType)))
+          .cast("long").as("n_missing"))
+      .orderBy("order_id")
+  }
 
   val specs: Map[String, QuerySpec] = Map(
 
@@ -450,8 +493,9 @@ object ConnectorQueries {
     //   K2 DDL through the real Postgres grammar →
     //   BOTH output planes COPY'd in partition-parallel over the
     //   wire-protocol client (PgWireSink, no JDBC driver) →
-    //   read back via a PG-side JOIN of target × audit plane over
-    //   4 disjoint COPY TO STDOUT partitions →
+    //   read back through PgWireSource (target range-sliced on
+    //   order_id over 4 COPY TO STDOUT scans), joined with the audit
+    //   plane in Spark →
     //   row-level typed compare against the DuckDB oracle computed
     //   from the base columns.
     // What the landed-then-reread values prove that q309's parquet
@@ -459,8 +503,8 @@ object ConnectorQueries {
     // through Postgres' input+output functions (raw_id comes out of
     // the landed JSONB document, n_missing out of the landed JSONB
     // audit array) — the full `postgres_loader.py` contract against a
-    // live server. amount/amount2 ride as float8 per the q11 decimal-
-    // representation convention.
+    // live server. amount/amount2 are cast to double per the q11
+    // decimal-representation convention.
     "q312_pg_live_roundtrip" -> QuerySpec(
       (s, dir) => {
         import graft.etl._
@@ -491,41 +535,7 @@ object ConnectorQueries {
           sink.append(tc.audit, audit.auditTable)
         }
 
-        // Read back through a live PG join of the two landed planes,
-        // partitioned over 4 disjoint key slices (the wire analog of
-        // predicate-partitioned spark.read.jdbc).
-        val parts = (0 until 4).map(i =>
-          s"""SELECT t.order_id::text,
-                     to_char(t.order_date, 'YYYY-MM-DD'),
-                     to_char(t.event_ts AT TIME ZONE 'UTC',
-                             'YYYY-MM-DD"T"HH24:MI:SS'),
-                     t.amount::float8::text,
-                     t.amount2::float8::text,
-                     t.is_priority::text,
-                     t.priority_label,
-                     t.comment,
-                     (t.raw_json->>'_id')::int::text,
-                     t.status,
-                     jsonb_array_length(a.missing_columns)::text
-              FROM public.orders_t t
-              JOIN doc_audit.ingestion_audit a
-                ON a.object_id = t.order_id::text
-              WHERE t.order_id % 4 = $i""")
-        PgWireSink.readPartitioned(s, conn, parts,
-          Seq("order_id", "order_date", "event_ts", "amount", "amount2",
-            "is_priority", "priority_label", "comment", "raw_id",
-            "status", "n_missing"))
-          .select(
-            col("order_id").cast("int").as("order_id"),
-            col("order_date"), col("event_ts"),
-            col("amount").cast("double").as("amount"),
-            col("amount2").cast("double").as("amount2"),
-            (col("is_priority") === "true").as("is_priority"),
-            col("priority_label"), col("comment"),
-            col("raw_id").cast("int").as("raw_id"),
-            col("status"),
-            col("n_missing").cast("long").as("n_missing"))
-          .orderBy("order_id")
+        roundTripReadBack(s, sink, h, cm.targetTable, audit.auditTable)
       },
       ConnectorQueries.roundTripOracle),
 
@@ -657,15 +667,17 @@ object ConnectorQueries {
     // dataflow across both wire planes. A Mongo-shaped corpus (the
     // q11/q312 fixture semantics re-expressed as real BSON documents)
     // is read over the wire protocol partition-parallel
-    // (MongoWireClient.find, 4 _id slices), run through the full
-    // T1–T11 transform, and the target plane lands in live Postgres
+    // (MongoWireSource's `raw STRING` read, 4 _id slices), run through
+    // the full T1–T11 transform, and the target plane lands in live
+    // Postgres
     // through the DSv2 ledger-arbitrated COPY write
     // (PgDataWriter.commit under Spark's commit coordinator) — the
     // write action's lineage touches both wire clients in one job.
-    // Read-back joins the DSv2 scans of both landed planes (target
-    // range-partitioned on order_id) and the row-level oracle is
-    // q312's, so the library-sink and DSv2 compositions must agree
-    // with each other and with the base columns.
+    // Read-back is q312's (roundTripReadBack: the DSv2 scans of both
+    // landed planes, target range-partitioned on order_id, joined in
+    // Spark) and so is the row-level oracle, so the library-sink and
+    // DSv2 compositions must agree with each other and with the base
+    // columns.
     "q315_wire_e2e" -> QuerySpec(
       (s, dir) => {
         import graft.etl._
@@ -694,8 +706,12 @@ object ConnectorQueries {
             "DELETE FROM graft_meta.copy_ledger WHERE batch_id = 'q315-e2e'")
 
         val srv = MongoFixtures.ordersRaw(s, dir)
-        val raw = graft.sources.MongoSource.readRawWirePartitioned(
-          s, "127.0.0.1", srv.port, "db", "orders_raw", numPartitions = 4)
+        val raw = s.read.format("graft.sources.MongoWireSource")
+          .schema("raw STRING")
+          .option("host", "127.0.0.1").option("port", srv.port)
+          .option("database", "db").option("collection", "orders_raw")
+          .option("numPartitions", "4")
+          .load()
         val tc = Transform.transformCollection(raw, "raw", "orders", cm,
           EtlDefaults.runtime, audit,
           clock = to_timestamp(lit("2024-01-01 00:00:00")))
@@ -708,42 +724,7 @@ object ConnectorQueries {
             .mode("append").save()
           sink.append(tc.audit, audit.auditTable)
         }
-        // ANALYZE the landed tables so the DSv2 read-back below gets
-        // pg_class statistics at PLAN time (reltuples is -1 until the
-        // first analyze → the scans would size as "huge" and the join
-        // could never broadcast at plan time) — the 100 TB-shaped plan,
-        // priced at one metadata statement each.
-        sink.execute("ANALYZE public.orders_e2e")
-        sink.execute("ANALYZE doc_audit.ingestion_audit_e2e")
-
-        def rd(table: String) = s.read.format("graft.sources.PgWireSource")
-          .option("host", h.host).option("port", h.port)
-          .option("user", h.user).option("database", h.database)
-          .option("table", table)
-        val t = rd(cm.targetTable)
-          .option("partitionColumn", "order_id")
-          .option("numPartitions", "4")
-          .load()
-        val a = rd(audit.auditTable).load()
-          .select(col("object_id"), col("missing_columns"))
-        t.join(a, a("object_id") === t("order_id").cast("string"))
-          .select(
-            t("order_id"),
-            date_format(t("order_date"), "yyyy-MM-dd").as("order_date"),
-            date_format(t("event_ts"), "yyyy-MM-dd'T'HH:mm:ss")
-              .as("event_ts"),
-            t("amount").cast("double").as("amount"),
-            t("amount2").cast("double").as("amount2"),
-            t("is_priority"),
-            t("priority_label"),
-            t("comment"),
-            get_json_object(t("raw_json"), "$._id").cast("int").as("raw_id"),
-            t("status"),
-            size(from_json(col("missing_columns"),
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.StringType)))
-              .cast("long").as("n_missing"))
-          .orderBy("order_id")
+        roundTripReadBack(s, sink, h, cm.targetTable, audit.auditTable)
       },
       ConnectorQueries.roundTripOracle)
   )

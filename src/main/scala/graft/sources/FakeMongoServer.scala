@@ -36,7 +36,8 @@ import BsonCodec._
   */
 final class FakeMongoServer(initial: Vector[BDoc]) extends AutoCloseable {
 
-  private val server = FakeMongoServer.bindUnusedPort()
+  private val server = new java.net.ServerSocket(0, 64,
+    java.net.InetAddress.getLoopbackAddress)
   def port: Int = server.getLocalPort
 
   @volatile private var docs: Vector[BDoc] = initial
@@ -336,20 +337,4 @@ final class FakeMongoServer(initial: Vector[BDoc]) extends AutoCloseable {
   }
 
   override def close(): Unit = server.close()
-}
-
-object FakeMongoServer {
-  private val usedPorts = ConcurrentHashMap.newKeySet[Integer]()
-
-  /** A loopback listener on a port no earlier instance in this JVM had:
-    * [[MongoWireSource]] caches collection profiles per (host, port, db,
-    * collection), so a recycled ephemeral port would serve an earlier
-    * server's schema for a different document set.
-    */
-  private def bindUnusedPort(): java.net.ServerSocket = {
-    val s = new java.net.ServerSocket(0, 64,
-      java.net.InetAddress.getLoopbackAddress)
-    if (usedPorts.add(s.getLocalPort)) s
-    else try bindUnusedPort() finally s.close() // held open: not re-offered
-  }
 }

@@ -1,18 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.etl.HostGuard
-
-/** S2/S3 — MongoDB collection source (reference `ui/mongo_ingest.py:94-105`
-  * / preview `ui/mapping_editor.py:391-409`).
+/** S2 — the reference's BSON→JSON normalization
+  * (`ui/mongo_ingest.py:76-91`: ObjectId→str, datetime→ISO) over
+  * frames and extended-JSON dumps, feeding the same raw-doc transform
+  * path as the file source.
   *
-  * The live read is the from-scratch wire client ([[readRawWire]],
-  * [[readRawWirePartitioned]]; no connector jar). The BSON→JSON
-  * normalization the reference applies (ObjectId→str, datetime→ISO)
-  * feeds the same raw-doc transform path as the file source; the
-  * frame- and extended-JSON forms of it are below.
+  * The live read is [[MongoWireSource]] (the from-scratch wire client,
+  * no connector jar): `.schema("raw STRING")` yields each whole
+  * document already in this normal form, and `.limit(1)` on it is the
+  * S3 preview (`ui/mapping_editor.py:391-409`).
   */
 object MongoSource {
 
@@ -134,160 +133,5 @@ object MongoSource {
       val micros = l.getNano / 1000
       if (micros == 0) base else f"$base.$micros%06d"
     }
-  }
-
-  /** S2's LIVE leg over the from-scratch wire client, without any
-    * connector jar: one [[MongoWireClient]] cursor streams
-    * the collection (`find` + `getMore`, memory bounded by one server
-    * batch) and each BSON document is rendered to the reference's
-    * serialized JSON form ([[BsonCodec.toReferenceJson]]: ObjectId →
-    * hex string, datetime → naive isoformat — the identical normal
-    * form `normalizeExtendedJson` produces), feeding the same
-    * transform plane.
-    *
-    * The single slice matches the reference's one-cursor
-    * `collection.find()` semantics and runs ON AN EXECUTOR, not the
-    * driver; the scale path is one cursor per partition with disjoint
-    * `_id`-range filters via [[MongoWireClient.find]]'s `filter`
-    * (bounds from a driver-side min/max probe), the same shape the
-    * Postgres read plane uses.
-    */
-  def readRawWire(spark: SparkSession, host: String, port: Int,
-      database: String, collection: String): DataFrame = {
-    HostGuard.requireLocal(host, "MongoDB") // F5, driver-side and early
-    import org.apache.spark.sql.Encoders
-    spark.range(0, 1, 1, 1).mapPartitions { _ =>
-      val client = MongoWireClient.connect(host, port)
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => client.close()))
-      client.find(database, collection).map(BsonCodec.toReferenceJson)
-    }(Encoders.STRING).toDF("raw")
-  }
-
-  /** The SCALE path of the wire read: one cursor per Spark partition
-    * over disjoint `_id`-range filters — the shape that turns the
-    * reference's single `collection.find()` into a partition-parallel
-    * scan (the Mongo analog of [[PgWireSource]]'s range slices, with
-    * the same stride-only contract: first slice unbounded below, last
-    * unbounded above, so every document lands in exactly one slice no
-    * matter where the probed bounds sit).
-    *
-    * Bounds come from one driver-side min/max probe (`find` sorted by
-    * `_id`, limit 1, each way). Numeric `_id` (int32/int64) slices
-    * arithmetically; ObjectId `_id` slices on its leading 4 timestamp
-    * bytes (BSON compares ObjectIds bytewise, so boundary ObjectIds
-    * `<tsHex> + 16 zero hex chars` split the key space exactly — the
-    * slicing MongoDB's own splitVector uses conceptually); any other
-    * key shape (string, mixed) or fewer distinct slice points than
-    * partitions falls back to the single-cursor [[readRawWire]] —
-    * correct first, parallel when the key supports it.
-    */
-  def readRawWirePartitioned(spark: SparkSession, host: String, port: Int,
-      database: String, collection: String,
-      numPartitions: Int): DataFrame = {
-    HostGuard.requireLocal(host, "MongoDB") // F5, driver-side and early
-    require(numPartitions >= 1, "numPartitions must be >= 1")
-    planIdSlices(host, port, database, collection, numPartitions) match {
-      case None =>
-        readRawWire(spark, host, port, database, collection)
-      case Some(slices) =>
-        import org.apache.spark.sql.Encoders
-        val rdd = spark.sparkContext
-          .parallelize(slices, slices.length)
-          .mapPartitions(_.flatMap { filter =>
-            val client = MongoWireClient.connect(host, port)
-            Option(org.apache.spark.TaskContext.get()).foreach(
-              _.addTaskCompletionListener[Unit](_ => client.close()))
-            client.find(database, collection, filter)
-              .map(BsonCodec.toReferenceJson)
-          })
-        spark.createDataset(rdd)(Encoders.STRING).toDF("raw")
-    }
-  }
-
-  /** Plan `numPartitions` disjoint `_id`-range filter docs covering the
-    * whole collection, or None when the key shape is unsliceable (then
-    * the caller falls back to the single cursor). Shared by the raw
-    * read above and the DSv2 scan ([[MongoWireSource]]).
-    *
-    * One driver-side min/max probe (`find` sorted by `_id`, limit 1,
-    * each way; `probeFilter` narrows the probe the way [[PgScan]]'s
-    * bounds query reuses the pushed WHERE, so a selective pushed
-    * filter concentrates the slices on the surviving key range —
-    * stride-only edges keep that sound). Numeric `_id` (int32/int64)
-    * slices arithmetically; ObjectId `_id` slices on its leading 4
-    * timestamp bytes. Bounds are the STRIDE, never a row filter (the
-    * r16 PgWireSource lesson: a capped edge slice silently drops keys
-    * outside the probed bounds) — the first slice is unbounded below,
-    * the last unbounded above.
-    */
-  private[sources] def planIdSlices(host: String, port: Int,
-      database: String, collection: String, numPartitions: Int,
-      probeFilter: BsonCodec.BDoc = BsonCodec.BDoc())
-      : Option[Vector[BsonCodec.BDoc]] = {
-    import graft.sources.BsonCodec._
-    if (numPartitions <= 1) return None
-    val (loId, hiId) = {
-      val c = MongoWireClient.connect(host, port)
-      try {
-        def probe(dir: Int): Option[BsonValue] =
-          c.find(database, collection, probeFilter, batchSize = 1,
-            limit = 1L, sort = Some(BDoc("_id" -> BInt32(dir))))
-            .take(1).toSeq
-            .headOption.flatMap(_.get("_id"))
-        (probe(1), probe(-1))
-      } finally c.close()
-    }
-    // Slice coordinates: numeric ids use the value itself; ObjectIds
-    // use the leading 4-byte timestamp (seconds). `mkBound` renders a
-    // coordinate back into a comparable _id boundary value.
-    val coords: Option[(Long, Long, Long => BsonValue)] =
-      (loId, hiId) match {
-        case (Some(BInt32(a)), Some(BInt32(b))) =>
-          Some((a.toLong, b.toLong, v => BInt64(v)))
-        case (Some(BInt64(a)), Some(BInt64(b))) =>
-          Some((a, b, v => BInt64(v)))
-        case (Some(BObjectId(a)), Some(BObjectId(b))) =>
-          // boundary ObjectId <tsHex><16 zeros>: bytewise-minimal for
-          // its timestamp, so [tsA, tsB) boundaries are exact. The
-          // ceil-width stride can overshoot an intermediate boundary
-          // past 0xFFFFFFFF when the probed max sits near the 32-bit
-          // limit (r16 advice) — clamp before formatting: a clamped
-          // boundary keeps the slice cover exhaustive and disjoint
-          // (the slices between two clamped boundaries are empty, and
-          // the last slice is unbounded above), where the unclamped
-          // 9-hex render would trip BObjectId's 24-char require.
-          Some((java.lang.Long.parseLong(a.substring(0, 8), 16),
-            java.lang.Long.parseLong(b.substring(0, 8), 16),
-            v => BObjectId(f"${math.min(v, 0xffffffffL)}%08x" + "0" * 16)))
-        case _ => None
-      }
-    // Span/boundary arithmetic in BigInt: an extreme int64 _id range
-    // (span near 2^64) overflows Long subtraction into a NEGATIVE
-    // width, and the ceil-width stride can carry an intermediate
-    // boundary past Long.MaxValue — either way wrapped boundaries
-    // make slices overlap and a partitioned read DUPLICATES rows
-    // (r17 advice). Boundaries clamp at Long.MaxValue: a clamped
-    // sequence stays monotone, so the cover stays disjoint and
-    // exhaustive (slices between clamped boundaries are empty and the
-    // last slice is unbounded above) — the ObjectId clamp's argument.
-    coords.filter { case (a, b, _) =>
-      BigInt(b) - BigInt(a) + 1 >= numPartitions }
-      .map { case (a0, b0, mkBound) =>
-        val span = BigInt(b0) - BigInt(a0) + 1
-        val width = (span + numPartitions - 1) / numPartitions
-        def boundAt(i: Int): Long =
-          (BigInt(a0) + i * width).min(BigInt(Long.MaxValue)).toLong
-        // (lower, upper): None = unbounded on that side — stride-only.
-        (0 until numPartitions).map { i =>
-          val a = if (i == 0) None else Some(boundAt(i))
-          val b = if (i == numPartitions - 1) None
-                  else Some(boundAt(i + 1))
-          val range = BDoc(Vector[(String, BsonValue)]() ++
-            a.map(v => "$gte" -> mkBound(v)) ++
-            b.map(v => "$lt" -> mkBound(v)))
-          if (range.fields.isEmpty) BDoc() else BDoc("_id" -> range)
-        }.toVector
-      }
   }
 }

@@ -16,13 +16,22 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import BsonCodec._
 
-/** DSv2 table over the MongoDB wire protocol — the standard-surface
-  * promotion of [[MongoSource.readRawWire]]/`readRawWirePartitioned`
-  * (r16 verdict #1), symmetric with [[PgWireSource]]: Catalyst gets a
-  * real connector, not an RDD of pre-rendered JSON. Semantically this
-  * is the reference's collection export (`ui/mongo_ingest.py:94-105`,
+/** DSv2 table over the MongoDB wire protocol — graft's one Mongo
+  * reader, symmetric with [[PgWireSource]]: Catalyst gets a real
+  * connector, not an RDD of pre-rendered JSON. Semantically this is the
+  * reference's collection export (`ui/mongo_ingest.py:94-105`,
   * serializer `:76-91`) lifted to a typed, pruned, filtered,
-  * partition-parallel scan.
+  * partition-parallel scan. It reads in one of two forms:
+  *
+  *  - no user schema: the typed read below;
+  *  - `.schema("raw STRING")`: each whole document as one string in the
+  *    reference-serializer JSON form ([[BsonCodec.toReferenceJson]]) —
+  *    the raw-doc input the transform plane takes. Same `_id` slices,
+  *    executor cursors and LIMIT pushdown as the typed read, but no
+  *    sample probe, no projection doc and no statistics. Any other
+  *    user schema is rejected.
+  *
+  * The typed read:
   *
   *  - schema comes TYPED from a sample probe (`find limit sampleSize`,
   *    default 200; `sampleSize=all` cursor-walks the whole collection
@@ -46,8 +55,8 @@ import BsonCodec._
   *    Spark (the bpchar lesson applied to Mongo: no pushdown on
   *    rendered doc/array columns, no sub-millisecond timestamp
   *    literals, no ill-formed ObjectId hex — accepted ones are exact);
-  *  - `numPartitions` plans the shared stride-only `_id`-range slices
-  *    ([[MongoSource.planIdSlices]]) — one cursor per Spark partition,
+  *  - `numPartitions` plans stride-only `_id`-range slices
+  *    ([[MongoScan.planIdSlices]]) — one cursor per Spark partition,
   *    each slice's range ANDed with the pushed filter;
   *  - LIMIT pushes into the find command (partial when partitioned:
   *    each slice returns at most N and Spark re-limits globally);
@@ -102,28 +111,43 @@ import BsonCodec._
   */
 class MongoWireSource extends TableProvider {
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    MongoWireSource.profileOf(MongoWireSource.connOf(options),
+  /** The profile `inferSchema` sampled. Spark calls `inferSchema` and
+    * then `getTable` on one provider instance per `load()`, so the
+    * table reuses it — each `load()` samples the collection as it is
+    * now, once.
+    */
+  private var inferred: Option[MongoWireSource.CollProfile] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val profile = MongoWireSource.profileOf(MongoWireSource.connOf(options),
       options.get("database"), options.get("collection"),
-      MongoWireSource.sampleSizeOf(options)).schema
+      MongoWireSource.sampleSizeOf(options))
+    inferred = Some(profile)
+    profile.schema
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
     val conn = MongoWireSource.connOf(opts)
-    val db = opts.get("database")
-    val coll = opts.get("collection")
-    val profile = MongoWireSource.profileOf(conn, db, coll,
-      MongoWireSource.sampleSizeOf(opts))
-    new MongoWireTable(conn, db, coll, profile,
-      Option(opts.get("numPartitions")).map(_.toInt).getOrElse(1))
+    val profile = inferred.getOrElse {
+      // a user schema skips inferSchema: only the raw form has a reader
+      require(schema == MongoWireSource.RawProfile.schema,
+        "MongoWireSource reads either the inferred schema (no .schema(...)) " +
+          "or `raw STRING` (each whole document as reference JSON); got " +
+          s"`${schema.toDDL}`")
+      MongoWireSource.RawProfile
+    }
+    new MongoWireTable(conn, opts.get("database"), opts.get("collection"),
+      profile, Option(opts.get("numPartitions")).map(_.toInt).getOrElse(1))
   }
 
-  /** Schema is coupled to the sampled per-field BSON kinds (they drive
-    * both value conversion and pushdown legality), so a user-supplied
-    * schema has nothing to bind those kinds to — inference only.
+  /** A user schema is accepted in one form only, `raw STRING`: the
+    * typed schema is coupled to the sampled per-field BSON kinds (they
+    * drive both value conversion and pushdown legality), so any other
+    * user schema has nothing to bind those kinds to.
     */
-  override def supportsExternalMetadata(): Boolean = false
+  override def supportsExternalMetadata(): Boolean = true
 }
 
 object MongoWireSource {
@@ -228,64 +252,60 @@ object MongoWireSource {
       kinds: Map[String, FieldKind], count: Long,
       avgDocBytes: Long) extends Serializable
 
-  /** Probed once per (conn, db, collection, sampleSize) per JVM: a
-    * sampled profile costs a cursor walk over the collection, so reads
-    * share it. The key carries sampleSize so readers asking for
-    * different probe depths never share a profile. Entries are never
-    * invalidated: a collection reshaped mid-JVM keeps serving the first
-    * probe's schema and statistics until the JVM ends — reconnect on a
-    * new port, or start a new JVM, to re-probe.
+  /** The `raw STRING` read's profile: nothing sampled, so no kinds (no
+    * filter pushes) and no statistics.
     */
-  private val profileCache = new java.util.concurrent.ConcurrentHashMap[
-    (Conn, String, String, Int), CollProfile]()
+  private[sources] val RawProfile = CollProfile(
+    StructType(Seq(StructField("raw", StringType, nullable = true))),
+    Map.empty, -1L, 1L)
 
+  /** Sample the collection: one cursor walk, taken per `load()`. */
   private[sources] def profileOf(conn: Conn, db: String, coll: String,
-      sampleSize: Int): CollProfile =
-    profileCache.computeIfAbsent((conn, db, coll, sampleSize), { _ =>
-      val c = conn.open()
-      try {
-        // sampleSize = -1 ('all'): stream EVERY document through the
-        // kind vote — a cursor walk, never materialized (memory stays
-        // one server batch) — so the schema is the exact attribute
-        // union, the reference's full-scan inference semantics. The
-        // walk also yields an exact count, saving the count command.
-        val sample =
-          if (sampleSize > 0) c.find(db, coll, batchSize = sampleSize,
-            limit = sampleSize.toLong)
-          else c.find(db, coll, batchSize = 1000)
-        // field order: first-seen across the sample (the reference's
-        // attribute-union scan keeps encounter order the same way)
-        val order = scala.collection.mutable.LinkedHashSet[String]()
-        val seen = scala.collection.mutable.Map[String, Set[FieldKind]]()
-        var n = 0L
-        var bytes = 0L
-        sample.foreach { d =>
-          n += 1
-          bytes += BsonCodec.encode(d).length.toLong
-          d.fields.foreach { case (name, v) =>
-            order += name
-            seen(name) = seen.getOrElse(name, Set.empty) ++ kindOf(v)
-          }
+      sampleSize: Int): CollProfile = {
+    val c = conn.open()
+    try {
+      // sampleSize = -1 ('all'): stream EVERY document through the
+      // kind vote — a cursor walk, never materialized (memory stays
+      // one server batch) — so the schema is the exact attribute
+      // union, the reference's full-scan inference semantics. The
+      // walk also yields an exact count, saving the count command.
+      val sample =
+        if (sampleSize > 0) c.find(db, coll, batchSize = sampleSize,
+          limit = sampleSize.toLong)
+        else c.find(db, coll, batchSize = 1000)
+      // field order: first-seen across the sample (the reference's
+      // attribute-union scan keeps encounter order the same way)
+      val order = scala.collection.mutable.LinkedHashSet[String]()
+      val seen = scala.collection.mutable.Map[String, Set[FieldKind]]()
+      var n = 0L
+      var bytes = 0L
+      sample.foreach { d =>
+        n += 1
+        bytes += BsonCodec.encode(d).length.toLong
+        d.fields.foreach { case (name, v) =>
+          order += name
+          seen(name) = seen.getOrElse(name, Set.empty) ++ kindOf(v)
         }
-        require(n > 0,
-          s"collection $db.$coll is empty (or does not exist); " +
-            "cannot infer a schema from zero documents")
-        val kinds = order.toVector.map(nm => nm -> resolve(seen(nm))).toMap
-        val fields = order.toVector.map(nm =>
-          StructField(nm, dataTypeOf(kinds(nm)), nullable = true))
-        val avgBytes = bytes / n
-        val count =
-          if (sampleSize <= 0) n // the full walk counted exactly
-          else c.runCommand(db, BDoc("count" -> BString(coll)))
-            .get("n") match {
-              case Some(BInt32(v)) => v.toLong
-              case Some(BInt64(v)) => v
-              case Some(BDouble(v)) => v.toLong
-              case _ => -1L
-            }
-        CollProfile(StructType(fields), kinds, count, math.max(avgBytes, 1L))
-      } finally c.close()
-    })
+      }
+      require(n > 0,
+        s"collection $db.$coll is empty (or does not exist); " +
+          "cannot infer a schema from zero documents")
+      val kinds = order.toVector.map(nm => nm -> resolve(seen(nm))).toMap
+      val fields = order.toVector.map(nm =>
+        StructField(nm, dataTypeOf(kinds(nm)), nullable = true))
+      val avgBytes = bytes / n
+      val count =
+        if (sampleSize <= 0) n // the full walk counted exactly
+        else c.runCommand(db, BDoc("count" -> BString(coll)))
+          .get("n") match {
+            case Some(BInt32(v)) => v.toLong
+            case Some(BInt64(v)) => v
+            case Some(BDouble(v)) => v.toLong
+            case _ => -1L
+          }
+      CollProfile(StructType(fields), kinds, count, math.max(avgBytes, 1L))
+    } finally c.close()
+  }
 
   // ---- sources.Filter → find filter doc --------------------------------
 
@@ -725,6 +745,9 @@ final class MongoScan(conn: MongoWireSource.Conn, db: String, coll: String,
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
+  /** The `raw STRING` read: whole documents, no projection doc. */
+  private val raw = profile == MongoWireSource.RawProfile
+
   /** Runtime (DPP-style) filtering, the [[PgScan]] contract mirrored:
     * after a broadcast build side materializes, Spark hands this scan
     * the join keys' IN-set and the scan re-plans — the set renders
@@ -794,16 +817,18 @@ final class MongoScan(conn: MongoWireSource.Conn, db: String, coll: String,
 
   /** The find projection doc for the pruned output: inclusion list,
     * `_id` excluded explicitly unless requested (Mongo includes it by
-    * default).
+    * default). None for the raw read, which ships whole documents.
     */
-  private def projectionDoc: BDoc = {
-    val incl = out.fieldNames.toVector
-      .map(n => n -> (BInt32(1): BsonValue))
-    val exclId =
-      if (out.fieldNames.contains("_id")) Vector.empty
-      else Vector("_id" -> (BInt32(0): BsonValue))
-    BDoc(incl ++ exclId)
-  }
+  private def projectionDoc: Option[BDoc] =
+    if (raw) None
+    else {
+      val incl = out.fieldNames.toVector
+        .map(n => n -> (BInt32(1): BsonValue))
+      val exclId =
+        if (out.fieldNames.contains("_id")) Vector.empty
+        else Vector("_id" -> (BInt32(0): BsonValue))
+      Some(BDoc(incl ++ exclId))
+    }
 
   /** The pushed + runtime conditions as one find filter doc. */
   private def mergedConds(extra: Seq[BDoc]): BDoc = {
@@ -820,7 +845,7 @@ final class MongoScan(conn: MongoWireSource.Conn, db: String, coll: String,
       if (numParts > 1)
         // the probe reuses the pushed filter, so pruning narrows the
         // planned key range too (the PgScan.bounds contract)
-        MongoSource.planIdSlices(conn.host, conn.port, db, coll, numParts,
+        MongoScan.planIdSlices(conn, db, coll, numParts,
           probeFilter = mergedConds(Nil))
           .getOrElse(Vector(BDoc())) // unsliceable key → single cursor
       else Vector(BDoc())
@@ -835,15 +860,104 @@ final class MongoScan(conn: MongoWireSource.Conn, db: String, coll: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new MongoReaderFactory(conn, db, coll, out, profile.kinds)
+    new MongoReaderFactory(conn, db, coll, out, profile.kinds, raw)
 }
 
-final case class MongoInputPartition(filter: BDoc, projection: BDoc,
-    limit: Long, sortDir: Option[Int] = None) extends InputPartition
+object MongoScan {
+
+  /** Plan `numPartitions` disjoint `_id`-range filter docs covering the
+    * whole collection, or None when the key shape is unsliceable (then
+    * the scan falls back to a single cursor).
+    *
+    * One driver-side min/max probe (`find` sorted by `_id`, limit 1,
+    * each way; `probeFilter` narrows the probe the way [[PgScan]]'s
+    * bounds query reuses the pushed WHERE, so a selective pushed
+    * filter concentrates the slices on the surviving key range —
+    * stride-only edges keep that sound). Numeric `_id` (int32/int64)
+    * slices arithmetically; ObjectId `_id` slices on its leading 4
+    * timestamp bytes (BSON compares ObjectIds bytewise, so boundary
+    * ObjectIds `<tsHex> + 16 zero hex chars` split the key space
+    * exactly). Bounds are the STRIDE, never a row filter (the r16
+    * PgWireSource lesson: a capped edge slice silently drops keys
+    * outside the probed bounds) — the first slice is unbounded below,
+    * the last unbounded above.
+    */
+  private[sources] def planIdSlices(conn: MongoWireSource.Conn,
+      database: String, collection: String, numPartitions: Int,
+      probeFilter: BDoc = BDoc()): Option[Vector[BDoc]] = {
+    if (numPartitions <= 1) return None
+    val (loId, hiId) = {
+      val c = conn.open()
+      try {
+        def probe(dir: Int): Option[BsonValue] =
+          c.find(database, collection, probeFilter, batchSize = 1,
+            limit = 1L, sort = Some(BDoc("_id" -> BInt32(dir))))
+            .take(1).toSeq
+            .headOption.flatMap(_.get("_id"))
+        (probe(1), probe(-1))
+      } finally c.close()
+    }
+    // Slice coordinates: numeric ids use the value itself; ObjectIds
+    // use the leading 4-byte timestamp (seconds). `mkBound` renders a
+    // coordinate back into a comparable _id boundary value.
+    val coords: Option[(Long, Long, Long => BsonValue)] =
+      (loId, hiId) match {
+        case (Some(BInt32(a)), Some(BInt32(b))) =>
+          Some((a.toLong, b.toLong, v => BInt64(v)))
+        case (Some(BInt64(a)), Some(BInt64(b))) =>
+          Some((a, b, v => BInt64(v)))
+        case (Some(BObjectId(a)), Some(BObjectId(b))) =>
+          // boundary ObjectId <tsHex><16 zeros>: bytewise-minimal for
+          // its timestamp, so [tsA, tsB) boundaries are exact. The
+          // ceil-width stride can overshoot an intermediate boundary
+          // past 0xFFFFFFFF when the probed max sits near the 32-bit
+          // limit (r16 advice) — clamp before formatting: a clamped
+          // boundary keeps the slice cover exhaustive and disjoint
+          // (the slices between two clamped boundaries are empty, and
+          // the last slice is unbounded above), where the unclamped
+          // 9-hex render would trip BObjectId's 24-char require.
+          Some((java.lang.Long.parseLong(a.substring(0, 8), 16),
+            java.lang.Long.parseLong(b.substring(0, 8), 16),
+            v => BObjectId(f"${math.min(v, 0xffffffffL)}%08x" + "0" * 16)))
+        case _ => None
+      }
+    // Span/boundary arithmetic in BigInt: an extreme int64 _id range
+    // (span near 2^64) overflows Long subtraction into a NEGATIVE
+    // width, and the ceil-width stride can carry an intermediate
+    // boundary past Long.MaxValue — either way wrapped boundaries
+    // make slices overlap and a partitioned read DUPLICATES rows
+    // (r17 advice). Boundaries clamp at Long.MaxValue: a clamped
+    // sequence stays monotone, so the cover stays disjoint and
+    // exhaustive (slices between clamped boundaries are empty and the
+    // last slice is unbounded above) — the ObjectId clamp's argument.
+    coords.filter { case (a, b, _) =>
+      BigInt(b) - BigInt(a) + 1 >= numPartitions }
+      .map { case (a0, b0, mkBound) =>
+        val span = BigInt(b0) - BigInt(a0) + 1
+        val width = (span + numPartitions - 1) / numPartitions
+        def boundAt(i: Int): Long =
+          (BigInt(a0) + i * width).min(BigInt(Long.MaxValue)).toLong
+        // (lower, upper): None = unbounded on that side — stride-only.
+        (0 until numPartitions).map { i =>
+          val a = if (i == 0) None else Some(boundAt(i))
+          val b = if (i == numPartitions - 1) None
+                  else Some(boundAt(i + 1))
+          val range = BDoc(Vector[(String, BsonValue)]() ++
+            a.map(v => "$gte" -> mkBound(v)) ++
+            b.map(v => "$lt" -> mkBound(v)))
+          if (range.fields.isEmpty) BDoc() else BDoc("_id" -> range)
+        }.toVector
+      }
+  }
+}
+
+final case class MongoInputPartition(filter: BDoc,
+    projection: Option[BDoc], limit: Long, sortDir: Option[Int] = None)
+    extends InputPartition
 
 final class MongoReaderFactory(conn: MongoWireSource.Conn, db: String,
     coll: String, out: StructType,
-    kinds: Map[String, MongoWireSource.FieldKind])
+    kinds: Map[String, MongoWireSource.FieldKind], raw: Boolean)
     extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
@@ -859,7 +973,7 @@ final class MongoReaderFactory(conn: MongoWireSource.Conn, db: String,
         try client.find(db, coll, part.filter, batchSize = 1000,
           limit = part.limit,
           sort = part.sortDir.map(d => BDoc("_id" -> BInt32(d))),
-          projection = Some(part.projection))
+          projection = part.projection)
         catch { case e: Throwable => client.close(); throw e }
       private var row: InternalRow = _
 
@@ -868,10 +982,13 @@ final class MongoReaderFactory(conn: MongoWireSource.Conn, db: String,
         else {
           val d = docs.next()
           val arr = new Array[Any](convs.length)
-          var i = 0
-          while (i < convs.length) {
-            arr(i) = convs(i)._2(d.get(convs(i)._1))
-            i += 1
+          if (raw) arr(0) = UTF8String.fromString(BsonCodec.toReferenceJson(d))
+          else {
+            var i = 0
+            while (i < convs.length) {
+              arr(i) = convs(i)._2(d.get(convs(i)._1))
+              i += 1
+            }
           }
           row = new GenericInternalRow(arr)
           true

@@ -158,18 +158,11 @@ final class PgWireClient private (socket: Socket, in: DataInputStream,
     new CopyInStream()
   }
 
-  /** Execute a `COPY ... TO STDOUT` (text format) and return the rows
-    * as raw text lines (COPY escaping intact — decode with
-    * [[PgWireClient.decodeCopyRow]]). Materializes the whole result;
-    * for slice-sized reads prefer [[copyOutIterator]].
-    */
-  def copyOutLines(copySql: String): Seq[String] =
-    copyOutIterator(copySql).toVector
-
-  /** Streaming `COPY ... TO STDOUT`: lines are yielded as CopyData
-    * frames arrive off the wire, so memory is bounded by one frame +
-    * one line, not the slice (the DSv2 partition reader's contract at
-    * scale). CopyData boundaries are NOT row boundaries — bytes carry
+  /** Streaming `COPY ... TO STDOUT` (text format): raw text lines, COPY
+    * escaping intact (decode with [[PgWireClient.decodeCopyRow]]),
+    * yielded as CopyData frames arrive off the wire, so memory is
+    * bounded by one frame + one line, not the slice (the DSv2 partition
+    * reader's contract at scale). CopyData boundaries are NOT row boundaries — bytes carry
     * across frames and split on the newline BYTE, which never occurs
     * inside a UTF-8 multi-byte sequence, so decoding per line is safe.
     * A server error surfaces at its wire position (after the lines

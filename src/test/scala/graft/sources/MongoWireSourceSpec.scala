@@ -422,6 +422,46 @@ class MongoWireSourceSpec extends AnyFunSuite with SparkTestSession {
     } finally srv.close()
   }
 
+  test("each load() samples the collection as it is now") {
+    val srv = new FakeMongoServer(docs)
+    def rowEstimate(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.stats.rowCount
+    try {
+      val before = reader(srv).option("sampleSize", "all").load()
+      assert(!before.schema.fieldNames.contains("added"))
+      assert(rowEstimate(before).contains(BigInt(60)))
+      val c = MongoWireClient.connect("127.0.0.1", srv.port)
+      try assert(c.insert("db", "c", Vector(BDoc(
+        "_id" -> BInt64(70L), "added" -> BString("late")))) == 1L)
+      finally c.close()
+      // same server, same options: this load samples again
+      val after = reader(srv).option("sampleSize", "all").load()
+      assert(after.schema.fieldNames.contains("added"))
+      assert(rowEstimate(after).contains(BigInt(61)))
+      assert(after.filter("added = 'late'").count() == 1)
+    } finally srv.close()
+  }
+
+  test("raw STRING read: the S3 preview is one limited find, unprojected and unprobed") {
+    val srv = new FakeMongoServer(docs)
+    try {
+      srv.clearLog()
+      val preview = reader(srv).schema("raw STRING").load().limit(1).collect()
+      assert(preview.map(_.getString(0)).toSeq ==
+        Seq(BsonCodec.toReferenceJson(docs.head)))
+      // no sample find, no projection: the one find is the limited scan
+      val finds = srv.findCommands
+      assert(finds.size == 1, finds.map(BsonCodec.toReferenceJson))
+      assert(finds.head.get("limit").contains(BInt64(1L)))
+      assert(finds.head.get("projection").isEmpty)
+      // any other user schema has no reader
+      val e = intercept[IllegalArgumentException](
+        reader(srv).schema("_id BIGINT").load())
+      assert(e.getMessage.contains("inferred schema") &&
+        e.getMessage.contains("raw STRING"), e.getMessage)
+    } finally srv.close()
+  }
+
   test("extreme int64 _id spans slice without overflow or duplicate rows") {
     // span near 2^64: Long subtraction would go negative and overlap
     // the first/last slices (duplicated rows from a partitioned read)

@@ -177,6 +177,14 @@ class MongoWireSpec extends AnyFunSuite with graft.SparkTestSession {
   // promoted r17) so oracle gates can drive the wire path too; these
   // legs keep pinning the protocol cycle against it.
 
+  /** S2's raw export: every document as one reference-JSON string. */
+  private def rawRead(server: FakeMongoServer, numPartitions: Int) =
+    spark.read.format("graft.sources.MongoWireSource")
+      .schema("raw STRING")
+      .option("port", server.port).option("database", "db")
+      .option("collection", "c").option("numPartitions", numPartitions)
+      .load()
+
   test("fake server over a real socket: hello → find → getMore cursor cycle") {
     import MongoWireClient._
     val docs = (0 until 5).map(i => BDoc(
@@ -210,8 +218,7 @@ class MongoWireSpec extends AnyFunSuite with graft.SparkTestSession {
       "_id" -> BInt32(i + 3), "name" -> BString(s"d$i"))).toVector
     val server = new FakeMongoServer(docs)
     try {
-      val df = MongoSource.readRawWirePartitioned(spark,
-        "127.0.0.1", server.port, "db", "c", numPartitions = 3)
+      val df = rawRead(server, numPartitions = 3)
       assert(df.rdd.getNumPartitions == 3)
       val raws = df.collect().map(_.getString(0))
       assert(raws.length == 97, "every document exactly once")
@@ -230,8 +237,7 @@ class MongoWireSpec extends AnyFunSuite with graft.SparkTestSession {
       "n" -> BInt32(i))).toVector
     val server2 = new FakeMongoServer(oidDocs)
     try {
-      val df2 = MongoSource.readRawWirePartitioned(spark,
-        "127.0.0.1", server2.port, "db", "c", numPartitions = 4)
+      val df2 = rawRead(server2, numPartitions = 4)
       assert(df2.rdd.getNumPartitions == 4)
       val raws2 = df2.collect().map(_.getString(0))
       assert(raws2.length == 60, "every ObjectId-keyed doc exactly once")
@@ -242,8 +248,7 @@ class MongoWireSpec extends AnyFunSuite with graft.SparkTestSession {
       val strDocs = (0 until 5).map(i =>
         BDoc("_id" -> BString(s"k$i"))).toVector
       val server3 = new FakeMongoServer(strDocs)
-      try assert(MongoSource.readRawWirePartitioned(spark,
-        "127.0.0.1", server3.port, "db", "c", numPartitions = 4).count() == 5)
+      try assert(rawRead(server3, numPartitions = 4).count() == 5)
       finally server3.close()
     } finally server2.close()
   }
@@ -259,8 +264,7 @@ class MongoWireSpec extends AnyFunSuite with graft.SparkTestSession {
       "n" -> BInt32(i))).toVector
     val server = new FakeMongoServer(docs)
     try {
-      val df = MongoSource.readRawWirePartitioned(spark,
-        "127.0.0.1", server.port, "db", "c", numPartitions = 3)
+      val df = rawRead(server, numPartitions = 3)
       val raws = df.collect().map(_.getString(0))
       assert(raws.length == 4, "every doc exactly once at the ts limit")
       assert(raws.toSet.size == 4)

@@ -80,8 +80,8 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
       assert(r.rows(1) == Seq("2", null, null, "f", null, null, null, "3"))
 
       // COPY OUT leg: same rows, text escaping decoded by the client.
-      val lines = client.copyOutLines(
-        "COPY (SELECT id, txt FROM graft_t.rt ORDER BY id) TO STDOUT")
+      val lines = client.copyOutIterator(
+        "COPY (SELECT id, txt FROM graft_t.rt ORDER BY id) TO STDOUT").toVector
       assert(lines.size == 2)
       val row0 = PgWireClient.decodeCopyRow(lines(0))
       assert(row0(0) == "1" && row0(1) == gnarly)
@@ -114,15 +114,19 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
         array(col("id") % 3, col("id") % 5).as("tags"))
     sink.append(df, "graft_t.bulk")
 
-    // Partitioned read-back: 4 disjoint hash-mod slices reassemble the
-    // table; values (including the tab/backslash payload and the JSONB
-    // array) survive both directions.
-    val parts = (0 until 4).map(i =>
-      s"SELECT id::text, val, tags->>1 FROM graft_t.bulk WHERE id % 4 = $i")
-    val back = PgWireSink.readPartitioned(
-      spark, conn, parts, Seq("id", "val", "tag1"))
-    val got = back.select(col("id").cast("long"), col("val"),
-      col("tag1").cast("long")).as[(Long, String, Long)].collect().sortBy(_._1)
+    // Partitioned read-back through the DSv2 scan: 4 disjoint id-range
+    // slices reassemble the table; values (including the tab/backslash
+    // payload and the JSONB array) survive both directions.
+    val back = spark.read.format("graft.sources.PgWireSource")
+      .option("host", conn.host).option("port", conn.port)
+      .option("user", conn.user).option("database", conn.database)
+      .option("table", "graft_t.bulk")
+      .option("partitionColumn", "id").option("numPartitions", "4")
+      .load()
+    assert(back.rdd.getNumPartitions == 4)
+    val got = back.select(col("id"), col("val"),
+      get_json_object(col("tags"), "$[1]").cast("long"))
+      .as[(Long, String, Long)].collect().sortBy(_._1)
     assert(got.length == 10000)
     assert(got(7) == ((7L, "v\t7\\x", 2L)))
     assert(got(9999) == ((9999L, "v\t9999\\x", 4L)))
