@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 
-import graft.sources.{PgWireClient, PgWireSource}
+import graft.sources.{PgDataWriter, PgWireClient, PgWireSource}
 
 /** Serializable connection descriptor for the wire-protocol plane —
   * shipped to executors, each of which opens its own connection (the
@@ -33,11 +33,11 @@ final case class PgConn(host: String, port: Int, user: String,
   * typed COPY text rendering (arrays as JSON text into JSONB targets).
   * Each partition's COPY runs in its own transaction, so a task that
   * dies mid-stream disconnects and Postgres rolls the partial COPY back
-  * — the retry starts clean. Plain [[append]] keeps the `write.jdbc`
-  * contract (no ledger side table; a task dying AFTER its COPY commits
-  * but before reporting success is re-run); [[appendExactlyOnce]]
-  * closes that window with a ledger-arbitrated commit when the caller
-  * can supply a stable batch id.
+  * — the retry starts clean. [[append]] is that plain transactional
+  * COPY, the `write.jdbc` contract (a task dying AFTER its COPY commits
+  * but before reporting success is re-run); [[appendExactlyOnce]] names
+  * a batch, which turns on the ledger-arbitrated commit that closes
+  * that window.
   *
   * This sink only writes. Landed tables read back through the DSv2
   * scan, `spark.read.format("graft.sources.PgWireSource")`
@@ -85,7 +85,7 @@ final class PgWireSink(conn: PgConn) extends TableSink {
       .option("table", tableName).mode("append")
 
   override def append(df: DataFrame, tableName: String): Unit =
-    writer(df, tableName).option("ledger", "false").save()
+    writer(df, tableName).save()
 
   /** Drop ledger entries older than `olderThanDays` — the retention
     * companion to [[appendExactlyOnce]] (the ledger otherwise grows by
@@ -94,13 +94,12 @@ final class PgWireSink(conn: PgConn) extends TableSink {
     * re-opens its dedup window and appends again. Returns the number of
     * rows dropped.
     */
-  def vacuumLedger(olderThanDays: Int,
-      ledgerTable: String = "graft_meta.copy_ledger"): Long =
+  def vacuumLedger(olderThanDays: Int): Long =
     withClient { c =>
-      if (!tableExistsOn(c, ledgerTable)) 0L
+      if (!tableExistsOn(c, PgDataWriter.Ledger)) 0L
       else {
         val r = c.query(
-          s"""DELETE FROM ${SchemaManager.quoteTable(ledgerTable)}
+          s"""DELETE FROM ${PgDataWriter.Ledger}
               WHERE committed_at < now() - interval '$olderThanDays days'""")
         // CommandComplete tag is "DELETE <n>"
         r.tags.lastOption.map(_.split(" ").last.toLong).getOrElse(0L)
@@ -112,10 +111,10 @@ final class PgWireSink(conn: PgConn) extends TableSink {
     * fetch failure, speculation, a lost success report) by making
     * Postgres itself the commit arbiter. Each partition runs
     *
-    * {{{ BEGIN; INSERT INTO <ledger>(batch_id, partition_id); COPY …;
-    *     UPDATE <ledger> SET n_rows = <n>; COMMIT }}}
+    * {{{ BEGIN; INSERT INTO <ledger>(batch_id, table_name, partition_id);
+    *     COPY …; UPDATE <ledger> SET n_rows = <n>; COMMIT }}}
     *
-    * with `PRIMARY KEY (batch_id, partition_id)` on the ledger, so:
+    * with those three columns the ledger's primary key, so:
     *   - a duplicate attempt hits unique_violation (23505) on the
     *     INSERT — before streaming any data — and returns as a no-op;
     *   - a CONCURRENT duplicate (speculation) blocks on the first
@@ -130,9 +129,9 @@ final class PgWireSink(conn: PgConn) extends TableSink {
     * re-delivered batch dedupes per partition — PROVIDED the frame's
     * partition contents are deterministic (same plan over same input;
     * repartition by a key column, not round-robin, if in doubt).
+    * Claims are per table, so one `batchId` may land several tables.
     */
-  def appendExactlyOnce(df: DataFrame, tableName: String, batchId: String,
-      ledgerTable: String = "graft_meta.copy_ledger"): Unit =
-    writer(df, tableName).option("batchId", batchId)
-      .option("ledgerTable", ledgerTable).save()
+  def appendExactlyOnce(df: DataFrame, tableName: String,
+      batchId: String): Unit =
+    writer(df, tableName).option("batchId", batchId).save()
 }

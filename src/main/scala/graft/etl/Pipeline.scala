@@ -108,11 +108,11 @@ object Pipeline {
     val missingInputTables = schemaTablesNoAudit.diff(inputTables)
 
     // --- audit-table ensure (pipeline.py:311-338) -------------------------
+    // createTable is create-if-missing on every sink: no existence probe.
     sink.createSchema(audit.auditSchema)
-    if (!sink.tableExists(audit.auditTable))
-      sink.createTable(audit.auditTable, SchemaManager.buildAuditTableColumns(audit))
+    sink.createTable(audit.auditTable, SchemaManager.buildAuditTableColumns(audit))
     for ((table, cols) <- SchemaManager.reportTables(audit.auditSchema))
-      if (!sink.tableExists(table)) sink.createTable(table, cols)
+      sink.createTable(table, cols)
 
     var objectStatuses = Map.empty[String, String]
     var missingTablesDb = Set.empty[String]

@@ -22,8 +22,9 @@ import graft.etl.SchemaManager.{quoteIdent, quoteLiteral, quoteTable}
   * `spark.read.jdbc`/`df.write.jdbc` for a classpath with no JDBC
   * driver jar. One `TableProvider` serves both planes: reads through
   * [[PgScanBuilder]] (below) and writes through [[PgWriteBuilder]]
-  * (PgWireWrite.scala — streaming COPY per partition under Spark's
-  * commit coordinator with a ledger-arbitrated exactly-once claim).
+  * (PgWireWrite.scala — a transactional COPY append per partition,
+  * with a ledger-arbitrated exactly-once claim when the write names a
+  * `batchId`).
   * Catalyst gets a real connector, not an RDD of pre-rendered SQL:
   *
   *  - one catalog query per read ([[PgProbe]]) returns the typed
@@ -411,8 +412,7 @@ final class PgWireTable(conn: PgConn, table: String,
   override def name(): String = s"graft_pg[$table]"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.STREAMING_WRITE).asJava
+    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new PgScanBuilder(conn, table, tableSchema, probe, partCol, numParts,
       lower, upper)

@@ -1,13 +1,11 @@
 package graft.sources
 
-import java.util.UUID
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.etl.{PgConn, SchemaManager}
+import graft.etl.{PgConn, SchemaManager, SchemaScript}
 
 /** DSv2 write path over the Postgres wire protocol — the `SupportsWrite`
   * half of [[PgWireTable]] and the one executor-side COPY writer
@@ -20,23 +18,24 @@ import graft.etl.{PgConn, SchemaManager}
   *   .mode("append").save()
   * }}}
   *
-  * Spark's commit coordinator (`useCommitCoordinator = true`) authorizes
-  * exactly one task attempt per partition to commit, and the ledger —
-  * `INSERT INTO <ledger>(batch_id, partition_id)` claimed inside the
-  * same transaction as the COPY, `PRIMARY KEY (batch_id, partition_id)`
-  * — closes the residual window the coordinator cannot see (a task that
-  * committed in Postgres but died before reporting; a whole job re-run
-  * with the same `batchId`): a duplicate claim hits unique_violation
-  * BEFORE any data is streamed and the attempt no-ops. A task that dies
-  * mid-COPY drops its connection; the server aborts the transaction and
-  * the ledger claim vanishes with it, so the retry starts clean (the
-  * three-way arbitration PgLiveRoundTripSpec drives at the wire level).
+  * Batch append is the one write: streaming reaches Postgres through
+  * `foreachBatch` with the epoch id as `batchId`. Every non-empty
+  * partition runs BEGIN, COPY, COMMIT on its own connection, so a task
+  * that dies mid-COPY drops its connection and the server rolls the
+  * partial COPY back — without a `batchId` that is the whole protocol,
+  * the `write.jdbc` contract.
   *
-  * `batchId` defaults to the query's own id (fresh per run): in-job
-  * retries and speculation dedup, distinct jobs append independently.
-  * Pass a caller-stable id (orchestrator run key, foreachBatch epoch)
-  * for cross-run exactly-once; `ledger=false` opts down to plain
-  * transactional COPY (the `append` contract — what `write.jdbc` gives).
+  * A write that names a `batchId` also claims its ledger slot —
+  * `INSERT INTO graft_meta.copy_ledger(batch_id, table_name,
+  * partition_id)`, the table's primary key — inside the same
+  * transaction, before any data streams. Spark's commit coordinator
+  * (`useCommitCoordinator = true`) authorizes exactly one task attempt
+  * per partition; the claim closes the window it cannot see (a task
+  * that committed in Postgres but died before reporting; a whole job
+  * re-run with the same `batchId`): a duplicate claim hits
+  * unique_violation and the attempt no-ops. A claim vanishes with its
+  * aborted transaction, so the retry starts clean (the three-way
+  * arbitration PgLiveRoundTripSpec drives at the wire level).
   *
   * Values ride as COPY text rendered from the typed InternalRow
   * (timestamps as ISO-8601 UTC instants, decimals as plain strings,
@@ -46,102 +45,23 @@ import graft.etl.{PgConn, SchemaManager}
   * time, not mid-COPY.
   */
 final class PgWriteBuilder(conn: PgConn, table: String,
-    info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-
-  private var truncateFirst = false
-
-  /** `mode("overwrite")` (full-table) arrives as truncate — the same
-    * contract as `write.jdbc`'s truncate-then-append. The TRUNCATE runs
-    * driver-side once, before any writer task (see
-    * [[PgBatchWrite.createBatchWriterFactory]]).
-    */
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
+    info: LogicalWriteInfo) extends WriteBuilder {
 
   override def build(): Write = {
     val schema = info.schema()
     // Fail at plan time if any column cannot be rendered as COPY text.
     PgRowText.validate(schema)
-    val opts = info.options()
-    val ledgerOn =
-      Option(opts.get("ledger")).forall(_.toBoolean)
-    val ledgerTable =
-      Option(opts.get("ledgerTable")).getOrElse("graft_meta.copy_ledger")
-    val batchId = Option(opts.get("batchId")).getOrElse {
-      val qid = info.queryId()
-      if (qid != null && qid.nonEmpty) qid else UUID.randomUUID().toString
-    }
-    new PgWrite(conn, table, schema, batchId,
-      if (ledgerOn) Some(ledgerTable) else None, truncateFirst)
+    new PgWrite(conn, table, schema, Option(info.options().get("batchId")))
   }
 }
 
-final class PgWrite(conn: PgConn, table: String,
-    schema: StructType, batchId: String, ledgerTable: Option[String],
-    truncateFirst: Boolean = false)
-    extends Write {
-  override def toBatch: BatchWrite =
-    new PgBatchWrite(conn, table, schema, batchId, ledgerTable, truncateFirst)
+final class PgWrite(conn: PgConn, table: String, schema: StructType,
+    batchId: Option[String]) extends Write with BatchWrite {
 
-  /** Native streaming sink: each micro-batch's writers claim
-    * `<batchId>-epoch-<epochId>` ledger slots, so a batch REPLAYED
-    * from the checkpoint (restart after a post-commit crash — the
-    * exact window `foreachBatch` + `appendExactlyOnce` closes by hand)
-    * dedups per partition with no user code. `batchId` defaults to
-    * Spark's query id, which the checkpoint keeps stable across
-    * restarts — pass an explicit `batchId` option to survive a
-    * checkpoint swap too. Append output mode only: Complete-mode
-    * truncate-per-epoch is not modeled.
-    */
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    require(!truncateFirst,
-      "PgWireSource streaming write supports append mode only")
-    new PgStreamingWrite(conn, table, schema, batchId, ledgerTable)
-  }
+  override def toBatch: BatchWrite = this
 
   override def description(): String =
-    s"GraftPgWrite[$table] batchId=$batchId " +
-      s"ledger=${ledgerTable.getOrElse("off")}" +
-      (if (truncateFirst) " truncate" else "")
-}
-
-final class PgStreamingWrite(conn: PgConn, table: String,
-    schema: StructType, baseBatchId: String, ledgerTable: Option[String])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-
-  override def useCommitCoordinator(): Boolean = true
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    ledgerTable.foreach(lt => PgWriteSupport.ensureLedger(conn, lt))
-    PgStreamingDataWriterFactory(conn, table, schema, baseBatchId, ledgerTable)
-  }
-
-  /** Per-epoch commits already landed (or no-opped) in Postgres under
-    * their epoch-scoped claims; Spark's checkpoint commit is the
-    * progress marker, the database is the dedup arbiter — the pairing
-    * that makes a replayed epoch a per-partition no-op.
-    */
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final case class PgStreamingDataWriterFactory(conn: PgConn,
-    table: String, schema: StructType, baseBatchId: String,
-    ledgerTable: Option[String])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new PgDataWriter(conn, table, schema, s"$baseBatchId-epoch-$epochId",
-      ledgerTable, partitionId)
-}
-
-final class PgBatchWrite(conn: PgConn, table: String,
-    schema: StructType, batchId: String, ledgerTable: Option[String],
-    truncateFirst: Boolean = false)
-    extends BatchWrite {
+    s"GraftPgWrite[$table]" + batchId.fold("")(b => s" batchId=$b")
 
   /** One attempt per partition gets the coordinator's commit grant;
     * the ledger then arbitrates what the coordinator cannot observe.
@@ -150,37 +70,14 @@ final class PgBatchWrite(conn: PgConn, table: String,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    // Driver-side, once per job: the ledger table must exist before any
-    // executor claims into it (CREATE ... IF NOT EXISTS per partition
-    // would race inside the claim transactions).
-    ledgerTable.foreach(lt => PgWriteSupport.ensureLedger(conn, lt))
-    if (truncateFirst) {
-      // Overwrite = truncate-then-append (the write.jdbc contract).
-      // This job's OWN prior ledger claims are retired with the rows
-      // they described — otherwise an overwrite re-run under the same
-      // stable batchId would truncate and then dedup itself into an
-      // empty table. Claims of OTHER batches stay: they describe rows
-      // this truncate just removed, but their job already finished;
-      // re-running one of those old batch ids after an overwrite is a
-      // caller contract violation (overwrite resets the table's
-      // history), same as with write.jdbc.
-      val c = conn.open()
-      try {
-        val _ = c.query(s"TRUNCATE TABLE ${SchemaManager.quoteTable(table)}")
-        ledgerTable.foreach { lt =>
-          val _2 = c.query(s"DELETE FROM ${SchemaManager.quoteTable(lt)} " +
-            s"WHERE batch_id = ${SchemaManager.quoteLiteral(batchId)}")
-        }
-      } finally c.close()
-    }
-    PgDataWriterFactory(conn, table, schema, batchId, ledgerTable)
+    if (batchId.isDefined) PgDataWriter.ensureLedger(conn)
+    PgDataWriterFactory(conn, table, schema, batchId)
   }
 
   /** Each partition's transaction already committed (or no-opped) in
-    * Postgres under its ledger claim; there is nothing left to flip
-    * atomically — the database is the arbiter, which is exactly what
-    * makes the protocol survive driver death between task success and
-    * job commit.
+    * Postgres; there is nothing left to flip atomically — the database
+    * is the arbiter, which is exactly what makes the protocol survive
+    * driver death between task success and job commit.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
 
@@ -195,64 +92,41 @@ final class PgBatchWrite(conn: PgConn, table: String,
 final case class PgCommitMessage(partitionId: Int, rows: Long,
     deduped: Boolean) extends WriterCommitMessage
 
-private[sources] object PgWriteSupport {
-  /** Driver-side, once per job/stream: the ledger table must exist
-    * before any executor claims into it (per-partition CREATE IF NOT
-    * EXISTS would race inside the claim transactions).
-    */
-  def ensureLedger(conn: PgConn, ledgerTable: String): Unit = {
-    val (ledgerSchema, _) = graft.etl.SchemaScript.splitTableName(ledgerTable)
-    val c = conn.open()
-    try {
-      val _ = c.query(
-        SchemaManager.createSchemaSql(ledgerSchema))
-      val _2 = c.query(
-        s"""CREATE TABLE IF NOT EXISTS ${SchemaManager.quoteTable(ledgerTable)} (
-              batch_id TEXT NOT NULL,
-              partition_id INT NOT NULL,
-              n_rows BIGINT,
-              committed_at TIMESTAMPTZ NOT NULL DEFAULT now(),
-              PRIMARY KEY (batch_id, partition_id))""")
-    } finally c.close()
-  }
-}
-
 final case class PgDataWriterFactory(conn: PgConn,
-    table: String, schema: StructType, batchId: String,
-    ledgerTable: Option[String]) extends DataWriterFactory {
+    table: String, schema: StructType, batchId: Option[String])
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new PgDataWriter(conn, table, schema, batchId, ledgerTable, partitionId)
+    new PgDataWriter(conn, table, schema, batchId, partitionId)
 }
 
 final class PgDataWriter(conn: PgConn, table: String,
-    schema: StructType, batchId: String, ledgerTable: Option[String],
+    schema: StructType, batchId: Option[String],
     partitionId: Int) extends DataWriter[InternalRow] {
 
   private val render = PgRowText.converters(schema)
   private val copySql = PgDataWriter.copySql(table, schema.fieldNames.toSeq)
+  /** This partition's ledger key, when the write names a batch. */
+  private val slot = batchId.map(PgDataWriter.slot(_, table, partitionId))
 
   private var client: PgWireClient = null
   private var stream: PgWireClient#CopyInStream = null
   private var duplicate = false
   private var started = false
 
-  /** Lazy on the first row (an empty partition never connects): claim
-    * the ledger slot inside BEGIN, then open the COPY stream. A lost
-    * claim (23505) means another attempt of this (batch, partition)
-    * already committed — swallow rows and no-op.
+  /** Lazy on the first row (an empty partition never connects): BEGIN,
+    * claim the ledger slot if there is one, then open the COPY stream.
+    * A lost claim (23505) means another attempt of this slot already
+    * committed — swallow rows and no-op.
     */
   private def begin(): Unit = {
     started = true
     client = conn.open()
-    ledgerTable match {
-      case Some(lt) =>
-        val ledger = SchemaManager.quoteTable(lt)
+    slot match {
+      case Some(s) =>
         try {
-          val _ = client.query(
-            s"""BEGIN;
-                INSERT INTO $ledger (batch_id, partition_id)
-                VALUES (${SchemaManager.quoteLiteral(batchId)}, $partitionId)""")
+          val _ = client.query(s"BEGIN; INSERT INTO ${PgDataWriter.Ledger} " +
+            s"${PgDataWriter.SlotColumns} VALUES $s")
         } catch {
           case e: PgWireClient.PgServerException if e.sqlState == "23505" =>
             val _ = client.query("ROLLBACK")
@@ -281,16 +155,9 @@ final class PgDataWriter(conn: PgConn, table: String,
       if (duplicate) PgCommitMessage(partitionId, 0L, deduped = true)
       else {
         val n = stream.finish()
-        val _ = ledgerTable match {
-          case Some(lt) =>
-            val ledger = SchemaManager.quoteTable(lt)
-            client.query(
-              s"""UPDATE $ledger SET n_rows = $n
-                  WHERE batch_id = ${SchemaManager.quoteLiteral(batchId)}
-                    AND partition_id = $partitionId;
-                  COMMIT""")
-          case None => client.query("COMMIT")
-        }
+        val _ = client.query(slot.fold("")(s =>
+          s"UPDATE ${PgDataWriter.Ledger} SET n_rows = $n " +
+            s"WHERE ${PgDataWriter.SlotColumns} = $s; ") + "COMMIT")
         PgCommitMessage(partitionId, n, deduped = false)
       }
     } finally { client.close(); client = null }
@@ -433,6 +300,40 @@ private[sources] object PgRowText {
 }
 
 object PgDataWriter {
+  /** The exactly-once ledger: one row per committed (batch, table,
+    * partition) slot.
+    */
+  private[graft] val Ledger = "graft_meta.copy_ledger"
+  private val SlotColumns = "(batch_id, table_name, partition_id)"
+
+  /** A slot's key as a row literal. The table is named `schema.table`,
+    * so `t` and `public.t` claim the same slots.
+    */
+  private def slot(batchId: String, table: String, partitionId: Int): String = {
+    val (schema, name) = SchemaScript.splitTableName(table)
+    s"(${SchemaManager.quoteLiteral(batchId)}, " +
+      s"${SchemaManager.quoteLiteral(s"$schema.$name")}, $partitionId)"
+  }
+
+  /** Driver-side, once per job that names a batch: the ledger must
+    * exist before any executor claims into it (CREATE ... IF NOT EXISTS
+    * per partition would race inside the claim transactions).
+    */
+  private[sources] def ensureLedger(conn: PgConn): Unit = {
+    val c = conn.open()
+    try {
+      val _ = c.query(
+        s"""CREATE SCHEMA IF NOT EXISTS graft_meta;
+            CREATE TABLE IF NOT EXISTS $Ledger (
+              batch_id TEXT NOT NULL,
+              table_name TEXT NOT NULL,
+              partition_id INT NOT NULL,
+              n_rows BIGINT,
+              committed_at TIMESTAMPTZ NOT NULL DEFAULT now(),
+              PRIMARY KEY $SlotColumns)""")
+    } finally c.close()
+  }
+
   /** The COPY statement a partition streams `columns` of `table` into. */
   private[graft] def copySql(table: String, columns: Seq[String]): String =
     s"COPY ${SchemaManager.quoteTable(table)} " +

@@ -175,16 +175,16 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     // then resolves to 23505 when A commits.
     val a = conn.open()
     val _ = a.query("""BEGIN;
-      INSERT INTO graft_meta.copy_ledger (batch_id, partition_id)
-      VALUES ('batch-race', 0)""")
+      INSERT INTO graft_meta.copy_ledger (batch_id, table_name, partition_id)
+      VALUES ('batch-race', 'graft_t.eo', 0)""")
     @volatile var bState: String = "did-not-run"
     val t = new Thread(() => {
       val b = conn.open()
       try {
         try {
           val _ = b.query("""BEGIN;
-            INSERT INTO graft_meta.copy_ledger (batch_id, partition_id)
-            VALUES ('batch-race', 0)""")
+            INSERT INTO graft_meta.copy_ledger (batch_id, table_name, partition_id)
+            VALUES ('batch-race', 'graft_t.eo', 0)""")
           bState = "claimed"
         } catch {
           case e: PgWireClient.PgServerException =>
@@ -204,8 +204,8 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     // ledger row — the retry runs clean and lands the partition.
     val dying = conn.open()
     val _3 = dying.query("""BEGIN;
-      INSERT INTO graft_meta.copy_ledger (batch_id, partition_id)
-      VALUES ('batch-4', 0)""")
+      INSERT INTO graft_meta.copy_ledger (batch_id, table_name, partition_id)
+      VALUES ('batch-4', 'graft_t.eo', 0)""")
     dying.close() // task death mid-transaction: server aborts it
     val c2 = conn.open()
     try assert(c2.query(
@@ -222,7 +222,8 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     // missing ledger table vacuums to zero, not an error).
     assert(sink.vacuumLedger(0) >= 9) // 4+4 batch partitions + batch-4
     assert(sink.vacuumLedger(0) == 0)
-    assert(sink.vacuumLedger(7, "graft_meta.no_such_ledger") == 0)
+    sink.execute("DROP TABLE graft_meta.copy_ledger")
+    assert(sink.vacuumLedger(7) == 0)
   }
 
   test("live: streaming foreachBatch + epoch id = exactly-once through a batch replay") {

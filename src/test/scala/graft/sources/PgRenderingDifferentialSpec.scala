@@ -139,7 +139,7 @@ class PgRenderingDifferentialSpec extends AnyFunSuite with SparkTestSession {
     df.write.format("graft.sources.PgWireSource")
       .option("host", conn.host).option("port", conn.port)
       .option("user", conn.user).option("database", conn.database)
-      .option("table", "graft_r.dsv2").option("ledger", "false")
+      .option("table", "graft_r.dsv2")
       .mode("append").save()
     sink.append(df, "graft_r.sink")
 

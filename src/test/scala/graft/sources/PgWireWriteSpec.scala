@@ -7,8 +7,9 @@ import graft.etl.{ColumnDef, PgConn, PgWireSink}
 
 /** DSv2 write path (`df.write.format(...).mode("append").save()`)
   * against the live scratch server: typed COPY text rendering, the
-  * ledger-arbitrated exactly-once protocol under Spark's commit
-  * coordinator, claim/abort semantics, and plan-time type validation.
+  * ledger-arbitrated exactly-once protocol a `batchId` turns on under
+  * Spark's commit coordinator, claim/abort semantics, per-table claims,
+  * the plain append without a `batchId`, and plan-time validation.
   */
 class PgWireWriteSpec extends AnyFunSuite with SparkTestSession {
 
@@ -29,6 +30,17 @@ class PgWireWriteSpec extends AnyFunSuite with SparkTestSession {
     val c = conn.open()
     try c.query(s"SELECT count(*) FROM $table").rows.head.head.toLong
     finally c.close()
+  }
+
+  /** Rows in the ledger; 0 while no write has created it. */
+  private def ledgerRows(): Long = {
+    val c = conn.open()
+    try {
+      if (c.query("SELECT to_regclass('graft_meta.copy_ledger') IS NULL")
+          .rows.head.head == "t") 0L
+      else c.query("SELECT count(*) FROM graft_meta.copy_ledger")
+        .rows.head.head.toLong
+    } finally c.close()
   }
 
   test("live: typed round-trip through df.write → COPY → DSv2 read") {
@@ -106,8 +118,8 @@ class PgWireWriteSpec extends AnyFunSuite with SparkTestSession {
       .rows.head == Seq("4", "1000"))
     finally c.close()
 
-    // A fresh batchId appends; the DEFAULT batchId (query id) is fresh
-    // per run, so two default-id writes append twice.
+    // A fresh batchId appends; a write without a batchId claims
+    // nothing, so two of them append twice.
     writer(df).option("table", "graft_w.eo")
       .option("batchId", "w-batch-2").mode("append").save()
     assert(rowCount("graft_w.eo") == 2000)
@@ -131,11 +143,13 @@ class PgWireWriteSpec extends AnyFunSuite with SparkTestSession {
       val _ = c.query(
         """CREATE SCHEMA IF NOT EXISTS graft_meta;
            CREATE TABLE IF NOT EXISTS graft_meta.copy_ledger (
-             batch_id TEXT NOT NULL, partition_id INT NOT NULL,
-             n_rows BIGINT, committed_at TIMESTAMPTZ NOT NULL DEFAULT now(),
-             PRIMARY KEY (batch_id, partition_id));
-           INSERT INTO graft_meta.copy_ledger (batch_id, partition_id, n_rows)
-           VALUES ('w-claim', 2, 250)""")
+             batch_id TEXT NOT NULL, table_name TEXT NOT NULL,
+             partition_id INT NOT NULL, n_rows BIGINT,
+             committed_at TIMESTAMPTZ NOT NULL DEFAULT now(),
+             PRIMARY KEY (batch_id, table_name, partition_id));
+           INSERT INTO graft_meta.copy_ledger
+             (batch_id, table_name, partition_id, n_rows)
+           VALUES ('w-claim', 'graft_w.claimed', 2, 250)""")
     } finally c.close()
 
     val df = spark.range(0, 1000, 1, 4).toDF("id")
@@ -200,108 +214,61 @@ class PgWireWriteSpec extends AnyFunSuite with SparkTestSession {
     finally c2.close()
   }
 
-  test("live: mode(overwrite) truncates then appends; same-batchId overwrite re-run is idempotent") {
+  test("live: one batchId claims per table — a second table under it lands every row") {
     assume(LivePostgres.available, "postgres server binaries not installed")
     val sink = new PgWireSink(conn)
     sink.createSchema("graft_w")
     sink.execute(
-      """DROP TABLE IF EXISTS graft_w.ow;
-         CREATE TABLE graft_w.ow (id BIGINT NOT NULL)""")
-    writer(spark.range(0, 100, 1, 2).toDF("id"))
-      .option("table", "graft_w.ow").mode("append").save()
-    assert(rowCount("graft_w.ow") == 100)
-
-    // Overwrite replaces, not appends.
-    writer(spark.range(1000, 1050, 1, 2).toDF("id"))
-      .option("table", "graft_w.ow")
-      .option("batchId", "ow-1").mode("overwrite").save()
-    assert(rowCount("graft_w.ow") == 50)
-
-    // Re-running the SAME overwrite job (same batchId) truncates and
-    // lands again — its own prior claims are retired with the rows, so
-    // the result is the 50 rows, not an empty table.
-    writer(spark.range(1000, 1050, 1, 2).toDF("id"))
-      .option("table", "graft_w.ow")
-      .option("batchId", "ow-1").mode("overwrite").save()
-    assert(rowCount("graft_w.ow") == 50)
-    val c = conn.open()
-    try assert(c.query("SELECT count(DISTINCT id) FROM graft_w.ow")
-      .rows.head.head == "50")
-    finally c.close()
-  }
-
-  test("live: native streaming sink — epoch-scoped ledger claims dedup a replayed micro-batch") {
-    assume(LivePostgres.available, "postgres server binaries not installed")
-    val sink = new PgWireSink(conn)
-    sink.createSchema("graft_w")
-    sink.execute(
-      """DROP TABLE IF EXISTS graft_w.stream_t;
-         CREATE TABLE graft_w.stream_t (id BIGINT NOT NULL, v TEXT)""")
-
-    import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-pg-dsv2-stream")
-    val srcDir = root.resolve("src").toString
-    val ckpt = root.resolve("ckpt")
-    spark.range(0, 500, 1, 2)
-      .select(col("id"), concat(lit("a"), col("id")).as("v"))
-      .write.parquet(s"$srcDir/f0")
-    spark.range(500, 1000, 1, 2)
-      .select(col("id"), concat(lit("b"), col("id")).as("v"))
-      .write.parquet(s"$srcDir/f1")
-    val schema = spark.read.parquet(s"$srcDir/f0").schema
-
-    def run(): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$srcDir/*")
-        .writeStream
-        .format("graft.sources.PgWireSource")
-        .option("host", h.host).option("port", h.port)
-        .option("user", h.user).option("database", h.database)
-        .option("table", "graft_w.stream_t")
-        .option("batchId", "ws-1")
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-
-    run()
-    assert(rowCount("graft_w.stream_t") == 1000)
+      """DROP TABLE IF EXISTS graft_w.t1; DROP TABLE IF EXISTS graft_w.t2;
+         CREATE TABLE graft_w.t1 (id BIGINT NOT NULL);
+         CREATE TABLE graft_w.t2 (id BIGINT NOT NULL)""")
+    val df = spark.range(0, 1000, 1, 4).toDF("id")
+    sink.appendExactlyOnce(df, "graft_w.t1", "w-two-tables")
+    sink.appendExactlyOnce(df, "graft_w.t2", "w-two-tables")
+    assert(rowCount("graft_w.t1") == 1000)
+    assert(rowCount("graft_w.t2") == 1000)
+    // ...and each table still dedups its own re-run.
+    sink.appendExactlyOnce(df, "graft_w.t2", "w-two-tables")
+    assert(rowCount("graft_w.t2") == 1000)
     val c = conn.open()
     try assert(c.query(
-      """SELECT sum(n_rows)::text FROM graft_meta.copy_ledger
-         WHERE batch_id LIKE 'ws-1-epoch-%'""").rows.head.head == "1000")
+      """SELECT table_name, sum(n_rows)::text FROM graft_meta.copy_ledger
+         WHERE batch_id = 'w-two-tables' GROUP BY table_name
+         ORDER BY table_name""").rows ==
+      Seq(Seq("graft_w.t1", "1000"), Seq("graft_w.t2", "1000")))
     finally c.close()
-
-    // Force the post-commit-crash replay: drop the newest checkpoint
-    // commit marker, so the restart re-executes that epoch with the
-    // SAME epoch id — the window where a ledgerless sink double-writes.
-    val commits = ckpt.resolve("commits")
-    val newest = java.nio.file.Files.list(commits).toArray.map(_.toString)
-      .filter(!_.endsWith(".tmp")).maxBy(p =>
-        scala.util.Try(p.split('/').last.toLong).getOrElse(-1L))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(newest))
-    // ...and its Hadoop checksum shadow, or the re-commit's rename
-    // fails on the stale .crc
-    val crc = commits.resolve("." + newest.split('/').last + ".crc")
-    java.nio.file.Files.deleteIfExists(crc)
-    run() // replays the last micro-batch; claims hit 23505 and no-op
-    assert(rowCount("graft_w.stream_t") == 1000, "replayed epoch must dedup")
-    val c2 = conn.open()
-    try assert(c2.query("SELECT count(DISTINCT id) FROM graft_w.stream_t")
-      .rows.head.head == "1000")
-    finally c2.close()
-
-    // New data still flows after the replay.
-    spark.range(1000, 1250, 1, 2)
-      .select(col("id"), concat(lit("c"), col("id")).as("v"))
-      .write.parquet(s"$srcDir/f2")
-    run()
-    assert(rowCount("graft_w.stream_t") == 1250)
   }
 
-  test("live: ledger=false gives the plain transactional append; bad types fail at plan time") {
+  test("live: mode(overwrite) and writeStream into PgWireSource fail at analysis") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    val sink = new PgWireSink(conn)
+    sink.createSchema("graft_w")
+    sink.execute(
+      """DROP TABLE IF EXISTS graft_w.modes;
+         CREATE TABLE graft_w.modes (id BIGINT NOT NULL)""")
+    val df = spark.range(0, 100, 1, 2).toDF("id")
+    val overwrite = intercept[org.apache.spark.sql.AnalysisException] {
+      writer(df).option("table", "graft_w.modes").mode("overwrite").save()
+    }
+    assert(overwrite.getMessage.contains("truncate"), overwrite.getMessage)
+
+    val root = java.nio.file.Files.createTempDirectory("graft-pg-dsv2-stream")
+    df.write.parquet(root.resolve("src").toString)
+    val streaming = intercept[Exception] {
+      spark.readStream.schema(df.schema).parquet(root.resolve("src").toString)
+        .writeStream.format("graft.sources.PgWireSource")
+        .option("host", h.host).option("port", h.port)
+        .option("user", h.user).option("database", h.database)
+        .option("table", "graft_w.modes")
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .start()
+    }
+    assert(streaming.getMessage.contains("streamed writing"),
+      streaming.getMessage)
+    assert(rowCount("graft_w.modes") == 0)
+  }
+
+  test("live: a write without a batchId is the plain transactional append and claims no ledger slot; bad types fail at plan time") {
     assume(LivePostgres.available, "postgres server binaries not installed")
     val sink = new PgWireSink(conn)
     sink.createSchema("graft_w")
@@ -309,11 +276,11 @@ class PgWireWriteSpec extends AnyFunSuite with SparkTestSession {
       """DROP TABLE IF EXISTS graft_w.plain;
          CREATE TABLE graft_w.plain (id BIGINT NOT NULL)""")
     val df = spark.range(0, 100, 1, 2).toDF("id")
-    writer(df).option("table", "graft_w.plain")
-      .option("ledger", "false").mode("append").save()
-    writer(df).option("table", "graft_w.plain")
-      .option("ledger", "false").mode("append").save()
-    assert(rowCount("graft_w.plain") == 200) // no dedup without the ledger
+    val claimsBefore = ledgerRows()
+    writer(df).option("table", "graft_w.plain").mode("append").save()
+    sink.append(df, "graft_w.plain")
+    assert(rowCount("graft_w.plain") == 200) // no dedup without a batchId
+    assert(ledgerRows() == claimsBefore)
 
     // Nested types are rejected before any connection is opened.
     import org.apache.spark.sql.functions._

@@ -11,8 +11,11 @@ from pathlib import Path
 import duckdb
 import pyarrow.parquet as pq
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify")
+ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
+SF_DIR = ARGS[0] if len(ARGS) > 0 else "/root/testdata/sf0.01"
+OUT = Path(ARGS[1] if len(ARGS) > 1 else "/tmp/graft_verify")
+# The checkout this script belongs to: sbt builds and runs that tree.
+REPO = Path(__file__).resolve().parents[1]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -20,7 +23,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def run_verify():
     cp = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=REPO)
     sys.stdout.write("\n".join(
         l for l in (cp.stdout + cp.stderr).splitlines()
         if "[verify]" in l or "error" in l.lower()) + "\n")
