@@ -141,7 +141,7 @@ object ConnectorQueries {
          FROM l
          ORDER BY id, label"""),
 
-    // Q268: RUNTIME filtering (`SupportsRuntimeFiltering`) — the DPP
+    // Q268: RUNTIME filtering (`SupportsRuntimeV2Filtering`) — the DPP
     // contract for V2 sources: the scan declares `id` runtime-
     // filterable, Spark materializes the (selective, broadcast) dim
     // side first and hands the scan the join keys' IN-set at EXECUTION

@@ -7,9 +7,9 @@ import scala.collection.JavaConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, Literal => VLiteral, NamedReference, SortDirection, SortOrder => VSortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -48,13 +48,14 @@ import BsonCodec._
   *  - column pruning becomes the find command's PROJECTION doc (a
   *    2-column projection ships 2 fields per document over the wire,
   *    `_id` excluded unless requested);
-  *  - filter pushdown renders the supported `sources.Filter` subset to
-  *    a find FILTER doc ($eq/$gt/$gte/$lt/$lte/$in/$and/$or/$nor,
-  *    null tests, string prefix as an exact bytewise range) evaluated
-  *    BY the server; rejected filters stay in
-  *    Spark (the bpchar lesson applied to Mongo: no pushdown on
-  *    rendered doc/array columns, no sub-millisecond timestamp
-  *    literals, no ill-formed ObjectId hex — accepted ones are exact);
+  *  - filter pushdown renders the supported V2 predicate subset to a
+  *    find FILTER doc ($eq/$gt/$gte/$lt/$lte/$in/$and/$or/$nor, null
+  *    tests, string prefix as an exact bytewise range) evaluated BY
+  *    the server; rejected predicates stay in Spark (the bpchar lesson
+  *    applied to Mongo: no pushdown on rendered doc/array columns, no
+  *    sub-millisecond timestamp literals, no ill-formed ObjectId hex —
+  *    accepted ones are exact; timestamp literals are Catalyst's
+  *    proleptic-Gregorian micros, exact at any epoch);
   *  - `numPartitions` plans stride-only `_id`-range slices
   *    ([[MongoScan.planIdSlices]]) — one cursor per Spark partition,
   *    each slice's range ANDed with the pushed filter;
@@ -107,7 +108,9 @@ import BsonCodec._
   * (divergent inside a disjunction, where the optimizer's inferred
   * `IsNotNull` conjunct cannot mask it). Instead the rendering is
   * compositional over Spark's `NOT(pred) ⟺ pred IS FALSE`: see
-  * [[MongoWireSource.notToBson]].
+  * [[MongoWireSource.notToBson]]. Spark's `<>` (its V2 form of
+  * `NOT(a = v)`) renders the same way, as "`=` IS FALSE":
+  * `$and: [{a: {$ne: null}}, {$nor: [{a: v}]}]`.
   */
 class MongoWireSource extends TableProvider {
 
@@ -307,68 +310,45 @@ object MongoWireSource {
     } finally c.close()
   }
 
-  // ---- sources.Filter → find filter doc --------------------------------
+  // ---- V2 predicate → find filter doc ----------------------------------
 
-  /** Kinds whose literals render exactly into a query doc. */
-  private[sources] def pushableKind(k: FieldKind): Boolean = k match {
-    case KInt32 | KInt64 | KDouble | KString | KBool | KObjectId |
-         KDateTime => true
-    case _ => false
-  }
-
-  /** Exact BSON literal for a pushdown value under the column's kind,
-    * or None when the rendering cannot be guaranteed to round-trip
-    * (the filter then stays in Spark).
+  /** The kind of a field a filter may reference, or None when the field
+    * is not pushable: rendered kinds (documents, arrays, mixed) carry no
+    * exact literal, and a find filter reads a dotted or `$`-led key as a
+    * path or an operator, not as the top-level field the column names.
     */
-  private def litOf(kind: FieldKind, v: Any): Option[BsonValue] =
-    (kind, v) match {
-      case (_, null) => None // comparisons to null are never true
-      case (KInt32 | KInt64, n: Byte) => Some(BInt64(n.toLong))
-      case (KInt32 | KInt64, n: Short) => Some(BInt64(n.toLong))
-      case (KInt32 | KInt64, n: Int) => Some(BInt64(n.toLong))
-      case (KInt32 | KInt64, n: Long) => Some(BInt64(n))
-      // NaN equality diverges (Spark: NaN = NaN is TRUE and NaN sorts
-      // above all values; Mongo matches NaN to NaN but sorts it below
-      // all numbers) — a NaN literal has no rendering that is exact
-      // under every operator, so it stays in Spark.
-      case (KDouble, d: Double) if !d.isNaN => Some(BDouble(d))
-      case (KDouble, f: Float) if !f.isNaN => Some(BDouble(f.toDouble))
-      case (KDouble, n: Int) => Some(BDouble(n.toDouble))
-      case (KDouble, n: Long) if math.abs(n) <= (1L << 53) =>
-        Some(BDouble(n.toDouble))
-      case (KString, s: String) => Some(BString(s))
-      case (KString, s: UTF8String) => Some(BString(s.toString))
-      case (KBool, b: Boolean) => Some(BBool(b))
-      case (KObjectId, s: String) => objectIdLit(s)
-      case (KObjectId, s: UTF8String) => objectIdLit(s.toString)
-      // java.sql.Timestamp pushdown values arrive CALENDAR-REBASED
-      // (hybrid Julian) from Spark's internal proleptic-Gregorian
-      // micros; the rebase is the identity from 1900-01-01T00:00:00Z
-      // onward (Spark's own rebase-warning boundary — LMT zone
-      // offsets diverge at second precision before it, calendar days
-      // before 1582-10-15). Earlier literals are declined: the
-      // epoch-millis the server would compare are NOT the micros
-      // Spark compares, so an "exact" pushdown would match the wrong
-      // documents (found by MongoPushdownPropertySpec on a year-1
-      // literal). java.time.Instant values (java8 datetime API) are
-      // exact at any epoch — no rebase on that path.
-      case (KDateTime, t: java.sql.Timestamp) =>
-        Some(t.toInstant).filter(!_.isBefore(rebaseSafeFloor))
-          .flatMap(instantLit)
-      case (KDateTime, t: java.time.Instant) => instantLit(t)
-      case _ => None
+  private[sources] def pushableKind(kinds: Map[String, FieldKind],
+      a: String): Option[FieldKind] =
+    kinds.get(a).filter {
+      case KInt32 | KInt64 | KDouble | KString | KBool | KObjectId |
+           KDateTime => !a.contains('.') && !a.startsWith("$")
+      case _ => false
     }
 
-  /** Proleptic-vs-hybrid calendar rebasing is the identity at and
-    * after Spark's 1900-01-01 boundary — plus a one-day guard band:
-    * the KDateTime case tests the ALREADY-REBASED instant, and in
-    * zones with LMT offsets an original instant slightly before the
-    * boundary can rebase to one at/above it (wrong by the sub-hour
-    * rebase delta). LMT deltas are bounded well under a day, so
-    * declining everything before 1900-01-02 closes the band (r19,
-    * ADVICE item; same fix on the PG plane).
+  /** Exact BSON literal for a V2 literal's internal value under the
+    * column's kind, or None when the rendering cannot be guaranteed to
+    * round-trip (the filter then stays in Spark).
     */
-  private val rebaseSafeFloor = java.time.Instant.parse("1900-01-02T00:00:00Z")
+  private def litOf(kind: FieldKind, e: VExpression): Option[BsonValue] =
+    e match {
+      case l: VLiteral[_] => (kind, l.value: Any) match {
+        case (_, null) => None // comparisons to null are never true
+        case (KInt32 | KInt64, n: Int) => Some(BInt64(n.toLong))
+        case (KInt32 | KInt64, n: Long) => Some(BInt64(n))
+        // NaN has no rendering exact under every operator (see above)
+        case (KDouble, d: Double) if !d.isNaN => Some(BDouble(d))
+        case (KString, s: UTF8String) => Some(BString(s.toString))
+        case (KObjectId, s: UTF8String) => objectIdLit(s.toString)
+        case (KBool, b: Boolean) => Some(BBool(b))
+        // proleptic-Gregorian micros, BSON's calendar too: exact at any
+        // epoch; BSON datetime is millisecond-grained, so a live
+        // sub-millisecond part is declined rather than pushed truncated
+        case (KDateTime, micros: Long) if micros % 1000L == 0 =>
+          Some(BDateTime(micros / 1000L))
+        case _ => None
+      }
+      case _ => None
+    }
 
   /** The least string strictly greater (bytewise UTF-8) than every
     * string with prefix `p`: the last incrementable code point +1
@@ -400,29 +380,45 @@ object MongoWireSource {
       Some(BObjectId(s))
     else None // ill-formed hex can never equal a real ObjectId anyway
 
-  /** BSON datetime is millisecond-grained; a literal with a live
-    * sub-millisecond part has no exact rendering — decline (Spark
-    * keeps the filter) rather than push a truncated, inexact bound.
-    */
-  private def instantLit(i: java.time.Instant): Option[BsonValue] =
-    if (i.getNano % 1000000 == 0)
-      Some(BDateTime(i.toEpochMilli))
-    else None
+  private val rangeOps = Map("<" -> "$lt", "<=" -> "$lte", ">" -> "$gt",
+    ">=" -> "$gte")
 
-  /** Render a filter to a find-command condition doc that matches a
-    * document exactly when Spark's three-valued evaluation of the
-    * filter is TRUE, or None if any piece is not exactly expressible.
+  /** A column-first comparison other than `<>` ([[V2Comparison]]),
+    * rendered to the documents where it is TRUE: `a <=> null` is
+    * IsNull, `a <=> v` matches what `{a: v}` does. Bool ordering stays
+    * in Spark, and so do KDouble ranges — a pushed `p > 5.0` would lose
+    * the NaN rows Spark keeps (the filter-plane mirror of the TopN
+    * double decline in [[MongoScanBuilder.pushTopN]]).
+    */
+  private def compareToBson(op: String, a: String, v: VLiteral[_],
+      kinds: Map[String, FieldKind]): Option[BDoc] = {
+    val kind = pushableKind(kinds, a)
+    op match {
+      case "<=>" if v.value == null => kind.map(_ => BDoc(a -> BNull))
+      case "=" | "<=>" => kind.flatMap(litOf(_, v)).map(lit => BDoc(a -> lit))
+      case _ => for {
+        k <- kind.filter(k => k != KBool && k != KDouble)
+        mop <- rangeOps.get(op)
+        lit <- litOf(k, v)
+      } yield BDoc(a -> BDoc(mop -> lit))
+    }
+  }
+
+  /** Render a V2 predicate to a find-command condition doc that matches
+    * a document exactly when Spark's three-valued evaluation of the
+    * predicate is TRUE, or None if any piece is not exactly expressible.
     *
     * Exactness argument per node: leaves match iff TRUE because Mongo
     * equality/range/`$in` with non-null literals never match a
     * missing/null field (where Spark evaluates to null and drops the
     * row), and the literal renderings are round-trip exact (see
-    * [[litOf]]). `$and`/`$or` compose: `And` is TRUE iff both sides
+    * [[litOf]]). `$and`/`$or` compose: `AND` is TRUE iff both sides
     * are TRUE == `$and` matches iff both match (a FALSE∧NULL = FALSE
-    * difference only matters for NOT, handled below). `Not` delegates
+    * difference only matters for NOT, handled below). `NOT` delegates
     * to [[notToBson]] — `NOT(pred)` keeps a row iff `pred IS FALSE`,
     * which is NOT `$nor` (Mongo's `$nor: [{a: 5}]` matches a document
-    * lacking `a`; Spark drops it).
+    * lacking `a`; Spark drops it) — and `<>` (Spark's `NOT(a = v)`)
+    * renders as "`a = v` IS FALSE" by the same leaf rule.
     *
     * Contract boundary: pushdown narrows BEFORE the loud-or-exact
     * homogeneity check runs — on a contract-violating (heterogeneous)
@@ -432,40 +428,18 @@ object MongoWireSource {
     * LOUDLY. The exactness argument above assumes the declared
     * homogeneous kinds it is given.
     */
-  private[sources] def filterToBson(f: Filter,
-      kinds: Map[String, FieldKind]): Option[BDoc] = {
-    def kindFor(a: String): Option[FieldKind] =
-      kinds.get(a).filter(pushableKind)
-    // bool ordering stays in Spark; KDouble ranges are declined
-    // because NaN orders differently on the two sides (Spark above
-    // all values, Mongo below all numbers) — a `p > 5.0` pushed to
-    // the server silently loses NaN rows Spark must keep. The exact
-    // mirror of the TopN double decline in [[MongoScanBuilder
-    // .pushTopN]], applied to the filter plane (r17 verdict #1b).
-    def rangeOp(a: String, op: String, v: Any): Option[BDoc] =
-      kindFor(a).filter(k => k != KBool && k != KDouble)
-        .flatMap(k => litOf(k, v))
-        .map(lit => BDoc(a -> BDoc(op -> lit)))
-    f match {
-      case EqualTo(a, v) =>
-        kindFor(a).flatMap(k => litOf(k, v)).map(lit => BDoc(a -> lit))
-      // null-safe equality: `a <=> null` is exactly IsNull; with a
-      // non-null literal it is TRUE iff a is present, non-null and
-      // equal — the same documents `{a: lit}` matches.
-      case EqualNullSafe(a, null) =>
-        kinds.get(a).filter(pushableKind).map(_ => BDoc(a -> BNull))
-      case EqualNullSafe(a, v) =>
-        kindFor(a).flatMap(k => litOf(k, v)).map(lit => BDoc(a -> lit))
-      case GreaterThan(a, v) => rangeOp(a, "$gt", v)
-      case GreaterThanOrEqual(a, v) => rangeOp(a, "$gte", v)
-      case LessThan(a, v) => rangeOp(a, "$lt", v)
-      case LessThanOrEqual(a, v) => rangeOp(a, "$lte", v)
+  private[sources] def filterToBson(e: VExpression,
+      kinds: Map[String, FieldKind]): Option[BDoc] = e match {
+    case V2Comparison("<>", V2Column(a), v) =>
+      isFalseLeaf(a, compareToBson("=", a, v, kinds))
+    case V2Comparison(op, V2Column(a), v) => compareToBson(op, a, v, kinds)
+    case p: Predicate => (p.name, p.children.toSeq) match {
       // the 10k cap bounds the rendered query document far below
       // Mongo's 16 MB command-document limit — the same cap the
       // runtime (DPP) filter path applies; a bigger IN-list stays in
       // Spark rather than failing the find at runtime.
-      case In(a, vs) if vs.nonEmpty && vs.length <= 10000 =>
-        kindFor(a).flatMap { k =>
+      case ("IN", V2Column(a) +: vs) if vs.nonEmpty && vs.length <= 10000 =>
+        pushableKind(kinds, a).flatMap { k =>
           val lits = vs.toVector.map(litOf(k, _))
           if (lits.forall(_.isDefined))
             Some(BDoc(a -> BDoc("$in" -> BArray(lits.flatten))))
@@ -482,12 +456,14 @@ object MongoWireSource {
       // transfer into an index-range scan. endsWith/contains have no
       // exact range form and stay in Spark (Mongo $regex semantics
       // are not bytewise and are not modeled).
-      case StringStartsWith(a, p) if p != null =>
-        kindFor(a).filter(_ == KString).map { _ =>
-          prefixSuccessor(p) match {
+      case ("STARTS_WITH", Seq(V2Column(a), v: VLiteral[_]))
+          if v.value.isInstanceOf[UTF8String] =>
+        pushableKind(kinds, a).filter(_ == KString).map { _ =>
+          val pre = v.value.toString
+          prefixSuccessor(pre) match {
             case Some(u) => BDoc(a -> BDoc(
-              "$gte" -> BString(p), "$lt" -> BString(u)))
-            case None => BDoc(a -> BDoc("$gte" -> BString(p)))
+              "$gte" -> BString(pre), "$lt" -> BString(u)))
+            case None => BDoc(a -> BDoc("$gte" -> BString(pre)))
           }
         }
       // null tests translate only on non-rendered kinds: missing→null
@@ -495,77 +471,83 @@ object MongoWireSource {
       // containing null element-matches {f: null} while its rendered
       // string "[null]" is non-null — so rendered columns keep their
       // null tests in Spark.
-      case IsNull(a) =>
-        kinds.get(a).filter(pushableKind).map(_ => BDoc(a -> BNull))
-      case IsNotNull(a) =>
-        kinds.get(a).filter(pushableKind)
-          .map(_ => BDoc(a -> BDoc("$ne" -> BNull)))
-      case And(l, r) =>
+      case ("IS_NULL", Seq(V2Column(a))) =>
+        pushableKind(kinds, a).map(_ => BDoc(a -> BNull))
+      case ("IS_NOT_NULL", Seq(V2Column(a))) =>
+        pushableKind(kinds, a).map(_ => BDoc(a -> BDoc("$ne" -> BNull)))
+      case ("AND", Seq(l, r)) =>
         for (ls <- filterToBson(l, kinds); rs <- filterToBson(r, kinds))
           yield BDoc("$and" -> BArray(Vector(ls, rs)))
-      case Or(l, r) =>
+      case ("OR", Seq(l, r)) =>
         for (ls <- filterToBson(l, kinds); rs <- filterToBson(r, kinds))
           yield BDoc("$or" -> BArray(Vector(ls, rs)))
-      case Not(child) => notToBson(child, kinds)
+      case ("NOT", Seq(c)) => notToBson(c, kinds)
       case _ => None
     }
+    case _ => None
   }
 
-  /** Render "`f` IS FALSE" — a condition doc matching a document
-    * exactly when Spark's three-valued evaluation of `f` is FALSE,
-    * which is what `NOT(f)` keeps. The r17 judge-confirmed bug this
+  /** Render "`e` IS FALSE" — a condition doc matching a document
+    * exactly when Spark's three-valued evaluation of `e` is FALSE,
+    * which is what `NOT(e)` keeps. The r17 judge-confirmed bug this
     * replaces: a bare `$nor: [child]` also matches documents where
-    * the referenced field is missing/null (`f` evaluates to null, the
+    * the referenced field is missing/null (`e` evaluates to null, the
     * row must be dropped) — masked at top level by the optimizer's
     * inferred IsNotNull conjunct, WRONG inside a disjunction where
     * constraint inference cannot fire.
     *
     * Compositional over De Morgan in three-valued logic:
-    *  - a comparison leaf is FALSE iff its field is present and
-    *    non-null AND the comparison misses → `$and: [{a: {$ne:
-    *    null}}, {$nor: [leaf]}]` (an In with a null literal would
-    *    never be FALSE on a miss, but [[litOf]] already declines null
-    *    literals so a rendered In has none);
+    *  - a comparison, IN or prefix leaf is FALSE iff its field is
+    *    present and non-null AND the leaf misses → `$and: [{a: {$ne:
+    *    null}}, {$nor: [leaf]}]` (an IN with a null literal would never
+    *    be FALSE on a miss, but [[litOf]] already declines null
+    *    literals so a rendered IN has none); `a <> v` is FALSE iff
+    *    `a = v` is TRUE → the positive `=` render;
     *  - `a <=> v` is two-valued: with non-null `v`, FALSE iff
     *    missing, null or unequal — the ONE shape where a bare
     *    `$nor: [{a: v}]` is exact;
-    *  - `And` is FALSE iff either side is FALSE (F∧NULL = F);
-    *    `Or` is FALSE iff both sides are FALSE;
+    *  - `AND` is FALSE iff either side is FALSE (F∧NULL = F);
+    *    `OR` is FALSE iff both sides are FALSE;
     *  - `NOT(NOT(p))` is TRUE iff `p` is TRUE → the positive render;
     *  - null tests are two-valued → their duals.
     */
-  private[sources] def notToBson(f: Filter,
-      kinds: Map[String, FieldKind]): Option[BDoc] = {
-    def isFalseLeaf(a: String, leaf: Option[BDoc]): Option[BDoc] =
-      leaf.map(c => BDoc("$and" -> BArray(Vector(
-        BDoc(a -> BDoc("$ne" -> BNull)),
-        BDoc("$nor" -> BArray(Vector(c)))))))
-    f match {
-      case leaf @ (_: EqualTo | _: GreaterThan | _: GreaterThanOrEqual |
-                   _: LessThan | _: LessThanOrEqual | _: In |
-                   _: StringStartsWith) =>
-        isFalseLeaf(leaf.references.head, filterToBson(leaf, kinds))
-      case EqualNullSafe(a, null) =>
-        kinds.get(a).filter(pushableKind)
-          .map(_ => BDoc(a -> BDoc("$ne" -> BNull)))
-      case ens @ EqualNullSafe(_, _) =>
-        filterToBson(ens, kinds).map(c =>
+  private[sources] def notToBson(e: VExpression,
+      kinds: Map[String, FieldKind]): Option[BDoc] =
+    e match {
+      case V2Comparison("<>", V2Column(a), v) => compareToBson("=", a, v, kinds)
+      case V2Comparison("<=>", V2Column(a), v) if v.value == null =>
+        pushableKind(kinds, a).map(_ => BDoc(a -> BDoc("$ne" -> BNull)))
+      case V2Comparison("<=>", V2Column(a), v) =>
+        compareToBson("<=>", a, v, kinds).map(c =>
           BDoc("$nor" -> BArray(Vector(c))))
-      case IsNull(a) =>
-        kinds.get(a).filter(pushableKind)
-          .map(_ => BDoc(a -> BDoc("$ne" -> BNull)))
-      case IsNotNull(a) =>
-        kinds.get(a).filter(pushableKind).map(_ => BDoc(a -> BNull))
-      case And(l, r) =>
-        for (ls <- notToBson(l, kinds); rs <- notToBson(r, kinds))
-          yield BDoc("$or" -> BArray(Vector(ls, rs)))
-      case Or(l, r) =>
-        for (ls <- notToBson(l, kinds); rs <- notToBson(r, kinds))
-          yield BDoc("$and" -> BArray(Vector(ls, rs)))
-      case Not(child) => filterToBson(child, kinds)
+      case V2Comparison(op, V2Column(a), v) =>
+        isFalseLeaf(a, compareToBson(op, a, v, kinds))
+      case p: Predicate => (p.name, p.children.toSeq) match {
+        case ("IN" | "STARTS_WITH", V2Column(a) +: _) =>
+          isFalseLeaf(a, filterToBson(p, kinds))
+        case ("IS_NULL", Seq(V2Column(a))) =>
+          pushableKind(kinds, a).map(_ => BDoc(a -> BDoc("$ne" -> BNull)))
+        case ("IS_NOT_NULL", Seq(V2Column(a))) =>
+          pushableKind(kinds, a).map(_ => BDoc(a -> BNull))
+        case ("AND", Seq(l, r)) =>
+          for (ls <- notToBson(l, kinds); rs <- notToBson(r, kinds))
+            yield BDoc("$or" -> BArray(Vector(ls, rs)))
+        case ("OR", Seq(l, r)) =>
+          for (ls <- notToBson(l, kinds); rs <- notToBson(r, kinds))
+            yield BDoc("$and" -> BArray(Vector(ls, rs)))
+        case ("NOT", Seq(c)) => filterToBson(c, kinds)
+        case _ => None
+      }
       case _ => None
     }
-  }
+
+  /** A leaf on field `a` is FALSE iff `a` is present and non-null and
+    * the leaf misses.
+    */
+  private def isFalseLeaf(a: String, leaf: Option[BDoc]): Option[BDoc] =
+    leaf.map(c => BDoc("$and" -> BArray(Vector(
+      BDoc(a -> BDoc("$ne" -> BNull)),
+      BDoc("$nor" -> BArray(Vector(c)))))))
 
   // ---- BsonValue → Catalyst --------------------------------------------
 
@@ -664,7 +646,7 @@ final class MongoWireTable(conn: MongoWireSource.Conn, db: String,
 final class MongoScanBuilder(conn: MongoWireSource.Conn, db: String,
     coll: String, profile: MongoWireSource.CollProfile, numParts: Int)
     extends ScanBuilder
-    with SupportsPushDownFilters
+    with SupportsPushDownV2Filters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit
     with SupportsPushDownTopN {
@@ -672,19 +654,18 @@ final class MongoScanBuilder(conn: MongoWireSource.Conn, db: String,
   import MongoWireSource._
 
   private var out: StructType = profile.schema
-  private var accepted: Array[Filter] = Array.empty
+  private var accepted: Array[Predicate] = Array.empty
   private var conds: Seq[BDoc] = Nil
   private var limit: Option[Int] = None
   private var sortDir: Option[Int] = None
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rest) = filters.partition(f =>
-      MongoWireSource.filterToBson(f, profile.kinds).isDefined)
-    accepted = ok
-    conds = ok.toSeq.flatMap(MongoWireSource.filterToBson(_, profile.kinds))
-    rest // unsupported filters stay in Spark
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val compiled = predicates.map(p => (p, filterToBson(p, profile.kinds)))
+    accepted = compiled.collect { case (p, Some(_)) => p }
+    conds = compiled.toSeq.flatMap(_._2)
+    compiled.collect { case (p, None) => p } // unsupported stay in Spark
   }
-  override def pushedFilters(): Array[Filter] = accepted
+  override def pushedPredicates(): Array[Predicate] = accepted
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     out =
@@ -707,25 +688,16 @@ final class MongoScanBuilder(conn: MongoWireSource.Conn, db: String,
     * partitioned: each slice returns its local top-k, Spark re-sorts
     * globally.
     */
-  override def pushTopN(orders: Array[
-      org.apache.spark.sql.connector.expressions.SortOrder],
-      n: Int): Boolean = {
+  override def pushTopN(orders: Array[VSortOrder], n: Int): Boolean = {
     if (orders.length != 1) return false
     val o = orders(0)
-    val isId = o.expression match {
-      case ref: org.apache.spark.sql.connector.expressions.NamedReference =>
-        ref.fieldNames.length == 1 && ref.fieldNames()(0) == "_id"
-      case _ => false
-    }
+    val isId = V2Column.unapply(o.expression).contains("_id")
     val orderSafe = profile.kinds.get("_id").exists {
       case KInt32 | KInt64 | KString | KObjectId | KDateTime => true
       case _ => false
     }
     if (!isId || !orderSafe) return false
-    sortDir = Some(
-      if (o.direction ==
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING) 1
-      else -1)
+    sortDir = Some(if (o.direction == SortDirection.ASCENDING) 1 else -1)
     limit = Some(n)
     true
   }
@@ -743,7 +715,7 @@ final class MongoScan(conn: MongoWireSource.Conn, db: String, coll: String,
     conds: Seq[BDoc], limit: Option[Int], numParts: Int,
     sortDir: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics
-    with SupportsRuntimeFiltering {
+    with SupportsRuntimeV2Filtering {
 
   /** The `raw STRING` read: whole documents, no projection doc. */
   private val raw = profile == MongoWireSource.RawProfile
@@ -760,17 +732,16 @@ final class MongoScan(conn: MongoWireSource.Conn, db: String, coll: String,
     */
   private var runtimeConds: Seq[BDoc] = Nil
 
-  override def filterAttributes(): Array[
-      org.apache.spark.sql.connector.expressions.NamedReference] =
+  override def filterAttributes(): Array[NamedReference] =
     out.fields.collect {
-      case f if profile.kinds.get(f.name).exists(MongoWireSource.pushableKind) =>
-        org.apache.spark.sql.connector.expressions.Expressions.column(f.name)
+      case f if MongoWireSource.pushableKind(profile.kinds, f.name).isDefined =>
+        Expressions.column(f.name)
     }
 
   // filterToBson itself enforces the 10k IN cap (shared with the
   // compile-time path), so no pre-filter here
-  override def filter(filters: Array[Filter]): Unit =
-    runtimeConds = filters.toSeq
+  override def filter(predicates: Array[Predicate]): Unit =
+    runtimeConds = predicates.toSeq
       .flatMap(MongoWireSource.filterToBson(_, profile.kinds))
 
   override def readSchema(): StructType = out

@@ -238,18 +238,16 @@ object PgProbe {
   * through [[column]] and [[literal]], or are declined (None) when
   * Postgres would not evaluate them exactly as Spark does. SQL WHERE
   * keeps only TRUE under the same three-valued logic Spark uses, so
-  * `NOT (...)` composes exactly — unlike the Mongo plane's `$nor` (see
-  * [[MongoWireSource.notToBson]]).
+  * `NOT (...)` composes exactly. A find filter has no such NOT (Mongo's
+  * `$nor` also matches a missing field), so the Mongo plane renders
+  * `NOT` and `<>` as "IS FALSE" instead ([[MongoWireSource.notToBson]]).
   */
 final class PgCompiler(schema: StructType, probe: PgProbe) {
   import PgCompiler._
 
   /** The table column a V2 reference names (top-level only). */
-  def field(e: VExpression): Option[StructField] = e match {
-    case ref: NamedReference if ref.fieldNames.length == 1 =>
-      schema.fields.find(_.name == ref.fieldNames()(0))
-    case _ => None
-  }
+  def field(e: VExpression): Option[StructField] =
+    V2Column.unapply(e).flatMap(name => schema.fields.find(_.name == name))
 
   /** Plain text/varchar: the only StringType-backed PG types whose
     * server-side comparison is Spark's textual one. uuid/json[b]/xml/
@@ -339,6 +337,7 @@ final class PgCompiler(schema: StructType, probe: PgProbe) {
     else condition(p)
 
   private def condition(e: VExpression): Option[String] = e match {
+    case V2Comparison(op, c, v) => compare(op, c, v)
     case p: Predicate => (p.name, p.children.toSeq) match {
       case ("AND", Seq(l, r)) =>
         for (a <- condition(l); b <- condition(r)) yield s"($a AND $b)"
@@ -347,8 +346,6 @@ final class PgCompiler(schema: StructType, probe: PgProbe) {
       case ("NOT", Seq(c)) => condition(c).map(s => s"(NOT $s)")
       case ("IS_NULL", Seq(c)) => column(c, Plain).map(_ + " IS NULL")
       case ("IS_NOT_NULL", Seq(c)) => column(c, Plain).map(_ + " IS NOT NULL")
-      case ("<>", Seq(l, r)) => compare("=", l, r).map(s => s"(NOT $s)")
-      case (op, Seq(l, r)) if mirrored.contains(op) => compare(op, l, r)
       // the 10k cap mirrors the runtime (DPP) filter path's: a larger
       // literal IN-list bloats the query text past any planning benefit
       // — it stays in Spark instead
@@ -372,19 +369,18 @@ final class PgCompiler(schema: StructType, probe: PgProbe) {
     case _ => None
   }
 
-  /** `column op literal`, either way round; `<=>` is SQL's IS NOT
-    * DISTINCT FROM, and `<=> NULL` is IS NULL on any column.
+  /** `column op literal` ([[V2Comparison]]); `<>` renders as NOT over
+    * `=`, `<=>` is SQL's IS NOT DISTINCT FROM, and `<=> NULL` is IS
+    * NULL on any column.
     */
-  private def compare(op: String, l: VExpression, r: VExpression): Option[String] =
-    (l, r) match {
-      case (_: VLiteral[_], _: NamedReference) => compare(mirrored(op), r, l)
-      case (c, v: VLiteral[_]) if op == "<=>" && v.value == null =>
-        column(c, Plain).map(_ + " IS NULL")
-      case (c, v: VLiteral[_]) =>
+  private def compare(op: String, c: NamedReference, v: VLiteral[_]): Option[String] =
+    op match {
+      case "<>" => compare("=", c, v).map(s => s"(NOT $s)")
+      case "<=>" if v.value == null => column(c, Plain).map(_ + " IS NULL")
+      case _ =>
         val use = if (op == "=" || op == "<=>") Equal else Order
         val sqlOp = if (op == "<=>") "IS NOT DISTINCT FROM" else op
         for (k <- column(c, use); lit <- literal(v)) yield s"$k $sqlOp $lit"
-      case _ => None
     }
 }
 
@@ -394,9 +390,6 @@ object PgCompiler {
   case object Equal extends Use
   case object Group extends Use
   case object Order extends Use
-
-  private val mirrored = Map("=" -> "=", "<=>" -> "<=>", "<" -> ">",
-    "<=" -> ">=", ">" -> "<", ">=" -> "<=")
 }
 
 final class PgWireTable(conn: PgConn, table: String,

@@ -3,13 +3,13 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference, SortDirection, SortOrder => VSortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.{Literal => VLiteral, NamedReference, SortDirection, SortOrder => VSortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsRuntimeFiltering}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsPushDownV2Filters, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** A complete DataSource V2 READ connector — the connector-surface
   * demonstration the parquet/JDBC/Mongo sources don't exercise:
   * `TableProvider` → `SupportsRead` table → `ScanBuilder` implementing
-  * BOTH `SupportsPushDownFilters` (id-range predicates narrow the
+  * BOTH `SupportsPushDownV2Filters` (id-range predicates narrow the
   * generated interval at PLANNING time — accepted filters do not
   * reappear in the query's post-scan Filter) and
   * `SupportsPushDownRequiredColumns` (the reader materializes only the
@@ -133,7 +133,7 @@ final class RangeScanBuilder(
     partitionByBucket: Boolean = false,
     columnarBatch: Boolean = false)
     extends ScanBuilder
-    with SupportsPushDownFilters
+    with SupportsPushDownV2Filters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
     with SupportsPushDownLimit
@@ -141,38 +141,21 @@ final class RangeScanBuilder(
 
   private var lo = start
   private var hi = end
-  private var accepted: Array[Filter] = Array.empty
+  private var accepted: Array[Predicate] = Array.empty
   private var required: StructType = RangeSource.schema
   private var pushedAgg: Option[PushedRangeAggregation] = None
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (taken, residual) = filters.partition {
-      case EqualTo("id", _: java.lang.Long | _: java.lang.Integer) => true
-      case GreaterThan("id", _: java.lang.Long | _: java.lang.Integer) => true
-      case GreaterThanOrEqual("id", _: java.lang.Long | _: java.lang.Integer) => true
-      case LessThan("id", _: java.lang.Long | _: java.lang.Integer) => true
-      case LessThanOrEqual("id", _: java.lang.Long | _: java.lang.Integer) => true
-      case _ => false
-    }
-    taken.foreach {
-      case EqualTo("id", v) =>
-        val x = v.asInstanceOf[Number].longValue
-        lo = math.max(lo, x); hi = math.min(hi, x + 1)
-      case GreaterThan("id", v) =>
-        lo = math.max(lo, v.asInstanceOf[Number].longValue + 1)
-      case GreaterThanOrEqual("id", v) =>
-        lo = math.max(lo, v.asInstanceOf[Number].longValue)
-      case LessThan("id", v) =>
-        hi = math.min(hi, v.asInstanceOf[Number].longValue)
-      case LessThanOrEqual("id", v) =>
-        hi = math.min(hi, v.asInstanceOf[Number].longValue + 1)
-      case _ => ()
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val (taken, residual) =
+      predicates.partition(RangeScanBuilder.idBounds(_).isDefined)
+    taken.flatMap(RangeScanBuilder.idBounds).foreach { case (l, h) =>
+      lo = math.max(lo, l); hi = math.min(hi, h)
     }
     accepted = taken
-    residual // fully handled filters do NOT come back as a post-scan Filter
+    residual // fully handled predicates do NOT come back as a post-scan Filter
   }
 
-  override def pushedFilters(): Array[Filter] = accepted
+  override def pushedPredicates(): Array[Predicate] = accepted
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = StructType(
@@ -181,12 +164,6 @@ final class RangeScanBuilder(
         // the `_slice` METADATA column survives pruning when selected
         requiredSchema.fields.filter(_.name == "_slice"))
 
-  private def fieldName(e: VExpression): Option[String] = e match {
-    case ref: NamedReference if ref.fieldNames.length == 1 =>
-      Some(ref.fieldNames()(0))
-    case _ => None
-  }
-
   /** Partial pushdown only (`supportCompletePushDown` stays false): a
     * multi-slice scan cannot produce GLOBAL aggregates without its own
     * shuffle, so each slice emits closed-form per-residue partials and
@@ -194,20 +171,20 @@ final class RangeScanBuilder(
     * instead of the interval, which is the entire point at 100 TB.
     */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    val groups = aggregation.groupByExpressions.toSeq.map(fieldName)
+    val groups = aggregation.groupByExpressions.toSeq.map(V2Column.unapply)
     if (groups.exists(_.isEmpty)) return false
     val groupCols = groups.flatten
     if (!groupCols.forall(c => c == "bucket" || c == "label")) return false
     if (groupCols.distinct.length != groupCols.length) return false
     val aggs = aggregation.aggregateExpressions.toSeq.map {
       case _: CountStar => Some(PushedRangeAgg.CountStarAgg)
-      case c: Count if !c.isDistinct && fieldName(c.column).contains("id") =>
+      case c: Count if !c.isDistinct && V2Column.unapply(c.column).contains("id") =>
         Some(PushedRangeAgg.CountIdAgg)
-      case m: Min if fieldName(m.column).contains("id") =>
+      case m: Min if V2Column.unapply(m.column).contains("id") =>
         Some(PushedRangeAgg.MinIdAgg)
-      case m: Max if fieldName(m.column).contains("id") =>
+      case m: Max if V2Column.unapply(m.column).contains("id") =>
         Some(PushedRangeAgg.MaxIdAgg)
-      case s: Sum if !s.isDistinct && fieldName(s.column).contains("id") =>
+      case s: Sum if !s.isDistinct && V2Column.unapply(s.column).contains("id") =>
         Some(PushedRangeAgg.SumIdAgg)
       case _ => None
     }
@@ -238,7 +215,7 @@ final class RangeScanBuilder(
   override def pushTopN(orders: Array[VSortOrder], limit: Int): Boolean = {
     if (pushedAgg.isDefined) return false
     val ascOnId = orders.length == 1 &&
-      fieldName(orders(0).expression).contains("id") &&
+      V2Column.unapply(orders(0).expression).contains("id") &&
       orders(0).direction == SortDirection.ASCENDING
     if (!ascOnId) return false
     pushLimit(limit)
@@ -254,6 +231,39 @@ final class RangeScanBuilder(
       lo, hi, if (limitOnePartition) 1 else slices, required, maxRowsPerBatch,
       partitionByBucket && !limitOnePartition, columnarBatch)
   }
+}
+
+object RangeScanBuilder {
+
+  /** The ids `[lo, hi)` an `id` comparison keeps, or None for any other
+    * predicate. `+ 1` saturates: no id reaches Long.MaxValue (the end
+    * is exclusive), so `id > MAX` keeps nothing and `id <= MAX` all.
+    */
+  def idBounds(p: Predicate): Option[(Long, Long)] = p match {
+    case V2Comparison(op, V2Column("id"), v) => (op, v.value) match {
+      case ("=", x: Long) => Some((x, succ(x)))
+      case (">", x: Long) => Some((succ(x), Long.MaxValue))
+      case (">=", x: Long) => Some((x, Long.MaxValue))
+      case ("<", x: Long) => Some((Long.MinValue, x))
+      case ("<=", x: Long) => Some((Long.MinValue, succ(x)))
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** A runtime (DPP) IN-set's envelope: a superset, sound only where
+    * the join still filters row-level.
+    */
+  def idEnvelope(p: Predicate): Option[(Long, Long)] =
+    (p.name, p.children.toSeq) match {
+      case ("IN", V2Column("id") +: vs) if vs.nonEmpty =>
+        val ids = vs.collect { case l: VLiteral[_] => l.value }
+          .collect { case x: Long => x }
+        Option.when(ids.length == vs.length)((ids.min, succ(ids.max)))
+      case _ => idBounds(p)
+    }
+
+  private def succ(x: Long): Long = if (x == Long.MaxValue) x else x + 1
 }
 
 object RangeScan {
@@ -289,7 +299,7 @@ final class RangeScan(
     maxRowsPerBatch: Option[Long] = None,
     partitionByBucket: Boolean = false,
     columnarBatch: Boolean = false)
-    extends Scan with Batch with SupportsRuntimeFiltering
+    extends Scan with Batch with SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -310,18 +320,11 @@ final class RangeScan(
       Array(org.apache.spark.sql.connector.expressions.Expressions.column("id"))
     else Array.empty
 
-  override def filter(filters: Array[Filter]): Unit = filters.foreach {
-    case org.apache.spark.sql.sources.In("id", vs) if vs.nonEmpty =>
-      val longs = vs.collect { case n: Number => n.longValue }
-      if (longs.length == vs.length) {
-        effLo = math.max(effLo, longs.min)
-        effHi = math.min(effHi, longs.max + 1)
-      }
-    case EqualTo("id", v: Number) =>
-      effLo = math.max(effLo, v.longValue)
-      effHi = math.min(effHi, v.longValue + 1)
-    case _ => () // unknown runtime filter: keep the planning-time bounds
-  }
+  // an unknown runtime predicate keeps the planning-time bounds
+  override def filter(predicates: Array[Predicate]): Unit =
+    predicates.flatMap(RangeScanBuilder.idEnvelope).foreach { case (l, h) =>
+      effLo = math.max(effLo, l); effHi = math.min(effHi, h)
+    }
 
   override def readSchema(): StructType = out
   override def toBatch: Batch = this

@@ -64,8 +64,11 @@ object MongoPushdownPropertySpec extends Properties("MongoPushdown") {
     Gen.oneOf("", "a", "b", "é☃", "zz").map(BString.apply)
   private val genB: Gen[BsonValue] =
     Gen.oneOf(true, false).map(BBool.apply)
+  // 1850-06-01 and 0001-01-01: pre-1900 instants, where a calendar-
+  // rebased literal would diverge from the stored millis
   private val genT: Gen[BsonValue] =
-    Gen.oneOf(0L, 1704067200000L, 1704067201000L, -62135596800000L)
+    Gen.oneOf(0L, 1704067200000L, 1704067201000L, -62135596800000L,
+      -3773779200000L)
       .map(BDateTime.apply)
 
   private val genDocs: Gen[Vector[BDoc]] = for {
@@ -105,10 +108,13 @@ object MongoPushdownPropertySpec extends Properties("MongoPushdown") {
     -0.0, 0.0, 1.5, 5.0, 10.25).map(lit(_))
   private val genSLit: Gen[Column] =
     Gen.oneOf("", "a", "é☃", "zz", "missing").map(lit(_))
+  // the sub-millisecond literal is the decline path; the 1850 and
+  // year-1 literals are millisecond-aligned and push (Catalyst's
+  // proleptic micros render exactly at any epoch)
   private val genTLit: Gen[Column] = Gen.oneOf(
     "1970-01-01T00:00:00Z", "2024-01-01T00:00:00Z",
-    "2024-01-01T00:00:00.000500Z", // sub-millisecond: the decline path
-    "0001-01-01T00:00:00Z")
+    "2024-01-01T00:00:00.000500Z",
+    "1850-06-01T00:00:00Z", "0001-01-01T00:00:00Z")
     .map(s => lit(java.sql.Timestamp.from(java.time.Instant.parse(s))))
 
   private val genLeaf: Gen[Column] = {

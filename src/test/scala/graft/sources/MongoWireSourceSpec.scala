@@ -165,6 +165,56 @@ class MongoWireSourceSpec extends AnyFunSuite with SparkTestSession {
     } finally srv.close()
   }
 
+  test("a millisecond-aligned timestamp literal pushes at any epoch (1850)") {
+    // Catalyst's timestamp literal is proleptic-Gregorian micros, the
+    // calendar BSON datetimes count in: a pre-1900 literal is exact too
+    val t1850 = java.time.Instant.parse("1850-06-01T00:00:00Z")
+    val early = Vector(t1850, t1850.plusSeconds(1),
+      java.time.Instant.parse("1899-12-31T23:00:00Z"),
+      java.time.Instant.parse("2024-01-01T00:00:00Z")).zipWithIndex.map {
+      case (t, i) => BDoc("_id" -> BInt64(i.toLong), "at" -> BDateTime(t.toEpochMilli))
+    }
+    val srv = new FakeMongoServer(early)
+    try {
+      import org.apache.spark.sql.functions._
+      val df = reader(srv).load()
+      val inMem = spark.createDataFrame(
+        java.util.Arrays.asList(df.collect(): _*), df.schema)
+      def ids(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(_.getAs[Long]("_id")).sorted.toSeq
+      for ((f, want) <- Seq((col("at") === lit(t1850), Seq(0L)),
+                            (col("at") > lit(t1850), Seq(1L, 2L, 3L)),
+                            (col("at") =!= lit(t1850), Seq(1L, 2L, 3L)))) {
+        srv.clearLog()
+        assert(ids(df.filter(f)) == want, s"filter $f")
+        assert(ids(inMem.filter(f)) == want, s"in-memory filter $f")
+        val logged = srv.findCommands.flatMap(_.get("filter"))
+          .map(BsonCodec.toReferenceJson).mkString(" ")
+        assert(logged.contains("1850-06-01T00:00:00"), s"$f: $logged")
+      }
+    } finally srv.close()
+  }
+
+  test("a dotted field name stays in Spark; other top-level names push") {
+    // a find filter reads `{"a.b": v}` as the path a → b, not the
+    // top-level field named "a.b" the column reads
+    val named = (0 until 4).map(i => BDoc("_id" -> BInt64(i.toLong),
+      "a.b" -> BInt64(i % 2L), "order-id" -> BInt64(i % 2L))).toVector
+    val srv = new FakeMongoServer(named)
+    try {
+      import org.apache.spark.sql.functions._
+      val df = reader(srv).load()
+      def logged = srv.findCommands.flatMap(_.get("filter"))
+        .map(BsonCodec.toReferenceJson).mkString(" ")
+      srv.clearLog()
+      assert(df.filter(col("`a.b`") === 1L).count() == 2)
+      assert(!logged.contains("a.b"), logged)
+      srv.clearLog()
+      assert(df.filter(col("order-id") === 1L).count() == 2)
+      assert(logged.contains(""""order-id":1"""), logged)
+    } finally srv.close()
+  }
+
   test("TopN on _id pushes as find sort+limit; other keys stay in Spark") {
     val srv = new FakeMongoServer(docs)
     try {

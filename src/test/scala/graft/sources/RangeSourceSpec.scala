@@ -84,6 +84,31 @@ class RangeSourceSpec extends AnyFunSuite with SparkTestSession {
     assert(df.select("id_sq").head().getLong(0) === 777L * 777L)
   }
 
+  test("id bounds at Long.MaxValue saturate instead of wrapping") {
+    // a strict lower or inclusive upper bound adds one to the literal;
+    // at Long.MaxValue that wrapped to Long.MinValue, so `id > MAX`
+    // kept the whole interval and `id <= MAX` kept nothing
+    val scan = read(0, 100)
+    val inMem = spark.createDataFrame(
+      java.util.Arrays.asList(scan.collect(): _*), scan.schema)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    for (f <- Seq(col("id") > Long.MaxValue, col("id") <= Long.MaxValue,
+                  col("id") === Long.MaxValue, col("id") >= Long.MinValue,
+                  col("id") < Long.MinValue)) {
+      assert(ids(scan.filter(f)) === ids(inMem.filter(f)), s"filter $f")
+    }
+    assert(scan.filter(col("id") <= Long.MaxValue).count() === 100L)
+    // a runtime IN-set holding Long.MaxValue keeps its envelope's top
+    val dim = spark.range(0, 2)
+      .select(when(col("id") === 0, 5L).otherwise(Long.MaxValue).as("id"))
+      .filter(col("id") % 2 === 1)
+    val joined = read(0, 2000000, slices = 8).join(broadcast(dim), "id")
+    assert(ids(joined) === Seq(5L))
+    assert(findScan(joined.queryExecution.executedPlan).get
+      .toString.toLowerCase.contains("runtimefilters"))
+  }
+
   test("group-by aggregate pushes down: scan emits per-slice residue partials") {
     val df = read(0, 100000, slices = 7)
       .filter(col("id") >= 25000 && col("id") < 90000)

@@ -3,9 +3,12 @@
 given SF, then execute each oracle SQL in DuckDB over the same parquet
 tables and compare row-by-row (columns sorted by name, rows sorted).
 
+Each PASS line ends with the gate's sorted-row hash (see `row_hash`), so
+two runs -- say a parent checkout and a change -- compare with `diff`.
+
 Usage: python3 tools/selfcheck.py [sfDir] [outDir] [--skip-verify]
 """
-import json, math, subprocess, sys
+import hashlib, json, math, subprocess, sys
 from pathlib import Path
 
 import duckdb
@@ -58,6 +61,12 @@ def table_rows(tbl):
     return cols, rows
 
 
+def row_hash(cols, rows):
+    """First 16 hex digits of sha256 over repr((columns by name, sorted
+    rows)) -- the rows as `table_rows` returns them."""
+    return hashlib.sha256(repr((cols, rows)).encode()).hexdigest()[:16]
+
+
 def main():
     if "--skip-verify" not in sys.argv:
         run_verify()
@@ -96,7 +105,7 @@ def main():
             print(f"FAIL {name}: first diff row {bad}:\n  spark={gr[bad]}\n  duck ={wr[bad]}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(gr)} rows)"); n_pass += 1
+            print(f"PASS {name} ({len(gr)} rows) {row_hash(gc, gr)}"); n_pass += 1
     # rows-only entries (no oracle)
     for rdir in sorted(OUT.iterdir()):
         if rdir.is_dir() and rdir.name not in oracle:
