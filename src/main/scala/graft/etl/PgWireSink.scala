@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 
-import graft.sources.{PgDataWriter, PgWireClient, PgWireSource}
+import graft.sources.{PgDataWriter, PgLeg, PgWireClient, PgWireSource}
 
 /** Serializable connection descriptor for the wire-protocol plane —
   * shipped to executors, each of which opens its own connection (the
@@ -26,7 +26,9 @@ final case class PgConn(host: String, port: Int, user: String,
   * COPY-vs-INSERT is the 100 TB decision, not a convenience: COPY
   * bypasses per-statement parse/plan and is the documented PostgreSQL
   * bulk path, and partition-parallelism multiplies it by the cluster's
-  * cores. DDL (K2/K3) goes through one driver-side connection.
+  * cores. Each DDL call and probe (K2/K3: `tableExists`,
+  * `createSchema`, `createTable`, [[execute]]) opens its own short
+  * driver-side connection.
   *
   * The appends are the DSv2 writer (`df.write.format(PgWireSource)`,
   * see `PgWireWrite.scala`) — the one executor-side COPY path, with its
@@ -37,7 +39,10 @@ final case class PgConn(host: String, port: Int, user: String,
   * COPY, the `write.jdbc` contract (a task dying AFTER its COPY commits
   * but before reporting success is re-run); [[appendExactlyOnce]] names
   * a batch, which turns on the ledger-arbitrated commit that closes
-  * that window.
+  * that window. [[appendCollection]] lands a collection's target and
+  * audit rows as one write of two legs: one job, and one transaction
+  * per partition holding both tables' rows, so a failed partition lands
+  * neither.
   *
   * This sink only writes. Landed tables read back through the DSv2
   * scan, `spark.read.format("graft.sources.PgWireSource")`
@@ -86,6 +91,20 @@ final class PgWireSink(conn: PgConn) extends TableSink {
 
   override def append(df: DataFrame, tableName: String): Unit =
     writer(df, tableName).save()
+
+  /** One pass: the target leg streams while each partition holds its
+    * audit COPY text, then both COPY in one transaction; nothing is
+    * persisted. With a `batchId` the partition claims a ledger slot per
+    * table in that transaction.
+    */
+  override def appendCollection(rows: DataFrame, targetTable: Option[String],
+      auditTable: String, batchId: Option[String]): Unit = {
+    val legs = targetTable.map(t => PgLeg(t,
+      Landing.targetColumns(rows).map(c => c -> c), Some(Landing.HasTarget))).toSeq :+
+      PgLeg(auditTable, Landing.auditColumns(rows))
+    val w = writer(rows, legs.head.table).option("legs", PgLeg.encode(legs))
+    batchId.fold(w)(w.option("batchId", _)).save()
+  }
 
   /** Drop ledger entries older than `olderThanDays` — the retention
     * companion to [[appendExactlyOnce]] (the ledger otherwise grows by

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *    DataFrame per collection (`Transform.transformCollection`), written
   *    through a [[TableSink]] as partition-parallel batched appends;
   *  - stage 6's report comes from metrics observed on each collection's
-  *    audit append (one `Observation` per collection: document, error
+  *    landing frame (one `Observation` per collection: document, error
   *    and insert-failure counts, and which mapped columns any document
   *    misses), so the audit rows are written once and never re-read
   *    (SURVEY §7.4.6).
@@ -65,10 +65,12 @@ object Pipeline {
   /** Runs the pipeline over `input`, one raw-document frame (column
     * `raw`) per collection. The frames are taken as they arrive: those
     * of [[Ingestion]] are already split for the session's cores, and
-    * the run plans no repartition. Each collection's target append
-    * parses, caches and writes in one stage, and its audit append reads
-    * that cache; the MISSING audit rows of schema tables absent from the
-    * input ride along with the first mapped collection's audit append.
+    * the run plans no repartition. Each collection lands through one
+    * [[TableSink.appendCollection]]; the MISSING audit rows of schema
+    * tables absent from the input ride in the first mapped collection's
+    * frame. With a `runKey`, collection `c` lands as batch `runKey/c`:
+    * a re-run of the same input appends no target or audit row twice on
+    * a sink with a ledger.
     */
   def run(
       spark: SparkSession,
@@ -77,8 +79,8 @@ object Pipeline {
       mapping: MappingConfig,
       sink: TableSink,
       clock: Column = null,
-      ingestionDate: String = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toString)
-      : PipelineResult = {
+      ingestionDate: String = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toString,
+      runKey: Option[String] = None): PipelineResult = {
     val runClock = Option(clock).getOrElse(pinnedClock())
 
     EtlConfig.validateMappingTypes(mapping, app.runtime.typeMappings)
@@ -121,22 +123,24 @@ object Pipeline {
     var missingByObject = Map.empty[String, Set[String]]
 
     // MISSING rows for schema tables absent from the input
-    // (pipeline.py:103-126): appended with the first mapped collection's
-    // audit rows, or alone when no mapped collection is in the input
+    // (pipeline.py:103-126): audit-only rows landed with the first mapped
+    // collection's, or alone when no mapped collection is in the input
     var pendingMissing = Option.empty[DataFrame]
+    def auditCol(key: String) = Landing.auditColumn(ac(key))
     if (missingInputTables.nonEmpty) {
       import spark.implicits._
       val rows = missingInputTables.toSeq.sorted.map { t =>
         (tableToCollection.get(t).orNull, tableLookup.getOrElse(t, t))
       }
       val missingDf = rows.toDF("__coll", "__obj").select(
-        runClock.as(ac("ingested_at")),
-        lit(null).cast("string").as(ac("object_id")),
-        col("__coll").as(ac("source_collection")),
-        col("__obj").as(ac("object_name")),
-        lit(audit.objectStatusValues("missing")).as(ac("object_status")),
-        lit(null).cast("array<string>").as(ac("missing_columns")),
-        lit(audit.statusValues("missing")).as(ac("processing_status")))
+        runClock.as(auditCol("ingested_at")),
+        lit(null).cast("string").as(auditCol("object_id")),
+        col("__coll").as(auditCol("source_collection")),
+        col("__obj").as(auditCol("object_name")),
+        lit(audit.objectStatusValues("missing")).as(auditCol("object_status")),
+        lit(null).cast("array<string>").as(auditCol("missing_columns")),
+        lit(audit.statusValues("missing")).as(auditCol("processing_status")),
+        lit(false).as(Landing.HasTarget))
       pendingMissing = Some(missingDf)
       objectStatuses ++= rows.map { case (_, obj) =>
         obj -> audit.objectStatusValues("missing")
@@ -174,34 +178,30 @@ object Pipeline {
             rawDf, "raw", collectionName, cc,
             app.runtime, audit, objectStatus = objectStatus, clock = runClock)
 
-          val auditRows =
-            if (tableExists) tc.audit
-            else
-              // rows can't land → processing_status=missing (pipeline.py:250-252)
-              tc.audit.withColumn(
-                ac("processing_status"), lit(audit.statusValues("missing")))
+          val rows =
+            if (tableExists) tc.rows
+            else // rows can't land → processing_status=missing (pipeline.py:250-252)
+              tc.rows.withColumn(auditCol("processing_status"), lit(audit.statusValues("missing")))
 
-          // The report's inputs, observed on the audit append itself
-          // (below the union with any MISSING rows, so they count only
-          // this collection's rows): bounded by the mapping's size,
-          // whatever the document count.
-          val status = col(ac("processing_status"))
+          // The report's inputs, observed below the union with any MISSING
+          // rows (so they count only this collection's): bounded by the
+          // mapping's size, whatever the document count.
+          val status = col(auditCol("processing_status"))
           val mappedColumns = cc.mappings.values.map(_.column).toSeq.distinct
           val obs = Observation()
-          val observed = auditRows.observe(obs,
+          val observed = rows.observe(obs,
             count(lit(1)).as("docs"),
             count(when(status === audit.statusValues("error"), 1)).as("errors") +:
               count(when(status === audit.statusValues("missing"), 1))
                 .as("insert_failures") +:
               mappedColumns.indices.map(i => coalesce(
-                max(array_contains(col(ac("missing_columns")), mappedColumns(i))),
+                max(array_contains(col(auditCol("missing_columns")), mappedColumns(i))),
                 lit(false)).as(s"missing_$i")): _*)
-          val auditAppend = pendingMissing.fold(observed)(observed.unionByName(_))
+          sink.appendCollection(
+            pendingMissing.fold(observed)(observed.unionByName(_, allowMissingColumns = true)),
+            Option.when(tableExists)(cc.targetTable), audit.auditTable,
+            runKey.map(k => s"$k/$collectionName"))
           pendingMissing = None
-          tc.withSharedCached {
-            if (tableExists) sink.append(tc.target, cc.targetTable)
-            sink.append(auditAppend, audit.auditTable)
-          }
           val m = obs.get
           val docs = m("docs").asInstanceOf[Long]
           val insertFailures = m("insert_failures").asInstanceOf[Long]
@@ -215,7 +215,7 @@ object Pipeline {
       }
     }
 
-    pendingMissing.foreach(sink.append(_, audit.auditTable))
+    pendingMissing.foreach(sink.appendCollection(_, None, audit.auditTable, runKey.map(_ + "/")))
 
     // --- K5 report tables (ui/run_pipeline.py:395-433) --------------------
     if (objectStatuses.nonEmpty) {

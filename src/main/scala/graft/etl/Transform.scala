@@ -48,13 +48,16 @@ import graft.functions.{MultiFormatTimestamp, VariantTypeTag}
   */
 object Transform {
 
-  /** Target rows + audit rows for one collection, both derived from the
+  /** Target rows + audit rows for one collection, all derived from the
     * single-pass `shared` projection (scan + parse_json + all casts).
-    * Callers writing both run the writes inside [[withSharedCached]], or
-    * the dominant scan+parse cost runs once per consumer.
+    * `rows` is both in one [[Landing]] frame, which a sink lands with
+    * [[TableSink.appendCollection]] (`Pipeline.run` and `StreamingEtl`
+    * do); callers writing `target` and `audit` separately run the
+    * writes inside [[withSharedCached]], or the dominant scan+parse cost
+    * runs once per consumer.
     */
   final case class TransformedCollection(
-      target: DataFrame, audit: DataFrame, shared: DataFrame) {
+      target: DataFrame, audit: DataFrame, shared: DataFrame, rows: DataFrame) {
 
     /** Runs `body` with `shared` persisted, so every action in it reads
       * one materialization of the projection (Spark's CacheManager
@@ -397,25 +400,30 @@ object Transform {
     val (base, attrs) = baseProjection(raw, rawCol, cm, runtime, audit)
 
     val bc = audit.businessColumns
-    val target = base.select(
-      attrs.map(a => col(a.targetColumn)) ++
-        Seq(
-          col("__raw").as(cm.rawJsonColumn), // T7: original document verbatim
-          clock.as(bc("ingested_at")),
-          lit(collectionName).as(bc("source_collection")),
-          col("__status").as(bc("status"))): _*)
+    val targetCols = attrs.map(a => col(a.targetColumn)) ++
+      Seq(
+        col("__raw").as(cm.rawJsonColumn), // T7: original document verbatim
+        clock.as(bc("ingested_at")),
+        lit(collectionName).as(bc("source_collection")),
+        col("__status").as(bc("status")))
 
     val ac = audit.auditColumns
-    val auditDf = base.select(
-      clock.as(ac("ingested_at")),
-      col("__object_id").as(ac("object_id")),
-      lit(collectionName).as(ac("source_collection")),
-      lit(cm.targetTable).as(ac("object_name")),
-      lit(objectStatus).as(ac("object_status")),
-      col("__missing_columns").as(ac("missing_columns")),
-      col("__status").as(ac("processing_status")))
+    val auditCols = Seq(
+      ac("ingested_at") -> clock,
+      ac("object_id") -> col("__object_id"),
+      ac("source_collection") -> lit(collectionName),
+      ac("object_name") -> lit(cm.targetTable),
+      ac("object_status") -> lit(objectStatus),
+      ac("missing_columns") -> col("__missing_columns"),
+      ac("processing_status") -> col("__status"))
 
-    TransformedCollection(target, auditDf, base)
+    TransformedCollection(
+      base.select(targetCols: _*),
+      base.select(auditCols.map { case (name, c) => c.as(name) }: _*),
+      base,
+      base.select(targetCols ++
+        auditCols.map { case (name, c) => c.as(Landing.auditColumn(name)) } :+
+        lit(true).as(Landing.HasTarget): _*))
   }
 
   /** Diagnostic variant used by the oracle query: target columns plus

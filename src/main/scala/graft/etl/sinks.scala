@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The sink plane (K1–K5). The pipeline writes through this interface so
   * tests run against Parquet while production targets Postgres over the
@@ -16,10 +17,57 @@ trait TableSink {
   def tableExists(tableName: String): Boolean
   def createSchema(schemaName: String): Unit
   def createTable(tableName: String, columns: Seq[ColumnDef]): Unit
-  /** Writes every row of `df` before returning. `Pipeline.run` reads its
-    * run report from metrics observed on the audit frame it passes here.
-    */
+  /** Writes every row of `df` before returning. */
   def append(df: DataFrame, tableName: String): Unit
+
+  /** Lands one collection's [[Landing]] frame: each row's target
+    * columns in `targetTable` (None: the rows have no table to land in)
+    * unless the row is flagged audit-only, and its audit columns in
+    * `auditTable`. `batchId` names the write for a sink that keeps an
+    * exactly-once ledger; other sinks ignore it.
+    *
+    * This default persists `rows` and appends the target and audit
+    * projections of that one copy, so the transform runs once;
+    * `Pipeline.run` reads its report from metrics observed in `rows`.
+    * [[PgWireSink]] overrides it with one write that lands both tables
+    * in one transaction per partition and persists nothing.
+    */
+  def appendCollection(rows: DataFrame, targetTable: Option[String],
+      auditTable: String, batchId: Option[String] = None): Unit = {
+    rows.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      targetTable.foreach(append(Landing.target(rows), _))
+      append(Landing.audit(rows), auditTable)
+    } finally rows.unpersist()
+  }
+}
+
+/** The frame [[TableSink.appendCollection]] takes: a document's target
+  * columns under their own names, its audit columns under
+  * [[Landing.auditColumn]] names (the two tables share names such as
+  * `ingested_at`), and the boolean [[Landing.HasTarget]], false on an
+  * audit-only row (the MISSING row of a table absent from the input).
+  */
+object Landing {
+  val HasTarget = "__graft_has_target"
+  private val AuditPrefix = "__graft_audit_"
+
+  def auditColumn(name: String): String = AuditPrefix + name
+
+  def targetColumns(rows: DataFrame): Seq[String] =
+    rows.columns.toSeq.filterNot(c => c == HasTarget || c.startsWith(AuditPrefix))
+
+  /** (column in `rows`, column in the audit table) pairs. */
+  def auditColumns(rows: DataFrame): Seq[(String, String)] =
+    rows.columns.toSeq.collect {
+      case c if c.startsWith(AuditPrefix) => c -> c.stripPrefix(AuditPrefix)
+    }
+
+  def target(rows: DataFrame): DataFrame =
+    rows.filter(col(HasTarget)).select(targetColumns(rows).map(col): _*)
+
+  def audit(rows: DataFrame): DataFrame =
+    rows.select(auditColumns(rows).map { case (c, name) => col(c).as(name) }: _*)
 }
 
 /** Test/local sink: one parquet directory per table under `baseDir`

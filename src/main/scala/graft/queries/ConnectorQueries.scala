@@ -492,7 +492,8 @@ object ConnectorQueries {
     //   fixture docs → transformCollection (T1–T11) →
     //   K2 DDL through the real Postgres grammar →
     //   BOTH output planes COPY'd in partition-parallel over the
-    //   wire-protocol client (PgWireSink, no JDBC driver) →
+    //   wire-protocol client (PgWireSink.appendCollection: one write,
+    //   one transaction per partition, no JDBC driver) →
     //   read back through PgWireSource (target range-sliced on
     //   order_id over 4 COPY TO STDOUT scans), joined with the audit
     //   plane in Spark →
@@ -530,10 +531,7 @@ object ConnectorQueries {
           EtlQueries.rawOrdersDocs(s, dir), "raw", "orders", cm,
           EtlDefaults.runtime, audit,
           clock = to_timestamp(lit("2024-01-01 00:00:00")))
-        tc.withSharedCached {
-          sink.append(tc.target, cm.targetTable)
-          sink.append(tc.audit, audit.auditTable)
-        }
+        sink.appendCollection(tc.rows, Some(cm.targetTable), audit.auditTable)
 
         roundTripReadBack(s, sink, h, cm.targetTable, audit.auditTable)
       },

@@ -108,6 +108,15 @@ final class PgWireClient private (socket: Socket, in: DataInputStream,
       if (buf.size >= CopyChunk) flushChunk()
     }
 
+    /** Queue bytes already in COPY text form: whole lines with their
+      * newlines, taken over all calls ([[CopyBuffer]] replays a held
+      * leg through this). [[finish]] does not count them.
+      */
+    def sendEncoded(b: Array[Byte], off: Int, len: Int): Unit = {
+      buf.write(b, off, len)
+      if (buf.size >= CopyChunk) flushChunk()
+    }
+
     /** CopyDone + wait for CommandComplete/ReadyForQuery; returns the
       * number of lines sent. A server rejection (constraint violation,
       * bad input text) surfaces here.

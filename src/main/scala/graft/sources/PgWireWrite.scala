@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.write._
@@ -15,18 +17,27 @@ import graft.etl.{PgConn, SchemaManager, SchemaScript}
   * df.write.format("graft.sources.PgWireSource")
   *   .option("port", p).option("table", "graft_t.out")
   *   .option("batchId", runKey)        // optional: cross-job dedup key
+  *   .option("legs", PgLeg.encode(ls)) // optional: several tables
   *   .mode("append").save()
   * }}}
   *
-  * Batch append is the one write: streaming reaches Postgres through
-  * `foreachBatch` with the epoch id as `batchId`. Every non-empty
-  * partition runs BEGIN, COPY, COMMIT on its own connection, so a task
-  * that dies mid-COPY drops its connection and the server rolls the
-  * partial COPY back — without a `batchId` that is the whole protocol,
-  * the `write.jdbc` contract.
+  * A write lands its rows in one or more tables, its legs ([[PgLeg]]):
+  * each leg takes some of the row's columns under its own names, and
+  * may take only the rows a boolean column flags. Without `legs` there
+  * is one leg, `table` with every column. Batch append is the one
+  * write: streaming reaches Postgres through `foreachBatch` with the
+  * epoch id as `batchId`.
   *
-  * A write that names a `batchId` also claims its ledger slot —
-  * `INSERT INTO graft_meta.copy_ledger(batch_id, table_name,
+  * Every non-empty partition lands all its legs in ONE transaction on
+  * its own connection: BEGIN; COPY the first leg as rows stream in,
+  * while every later leg's COPY text goes to a [[CopyBuffer]]; COPY
+  * each buffered leg; COMMIT. A task that dies anywhere in that drops
+  * its connection and the server rolls every leg back together —
+  * without a `batchId` that is the whole protocol, the `write.jdbc`
+  * contract.
+  *
+  * A write that names a `batchId` also claims one ledger slot per leg
+  * — `INSERT INTO graft_meta.copy_ledger(batch_id, table_name,
   * partition_id)`, the table's primary key — inside the same
   * transaction, before any data streams. Spark's commit coordinator
   * (`useCommitCoordinator = true`) authorizes exactly one task attempt
@@ -40,9 +51,9 @@ import graft.etl.{PgConn, SchemaManager, SchemaScript}
   * Values ride as COPY text rendered from the typed InternalRow
   * (timestamps as ISO-8601 UTC instants, decimals as plain strings,
   * bytea as `\x` hex, arrays as JSON text into JSONB targets — the same
-  * convention as the parquet sink); rendering is validated against the
-  * input schema at build() time so unsupported nesting fails at plan
-  * time, not mid-COPY.
+  * convention as the parquet sink); rendering and the legs are
+  * validated against the input schema at build() time so unsupported
+  * nesting or an unknown column fails at plan time, not mid-COPY.
   */
 final class PgWriteBuilder(conn: PgConn, table: String,
     info: LogicalWriteInfo) extends WriteBuilder {
@@ -51,17 +62,69 @@ final class PgWriteBuilder(conn: PgConn, table: String,
     val schema = info.schema()
     // Fail at plan time if any column cannot be rendered as COPY text.
     PgRowText.validate(schema)
-    new PgWrite(conn, table, schema, Option(info.options().get("batchId")))
+    val legs = Option(info.options().get("legs")).fold(
+      Seq(PgLeg(table, schema.fieldNames.toSeq.map(c => c -> c))))(PgLeg.decode)
+    new PgWrite(conn, schema, legs.map(_.resolve(schema)),
+      Option(info.options().get("batchId")))
   }
 }
 
-final class PgWrite(conn: PgConn, table: String, schema: StructType,
-    batchId: Option[String]) extends Write with BatchWrite {
+/** One table of a write: `columns` pairs each input column the leg
+  * takes with the table column it lands in; with `when`, the leg takes
+  * only the rows whose boolean column `when` is true.
+  */
+final case class PgLeg(table: String, columns: Seq[(String, String)],
+    when: Option[String] = None) {
+
+  private[sources] def resolve(schema: StructType): PgLeg.Resolved = {
+    when.foreach(w => require(schema(w).dataType == BooleanType,
+      s"leg '$table': column '$w' must be boolean"))
+    PgLeg.Resolved(table, columns.map(c => schema.fieldIndex(c._1)).toArray,
+      columns.map(_._2), when.fold(-1)(schema.fieldIndex))
+  }
+}
+
+object PgLeg {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A leg by input position; `when` is -1 for a leg that takes every row. */
+  private[sources] final case class Resolved(table: String,
+      positions: Array[Int], columns: Seq[String], when: Int) {
+    def takes(row: InternalRow): Boolean = when < 0 || row.getBoolean(when)
+  }
+
+  /** The `legs` write option's value. */
+  def encode(legs: Seq[PgLeg]): String = {
+    val arr = mapper.createArrayNode()
+    legs.foreach { l =>
+      val o = arr.addObject().put("table", l.table)
+      l.when.foreach(o.put("when", _))
+      val cs = o.putArray("columns")
+      l.columns.foreach { case (from, to) => cs.addArray().add(from).add(to) }
+    }
+    mapper.writeValueAsString(arr)
+  }
+
+  def decode(json: String): Seq[PgLeg] = {
+    val legs = mapper.readTree(json).asScala.map { o =>
+      PgLeg(o.get("table").asText,
+        o.get("columns").asScala.map(c => c.get(0).asText -> c.get(1).asText).toSeq,
+        Option(o.get("when")).map(_.asText))
+    }.toSeq
+    require(legs.nonEmpty, "option 'legs' names no table")
+    legs
+  }
+}
+
+final class PgWrite(conn: PgConn, schema: StructType,
+    legs: Seq[PgLeg.Resolved], batchId: Option[String])
+    extends Write with BatchWrite {
 
   override def toBatch: BatchWrite = this
 
   override def description(): String =
-    s"GraftPgWrite[$table]" + batchId.fold("")(b => s" batchId=$b")
+    legs.map(_.table).mkString("GraftPgWrite[", ", ", "]") +
+      batchId.fold("")(b => s" batchId=$b")
 
   /** One attempt per partition gets the coordinator's commit grant;
     * the ledger then arbitrates what the coordinator cannot observe.
@@ -71,7 +134,7 @@ final class PgWrite(conn: PgConn, table: String, schema: StructType,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
     if (batchId.isDefined) PgDataWriter.ensureLedger(conn)
-    PgDataWriterFactory(conn, table, schema, batchId)
+    PgDataWriterFactory(conn, schema, legs, batchId)
   }
 
   /** Each partition's transaction already committed (or no-opped) in
@@ -92,60 +155,70 @@ final class PgWrite(conn: PgConn, table: String, schema: StructType,
 final case class PgCommitMessage(partitionId: Int, rows: Long,
     deduped: Boolean) extends WriterCommitMessage
 
-final case class PgDataWriterFactory(conn: PgConn,
-    table: String, schema: StructType, batchId: Option[String])
+final case class PgDataWriterFactory(conn: PgConn, schema: StructType,
+    legs: Seq[PgLeg.Resolved], batchId: Option[String])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new PgDataWriter(conn, table, schema, batchId, partitionId)
+    new PgDataWriter(conn, schema, legs, batchId, partitionId)
 }
 
-final class PgDataWriter(conn: PgConn, table: String,
-    schema: StructType, batchId: Option[String],
+final class PgDataWriter(conn: PgConn, schema: StructType,
+    legs: Seq[PgLeg.Resolved], batchId: Option[String],
     partitionId: Int) extends DataWriter[InternalRow] {
 
   private val render = PgRowText.converters(schema)
-  private val copySql = PgDataWriter.copySql(table, schema.fieldNames.toSeq)
-  /** This partition's ledger key, when the write names a batch. */
-  private val slot = batchId.map(PgDataWriter.slot(_, table, partitionId))
+  private val ls = legs.toArray
+  private val copySqls = legs.map(l => PgDataWriter.copySql(l.table, l.columns))
+  /** This partition's ledger key per leg, when the write names a batch. */
+  private val slots =
+    batchId.toSeq.flatMap(b => legs.map(l => PgDataWriter.slot(b, l.table, partitionId)))
 
   private var client: PgWireClient = null
+  /** The first leg's COPY, fed as rows arrive. */
   private var stream: PgWireClient#CopyInStream = null
+  /** Every later leg's COPY text, held until the stream finishes. */
+  private val held = Array.fill(ls.length - 1)(new CopyBuffer)
   private var duplicate = false
   private var started = false
 
   /** Lazy on the first row (an empty partition never connects): BEGIN,
-    * claim the ledger slot if there is one, then open the COPY stream.
-    * A lost claim (23505) means another attempt of this slot already
-    * committed — swallow rows and no-op.
+    * claim the ledger slots if there are any, then open the first leg's
+    * COPY stream. A lost claim (23505) means another attempt of this
+    * partition already committed — swallow rows and no-op.
     */
   private def begin(): Unit = {
     started = true
     client = conn.open()
-    slot match {
-      case Some(s) =>
-        try {
-          val _ = client.query(s"BEGIN; INSERT INTO ${PgDataWriter.Ledger} " +
-            s"${PgDataWriter.SlotColumns} VALUES $s")
-        } catch {
-          case e: PgWireClient.PgServerException if e.sqlState == "23505" =>
-            val _ = client.query("ROLLBACK")
-            duplicate = true
-        }
-      case None =>
-        val _ = client.query("BEGIN")
-    }
-    if (!duplicate) stream = client.copyInBegin(copySql)
+    if (slots.isEmpty) { val _ = client.query("BEGIN") }
+    else
+      try {
+        val _ = client.query(s"BEGIN; INSERT INTO ${PgDataWriter.Ledger} " +
+          s"${PgDataWriter.SlotColumns} VALUES ${slots.mkString(", ")}")
+      } catch {
+        case e: PgWireClient.PgServerException if e.sqlState == "23505" =>
+          val _ = client.query("ROLLBACK")
+          duplicate = true
+      }
+    if (!duplicate) stream = client.copyInBegin(copySqls.head)
+  }
+
+  private def line(row: InternalRow, leg: PgLeg.Resolved): String = {
+    val vs = new Array[String](leg.positions.length)
+    var i = 0
+    while (i < vs.length) { vs(i) = render(leg.positions(i))(row); i += 1 }
+    PgWireClient.encodeCopyRow(scala.collection.immutable.ArraySeq.unsafeWrapArray(vs))
   }
 
   override def write(row: InternalRow): Unit = {
     if (!started) begin()
     if (!duplicate) {
-      val vs = new Array[String](render.length)
-      var i = 0
-      while (i < render.length) { vs(i) = render(i)(row); i += 1 }
-      stream.send(PgWireClient.encodeCopyRow(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(vs)))
+      if (ls(0).takes(row)) stream.send(line(row, ls(0)))
+      var i = 1
+      while (i < ls.length) {
+        if (ls(i).takes(row)) held(i - 1).add(line(row, ls(i)))
+        i += 1
+      }
     }
   }
 
@@ -154,23 +227,83 @@ final class PgDataWriter(conn: PgConn, table: String,
     try {
       if (duplicate) PgCommitMessage(partitionId, 0L, deduped = true)
       else {
-        val n = stream.finish()
-        val _ = client.query(slot.fold("")(s =>
+        val counts = stream.finish() +: copySqls.tail.zip(held.toSeq).map {
+          case (sql, buffer) =>
+            val s = client.copyInBegin(sql)
+            buffer.replay(s)
+            val _ = s.finish()
+            buffer.rows
+        }
+        val _ = client.query(slots.zip(counts).map { case (s, n) =>
           s"UPDATE ${PgDataWriter.Ledger} SET n_rows = $n " +
-            s"WHERE ${PgDataWriter.SlotColumns} = $s; ") + "COMMIT")
-        PgCommitMessage(partitionId, n, deduped = false)
+            s"WHERE ${PgDataWriter.SlotColumns} = $s; "
+        }.mkString + "COMMIT")
+        PgCommitMessage(partitionId, counts.sum, deduped = false)
       }
-    } finally { client.close(); client = null }
+    } finally close()
   }
 
   /** Dropping the connection mid-transaction makes the server abort it:
-    * the partial COPY and the ledger claim vanish together, so the
-    * retry's claim succeeds and streams from scratch.
+    * every leg's rows and the ledger claims vanish together, so the
+    * retry's claims succeed and it streams from scratch.
     */
   override def abort(): Unit = close()
 
-  override def close(): Unit =
+  override def close(): Unit = {
+    held.foreach(_.close())
     if (client != null) { client.close(); client = null }
+  }
+}
+
+/** One held leg's COPY text: in memory up to [[CopyBuffer.MemoryBytes]],
+  * then in a temp file under the executor's local dirs
+  * (`spark.local.dir`), deleted by [[close]] when the task ends.
+  */
+private[sources] final class CopyBuffer {
+  private var memory = new java.io.ByteArrayOutputStream()
+  private var out: java.io.OutputStream = memory
+  private var file: java.io.File = null
+  private var n = 0L
+
+  def rows: Long = n
+
+  def add(line: String): Unit = {
+    out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.write('\n')
+    n += 1
+    if (file == null && memory.size >= CopyBuffer.MemoryBytes) {
+      file = org.apache.spark.SparkEnv.get.blockManager.diskBlockManager
+        .createTempLocalBlock()._2
+      out = new java.io.BufferedOutputStream(
+        new java.io.FileOutputStream(file), CopyBuffer.Chunk)
+      memory.writeTo(out)
+      memory = null
+    }
+  }
+
+  /** Sends every held line into `stream`. */
+  def replay(stream: PgWireClient#CopyInStream): Unit =
+    if (file == null) stream.sendEncoded(memory.toByteArray, 0, memory.size)
+    else {
+      out.close()
+      val in = new java.io.FileInputStream(file)
+      try {
+        val chunk = new Array[Byte](CopyBuffer.Chunk)
+        var read = in.read(chunk)
+        while (read >= 0) { stream.sendEncoded(chunk, 0, read); read = in.read(chunk) }
+      } finally in.close()
+    }
+
+  def close(): Unit = {
+    out.close()
+    if (file != null) { val _ = file.delete() }
+  }
+}
+
+private[sources] object CopyBuffer {
+  /** Held bytes a task keeps in memory before it spills to disk. */
+  val MemoryBytes: Int = 4 << 20
+  private val Chunk = 64 * 1024
 }
 
 /** InternalRow → COPY text rendering, one converter per column, chosen

@@ -457,7 +457,9 @@ final class RangeMicroBatchStream(
     val s = start.asInstanceOf[RangeStreamOffset].next
     limit match {
       case r: ReadMaxRows =>
-        RangeStreamOffset(math.min(hi, s + r.maxRows()))
+        // saturate: s + maxRows wraps when s is near Long.MaxValue
+        val end = s + r.maxRows()
+        RangeStreamOffset(if (end < s) hi else math.min(hi, end))
       case _ => RangeStreamOffset(hi)
     }
   }

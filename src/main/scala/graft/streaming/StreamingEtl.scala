@@ -9,8 +9,8 @@ import graft.etl.{AuditSettings, CollectionMapping, RuntimeConfig, TableSink, Tr
 /** Structured Streaming extension of the batch ETL (SURVEY §2.9 marks
   * streaming out of reference parity; this is the §7.8 design: staged
   * JSONL in → the SAME transform plane → `foreachBatch` through the same
-  * [[TableSink]], so batch and stream share one code path and one sink
-  * contract).
+  * [[TableSink.appendCollection]] `Pipeline.run` lands with, so batch
+  * and stream share one code path and one sink contract).
   */
 object StreamingEtl {
 
@@ -40,10 +40,7 @@ object StreamingEtl {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val tc = Transform.transformCollection(
           batch, "raw", collectionName, cm, runtime, audit, objectStatus, clock)
-        tc.withSharedCached {
-          sink.append(tc.target, cm.targetTable)
-          sink.append(tc.audit, audit.auditTable)
-        }
+        sink.appendCollection(tc.rows, Some(cm.targetTable), audit.auditTable)
       }
       .start()
 

@@ -479,4 +479,118 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     assert(ReportReference.report(landed("doc_audit.missing_attributes_report")) ==
       ReportReference.missingAttributes(audit))
   }
+
+  /** The one-pass landing fixture: collections `customers` and `orders`
+    * of 20 documents each, in four partitions of five, mapped into
+    * schema `ns`; `ns.ghost` is declared in schema.sql and absent from
+    * the input (one MISSING audit row); audit tables under `ns_audit`.
+    * Both schemas are dropped first.
+    */
+  private final class LandingFixture(ns: String) {
+    import java.nio.file.Files
+    import scala.collection.immutable.ListMap
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.etl._
+
+    val sink = new PgWireSink(conn)
+    sink.execute(s"DROP SCHEMA IF EXISTS $ns CASCADE; DROP SCHEMA IF EXISTS ${ns}_audit CASCADE")
+    val audit = EtlDefaults.audit.copy(
+      auditSchema = s"${ns}_audit", auditTable = s"${ns}_audit.ingestion_audit")
+    private val schemaSql = Files.createTempFile("graft-landing-schema", ".sql")
+    Files.writeString(schemaSql, s"CREATE TABLE IF NOT EXISTS $ns.ghost (x TEXT);\n")
+    private val app = EtlDefaults.appConfig.copy(audit = audit,
+      runtime = EtlDefaults.runtime.copy(schemaPath = schemaSql.toString))
+    private val mapping = MappingConfig(ListMap(
+      "customers" -> CollectionMapping(s"$ns.customers", "raw_json", "customer_id", ListMap(
+        "customer_id" -> AttributeMapping("customer_id", "integer"),
+        "name" -> AttributeMapping("name", "text"))),
+      "orders" -> CollectionMapping(s"$ns.orders", "raw_json", "order_id", ListMap(
+        "order_id" -> AttributeMapping("order_id", "integer"),
+        "amount" -> AttributeMapping("amount", "numeric")))))
+
+    def input(): ListMap[String, DataFrame] = {
+      import spark.implicits._
+      def docs(json: Seq[String]) = spark.sparkContext.parallelize(json, 4).toDF("raw")
+      ListMap(
+        "customers" -> docs((1 to 20).map(i => s"""{"customer_id": $i, "name": "c$i"}""")),
+        "orders" -> docs((101 to 120).map(i => s"""{"order_id": $i, "amount": ${i % 7}}""")))
+    }
+
+    def run(in: ListMap[String, DataFrame] = input(),
+        runKey: Option[String] = None): Pipeline.PipelineResult =
+      Pipeline.run(spark, in, app, mapping, sink,
+        clock = lit("2026-02-03 04:05:06").cast("timestamp"),
+        ingestionDate = "2026-02-03", runKey = runKey)
+
+    /** One statement, so one snapshot: each value is a `count(*)`. */
+    def counts(queries: String*): Seq[Long] = {
+      val c = conn.open()
+      try c.query(queries.map(q => s"(SELECT count(*) FROM $q)").mkString("SELECT ", ", ", ""))
+        .rows.head.map(_.toLong)
+      finally c.close()
+    }
+
+    def landed(): Seq[Long] =
+      counts(s"$ns.customers", s"$ns.orders", audit.auditTable)
+  }
+
+  test("live: Pipeline.run twice under one run key lands each target and audit row once") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    val f = new LandingFixture("graft_eo")
+    val key = s"run-${System.nanoTime}"
+    f.run(runKey = Some(key))
+    assert(f.landed() == Seq(20L, 20L, 41L))
+    f.run(runKey = Some(key))
+    assert(f.landed() == Seq(20L, 20L, 41L))
+    // a new key is a new batch
+    f.run(runKey = Some(s"$key-2"))
+    assert(f.landed() == Seq(40L, 40L, 82L))
+  }
+
+  test("live: a partition whose audit row the database rejects lands neither its target nor its audit rows") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    val f = new LandingFixture("graft_atomic")
+    f.sink.createSchema(f.audit.auditSchema)
+    f.sink.createTable(f.audit.auditTable, SchemaManager.buildAuditTableColumns(f.audit))
+    f.sink.execute(s"ALTER TABLE ${f.audit.auditTable} " +
+      "ADD CONSTRAINT no_seven CHECK (object_id <> '7')")
+    val err = intercept[Exception](f.run())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("no_seven")), err)
+    // customer 7's partition holds customers 6-10
+    val Seq(target, audited, seven) = f.counts("graft_atomic.customers",
+      s"${f.audit.auditTable} WHERE source_collection = 'customers'",
+      "graft_atomic.customers WHERE customer_id BETWEEN 6 AND 10")
+    assert(target == audited && seven == 0, (target, audited, seven))
+  }
+
+  test("live: Pipeline.run lands each mapped collection in one job and stores no RDD block") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+    val f = new LandingFixture("graft_receipt")
+    val input = f.input()
+    val jobs = new AtomicInteger
+    val blocks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isRDD && e.blockUpdatedInfo.storageLevel.isValid)
+          blocks.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val result =
+      try f.run(input)
+      finally { ListenerBusDrain.drain(sc); sc.removeSparkListener(listener) }
+    // one write job per mapped collection, plus the two report appends
+    assert(jobs.get == 2 + 2)
+    assert(blocks.get == 0)
+    assert(f.landed() == Seq(20L, 20L, 41L))
+    assert(graft.etl.ReportReference.observed(result) ==
+      Seq(("customers", 20L, 0L, 0L, 20L), ("orders", 20L, 0L, 0L, 20L)))
+  }
 }

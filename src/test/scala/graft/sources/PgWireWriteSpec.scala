@@ -239,6 +239,47 @@ class PgWireWriteSpec extends AnyFunSuite with SparkTestSession {
     finally c.close()
   }
 
+  test("live: a two-leg write lands each table's columns, takes flagged rows only, spills a large held leg and claims per leg") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    val sink = new PgWireSink(conn)
+    sink.createSchema("graft_w")
+    sink.execute(
+      """DROP TABLE IF EXISTS graft_w.leg_t; DROP TABLE IF EXISTS graft_w.leg_a;
+         CREATE TABLE graft_w.leg_t (id BIGINT NOT NULL, pad TEXT);
+         CREATE TABLE graft_w.leg_a (id BIGINT NOT NULL, note TEXT)""")
+    import org.apache.spark.sql.functions._
+    // each partition holds ~5 MB of audit-leg text: past the memory bound
+    val df = spark.range(0, 20000, 1, 2).select(
+      col("id"), lit("p").as("pad"), (col("id") % 3 =!= 0).as("keep"),
+      col("id").as("a_id"), repeat(lit("n"), 500).as("a_note"))
+    assert(10000L * 500 > CopyBuffer.MemoryBytes)
+    val legs = PgLeg.encode(Seq(
+      PgLeg("graft_w.leg_t", Seq("id" -> "id", "pad" -> "pad"), Some("keep")),
+      PgLeg("graft_w.leg_a", Seq("a_id" -> "id", "a_note" -> "note"))))
+    def land(): Unit = writer(df).option("table", "graft_w.leg_t")
+      .option("legs", legs).option("batchId", "w-legs").mode("append").save()
+    land()
+    land() // the same batch again: every slot of both legs is claimed
+    val c = conn.open()
+    try {
+      assert(c.query("SELECT count(*), sum(id) FROM graft_w.leg_t WHERE pad = 'p'")
+        .rows.head == Seq("13333", (0L until 20000L).filter(_ % 3 != 0).sum.toString))
+      assert(c.query("SELECT count(*), sum(id), min(length(note)) FROM graft_w.leg_a")
+        .rows.head == Seq("20000", (0L until 20000L).sum.toString, "500"))
+      assert(c.query(
+        """SELECT table_name, count(*), sum(n_rows) FROM graft_meta.copy_ledger
+           WHERE batch_id = 'w-legs' GROUP BY table_name ORDER BY table_name""").rows ==
+        Seq(Seq("graft_w.leg_a", "2", "20000"), Seq("graft_w.leg_t", "2", "13333")))
+    } finally c.close()
+
+    // a leg naming a column the frame lacks fails at plan time
+    val err = intercept[Exception] {
+      writer(df).option("table", "graft_w.leg_t").option("legs",
+        PgLeg.encode(Seq(PgLeg("graft_w.leg_t", Seq("nope" -> "id"))))).mode("append").save()
+    }
+    assert(err.getMessage.contains("nope"), err.getMessage)
+  }
+
   test("live: mode(overwrite) and writeStream into PgWireSource fail at analysis") {
     assume(LivePostgres.available, "postgres server binaries not installed")
     val sink = new PgWireSink(conn)

@@ -343,6 +343,25 @@ class RangeSourceSpec extends AnyFunSuite with SparkTestSession {
     assert(offsets.length >= 5, s"expected multi-batch drain: ${offsets.length}")
   }
 
+  test("a stream ending near Long.MaxValue delivers every id (the batch end saturates)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rs-max")
+    val out = dir.resolve("out").toString
+    val lo = Long.MaxValue - 10
+    val q = spark.readStream.format("graft.sources.RangeSource")
+      .option("start", lo).option("end", Long.MaxValue - 1).option("slices", 3)
+      .option("maxRowsPerBatch", 100L)
+      .load()
+      .writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .format("parquet")
+      .option("path", out).option("checkpointLocation", dir.resolve("cp").toString)
+      .start()
+    try assert(q.awaitTermination(60000), "the stream never reached the end of its interval")
+    finally q.stop()
+    val got = spark.read.parquet(out).select("id").collect().map(_.getLong(0)).sorted
+    assert(got.toSeq == (lo until Long.MaxValue - 1).toSeq)
+  }
+
   test("checkpoint restart extends the interval exactly-once") {
     val dir = java.nio.file.Files.createTempDirectory("graft-rs-restart")
     val out = dir.resolve("out").toString
