@@ -1,8 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
-import graft.sources.{PgDataWriter, PgLeg, PgWireClient, PgWireSource}
+import graft.sources.{PgDataWriter, PgLeg, PgWireClient, PgWireSource, PgWrite}
 
 /** Serializable connection descriptor for the wire-protocol plane —
   * shipped to executors, each of which opens its own connection (the
@@ -26,9 +27,11 @@ final case class PgConn(host: String, port: Int, user: String,
   * COPY-vs-INSERT is the 100 TB decision, not a convenience: COPY
   * bypasses per-statement parse/plan and is the documented PostgreSQL
   * bulk path, and partition-parallelism multiplies it by the cluster's
-  * cores. Each DDL call and probe (K2/K3: `tableExists`,
-  * `createSchema`, `createTable`, [[execute]]) opens its own short
-  * driver-side connection.
+  * cores. The catalog step of a run, [[prepare]], is one driver
+  * connection and at most two round trips: one `information_schema`
+  * probe, then only the DDL still needed. Each single DDL call and probe
+  * (K2/K3: `tableExists`, `createSchema`, `createTable`, [[execute]])
+  * opens its own short driver-side connection.
   *
   * The appends are the DSv2 writer (`df.write.format(PgWireSource)`,
   * see `PgWireWrite.scala`) — the one executor-side COPY path, with its
@@ -42,7 +45,10 @@ final case class PgConn(host: String, port: Int, user: String,
   * that window. [[appendCollection]] lands a collection's target and
   * audit rows as one write of two legs: one job, and one transaction
   * per partition holding both tables' rows, so a failed partition lands
-  * neither.
+  * neither. A frame whose optimized plan is a `LocalRelation` (the
+  * report tables: a few rows built on the driver) runs no job: the
+  * driver writes its rows with the same writer, as one partition over
+  * one connection in one transaction.
   *
   * This sink only writes. Landed tables read back through the DSv2
   * scan, `spark.read.format("graft.sources.PgWireSource")`
@@ -60,14 +66,19 @@ final class PgWireSink(conn: PgConn) extends TableSink {
   override def tableExists(tableName: String): Boolean =
     withClient(tableExistsOn(_, tableName))
 
-  private def tableExistsOn(c: PgWireClient, tableName: String): Boolean = {
-    val (schema, table) = SchemaScript.splitTableName(tableName)
-    c.query(
-      s"""SELECT 1 FROM information_schema.tables
-          WHERE table_schema = ${SchemaManager.quoteLiteral(schema)}
-            AND table_name = ${SchemaManager.quoteLiteral(table)}""")
-      .rows.nonEmpty
-  }
+  private def tableExistsOn(c: PgWireClient, tableName: String): Boolean =
+    existingOn(c, Seq(tableName)).nonEmpty
+
+  /** The (schema, table) pairs of `tables` that exist, in one query. */
+  private def existingOn(c: PgWireClient, tables: Seq[String]): Set[(String, String)] =
+    if (tables.isEmpty) Set.empty
+    else c.query(
+      s"""SELECT table_schema, table_name FROM information_schema.tables
+          WHERE (table_schema, table_name) IN (${tables.map { t =>
+            val (schema, table) = SchemaScript.splitTableName(t)
+            s"(${SchemaManager.quoteLiteral(schema)}, ${SchemaManager.quoteLiteral(table)})"
+          }.distinct.mkString(", ")})""")
+      .rows.map(r => (r(0), r(1))).toSet
 
   override def createSchema(schemaName: String): Unit =
     withClient { c =>
@@ -79,18 +90,58 @@ final class PgWireSink(conn: PgConn) extends TableSink {
       val _ = c.query(SchemaManager.createTableSql(tableName, columns))
     }
 
+  /** One connection: one probe of every named table, then one batch of
+    * the `CREATE SCHEMA`/`CREATE TABLE` statements still needed (none:
+    * no second round trip).
+    */
+  override def prepare(probe: Seq[String],
+      create: Seq[(String, Seq[ColumnDef])]): Set[String] =
+    withClient { c =>
+      val existing = existingOn(c, probe ++ create.map(_._1))
+      val ddl = create.filterNot(t => existing(SchemaScript.splitTableName(t._1)))
+        .flatMap { case (table, columns) =>
+          Seq(SchemaManager.createSchemaSql(SchemaScript.splitTableName(table)._1),
+            SchemaManager.createTableSql(table, columns))
+        }.distinct
+      if (ddl.nonEmpty) { val _ = c.query(ddl.mkString(";\n")) }
+      probe.filter(t => existing(SchemaScript.splitTableName(t))).toSet
+    }
+
   /** Convenience for gates/tests: run one simple statement driver-side. */
   def execute(sql: String): Unit = withClient { c => val _ = c.query(sql) }
 
-  private def writer(df: DataFrame, tableName: String): DataFrameWriter[Row] =
-    df.write.format(classOf[PgWireSource].getName)
-      .option("host", conn.host).option("port", conn.port.toLong)
-      .option("user", conn.user).option("database", conn.database)
-      .option("password", conn.password)
-      .option("table", tableName).mode("append")
+  /** Lands `df` in `legs`: from the driver when its optimized plan is a
+    * local relation, else as one DSv2 write job.
+    */
+  private def write(df: DataFrame, legs: Seq[PgLeg], batchId: Option[String]): Unit =
+    localRows(df) match {
+      case Some(l) => PgWrite(conn, l.schema, legs, batchId).writeLocal(l.data.iterator)
+      case None =>
+        val w = df.write.format(classOf[PgWireSource].getName)
+          .option("host", conn.host).option("port", conn.port.toLong)
+          .option("user", conn.user).option("database", conn.database)
+          .option("password", conn.password)
+          .option("table", legs.head.table).option("legs", PgLeg.encode(legs))
+          .mode("append")
+        batchId.fold(w)(w.option("batchId", _)).save()
+    }
+
+  /** `df`'s optimized plan when it is a local relation. Only a plan
+    * whose every leaf is local is optimized here, so a frame that reads
+    * a source pays no extra planning.
+    */
+  private def localRows(df: DataFrame): Option[LocalRelation] =
+    if (!df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if !l.isStreaming => Some(l)
+      case _ => None
+    }
+
+  private def everyColumn(df: DataFrame, tableName: String): Seq[PgLeg] =
+    Seq(PgLeg(tableName, df.columns.toSeq.map(c => c -> c)))
 
   override def append(df: DataFrame, tableName: String): Unit =
-    writer(df, tableName).save()
+    write(df, everyColumn(df, tableName), None)
 
   /** One pass: the target leg streams while each partition holds its
     * audit COPY text, then both COPY in one transaction; nothing is
@@ -98,13 +149,10 @@ final class PgWireSink(conn: PgConn) extends TableSink {
     * table in that transaction.
     */
   override def appendCollection(rows: DataFrame, targetTable: Option[String],
-      auditTable: String, batchId: Option[String]): Unit = {
-    val legs = targetTable.map(t => PgLeg(t,
+      auditTable: String, batchId: Option[String]): Unit =
+    write(rows, targetTable.map(t => PgLeg(t,
       Landing.targetColumns(rows).map(c => c -> c), Some(Landing.HasTarget))).toSeq :+
-      PgLeg(auditTable, Landing.auditColumns(rows))
-    val w = writer(rows, legs.head.table).option("legs", PgLeg.encode(legs))
-    batchId.fold(w)(w.option("batchId", _)).save()
-  }
+      PgLeg(auditTable, Landing.auditColumns(rows)), batchId)
 
   /** Drop ledger entries older than `olderThanDays` — the retention
     * companion to [[appendExactlyOnce]] (the ledger otherwise grows by
@@ -152,5 +200,5 @@ final class PgWireSink(conn: PgConn) extends TableSink {
     */
   def appendExactlyOnce(df: DataFrame, tableName: String,
       batchId: String): Unit =
-    writer(df, tableName).option("batchId", batchId).save()
+    write(df, everyColumn(df, tableName), Some(batchId))
 }

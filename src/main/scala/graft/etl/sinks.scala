@@ -12,6 +12,16 @@ import org.apache.spark.storage.StorageLevel
   * row-at-a-time INSERT + per-document COMMIT (`postgres_loader.py:63-77`,
   * `pipeline.py:265-266`) with partition-parallel batched appends
   * (SURVEY §7.4.1: the documented granularity change).
+  *
+  * Threads: `Pipeline.run` calls [[prepare]] once from the calling
+  * thread, then lands its collections concurrently, so
+  * [[appendCollection]] and [[append]] may run on several threads at
+  * once, into the same table (every collection appends audit rows, and
+  * two collections may map to one target). [[PgWireSink]] needs nothing
+  * for that: each partition of a write is its own transaction, and
+  * Postgres takes concurrent COPYs into one table. [[ParquetSink]] serialises appends
+  * into one table directory. A decorator that records calls must
+  * record them thread-safely.
   */
 trait TableSink {
   def tableExists(tableName: String): Boolean
@@ -20,26 +30,48 @@ trait TableSink {
   /** Writes every row of `df` before returning. */
   def append(df: DataFrame, tableName: String): Unit
 
+  /** The catalog step of a run: returns which `probe` tables existed
+    * before the call, then creates each `create` table that is missing,
+    * and its schema, in order. This default probes with [[tableExists]]
+    * and creates each schema once, before its first table, through
+    * [[createSchema]] and [[createTable]] (create-if-missing on every
+    * sink); [[PgWireSink]] does it all over one connection.
+    */
+  def prepare(probe: Seq[String], create: Seq[(String, Seq[ColumnDef])]): Set[String] = {
+    val existed = probe.filter(tableExists).toSet
+    create.foldLeft(Set.empty[String]) { case (schemas, (table, columns)) =>
+      val (schema, _) = SchemaScript.splitTableName(table)
+      if (!schemas(schema)) createSchema(schema)
+      createTable(table, columns)
+      schemas + schema
+    }
+    existed
+  }
+
   /** Lands one collection's [[Landing]] frame: each row's target
     * columns in `targetTable` (None: the rows have no table to land in)
     * unless the row is flagged audit-only, and its audit columns in
     * `auditTable`. `batchId` names the write for a sink that keeps an
     * exactly-once ledger; other sinks ignore it.
     *
-    * This default persists `rows` and appends the target and audit
-    * projections of that one copy, so the transform runs once;
-    * `Pipeline.run` reads its report from metrics observed in `rows`.
-    * [[PgWireSink]] overrides it with one write that lands both tables
-    * in one transaction per partition and persists nothing.
+    * With a target table this default persists `rows` and appends the
+    * target and audit projections of that one copy, so the transform
+    * runs once; without one it is one plain append. `Pipeline.run`
+    * reads its report from metrics observed in `rows`. [[PgWireSink]]
+    * overrides it with one write that lands both tables in one
+    * transaction per partition and persists nothing.
     */
   def appendCollection(rows: DataFrame, targetTable: Option[String],
-      auditTable: String, batchId: Option[String] = None): Unit = {
-    rows.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      targetTable.foreach(append(Landing.target(rows), _))
-      append(Landing.audit(rows), auditTable)
-    } finally rows.unpersist()
-  }
+      auditTable: String, batchId: Option[String] = None): Unit =
+    targetTable match {
+      case None => append(Landing.audit(rows), auditTable)
+      case Some(table) =>
+        rows.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          append(Landing.target(rows), table)
+          append(Landing.audit(rows), auditTable)
+        } finally rows.unpersist()
+    }
 }
 
 /** The frame [[TableSink.appendCollection]] takes: a document's target
@@ -68,14 +100,23 @@ object Landing {
 
   def audit(rows: DataFrame): DataFrame =
     rows.select(auditColumns(rows).map { case (c, name) => col(c).as(name) }: _*)
+
+  /** The audit-only frame whose [[audit]] projection is `rows`. */
+  def auditOnly(rows: DataFrame): DataFrame =
+    rows.select(rows.columns.toSeq.map(c => rows(c).as(auditColumn(c))) :+
+      lit(false).as(HasTarget): _*)
 }
 
 /** Test/local sink: one parquet directory per table under `baseDir`
   * (`schema.table` → `schema.table/`). Array columns (the audit table's
   * `missing_columns`) are stored as JSON strings to mirror the JSONB
-  * wire format.
+  * wire format. Appends into one directory take turns: concurrent Spark
+  * file writes into one output path share `<dir>/_temporary/0`, and the
+  * first commit deletes it under the others.
   */
 final class ParquetSink(baseDir: String) extends TableSink {
+
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
 
   private def dir(tableName: String) =
     Paths.get(baseDir, SchemaScript.normalizeTableName(tableName))
@@ -99,7 +140,10 @@ final class ParquetSink(baseDir: String) extends TableSink {
         case _ => acc
       }
     }
-    jsonified.write.mode("append").parquet(dir(tableName).toString)
+    val path = dir(tableName).toString
+    locks.computeIfAbsent(path, _ => new AnyRef).synchronized {
+      jsonified.write.mode("append").parquet(path)
+    }
   }
 
   def read(spark: org.apache.spark.sql.SparkSession, tableName: String): DataFrame =

@@ -60,12 +60,9 @@ final class PgWriteBuilder(conn: PgConn, table: String,
 
   override def build(): Write = {
     val schema = info.schema()
-    // Fail at plan time if any column cannot be rendered as COPY text.
-    PgRowText.validate(schema)
     val legs = Option(info.options().get("legs")).fold(
       Seq(PgLeg(table, schema.fieldNames.toSeq.map(c => c -> c))))(PgLeg.decode)
-    new PgWrite(conn, schema, legs.map(_.resolve(schema)),
-      Option(info.options().get("batchId")))
+    PgWrite(conn, schema, legs, Option(info.options().get("batchId")))
   }
 }
 
@@ -116,9 +113,31 @@ object PgLeg {
   }
 }
 
-final class PgWrite(conn: PgConn, schema: StructType,
+object PgWrite {
+  /** Fails at plan time if any column cannot be rendered as COPY text
+    * or a leg names a column `schema` lacks.
+    */
+  def apply(conn: PgConn, schema: StructType, legs: Seq[PgLeg],
+      batchId: Option[String]): PgWrite = {
+    PgRowText.validate(schema)
+    new PgWrite(conn, schema, legs.map(_.resolve(schema)), batchId)
+  }
+}
+
+final class PgWrite private (conn: PgConn, schema: StructType,
     legs: Seq[PgLeg.Resolved], batchId: Option[String])
     extends Write with BatchWrite {
+
+  /** The write without a job: `rows` go from the calling thread as
+    * partition 0, over one connection in one transaction, rendered and
+    * claimed exactly as one task of the job would.
+    */
+  def writeLocal(rows: Iterator[InternalRow]): Unit = {
+    if (batchId.isDefined) PgDataWriter.ensureLedger(conn)
+    val w = new PgDataWriter(conn, schema, legs, batchId, 0)
+    try { rows.foreach(w.write); val _ = w.commit() }
+    catch { case e: Throwable => w.abort(); throw e }
+  }
 
   override def toBatch: BatchWrite = this
 

@@ -207,7 +207,8 @@ class EnvelopeIngestionSpec extends AnyFunSuite with SparkTestSession {
         val before = jobs.get
         parquet.append(df, t)
         ListenerBusDrain.drain(sc)
-        recorded += new Append(t, df.queryExecution.executedPlan, jobs.get - before)
+        val append = new Append(t, df.queryExecution.executedPlan, jobs.get - before)
+        recorded.synchronized { recorded += append }
       }
     }
     sc.addSparkListener(listener)

@@ -1,6 +1,8 @@
 package graft.etl
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
 
@@ -36,7 +38,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
       "amount" -> AttributeMapping("amount", "numeric")))
 
   /** A parquet sink that records the executed plan of every frame it
-    * appends.
+    * appends, from whichever landing thread appends it.
     */
   private final class RecordingSink(base: String) extends TableSink {
     val parquet = new ParquetSink(base)
@@ -46,7 +48,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     def createTable(t: String, c: Seq[ColumnDef]) = parquet.createTable(t, c)
     def append(df: DataFrame, t: String): Unit = {
       parquet.append(df, t)
-      plans += t -> df.queryExecution.executedPlan
+      val plan = df.queryExecution.executedPlan
+      plans.synchronized { plans += t -> plan }
     }
   }
 
@@ -373,6 +376,83 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(aloneAppends == 1 && alone.counters.isEmpty)
     assert(aloneAudit.select("object_name").as[String].collect().toSeq ==
       Seq("public.legacy_t"))
+  }
+
+  private def docs(json: Seq[String], partitions: Int = 4): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(json, partitions).toDF("raw")
+  }
+
+  private def filesUnder(base: String, table: String): Long =
+    Files.walk(java.nio.file.Paths.get(base, table)).filter(Files.isRegularFile(_)).count()
+
+  test("a failing landing is rethrown as thrown, once every other landing has ended, and no report row lands") {
+    val base = Files.createTempDirectory("graft-concurrent-fail").toString
+    val app = appConfig("")
+    val mapping = MappingConfig(ListMap(
+      "customers" -> customersMapping, "orders" -> ordersMapping))
+    val input = ListMap(
+      "customers" -> docs((1 to 20).map(i => s"""{"customer_id": $i, "name": "c$i"}""")),
+      "orders" -> docs((101 to 120).map(i => s"""{"order_id": $i, "amount": $i}""")))
+    val inner = new ParquetSink(base)
+    val failure = new LoadError("audit sink down")
+    val thrown = new CountDownLatch(1)
+    // the target table the current landing thread appended to
+    val landing = new ThreadLocal[String]
+    val ordersLanded = new AtomicBoolean
+    val reportAppends = new AtomicInteger
+    val sink = new TableSink {
+      override def tableExists(t: String) = inner.tableExists(t)
+      override def createSchema(s: String) = inner.createSchema(s)
+      override def createTable(t: String, cols: Seq[ColumnDef]) = inner.createTable(t, cols)
+      override def append(df: DataFrame, t: String): Unit = t match {
+        case "public.customers" => inner.append(df, t); landing.set(t)
+        case "public.orders" =>
+          // orders starts writing only once the customers landing failed
+          assert(thrown.await(60, TimeUnit.SECONDS))
+          inner.append(df, t); landing.set(t)
+        case app.audit.auditTable if landing.get == "public.customers" =>
+          thrown.countDown()
+          throw failure
+        case app.audit.auditTable => inner.append(df, t); ordersLanded.set(true)
+        case _ => reportAppends.incrementAndGet(); inner.append(df, t)
+      }
+    }
+    val err = intercept[LoadError](Pipeline.run(spark, input, app, mapping, sink,
+      clock = lit("2026-02-03 04:05:06").cast("timestamp"), ingestionDate = "2026-02-03"))
+    assert(err eq failure)
+    assert(ordersLanded.get)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(inner.read(spark, "public.orders").count() == 20)
+    assert(reportAppends.get == 0)
+    assert(filesUnder(base, "doc_audit.missing_collections_report") == 0)
+    assert(filesUnder(base, "doc_audit.missing_attributes_report") == 0)
+  }
+
+  test("two collections landing concurrently into one table land every row once") {
+    val app = appConfig("")
+    val mapping = MappingConfig(ListMap(
+      "customers" -> customersMapping, "vip" -> customersMapping))
+    // more splits than cores, so one collection's write job commits
+    // while the other's tasks still write into the same directory
+    def customers(ids: Range) =
+      docs(ids.map(i => s"""{"customer_id": $i, "name": "c$i"}"""), partitions = 8)
+    import spark.implicits._
+    for (attempt <- 1 to 5) {
+      val sink = new ParquetSink(Files.createTempDirectory("graft-same-table").toString)
+      val result = Pipeline.run(spark,
+        ListMap("customers" -> customers(1 to 2000), "vip" -> customers(2001 to 4000)),
+        app, mapping, sink,
+        clock = lit("2026-02-03 04:05:06").cast("timestamp"), ingestionDate = "2026-02-03")
+      val landed = sink.read(spark, "public.customers").select("customer_id").as[Int]
+        .collect().sorted.toSeq
+      assert(landed == (1 to 4000), s"attempt $attempt")
+      val audited = sink.read(spark, "doc_audit.ingestion_audit").select("object_id").as[String]
+        .collect().map(_.toInt).sorted.toSeq
+      assert(audited == (1 to 4000), s"attempt $attempt")
+      assert(ReportReference.observed(result) == Seq(
+        ("customers", 2000L, 0L, 0L, 2000L), ("vip", 2000L, 0L, 0L, 2000L)), s"attempt $attempt")
+    }
   }
 
   test("an empty missing-attributes report is still appended and readable") {

@@ -533,6 +533,31 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
 
     def landed(): Seq[Long] =
       counts(s"$ns.customers", s"$ns.orders", audit.auditTable)
+
+    def reported(): Seq[Long] =
+      counts(s"${audit.auditSchema}.missing_collections_report",
+        s"${audit.auditSchema}.missing_attributes_report")
+  }
+
+  test("live: prepare answers the probe as it was before the call and creates only missing tables") {
+    assume(LivePostgres.available, "postgres server binaries not installed")
+    val sink = new PgWireSink(conn)
+    sink.execute("""DROP SCHEMA IF EXISTS graft_prep CASCADE; DROP SCHEMA IF EXISTS graft_prep2 CASCADE;
+      CREATE SCHEMA graft_prep; CREATE TABLE graft_prep.old (x TEXT)""")
+    val text = Seq(ColumnDef("x", "TEXT"))
+    val create = Seq("graft_prep.old" -> Seq(ColumnDef("y", "INT")),
+      "graft_prep.fresh" -> text, "graft_prep2.t" -> text)
+    assert(sink.prepare(Seq("graft_prep.old", "graft_prep.fresh", "graft_prep.none"), create) ==
+      Set("graft_prep.old"))
+    val c = conn.open()
+    try assert(c.query(
+      """SELECT table_schema || '.' || table_name || '.' || column_name
+         FROM information_schema.columns WHERE table_schema LIKE 'graft_prep%'
+         ORDER BY 1""").rows.map(_.head) ==
+      Seq("graft_prep.fresh.x", "graft_prep.old.x", "graft_prep2.t.x"))
+    finally c.close()
+    assert(sink.prepare(Seq("graft_prep.fresh", "graft_prep2.t"), create) ==
+      Set("graft_prep.fresh", "graft_prep2.t"))
   }
 
   test("live: Pipeline.run twice under one run key lands each target and audit row once") {
@@ -541,11 +566,14 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     val key = s"run-${System.nanoTime}"
     f.run(runKey = Some(key))
     assert(f.landed() == Seq(20L, 20L, 41L))
+    assert(f.reported() == Seq(3L, 0L))
     f.run(runKey = Some(key))
     assert(f.landed() == Seq(20L, 20L, 41L))
+    assert(f.reported() == Seq(3L, 0L))
     // a new key is a new batch
     f.run(runKey = Some(s"$key-2"))
     assert(f.landed() == Seq(40L, 40L, 82L))
+    assert(f.reported() == Seq(6L, 0L))
   }
 
   test("live: a partition whose audit row the database rejects lands neither its target nor its audit rows") {
@@ -586,8 +614,8 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     val result =
       try f.run(input)
       finally { ListenerBusDrain.drain(sc); sc.removeSparkListener(listener) }
-    // one write job per mapped collection, plus the two report appends
-    assert(jobs.get == 2 + 2)
+    // one write job per mapped collection; the driver writes the reports
+    assert(jobs.get == 2)
     assert(blocks.get == 0)
     assert(f.landed() == Seq(20L, 20L, 41L))
     assert(graft.etl.ReportReference.observed(result) ==
