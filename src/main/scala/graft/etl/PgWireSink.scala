@@ -40,12 +40,15 @@ final case class PgConn(host: String, port: Int, user: String,
   * dies mid-stream disconnects and Postgres rolls the partial COPY back
   * — the retry starts clean. [[append]] is that plain transactional
   * COPY, the `write.jdbc` contract (a task dying AFTER its COPY commits
-  * but before reporting success is re-run); [[appendExactlyOnce]] names
-  * a batch, which turns on the ledger-arbitrated commit that closes
-  * that window. [[appendCollection]] lands a collection's target and
-  * audit rows as one write of two legs: one job, and one transaction
-  * per partition holding both tables' rows, so a failed partition lands
-  * neither. A frame whose optimized plan is a `LocalRelation` (the
+  * but before reporting success is re-run). [[appendCollection]] lands
+  * a collection's target and audit rows as one write of two legs: one
+  * job, and one transaction per partition holding both tables' rows, so
+  * a failed partition lands neither. It is the one write that names a
+  * batch: a `batchId` turns on the ledger-arbitrated commit that closes
+  * the window above, also across job re-runs (a run key, a streaming
+  * epoch). One table alone lands exactly once as
+  * `appendCollection(Landing.auditOnly(df), None, table, Some(batch))`.
+  * A frame whose optimized plan is a `LocalRelation` (the
   * report tables: a few rows built on the driver) runs no job: the
   * driver writes its rows with the same writer, as one partition over
   * one connection in one transaction.
@@ -137,16 +140,17 @@ final class PgWireSink(conn: PgConn) extends TableSink {
       case _ => None
     }
 
-  private def everyColumn(df: DataFrame, tableName: String): Seq[PgLeg] =
-    Seq(PgLeg(tableName, df.columns.toSeq.map(c => c -> c)))
-
   override def append(df: DataFrame, tableName: String): Unit =
-    write(df, everyColumn(df, tableName), None)
+    write(df, Seq(PgLeg(tableName, df.columns.toSeq.map(c => c -> c))), None)
 
   /** One pass: the target leg streams while each partition holds its
     * audit COPY text, then both COPY in one transaction; nothing is
     * persisted. With a `batchId` the partition claims a ledger slot per
-    * table in that transaction.
+    * table in that transaction (the protocol in `PgWireWrite.scala`), so
+    * an attempt of an already-committed partition, in this job or a
+    * re-run under the same `batchId`, no-ops. That holds provided the
+    * frame's partition contents are deterministic (same plan over same
+    * input; repartition by a key column, not round-robin, if in doubt).
     */
   override def appendCollection(rows: DataFrame, targetTable: Option[String],
       auditTable: String, batchId: Option[String]): Unit =
@@ -155,9 +159,9 @@ final class PgWireSink(conn: PgConn) extends TableSink {
       PgLeg(auditTable, Landing.auditColumns(rows)), batchId)
 
   /** Drop ledger entries older than `olderThanDays` — the retention
-    * companion to [[appendExactlyOnce]] (the ledger otherwise grows by
-    * one row per partition per batch forever). Only vacuum past the
-    * re-delivery horizon: a vacuumed batch id that is later re-run
+    * companion to a batched [[appendCollection]] (the ledger otherwise
+    * grows by one row per partition per table per batch forever). Only
+    * vacuum past the re-delivery horizon: a vacuumed batch id that is later re-run
     * re-opens its dedup window and appends again. Returns the number of
     * rows dropped.
     */
@@ -172,33 +176,4 @@ final class PgWireSink(conn: PgConn) extends TableSink {
         r.tags.lastOption.map(_.split(" ").last.toLong).getOrElse(0L)
       }
     }
-
-  /** Exactly-once append: closes [[append]]'s residual at-least-once
-    * window (a task re-run AFTER its COPY committed — stage retry on
-    * fetch failure, speculation, a lost success report) by making
-    * Postgres itself the commit arbiter. Each partition runs
-    *
-    * {{{ BEGIN; INSERT INTO <ledger>(batch_id, table_name, partition_id);
-    *     COPY …; UPDATE <ledger> SET n_rows = <n>; COMMIT }}}
-    *
-    * with those three columns the ledger's primary key, so:
-    *   - a duplicate attempt hits unique_violation (23505) on the
-    *     INSERT — before streaming any data — and returns as a no-op;
-    *   - a CONCURRENT duplicate (speculation) blocks on the first
-    *     attempt's uncommitted ledger row and resolves to 23505 or a
-    *     clean run depending on whether the first commits or aborts;
-    *   - a task that dies mid-COPY aborts its transaction, deleting
-    *     its ledger row with it — the retry starts clean.
-    *
-    * The arbiter is the target database, so this also holds across JOB
-    * re-runs: pass a caller-stable `batchId` (a Structured Streaming
-    * `foreachBatch` epoch id, an orchestrator run key) and a
-    * re-delivered batch dedupes per partition — PROVIDED the frame's
-    * partition contents are deterministic (same plan over same input;
-    * repartition by a key column, not round-robin, if in doubt).
-    * Claims are per table, so one `batchId` may land several tables.
-    */
-  def appendExactlyOnce(df: DataFrame, tableName: String,
-      batchId: String): Unit =
-    write(df, everyColumn(df, tableName), Some(batchId))
 }

@@ -76,12 +76,12 @@ object Pipeline {
     *  1. one [[TableSink.prepare]]: probe every mapped target table,
     *     ensure the audit and report tables and every mapped table
     *     schema.sql does not declare;
-    *  2. land every mapped collection through one
-    *     [[TableSink.appendCollection]], concurrently on a pool of
-    *     `min(mapped collections, defaultParallelism)` threads that carry
-    *     the caller's session and local properties. The MISSING audit
-    *     rows of schema tables absent from the input ride in the first
-    *     mapped collection's frame;
+    *  2. land every mapped collection through [[landCollection]],
+    *     concurrently on a pool of `min(mapped collections,
+    *     defaultParallelism)` threads that carry the caller's session
+    *     and local properties. The MISSING audit rows of schema
+    *     tables absent from the input ride in the first mapped
+    *     collection's frame;
     *  3. land the two report tables.
     *
     * The frames are taken as they arrive: those of [[Ingestion]] are
@@ -143,7 +143,6 @@ object Pipeline {
       ((audit.auditTable -> SchemaManager.buildAuditTableColumns(audit)) +:
         SchemaManager.reportTables(audit.auditSchema).toSeq) ++ newTables)
 
-    def auditCol(key: String) = Landing.auditColumn(ac(key))
     var objectStatuses = Map.empty[String, String]
 
     // MISSING rows for schema tables absent from the input
@@ -167,49 +166,6 @@ object Pipeline {
         lit(audit.statusValues("missing")).as(ac("processing_status"))))
     }
 
-    // One collection's transform and landing, with `extra` audit-only
-    // rows riding in its frame; `landed` is false when its target table
-    // is missing from the database. Returns its counters (None for an
-    // empty collection: no counters row, as in A8's group-by) and the
-    // mapped columns any of its documents misses.
-    def land(collectionName: String, rawDf: DataFrame, cc: CollectionMapping,
-        objectStatus: String, landed: Boolean, extra: Option[DataFrame])
-        : (Option[CollectionCounters], Seq[String]) = {
-      val tc = Transform.transformCollection(
-        rawDf, "raw", collectionName, cc,
-        app.runtime, audit, objectStatus = objectStatus, clock = runClock)
-      val rows =
-        if (landed) tc.rows
-        else // rows can't land → processing_status=missing (pipeline.py:250-252)
-          tc.rows.withColumn(auditCol("processing_status"), lit(audit.statusValues("missing")))
-
-      // The report's inputs, observed below the union with any MISSING
-      // rows (so they count only this collection's): bounded by the
-      // mapping's size, whatever the document count.
-      val status = col(auditCol("processing_status"))
-      val mappedColumns = cc.mappings.values.map(_.column).toSeq.distinct
-      val obs = Observation()
-      val observed = rows.observe(obs,
-        count(lit(1)).as("docs"),
-        count(when(status === audit.statusValues("error"), 1)).as("errors") +:
-          count(when(status === audit.statusValues("missing"), 1))
-            .as("insert_failures") +:
-          mappedColumns.indices.map(i => coalesce(
-            max(array_contains(col(auditCol("missing_columns")), mappedColumns(i))),
-            lit(false)).as(s"missing_$i")): _*)
-      sink.appendCollection(
-        extra.fold(observed)(observed.unionByName(_, allowMissingColumns = true)),
-        Option.when(landed)(cc.targetTable), audit.auditTable,
-        runKey.map(k => s"$k/$collectionName"))
-      val m = obs.get
-      val docs = m("docs").asInstanceOf[Long]
-      val insertFailures = m("insert_failures").asInstanceOf[Long]
-      (Option.when(docs > 0)(CollectionCounters(collectionName,
-        docs - insertFailures, m("errors").asInstanceOf[Long], insertFailures)),
-        mappedColumns.indices.filter(i => m(s"missing_$i").asInstanceOf[Boolean])
-          .map(mappedColumns))
-    }
-
     // Each collection's view of its table, in input order, as the
     // reference's one-at-a-time probe saw it: a table this run creates
     // exists for every later collection mapped to it.
@@ -224,8 +180,9 @@ object Pipeline {
       objectStatuses += cc.targetTable -> objectStatus
       if (!inSchema(cc)) created += normalizedTable
       val landed = tableExists || !inSchema(cc)
-      () => land(collectionName, rawDf, cc, objectStatus, landed,
-        missingRows.filter(_ => i == 0))
+      () => landCollection(rawDf, collectionName, cc, app.runtime, audit, sink, runClock,
+        objectStatus, landed, missingRows.filter(_ => i == 0),
+        runKey.map(k => s"$k/$collectionName"))
     }
     val missingTablesDb = mapped.map(_._3)
       .filter(cc => inSchema(cc) && !existed(cc.targetTable)).map(_.targetTable).toSet
@@ -268,6 +225,54 @@ object Pipeline {
       missingTablesDb = missingTablesDb,
       objectStatuses = objectStatuses,
       counters = outcomes.flatMap(_._1))
+  }
+
+  /** The collection step of a run, shared by [[Pipeline.run]] and the
+    * streaming plane: transforms `raw` (column `raw`) and lands it with
+    * one [[TableSink.appendCollection]] under `batchId`, with `extra`
+    * audit-only rows riding in its frame. `landed` is false when the
+    * target table is missing from the database: every row then lands
+    * in the audit table only, as `processing_status = missing`.
+    * Returns the collection's counters (None for an empty collection:
+    * no counters row, as in A8's group-by) and the mapped columns any
+    * of its documents misses.
+    */
+  def landCollection(raw: DataFrame, collection: String, cm: CollectionMapping,
+      runtime: RuntimeConfig, audit: AuditSettings, sink: TableSink, clock: Column,
+      objectStatus: String, landed: Boolean, extra: Option[DataFrame],
+      batchId: Option[String]): (Option[CollectionCounters], Seq[String]) = {
+    def auditCol(key: String) = Landing.auditColumn(audit.auditColumns(key))
+    val tc = Transform.transformCollection(
+      raw, "raw", collection, cm, runtime, audit, objectStatus = objectStatus, clock = clock)
+    val rows =
+      if (landed) tc.rows
+      else // rows can't land → processing_status=missing (pipeline.py:250-252)
+        tc.rows.withColumn(auditCol("processing_status"), lit(audit.statusValues("missing")))
+
+    // The report's inputs, observed below the union with any `extra`
+    // rows (so they count only this collection's): bounded by the
+    // mapping's size, whatever the document count.
+    val status = col(auditCol("processing_status"))
+    val mappedColumns = cm.mappings.values.map(_.column).toSeq.distinct
+    val obs = Observation()
+    val observed = rows.observe(obs,
+      count(lit(1)).as("docs"),
+      count(when(status === audit.statusValues("error"), 1)).as("errors") +:
+        count(when(status === audit.statusValues("missing"), 1))
+          .as("insert_failures") +:
+        mappedColumns.indices.map(i => coalesce(
+          max(array_contains(col(auditCol("missing_columns")), mappedColumns(i))),
+          lit(false)).as(s"missing_$i")): _*)
+    sink.appendCollection(
+      extra.fold(observed)(observed.unionByName(_, allowMissingColumns = true)),
+      Option.when(landed)(cm.targetTable), audit.auditTable, batchId)
+    val m = obs.get
+    val docs = m("docs").asInstanceOf[Long]
+    val insertFailures = m("insert_failures").asInstanceOf[Long]
+    (Option.when(docs > 0)(CollectionCounters(collection,
+      docs - insertFailures, m("errors").asInstanceOf[Long], insertFailures)),
+      mappedColumns.indices.filter(i => m(s"missing_$i").asInstanceOf[Boolean])
+        .map(mappedColumns))
   }
 
   /** Runs `tasks` on a pool of `min(tasks, defaultParallelism)` threads,

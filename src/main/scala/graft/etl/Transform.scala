@@ -51,8 +51,9 @@ object Transform {
   /** Target rows + audit rows for one collection, all derived from the
     * single-pass `shared` projection (scan + parse_json + all casts).
     * `rows` is both in one [[Landing]] frame, which a sink lands with
-    * [[TableSink.appendCollection]] (`Pipeline.run` and `StreamingEtl`
-    * do); callers writing `target` and `audit` separately run the
+    * [[TableSink.appendCollection]] (`Pipeline.landCollection`, the one
+    * collection step of batch and streaming runs, does); callers
+    * writing `target` and `audit` separately run the
     * writes inside [[withSharedCached]], or the dominant scan+parse cost
     * runs once per consumer.
     */

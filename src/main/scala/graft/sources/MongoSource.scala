@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** S2 — the reference's BSON→JSON normalization
   * (`ui/mongo_ingest.py:76-91`: ObjectId→str, datetime→ISO) over
-  * frames and extended-JSON dumps, feeding the same raw-doc transform
-  * path as the file source.
+  * extended-JSON dumps, feeding the same raw-doc transform path as the
+  * file source.
   *
   * The live read is [[MongoWireSource]] (the from-scratch wire client,
   * no connector jar): `.schema("raw STRING")` yields each whole
@@ -14,17 +14,6 @@ import org.apache.spark.sql.functions._
   * S3 preview (`ui/mapping_editor.py:391-409`).
   */
 object MongoSource {
-
-  /** The BSON→raw-JSON normalization of a document-shaped frame:
-    * `_id` stringified, whole document re-serialized to one `raw`
-    * string column.
-    */
-  def normalizeRaw(df: DataFrame): DataFrame = {
-    val normalized =
-      if (df.columns.contains("_id")) df.withColumn("_id", col("_id").cast("string"))
-      else df
-    normalized.select(to_json(struct(normalized.columns.map(col).toSeq: _*)).as("raw"))
-  }
 
   /** The reference serializer re-expressed over Mongo Extended JSON —
     * the connector-less ingest path (`mongoexport` / extended-JSON v2

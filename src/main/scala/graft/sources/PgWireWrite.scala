@@ -25,8 +25,9 @@ import graft.etl.{PgConn, SchemaManager, SchemaScript}
   * each leg takes some of the row's columns under its own names, and
   * may take only the rows a boolean column flags. Without `legs` there
   * is one leg, `table` with every column. Batch append is the one
-  * write: streaming reaches Postgres through `foreachBatch` with the
-  * epoch id as `batchId`.
+  * write: streaming reaches Postgres through `StreamingEtl`, whose
+  * `foreachBatch` lands each epoch as one such write with `batchId`
+  * `<query id>/<epoch>`.
   *
   * Every non-empty partition lands all its legs in ONE transaction on
   * its own connection: BEGIN; COPY the first leg as rows stream in,

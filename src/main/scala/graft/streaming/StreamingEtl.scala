@@ -1,23 +1,27 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.etl.{AuditSettings, CollectionMapping, RuntimeConfig, TableSink, Transform}
+import graft.etl.{AuditSettings, CollectionMapping, Pipeline, RuntimeConfig, TableSink}
 
 /** Structured Streaming extension of the batch ETL (SURVEY §2.9 marks
-  * streaming out of reference parity; this is the §7.8 design: staged
-  * JSONL in → the SAME transform plane → `foreachBatch` through the same
-  * [[TableSink.appendCollection]] `Pipeline.run` lands with, so batch
-  * and stream share one code path and one sink contract).
+  * streaming out of reference parity; this is the §7.8 design): each
+  * micro-batch of staged JSONL is one [[Pipeline.landCollection]], the
+  * collection step `Pipeline.run` lands with.
   */
 object StreamingEtl {
 
-  /** Stream a staging directory of JSONL documents through the ETL
-    * transform into `sink`. `Trigger.AvailableNow` drains what exists
-    * and stops (batch-like test/backfill mode); pass
-    * `Trigger.ProcessingTime(...)` for continuous ingestion.
+  /** Stream a staging directory of JSONL documents into `sink`, epoch
+    * `e` as batch `<query id>/e`. `Trigger.AvailableNow` drains what
+    * exists and stops (batch-like test/backfill mode); pass
+    * `Trigger.ProcessingTime(...)` for continuous ingestion. The query
+    * id is kept in the checkpoint, so a replayed epoch keeps its batch
+    * id: exactly-once on a sink with a ledger ([[graft.etl.PgWireSink]]).
+    * [[graft.etl.ParquetSink]] ignores batch ids and appends an epoch
+    * replayed after a crash a second time.
     */
   def run(
       spark: SparkSession,
@@ -37,10 +41,11 @@ object StreamingEtl {
       .writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tc = Transform.transformCollection(
-          batch, "raw", collectionName, cm, runtime, audit, objectStatus, clock)
-        sink.appendCollection(tc.rows, Some(cm.targetTable), audit.auditTable)
+      .foreachBatch { (batch: DataFrame, epoch: Long) =>
+        val queryId = batch.sparkSession.sparkContext.getLocalProperty(
+          StreamExecution.QUERY_ID_KEY)
+        val _ = Pipeline.landCollection(batch, collectionName, cm, runtime, audit, sink,
+          clock, objectStatus, landed = true, extra = None, batchId = Some(s"$queryId/$epoch"))
       }
       .start()
 

@@ -13,7 +13,8 @@ import graft.streaming.StreamingEtl
 
 /** Coverage for the operators no oracle query or other spec exercises:
   * A1's base form, S6's projection/sort, K6's envelope re-write, the
-  * JSONL scale source, Mongo raw normalization, and the streaming dedup.
+  * JSONL scale source, Mongo extended-JSON normalization, and the
+  * streaming dedup.
   */
 class OperatorGapSpec extends AnyFunSuite with SparkTestSession {
 
@@ -52,13 +53,6 @@ class OperatorGapSpec extends AnyFunSuite with SparkTestSession {
     val df = Ingestion.fromJsonLines(spark, dir.toString)
     assert(df.columns.toSeq == Seq("raw"))
     assert(df.count() == 2)
-  }
-
-  test("Mongo raw normalization stringifies _id and re-serializes documents") {
-    import spark.implicits._
-    val df = Seq((7L, "Ada", 2.5)).toDF("_id", "name", "score")
-    val raw = MongoSource.normalizeRaw(df).head().getString(0)
-    assert(raw == """{"_id":"7","name":"Ada","score":2.5}""")
   }
 
   test("extended-JSON normalization: $oid/$date collapse recursively, everything else verbatim") {

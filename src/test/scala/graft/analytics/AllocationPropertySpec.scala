@@ -6,20 +6,12 @@ import org.scalacheck.Prop.forAll
 
 import graft.SparkTestSession
 
-/** Property checks for the three gate-attested-but-unspecced
-  * allocation/geometry operators, each against a driver-side
-  * sequential reference on random inputs:
-  *
-  *  - [[Proration.largestRemainder]]: per-group Σalloc == amount
-  *    EXACTLY, every row gets at least its floor share and at most
-  *    floor+1, and the whole allocation equals the sequential
-  *    largest-remainder computation (remainder desc, tie asc);
-  *  - [[Intervals.merge]]: islands equal a sequential sweep's —
-  *    maximal, disjoint, touching-merges-closed semantics;
-  *  - [[SpatialGrid.neighborPairs]]: the grid join finds EXACTLY the
-  *    brute-force pair set (no false negatives from cell banding, no
-  *    duplicates from the 9× probe replication), for cell == radius
-  *    and cell > radius alike.
+/** Property check for the gate-attested allocation operator against a
+  * driver-side sequential reference on random inputs:
+  * [[Proration.largestRemainder]] gives per-group Σalloc == amount
+  * EXACTLY, every row at least its floor share and at most floor+1,
+  * and the whole allocation equals the sequential largest-remainder
+  * computation (remainder desc, tie asc).
   */
 object AllocationPropertySpec extends Properties("AllocationProperties") {
 
@@ -81,72 +73,5 @@ object AllocationPropertySpec extends Properties("AllocationProperties") {
         rs.map(r => got((g, r._4))).sum == rs.head._2
       }
       got == want && sumsExact
-    }
-
-  // ---- Intervals -----------------------------------------------------
-
-  private val intervalsGen: Gen[List[(Long, Long, Long, Long)]] = for {
-    n <- Gen.choose(1, 24)
-    rows <- Gen.listOfN(n, for {
-      k <- Gen.choose(0L, 2L)
-      s <- Gen.choose(0L, 40L)
-      len <- Gen.choose(0L, 12L)
-    } yield (k, s, s + len))
-  } yield rows.zipWithIndex.map { case ((k, s, e), i) => (k, s, e, i.toLong) }
-
-  private def intervalsRef(
-      rows: List[(Long, Long, Long, Long)]): Set[(Long, Long, Long, Long)] =
-    rows.groupBy(_._1).flatMap { case (k, rs) =>
-      val sorted = rs.map { case (_, s, e, t) => (s, e, t) }.sortBy(identity)
-      val islands = sorted.foldLeft(List.empty[(Long, Long, Long)]) {
-        case (Nil, (s, e, _)) => List((s, e, 1L))
-        case ((is, ie, n) :: rest, (s, e, _)) =>
-          if (s > ie) (s, e, 1L) :: (is, ie, n) :: rest
-          else (is, math.max(ie, e), n + 1) :: rest
-      }
-      islands.map { case (s, e, n) => (k, s, e, n) }
-    }.toSet
-
-  property("interval merge == sequential sweep") = forAll(intervalsGen) { rows =>
-    val df = rows.toDF("k", "s", "e", "t")
-    val got = Intervals.merge(df, col("k"), col("s"), col("e"), col("t"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    got == intervalsRef(rows)
-  }
-
-  // ---- SpatialGrid ---------------------------------------------------
-
-  private val pointsGen: Gen[(List[(Long, Long, Long)], Long, Long)] = for {
-    n <- Gen.choose(2, 30)
-    pts <- Gen.listOfN(n, for {
-      x <- Gen.choose(0L, 60L)
-      y <- Gen.choose(0L, 60L)
-    } yield (x, y))
-    radius <- Gen.choose(1L, 12L)
-    extra <- Gen.choose(0L, 8L)
-  } yield (pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) },
-    radius, radius + extra)
-
-  private def pairsRef(pts: List[(Long, Long, Long)],
-      radius: Long): Set[(Long, Long, Long)] =
-    (for {
-      (a, xa, ya) <- pts
-      (b, xb, yb) <- pts
-      if a < b
-      d2 = (xa - xb) * (xa - xb) + (ya - yb) * (ya - yb)
-      if d2 <= radius * radius
-    } yield (a, b, d2)).toSet
-
-  property("grid neighbor pairs == brute force (incl. cell == radius)") =
-    forAll(pointsGen) { case (pts, radius, cell) =>
-      val df = pts.toDF("id", "x", "y")
-      val got = SpatialGrid
-        .neighborPairs(df, col("id"), col("x"), col("y"), cell, radius)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // exactly once per unordered pair: the Seq must already be a set
-      got.length == got.toSet.size && got.toSet == pairsRef(pts, radius)
     }
 }

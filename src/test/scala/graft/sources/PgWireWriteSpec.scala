@@ -3,7 +3,7 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.etl.{ColumnDef, PgConn, PgWireSink}
+import graft.etl.{ColumnDef, Landing, PgConn, PgWireSink}
 
 /** DSv2 write path (`df.write.format(...).mode("append").save()`)
   * against the live scratch server: typed COPY text rendering, the
@@ -223,12 +223,12 @@ class PgWireWriteSpec extends AnyFunSuite with SparkTestSession {
          CREATE TABLE graft_w.t1 (id BIGINT NOT NULL);
          CREATE TABLE graft_w.t2 (id BIGINT NOT NULL)""")
     val df = spark.range(0, 1000, 1, 4).toDF("id")
-    sink.appendExactlyOnce(df, "graft_w.t1", "w-two-tables")
-    sink.appendExactlyOnce(df, "graft_w.t2", "w-two-tables")
+    sink.appendCollection(Landing.auditOnly(df), None, "graft_w.t1", Some("w-two-tables"))
+    sink.appendCollection(Landing.auditOnly(df), None, "graft_w.t2", Some("w-two-tables"))
     assert(rowCount("graft_w.t1") == 1000)
     assert(rowCount("graft_w.t2") == 1000)
     // ...and each table still dedups its own re-run.
-    sink.appendExactlyOnce(df, "graft_w.t2", "w-two-tables")
+    sink.appendCollection(Landing.auditOnly(df), None, "graft_w.t2", Some("w-two-tables"))
     assert(rowCount("graft_w.t2") == 1000)
     val c = conn.open()
     try assert(c.query(
