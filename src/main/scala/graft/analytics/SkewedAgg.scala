@@ -20,10 +20,8 @@ object SkewedAgg {
     * `df.groupBy(key).agg(count(*))` under any skew.
     */
   def saltedCount(df: DataFrame, key: Column, saltBuckets: Int = 32): DataFrame =
-    df.groupBy(key.as("key"), (rand(seed = 7) * saltBuckets).cast("int").as("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col("key"))
-      .agg(sum(col("__partial")).as("cnt"))
+    saltedAgg(df, key, Seq(count(lit(1)).as("__partial")),
+      Seq(sum(col("__partial")).as("cnt")), saltBuckets)
 
   /** General salted aggregation: `partials` computes stage-1 aggregates
     * over (key, salt); `merges` combines them per key — e.g.

@@ -114,23 +114,29 @@ object TextAnalysis {
   val emailPattern = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
   val phonePattern = "\\b555-[0-9]{4}\\b"
 
-  /** PII scan: match counts per category, a has_pii flag, and a
-    * redacted copy with every match replaced by a category placeholder.
-    * Pure column expressions — the standard pre-training privacy pass
-    * runs map-only over the corpus; real deployments extend the
-    * pattern list (SSNs, IBANs, street addresses) the same way.
+  /** PII scan of `df`: `keyCol`, then bigint match counts per
+    * category (`n_emails`, `n_phones`), a `has_pii` flag, and a
+    * `redacted` copy of `text` with every match replaced by a category
+    * placeholder. The standard pre-training privacy pass, map-only over
+    * the corpus; real deployments extend the pattern list (SSNs, IBANs,
+    * street addresses) the same way.
+    *
+    * STAGED: each regex extraction runs once — the counts are
+    * materialized before `has_pii` reads them, where an inline flag
+    * would re-run both extractions.
     */
-  def piiFeatures(text: Column): Seq[(String, Column)] = {
-    val emails = size(regexp_extract_all(text, lit(emailPattern), lit(0)))
-    val phones = size(regexp_extract_all(text, lit(phonePattern), lit(0)))
-    Seq(
-      "n_emails" -> emails,
-      "n_phones" -> phones,
-      "has_pii" -> (emails + phones > 0),
-      "redacted" -> regexp_replace(
-        regexp_replace(text, emailPattern, "<EMAIL>"),
-        phonePattern, "<PHONE>"))
-  }
+  def piiScan(df: DataFrame, keyCol: String, text: Column): DataFrame =
+    df.select(
+        col(keyCol),
+        size(regexp_extract_all(text, lit(emailPattern), lit(0))).cast("bigint").as("n_emails"),
+        size(regexp_extract_all(text, lit(phonePattern), lit(0))).cast("bigint").as("n_phones"),
+        regexp_replace(
+          regexp_replace(text, emailPattern, "<EMAIL>"),
+          phonePattern, "<PHONE>").as("redacted"))
+      .select(
+        col(keyCol), col("n_emails"), col("n_phones"),
+        (col("n_emails") + col("n_phones") > 0).as("has_pii"),
+        col("redacted"))
 
   /** Corpus vocabulary: the k most frequent whitespace tokens with
     * deterministic tie order (count desc, then token). One shuffle on

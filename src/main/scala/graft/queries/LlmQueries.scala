@@ -516,22 +516,7 @@ object LlmQueries {
               concat(col("text"), lit(" or call 555-"),
                 lpad(pmod(col("doc_id"), lit(10000)), 4, "0")))
             .otherwise(col("text")).as("text"))
-        // STAGED (round-14 plan audit): each PII regex extraction runs
-        // once — the inline form re-ran both extractions inside has_pii.
-        injected.select(
-          col("doc_id"),
-          size(regexp_extract_all(col("text"),
-            lit(TextAnalysis.emailPattern), lit(0))).cast("bigint").as("n_emails"),
-          size(regexp_extract_all(col("text"),
-            lit(TextAnalysis.phonePattern), lit(0))).cast("bigint").as("n_phones"),
-          regexp_replace(
-            regexp_replace(col("text"), TextAnalysis.emailPattern, "<EMAIL>"),
-            TextAnalysis.phonePattern, "<PHONE>").as("redacted"))
-          .select(
-            col("doc_id"), col("n_emails"), col("n_phones"),
-            (col("n_emails") + col("n_phones") > 0).as("has_pii"),
-            col("redacted"))
-          .orderBy("doc_id")
+        TextAnalysis.piiScan(injected, "doc_id", col("text")).orderBy("doc_id")
       },
       """WITH injected AS (
            SELECT doc_id,

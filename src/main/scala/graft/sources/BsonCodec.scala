@@ -375,10 +375,15 @@ object BsonCodec {
   /** Epoch millis → pymongo-default naive isoformat (UTC), the same
     * rendering [[MongoSource.isoNaive]] produces from textual `$date`.
     */
-  private[sources] def isoNaiveMillis(ms: Long): String = {
-    val l = java.time.LocalDateTime.ofEpochSecond(
+  private[sources] def isoNaiveMillis(ms: Long): String =
+    isoformat(java.time.LocalDateTime.ofEpochSecond(
       Math.floorDiv(ms, 1000L), Math.floorMod(ms, 1000L).toInt * 1000000,
-      java.time.ZoneOffset.UTC)
+      java.time.ZoneOffset.UTC))
+
+  /** Python's naive `datetime.isoformat()`: microseconds 6-digit, or
+    * omitted when zero.
+    */
+  private[sources] def isoformat(l: java.time.LocalDateTime): String = {
     val base = f"${l.getYear}%04d-${l.getMonthValue}%02d-" +
       f"${l.getDayOfMonth}%02dT${l.getHour}%02d:" +
       f"${l.getMinute}%02d:${l.getSecond}%02d"

@@ -115,12 +115,6 @@ object MongoSource {
           try Some(java.time.LocalDateTime.parse(s))
           catch { case _: java.time.format.DateTimeParseException => None }
       }
-    ldt.map { l =>
-      val base = f"${l.getYear}%04d-${l.getMonthValue}%02d-" +
-        f"${l.getDayOfMonth}%02dT${l.getHour}%02d:" +
-        f"${l.getMinute}%02d:${l.getSecond}%02d"
-      val micros = l.getNano / 1000
-      if (micros == 0) base else f"$base.$micros%06d"
-    }
+    ldt.map(BsonCodec.isoformat)
   }
 }

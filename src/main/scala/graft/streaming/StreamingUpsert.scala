@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 /** The `foreachBatch` upsert sink — the standard production pattern for
   * landing a CDC stream in a keyed snapshot when the sink has no native
@@ -32,17 +32,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * earlier microbatch than an upsert at sequence 5 still wins, so the
   * final snapshot is independent of how the source splits files into
   * batches. Readers filter tombstones at the end ([[finalSnapshot]]).
+  * Every row is admitted, whatever its `__seq`, and tombstones are
+  * kept for the life of the store.
   *
-  * Tombstone EXPIRY is governed by `tombstoneHorizon`: at compaction,
-  * tombstones whose `__seq` has fallen more than `horizon` below the
-  * high-water sequence are dropped — their job (outranking late lower-
-  * sequence upserts) is done, because incoming rows older than the
-  * same horizon are REJECTED as too late before the merge. The two
-  * cutoffs are paired deliberately: rejection uses the PRE-batch high
-  * water and expiry the POST-batch one, and the high water is
-  * monotonic, so an admitted row can never have lost to an already-
-  * expired tombstone — expiry without late-record rejection would let
-  * an ancient upsert resurrect a deleted key.
+  * Nothing is reclaimed: superseded deltas and old manifests stay on
+  * disk, which is what keeps every published version readable through
+  * [[snapshotAt]]. A store is dropped whole, with its checkpoint.
   *
   * RESTART SAFETY: the manifest is durable next to the data
   * (`_graft_manifest/v<batchId>.json`, written after the batch's data
@@ -57,8 +52,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * an existing store restarts batch ids below the published ceiling
   * and is REFUSED loudly at the first such batch, because letting it
   * through would rewrite committed manifests in place (shadowing the
-  * history that time travel and pins promise stays byte-untouched)
-  * while the latest view still resolved the old maximum version.
+  * history that time travel promises stays byte-untouched) while the
+  * latest view still resolved the old maximum version.
   *
   * Scale shape: each merge is ONE hash shuffle on the key with
   * WindowGroupLimit keeping one row of state per key, over the touched
@@ -67,13 +62,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingUpsert {
 
-  /** Snapshot state: per-bucket data directory, the high-water `__seq`
-    * across everything merged so far, and the batch id that wrote it.
+  /** Snapshot state: per-bucket data directory and the batch id that
+    * wrote it.
     */
-  final case class Manifest(
-      buckets: SortedMap[Int, String],
-      highWater: Long,
-      version: Long)
+  final case class Manifest(buckets: SortedMap[Int, String], version: Long)
 
   /** Last-writer-wins compaction of `prev` (snapshot rows) with
     * `batch` (new change rows). Both carry `keyCol`, payload columns,
@@ -88,14 +80,6 @@ object StreamingUpsert {
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** `highWater - horizon`, saturating at Long.MinValue (a fresh run's
-    * high water starts there, and `horizon = Long.MaxValue` means "no
-    * expiry").
-    */
-  private def cutoff(highWater: Long, horizon: Long): Long =
-    if (highWater < Long.MinValue + horizon) Long.MinValue
-    else highWater - horizon
 
   /** Drain `stream` (shaped: keyCol, payload…, __seq, __op) through a
     * foreachBatch merge into a bucketed, manifest-tracked snapshot
@@ -120,10 +104,6 @@ object StreamingUpsert {
     *                         the estimate holds under skew; keep
     *                         buckets ≫ executors regardless so the
     *                         rewrite parallelizes.
-    * @param tombstoneHorizon max `__seq` lag before a tombstone is
-    *                         expired AND an incoming row is rejected
-    *                         as too late. Default Long.MaxValue:
-    *                         retain forever, reject nothing.
     */
   def mergeStream(
       spark: SparkSession,
@@ -131,38 +111,10 @@ object StreamingUpsert {
       dir: String,
       keyCol: String,
       checkpoint: String,
-      buckets: Int = 16,
-      tombstoneHorizon: Long = Long.MaxValue): String = {
+      buckets: Int = 16): String = {
     require(buckets > 0, s"buckets must be > 0, got $buckets")
-    require(tombstoneHorizon >= 0,
-      s"tombstoneHorizon must be >= 0, got $tombstoneHorizon")
     @volatile var state: Manifest = readLatestManifest(spark, dir)
-      .getOrElse(Manifest(SortedMap.empty, Long.MinValue, -1L))
-
-    // Drain lease: held for the whole drain so a concurrent [[vacuum]]
-    // fails loudly instead of racing a reclaim against the merge loop's
-    // reads (round-12 advice: make the "run vacuum between drains"
-    // contract mechanical). Overwrite-acquire — a lease left by a
-    // CRASHED drain is superseded by the next drain, which legitimately
-    // owns the store again. PLANT-THEN-CHECK against the vacuum marker
-    // (round-13 advice: the lease alone was one-sided — a drain starting
-    // between vacuum's final lease re-check and its delete loops could
-    // publish a retry delta for an already-listed id that the vacuum's
-    // stale live set then reclaimed): vacuum plants its marker before
-    // checking the lease and we plant the lease before checking the
-    // marker, so whatever the interleaving at least one side backs off.
-    val fs = fileSystem(spark, new HPath(dir))
-    val leaseNonce = plantLease(fs, dir)
-    if (fs.exists(vacuumMarkerPath(dir))) {
-      releaseLeaseIfOurs(fs, dir, leaseNonce)
-      throw new IllegalStateException(
-        s"mergeStream($dir) refused: a vacuum holds " +
-          s"${vacuumMarkerPath(dir)} — drain after it completes (the " +
-          "marker records its owner host/pid and start time; read it and " +
-          "check its mtime to tell a live vacuum from a killed one — a " +
-          "stale marker is superseded by the next vacuum run, or delete " +
-          "the file after confirming no vacuum is running)")
-    }
+      .getOrElse(Manifest(SortedMap.empty, -1L))
     // Versions already published at stream START. The in-run state's
     // version alone cannot answer "was v<id> ever published?" when the
     // engine's batch ids restart BELOW existing history (a fresh
@@ -172,18 +124,16 @@ object StreamingUpsert {
     // the recovery-time maximum keeps the replay answer an in-memory
     // max() instead of a per-batch filesystem probe.
     val publishedAtStart = state.version
-    try {
-      val q: StreamingQuery = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          state = mergeBatch(
-            spark, state, batch, id, dir, keyCol, buckets, tombstoneHorizon,
-            knownPublishedThrough = publishedAtStart)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpoint)
-        .start()
-      q.awaitTermination()
-    } finally releaseLeaseIfOurs(fs, dir, leaseNonce)
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        state = mergeBatch(
+          spark, state, batch, id, dir, keyCol, buckets,
+          knownPublishedThrough = publishedAtStart)
+      }
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .start()
+      .awaitTermination()
     if (state.version < 0)
       throw new IllegalStateException("stream produced no microbatch")
     dir
@@ -211,7 +161,6 @@ object StreamingUpsert {
       dir: String,
       keyCol: String,
       buckets: Int,
-      tombstoneHorizon: Long,
       crashHook: String => Unit = _ => (),
       knownPublishedThrough: Long = Long.MinValue): Manifest = {
     // Fresh/foreign-checkpoint refusal (round-13 advice): an id strictly
@@ -223,7 +172,7 @@ object StreamingUpsert {
     // the ceiling means a fresh checkpoint was pointed at an existing
     // store: batch ids restart at 0, and letting them through would
     // overwrite manifest v0..vN in place — replacing committed history
-    // that time travel and pins promise stays byte-untouched, while
+    // that time travel promises stays byte-untouched, while
     // readLatestManifest still resolves the OLD vN, so the new run's
     // writes would also vanish from the latest view. Refuse loudly; the
     // operator resumes with the store's own checkpoint or a fresh dir.
@@ -240,32 +189,20 @@ object StreamingUpsert {
           "would shadow committed snapshots). Resume with the store's own " +
           "checkpoint, or target a fresh snapshot dir.")
     crashHook("start")
-    // Late-record rejection against the PRE-batch high water (see
-    // the pairing argument in the scaladoc).
-    val admitted =
-      batch.filter(col("__seq") >= cutoff(st.highWater, tombstoneHorizon))
-        .persist()
+    // Persisted: the batch is read twice, by the touched-bucket
+    // aggregate and by the merge.
+    val changes = batch.persist()
     try {
       val bucketOf = pmod(hash(col(keyCol)), lit(buckets))
-      // ONE aggregate computes both the touched-bucket set (collect_set
-      // is bounded by `buckets`, map-side combined) and the batch max —
-      // this was two separate jobs before the delta write through
-      // round 12, the bench-visible half of the q137/q204 write-path
-      // drift.
-      val pre = admitted.agg(
-        collect_set(bucketOf).as("__touched"),
-        max(col("__seq")).as("__max")).head()
-      val touched = pre.getSeq[Int](0).toSet
-      val newHigh =
-        if (pre.isNullAt(1)) st.highWater
-        else math.max(st.highWater, pre.getLong(1))
+      // collect_set is bounded by `buckets` and map-side combined
+      val touched = changes.agg(collect_set(bucketOf)).head().getSeq[Int](0).toSet
 
       val newBuckets: SortedMap[Int, String] =
         if (touched.isEmpty) st.buckets
         else {
           val prevPaths = touched.toSeq.sorted.flatMap(st.buckets.get)
           val prev =
-            if (prevPaths.isEmpty) admitted.limit(0)
+            if (prevPaths.isEmpty) changes.limit(0)
             else spark.read.parquet(prevPaths: _*)
           // Delta naming must never overwrite files the PREV read
           // references. Normal runs and crash-before-manifest
@@ -277,8 +214,8 @@ object StreamingUpsert {
           // read (overwrite clears the target before tasks run)
           // and wedge the store on every restart. In that case
           // write a fresh retry directory instead; the manifest
-          // overwrite re-points the buckets and vacuum reclaims
-          // the superseded attempt.
+          // overwrite re-points the buckets, and the superseded
+          // attempt stays on disk, unreferenced.
           val deltaBase = s"$dir/delta-v$id"
           // "Was manifest v<id> already published?" is answerable from
           // the carried state — no filesystem probe per microbatch:
@@ -294,13 +231,14 @@ object StreamingUpsert {
           val delta =
             if (math.max(st.version, knownPublishedThrough) < id) deltaBase
             else {
-              // Retry suffix = 1 + MAX surviving -rN, never a COUNT
-              // of surviving attempts: vacuum can reclaim superseded
-              // attempts, and a count would then shrink and
-              // regenerate the name of a still-manifest-referenced
-              // survivor (only delta-v7-r1 left → count=1 → write
-              // delta-v7-r1 — the exact overwrite this branch
-              // exists to avoid). The exact-prefix glob
+              // Retry suffix = 1 + MAX existing -rN, never a COUNT of
+              // attempts: the store deletes no attempt, but the max
+              // names a directory that does not exist even when an
+              // attempt is removed by hand (a superseded delta-v7
+              // deleted leaves only delta-v7-r1 → count=1 → write
+              // delta-v7-r1 — the exact overwrite of a still-
+              // referenced survivor this branch exists to avoid).
+              // The exact-prefix glob
               // `delta-v<id>-r*` also keeps delta-v1 from matching
               // delta-v10's attempts.
               val fs = fileSystem(spark, new HPath(dir))
@@ -315,10 +253,7 @@ object StreamingUpsert {
                 .foldLeft(0L)(math.max)
               s"$deltaBase-r${maxRetry + 1}"
             }
-          compact(prev, admitted, keyCol)
-            // expiry against the POST-batch high water
-            .filter(!(col("__op") === "delete"
-              && col("__seq") < cutoff(newHigh, tombstoneHorizon)))
+          compact(prev, changes, keyCol)
             .withColumn("__bucket", bucketOf)
             .repartition(math.min(buckets, touched.size), col("__bucket"))
             .write.mode("overwrite").partitionBy("__bucket").parquet(delta)
@@ -326,11 +261,11 @@ object StreamingUpsert {
             b -> s"$delta/__bucket=$b")
         }
       crashHook("after-delta")
-      val next = Manifest(newBuckets, newHigh, id)
+      val next = Manifest(newBuckets, id)
       writeManifest(spark, dir, next)
       crashHook("after-manifest")
       next
-    } finally admitted.unpersist()
+    } finally changes.unpersist()
   }
 
   /** The reader view of a snapshot: live rows only (tombstones out),
@@ -345,16 +280,14 @@ object StreamingUpsert {
     * bucket carry-forward make this free — an old manifest still
     * points at exactly the files that were live when it was
     * published, byte-untouched, so reading "the snapshot after batch
-    * N" costs the same as reading the latest. Valid until [[vacuum]]
-    * reclaims superseded deltas; a reader that must outlive routine
-    * vacuuming holds a [[pinVersion]] pin — vacuum then retains the
-    * pinned version's closure mechanically (the same contract
-    * Delta/Iceberg retention windows encode).
+    * N" costs the same as reading the latest. Every published
+    * version stays readable: the store deletes no manifest and no
+    * delta. An unknown version fails loudly.
     */
   def snapshotAt(spark: SparkSession, dir: String, version: Long): DataFrame =
     snapshotOf(spark, dir, readManifestVersion(spark, dir, version).getOrElse(
       throw new IllegalStateException(
-        s"no manifest v$version under $dir (vacuumed, or never committed)")))
+        s"no manifest v$version under $dir (never committed)")))
 
   private def snapshotOf(
       spark: SparkSession, dir: String, m: Manifest): DataFrame = {
@@ -364,272 +297,10 @@ object StreamingUpsert {
       .filter(col("__op") === "upsert")
   }
 
-  /** PIN a manifest version against [[vacuum]]: while the returned
-    * handle is held, the version (and the full file closure it
-    * references) survives any vacuum regardless of `retainLast` — the
-    * reader-side half of the concurrency contract, mirroring the
-    * drain lease. Pins are files at the store root
-    * (`_graft_pin_v<version>.<nonce>`), so they are crash-evident:
-    * an abandoned pin is visible by name and removable with its
-    * handle's [[PinHandle.release]] or a manual delete. Pinning a
-    * version that does not exist (never committed, or already
-    * vacuumed) fails loudly rather than pinning nothing.
-    *
-    * ACQUISITION GUARANTEE (plant-then-check handshake, round-13
-    * advice — the bare pin-then-verify left a window where a pin
-    * planted after a running vacuum's pin listing verified against a
-    * not-yet-deleted manifest and reported success on a version that
-    * vacuum then reclaimed): the pin file is planted FIRST, then the
-    * vacuum-in-progress marker is checked, then the manifest is
-    * verified. If the marker check sees no marker, every vacuum
-    * either finished entirely before it (the manifest verify reads
-    * post-vacuum truth) or planted its marker after our pin existed —
-    * and vacuum lists pins after planting its marker, so it retains
-    * us. A successful return therefore means the pin HOLDS; a vacuum
-    * racing acquisition makes this throw, never silently lose the
-    * version. (Assumes list-after-write consistency from the
-    * filesystem — true of local FS, HDFS, and current S3.)
-    */
-  def pinVersion(spark: SparkSession, dir: String, version: Long): PinHandle = {
-    val fs = fileSystem(spark, new HPath(dir))
-    val nonce = java.util.UUID.randomUUID.toString.take(8)
-    val p = new HPath(s"$dir/${PinPrefix}v$version.$nonce")
-    fs.create(p, false).close()
-    if (fs.exists(vacuumMarkerPath(dir))) {
-      fs.delete(p, false)
-      throw new IllegalStateException(
-        s"cannot pin v$version under $dir: a vacuum holds " +
-          s"${vacuumMarkerPath(dir)} — retry after it completes (the " +
-          "marker records its owner host/pid and start time; read it and " +
-          "check its mtime to tell a live vacuum from a killed one — a " +
-          "stale marker is superseded by the next vacuum run, or delete " +
-          "the file after confirming no vacuum is running)")
-    }
-    if (readManifestVersion(spark, dir, version).isEmpty) {
-      fs.delete(p, false)
-      throw new IllegalStateException(
-        s"cannot pin v$version under $dir: no such manifest " +
-          "(never committed, or already vacuumed)")
-    }
-    PinHandle(p.toString, version)
-  }
-
-  /** Handle for a [[pinVersion]] pin; [[release]] is idempotent. */
-  final case class PinHandle(path: String, version: Long) {
-    def release(spark: SparkSession): Unit = {
-      val p = new HPath(path)
-      fileSystem(spark, p).delete(p, false)
-      ()
-    }
-  }
-
-  /** Versions currently pinned under `dir` (crash-evident: the set is
-    * just the pin files present at the root).
-    */
-  private def pinnedVersions(fs: FileSystem, root: HPath): Set[Long] =
-    fs.listStatus(root).toSeq.flatMap(s =>
-      s.getPath.getName match {
-        case PinName(v) => Some(v.toLong)
-        case _ => None
-      }).toSet
-
-  /** Drop delta directories and manifests outside the RETENTION
-    * WINDOW: the newest `retainLast` manifests stay readable (their
-    * versions keep time-traveling via [[snapshotAt]] — the full file
-    * CLOSURE of every retained manifest is kept, since carry-forward
-    * means an old manifest references files written many batches
-    * earlier), everything older is reclaimed and fails loudly on
-    * read. `retainLast = 1` is the classic "latest only" vacuum; a
-    * larger window is the Delta/Iceberg retention contract — routine
-    * vacuuming and snapshot history compose.
-    *
-    * BOTH halves of the concurrency contract are mechanical, built on
-    * a plant-then-check handshake (vacuum plants its in-progress
-    * marker before checking the drain lease; drains and pins plant
-    * their own file before checking the marker — whatever the
-    * interleaving, at least one side sees the other and backs off
-    * loudly):
-    *  - a drain ([[mergeStream]]) holds a lease file for its whole
-    *    run; vacuum REFUSES (IllegalStateException) while the lease
-    *    exists — checked after planting the marker AND re-checked
-    *    immediately before destructive work — and a drain that starts
-    *    after the marker is planted refuses at ITS entry, so a retry
-    *    delta for an already-listed id can no longer slip past the
-    *    stale live set. NEW ids stay structurally safe regardless:
-    *    vacuum never touches deltas or manifests above the manifest
-    *    ceiling it listed. A lease left behind by a drain that died
-    *    before releasing is removed with `breakLease = true` once the
-    *    operator has confirmed the drain is gone;
-    *  - a reader of an older snapshot holds a [[pinVersion]] pin, and
-    *    vacuum RETAINS every pinned version's closure in addition to
-    *    the newest `retainLast`. A pin acquired before the marker is
-    *    planted is listed and retained; one racing a running vacuum
-    *    FAILS LOUDLY at acquisition (its marker check sees us) —
-    *    never a silent loss (see [[pinVersion]]'s guarantee).
-    *
-    * A marker left by a vacuum killed mid-run blocks drains/pins until
-    * the next vacuum completes (it overwrite-plants and then removes
-    * it) or the operator deletes the file. Concurrent vacuums are NOT
-    * self-excluding — run one at a time (routine maintenance, not a
-    * hot path).
-    */
-  def vacuum(
-      spark: SparkSession,
-      dir: String,
-      retainLast: Int = 1,
-      breakLease: Boolean = false): Unit = {
-    require(retainLast >= 1, s"retainLast must be >= 1: $retainLast")
-    val root = new HPath(dir)
-    val fs = fileSystem(spark, root)
-    // Plant the marker BEFORE the lease check (the handshake order that
-    // closes the both-proceed window) — and remove it on every exit,
-    // including a lease refusal. The payload (owner host/pid + start
-    // time, round-15 advice) gives the operator a staleness signal: the
-    // recovery instruction "delete after confirming no vacuum is
-    // running" is actionable by reading the marker and checking its
-    // mtime instead of guessing.
-    locally {
-      val out = fs.create(vacuumMarkerPath(dir), true)
-      try out.write(
-        (s"host=${java.net.InetAddress.getLocalHost.getHostName} " +
-          s"pid=${ProcessHandle.current().pid()} " +
-          s"started=${java.time.Instant.now()}\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    try {
-      def checkLease(): Unit =
-        if (!breakLease && fs.exists(leasePath(dir)))
-          throw new IllegalStateException(
-            s"vacuum($dir) refused: a drain holds ${leasePath(dir)} — " +
-              "run vacuum between drains, or pass breakLease=true after " +
-              "confirming the drain is dead")
-      checkLease()
-      // breakLease ALSO removes the stale lease, or every subsequent
-      // routine vacuum would keep refusing against a dead drain's file.
-      if (breakLease) fs.delete(leasePath(dir), false)
-      val mdir = new HPath(root, ManifestDir)
-      if (!fs.exists(mdir)) return
-      val versions = fs.listStatus(mdir).toSeq.flatMap(s =>
-        s.getPath.getName match {
-          case ManifestName(v) => Some(v.toLong)
-          case _ => None
-        }).sorted(Ordering[Long].reverse)
-      if (versions.isEmpty) return
-      val maxListed = versions.head
-      // Pins are listed AFTER the marker plant: any pin our listing can
-      // miss was planted after the marker existed, and such a pin's
-      // acquisition fails loudly at its own marker check — so "listed
-      // pins" and "successfully acquired pins" coincide.
-      val retained =
-        versions.take(retainLast).toSet ++
-          (pinnedVersions(fs, root) & versions.toSet)
-      // Live set = union of bucket-dir parents across EVERY retained
-      // manifest — by-reference carry-forward means version N's buckets
-      // may live in delta-v(N-k) for any k, so retention is closure-
-      // based, never "the last N delta dirs".
-      val live: Set[String] = retained.flatMap(v =>
-        readManifestVersion(spark, dir, v).toSeq.flatMap(
-          _.buckets.values.map(p => new HPath(p).getParent.toUri.getPath)))
-      // Deletion guards, layered: (a) the marker handshake keeps any
-      // drain from STARTING while we run; (b) the lease re-check
-      // immediately before destructive work catches a drain that
-      // started before our marker landed; (c) never touch a delta
-      // whose batch id exceeds the manifest ceiling this vacuum
-      // listed — a pre-existing drain's NEW batches write ids above
-      // it, so they are structurally out of reach even if (b) was won
-      // by a nose.
-      val DeltaId = raw"delta-v(\d+)(?:-r\d+)?".r
-      checkLease()
-      fs.listStatus(root).foreach { s =>
-        val name = s.getPath.getName
-        val withinCeiling = name match {
-          case DeltaId(v) => v.toLong <= maxListed
-          case _ => false
-        }
-        if (name.startsWith("delta-v") && withinCeiling
-            && !live.contains(s.getPath.toUri.getPath))
-          fs.delete(s.getPath, true)
-      }
-      fs.listStatus(mdir).foreach { s =>
-        val keep = s.getPath.getName match {
-          // same ceiling guard: a manifest published by a concurrent
-          // drain after our listing (v > maxListed) is never touched
-          case ManifestName(v) => retained.contains(v.toLong) || v.toLong > maxListed
-          case _ => false
-        }
-        if (!keep) fs.delete(s.getPath, false)
-      }
-    } finally fs.delete(vacuumMarkerPath(dir), false)
-  }
-
   // ---- manifest persistence (tiny hand-rolled JSON — no new deps) ----
 
   private val ManifestDir = "_graft_manifest"
   private val ManifestName = raw"v(\d+)\.json".r
-
-  /** Drain-lease marker at the store root (NOT inside the manifest dir,
-    * whose cleanup loop deletes unrecognized names; the root loop only
-    * touches `delta-v*`).
-    */
-  private[streaming] def leasePath(dir: String): HPath =
-    new HPath(s"$dir/_graft_drain.lease")
-
-  /** Plant the drain lease carrying a fresh per-drain nonce.
-    * Overwrite-acquire stays the crash-recovery semantics (a lease left
-    * by a dead drain is superseded), but the nonce closes the round-15
-    * advice hole: single-drain is a documented assumption, and without
-    * it an ACCIDENTAL second concurrent drain that refused on a vacuum
-    * marker deleted the shared lease file — destroying the protection
-    * of the still-running first drain for the rest of its run. Release
-    * now only deletes the file while it still carries this drain's
-    * nonce, so a contract-violating drain's exit is benign.
-    */
-  private def plantLease(fs: FileSystem, dir: String): String = {
-    val nonce = java.util.UUID.randomUUID.toString
-    val out = fs.create(leasePath(dir), true)
-    try out.write(nonce.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    nonce
-  }
-
-  /** Delete the lease only if it still carries `nonce` — i.e. no later
-    * drain has overwrite-acquired it in the meantime. Best-effort (the
-    * read-then-delete is not atomic); the property it restores is
-    * "my exit never removes someone else's live lease".
-    */
-  private def releaseLeaseIfOurs(fs: FileSystem, dir: String, nonce: String): Unit =
-    try {
-      val in = fs.open(leasePath(dir))
-      val content =
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      if (content == nonce) { val _ = fs.delete(leasePath(dir), false) }
-    } catch { case _: java.io.FileNotFoundException => () }
-
-  /** Vacuum-in-progress marker at the store root — the vacuum-side half
-    * of the mutual-exclusion handshake (round-13 advice: the lease was
-    * one-sided — vacuum refused while a drain ran, but nothing made a
-    * starting drain or a racing [[pinVersion]] wait for a running
-    * vacuum). Both sides PLANT-THEN-CHECK: vacuum plants this marker
-    * before checking the lease; a drain plants the lease (and a pin its
-    * pin file) before checking this marker. Whatever the interleaving,
-    * at least one side sees the other and backs off loudly — the
-    * both-proceed window is closed without a lock server.
-    *
-    * A marker left by a vacuum killed mid-run blocks drains and pins
-    * until it is cleared: the next vacuum run overwrite-plants and
-    * removes it on completion, or the operator deletes the file after
-    * confirming no vacuum is running (same recovery story as a crashed
-    * drain's lease).
-    */
-  private[streaming] def vacuumMarkerPath(dir: String): HPath =
-    new HPath(s"$dir/_graft_vacuum.inprogress")
-
-  // reader pins live at the root for the same reason as the lease
-  private val PinPrefix = "_graft_pin_"
-  private val PinName = raw"_graft_pin_v(\d+)\.[0-9a-f-]+".r
 
   private def fileSystem(spark: SparkSession, p: HPath): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -645,7 +316,7 @@ object StreamingUpsert {
     fs.mkdirs(mdir)
     val body = m.buckets
       .map { case (b, p) => s""""$b":"${esc(p)}"""" }
-      .mkString(s"""{"version":${m.version},"highWater":${m.highWater},"buckets":{""", ",", "}}")
+      .mkString(s"""{"version":${m.version},"buckets":{""", ",", "}}")
     // write-then-rename so a reader never sees a torn manifest
     val tmp = new HPath(mdir, s"v${m.version}.json.tmp")
     val fin = new HPath(mdir, s"v${m.version}.json")
@@ -685,13 +356,12 @@ object StreamingUpsert {
     val body =
       try new String(in.readAllBytes(), StandardCharsets.UTF_8)
       finally in.close()
-    val highWater = """"highWater":(-?\d+)""".r.findFirstMatchIn(body)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(s"bad manifest: $path"))
-    val bucketsBody = body.substring(body.indexOf(""""buckets":{""") + 11)
+    val at = body.indexOf(""""buckets":{""")
+    if (at < 0) throw new IllegalStateException(s"bad manifest: $path")
+    val bucketsBody = body.substring(at + 11)
     val buckets = SortedMap.from(
       """"(\d+)":"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(bucketsBody)
         .map(m => m.group(1).toInt -> unesc(m.group(2))))
-    Some(Manifest(buckets, highWater, version))
+    Some(Manifest(buckets, version))
   }
 }

@@ -134,18 +134,16 @@ class LlmSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("pii scan counts, flags, and redacts with portable patterns") {
-    val r = df(
+    val r = TextAnalysis.piiScan(df(
       1L -> "mail me at bob.smith@corp-mail.io today",
       2L -> "call 555-0199 or 555-1234 now",
-      3L -> "nothing sensitive here 5555-12345")
-      .select(col("doc_id") +: TextAnalysis.piiFeatures(col("text"))
-        .map { case (n, c) => c.as(n) }: _*)
+      3L -> "nothing sensitive here 5555-12345"), "doc_id", col("text"))
       .orderBy("doc_id").collect()
-    assert(r(0).getInt(1) == 1 && r(0).getInt(2) == 0 && r(0).getBoolean(3))
+    assert(r(0).getLong(1) == 1 && r(0).getLong(2) == 0 && r(0).getBoolean(3))
     assert(r(0).getString(4) == "mail me at <EMAIL> today")
-    assert(r(1).getInt(2) == 2 && r(1).getString(4) == "call <PHONE> or <PHONE> now")
+    assert(r(1).getLong(2) == 2 && r(1).getString(4) == "call <PHONE> or <PHONE> now")
     // \b guards: digits glued to more digits are not a phone
-    assert(r(2).getInt(1) == 0 && r(2).getInt(2) == 0 && !r(2).getBoolean(3))
+    assert(r(2).getLong(1) == 0 && r(2).getLong(2) == 0 && !r(2).getBoolean(3))
     assert(r(2).getString(4) == "nothing sensitive here 5555-12345")
   }
 

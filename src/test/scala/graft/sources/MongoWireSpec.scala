@@ -152,9 +152,16 @@ class MongoWireSpec extends AnyFunSuite with graft.SparkTestSession {
         """"whole":"2024-01-01T00:00:00",""" +
         """"n":42,"f":5.0,"s":"a\"b","ok":false,"z":null,""" +
         """"arr":[7,"507f1f77bcf86cd799439012"]}""")
-    // the rendering matches MongoSource.isoNaive on the same instant
-    assert(MongoSource.isoNaive("2024-02-29T23:59:59.5Z")
-      .contains(BsonCodec.isoNaiveMillis(1709251199500L)))
+    // the rendering matches MongoSource.isoNaive on the same instant:
+    // fractional, pre-1970 (floorDiv/floorMod) and whole-second
+    Seq(
+      "2024-02-29T23:59:59.5Z" -> 1709251199500L,
+      "1969-12-31T23:59:58.5Z" -> -1500L,
+      "2024-01-01T00:00:00Z" -> 1704067200000L).foreach { case (text, ms) =>
+      assert(MongoSource.isoNaive(text).contains(BsonCodec.isoNaiveMillis(ms)),
+        s"$text vs $ms")
+    }
+    assert(BsonCodec.isoNaiveMillis(-1500L) == "1969-12-31T23:59:58.500000")
   }
 
   test("OP_MSG golden frame: hello command, pinned byte-for-byte") {

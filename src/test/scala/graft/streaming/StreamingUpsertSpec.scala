@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 
 /** Contracts of the bucketed foreachBatch upsert sink:
   *
@@ -17,9 +17,10 @@ import graft.SparkTestSession
   *  - restart recovery: a second drain against the same snapshot dir
   *    and checkpoint compacts against the RECOVERED manifest, not an
   *    empty one;
-  *  - tombstone horizon: expired tombstones leave the snapshot, and the
-  *    paired late-record rejection keeps an ancient upsert from
-  *    resurrecting the deleted key.
+  *  - crash replay: a batch replayed before or after its manifest was
+  *    published converges without touching the files it reads, and a
+  *    checkpoint that does not belong to the store is refused;
+  *  - time travel: every published version reads back exactly.
   */
 class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
 
@@ -35,13 +36,12 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
   private def drain(
       root: Path,
       batch: Seq[(Long, Long, Long, String)],
-      buckets: Int,
-      horizon: Long = Long.MaxValue): String = {
+      buckets: Int): String = {
     val staging = root.resolve("staging").toString
     rows(batch: _*).coalesce(1).write.mode("append").parquet(staging)
     val stream = spark.readStream.schema(rows().schema).parquet(staging)
     StreamingUpsert.mergeStream(spark, stream, root.resolve("snap").toString,
-      "k", root.resolve("checkpoint").toString, buckets, horizon)
+      "k", root.resolve("checkpoint").toString, buckets)
   }
 
   private def live(snapDir: String): Map[Long, Long] =
@@ -80,6 +80,13 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
     assert(out.length == 1 && out.head.getString(3) == "delete")
   }
 
+  test("a drain admits every __seq, Long.MinValue included") {
+    val root = Files.createTempDirectory("graft-upsert-minseq")
+    val snap = drain(root, Seq((1L, 10L, 5L, "upsert")), buckets = 2)
+    drain(root, Seq((2L, 20L, Long.MinValue, "upsert")), buckets = 2)
+    assert(live(snap) == Map(1L -> 10L, 2L -> 20L))
+  }
+
   test("untouched buckets carry forward byte-identical; restart recovers the manifest") {
     val buckets = 8
     // pick three keys: kA alone in its bucket, kB/kB2 sharing a different one
@@ -114,8 +121,6 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
     assert(m2.buckets(bB) != m1.buckets(bB))
     // ...and its exact bytes
     assert(bucketBytes(m2.buckets(bA)) == bytesA1)
-    // high water advanced across the restart
-    assert(m2.highWater == 3L && m1.highWater == 2L)
   }
 
   test("worst case: a batch touching ALL buckets degenerates to a full rewrite — correctly") {
@@ -144,32 +149,6 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
     assert(m2.buckets.values.forall(_.contains(s"delta-v")),
       s"unexpected bucket paths: ${m2.buckets}")
     assert(live(snap) == all2.map(t => t._1 -> t._2).toMap)
-  }
-
-  test("tombstone expiry drops old tombstones; late-record rejection blocks resurrection") {
-    val root = Files.createTempDirectory("graft-upsert-ttl")
-    val horizon = 10L
-    // batch 1: key 7 deleted at 105; key 5 deleted at 199 (in-horizon);
-    // key 9's upsert at 200 sets the high water -> expiry cutoff 190
-    val snap = drain(root, Seq(
-      (7L, 1L, 100L, "upsert"), (7L, 0L, 105L, "delete"),
-      (5L, 2L, 150L, "upsert"), (5L, 0L, 199L, "delete"),
-      (9L, 3L, 200L, "upsert")), buckets = 1, horizon = horizon)
-    val all1 = spark.read.parquet(
-      StreamingUpsert.readLatestManifest(spark, snap).get.buckets.values.toSeq: _*)
-    // key 7's tombstone (seq 105 < 190) expired — no row at all; key 5's
-    // (199 >= 190) retained
-    assert(all1.filter(col("k") === 7L).count() == 0L)
-    assert(all1.filter(col("k") === 5L && col("__op") === "delete").count() == 1L)
-    assert(live(snap) == Map(9L -> 3L))
-
-    // batch 2 (restart): an ancient upsert for key 7 (seq 108 < 190) is
-    // REJECTED as too late -> the expired tombstone cannot be bypassed;
-    // an in-horizon late upsert for key 5 (seq 195 >= 190) is admitted
-    // but still loses to the retained tombstone at 199
-    drain(root, Seq((7L, 99L, 108L, "upsert"), (5L, 98L, 195L, "upsert")),
-      buckets = 1, horizon = horizon)
-    assert(live(snap) == Map(9L -> 3L))
   }
 
   test("crash between bucket write and manifest publish: readers see only committed state; restart replays idempotently") {
@@ -279,56 +258,13 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
     assert(liveAt(0L) == Map(1L -> 10L, 2L -> 20L))
     assert(live(snap) == Map(2L -> 21L, 3L -> 30L))
     intercept[IllegalStateException] { liveAt(99L) }
-    // vacuum keeps only the latest manifest: history is reclaimed and
-    // time travel to v0 now fails loudly instead of reading torn state
-    StreamingUpsert.vacuum(spark, snap)
-    intercept[IllegalStateException] { liveAt(0L) }
-    assert(live(snap) == Map(2L -> 21L, 3L -> 30L))
-  }
-
-  test("retention-window vacuum: retained versions stay readable, older fail loudly, reclaim is exactly the complement") {
-    val root = Files.createTempDirectory("graft-upsert-ret")
-    val snap = drain(root, Seq((1L, 10L, 1L, "upsert")), buckets = 2)
-    drain(root, Seq((2L, 20L, 2L, "upsert")), buckets = 2)
-    drain(root, Seq((1L, 11L, 3L, "upsert")), buckets = 2)
-    def liveAt(v: Long) =
-      StreamingUpsert.snapshotAt(spark, snap, v)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the closure of the retained manifests, BEFORE vacuuming
-    val retainedDirs = (1L to 2L).flatMap(v =>
-      StreamingUpsert.readManifestVersion(spark, snap, v).get
-        .buckets.values.map(p =>
-          java.nio.file.Path.of(p).getParent.getFileName.toString)).toSet
-    import scala.jdk.CollectionConverters._
-    def deltaDirs = Files.list(java.nio.file.Path.of(snap)).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("delta-v")).toSet
-    val reclaimable = deltaDirs -- retainedDirs
-
-    StreamingUpsert.vacuum(spark, snap, retainLast = 2)
-    // retained versions keep time-traveling (v1's buckets may live in
-    // delta-v0 via carry-forward — the closure keeps them)...
-    assert(liveAt(1L) == Map(1L -> 10L, 2L -> 20L))
-    assert(liveAt(2L) == Map(1L -> 11L, 2L -> 20L))
-    assert(live(snap) == Map(1L -> 11L, 2L -> 20L))
-    // ...older history fails loudly...
-    intercept[IllegalStateException] { liveAt(0L) }
-    // ...and the reclaimed file set is EXACTLY the complement of the
-    // retained closure
-    assert(deltaDirs == retainedDirs,
-      s"vacuum kept non-closure dirs or dropped closure dirs: " +
-        s"have $deltaDirs, closure $retainedDirs (reclaimable was $reclaimable)")
-    val manifests = Files.list(java.nio.file.Path.of(snap, "_graft_manifest"))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filterNot(_.startsWith(".")).toSet
-    assert(manifests == Set("v1.json", "v2.json"))
   }
 
   test("retry suffix survives vacuum: a second replay never reuses a surviving retry name") {
-    // The round-11 advisory scenario: derive the retry suffix from a
-    // COUNT of surviving attempts and a post-vacuum second replay
-    // regenerates the name of the still-referenced survivor
-    // (delta-v1-r1), overwriting the files its own prev scan reads.
-    // The suffix must come from max(existing -rN) + 1 instead.
+    // A second crash-after-manifest replay of the same batch must not
+    // regenerate the name of the still-referenced survivor
+    // (delta-v1-r1), which would overwrite the files its own prev scan
+    // reads. The suffix comes from max(existing -rN) + 1.
     val root = Files.createTempDirectory("graft-upsert-rr")
     val snap = drain(root,
       Seq((1L, 10L, 1L, "upsert"), (2L, 20L, 2L, "upsert")), buckets = 1)
@@ -347,10 +283,9 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
     replayBatch1()
     val mR1 = StreamingUpsert.readLatestManifest(spark, snap).get
     assert(mR1.buckets.values.exists(_.contains("delta-v1-r1")), s"${mR1.buckets}")
-    // vacuum reclaims the superseded base attempt (delta-v1); only the
-    // surviving, referenced retry remains — the count-shrink trap
-    StreamingUpsert.vacuum(spark, snap)
-    assert(!Files.exists(java.nio.file.Path.of(snap, "delta-v1")))
+    // the superseded base attempt (delta-v1) removed by hand: only the
+    // referenced retry remains — the trap a count of attempts falls in
+    TempDirs.deleteRecursively(Path.of(snap, "delta-v1"))
     // second replay of the same batch: must pick a FRESH name (r2),
     // read prev from r1 untouched, and stay correct
     replayBatch1()
@@ -361,65 +296,13 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
     assert(live(snap) == Map(1L -> 10L, 2L -> 21L))
   }
 
-  test("vacuum drops superseded deltas and keeps the snapshot readable") {
-    val root = Files.createTempDirectory("graft-upsert-vac")
-    val snap = drain(root, Seq((1L, 10L, 1L, "upsert")), buckets = 1)
-    drain(root, Seq((1L, 11L, 2L, "upsert")), buckets = 1)
-    StreamingUpsert.vacuum(spark, snap)
-    import scala.jdk.CollectionConverters._
-    val dirs = Files.list(java.nio.file.Path.of(snap)).iterator().asScala
-      .map(_.getFileName.toString).toSet
-    // delta-v0 was fully superseded by delta-v1
-    assert(!dirs.contains("delta-v0") && dirs.contains("delta-v1"))
-    assert(live(snap) == Map(1L -> 11L))
-    // only the latest manifest remains (ignoring checksum sidecars the
-    // local Hadoop FS keeps for retained files)
-    val manifests = Files.list(java.nio.file.Path.of(snap, "_graft_manifest"))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filterNot(_.startsWith(".")).toSet
-    assert(manifests == Set("v1.json"))
-  }
-
-  test("vacuum-during-drain is rejected by the lease; breakLease overrides; a finished drain leaves no lease") {
-    val root = Files.createTempDirectory("graft-upsert-lease")
-    val snap = drain(root, Seq((1L, 10L, 1L, "upsert")), buckets = 1)
-    drain(root, Seq((1L, 11L, 2L, "upsert")), buckets = 1)
-
-    // a completed drain releases its lease: vacuum runs freely
-    val leaseFile = java.nio.file.Path.of(
-      StreamingUpsert.leasePath(snap).toUri.getPath)
-    assert(!Files.exists(leaseFile),
-      "drain must release the lease on completion")
-    StreamingUpsert.vacuum(spark, snap)
-
-    // simulate an in-flight drain (exactly what mergeStream plants)
-    drain(root, Seq((2L, 20L, 3L, "upsert")), buckets = 1)
-    Files.createFile(leaseFile)
-    val e = intercept[IllegalStateException] {
-      StreamingUpsert.vacuum(spark, snap)
-    }
-    assert(e.getMessage.contains("lease"))
-    // refusal must not have reclaimed anything: both manifests readable
-    assert(live(snap) == Map(1L -> 11L, 2L -> 20L))
-
-    // crashed-drain recovery path: operator confirms and breaks the lease
-    StreamingUpsert.vacuum(spark, snap, retainLast = 1, breakLease = true)
-    assert(live(snap) == Map(1L -> 11L, 2L -> 20L))
-    import scala.jdk.CollectionConverters._
-    val manifests = Files.list(java.nio.file.Path.of(snap, "_graft_manifest"))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filterNot(_.startsWith(".")).toSet
-    assert(manifests == Set("v2.json"))
-    Files.deleteIfExists(leaseFile)
-  }
-
   test("batch ids restarting BELOW existing history are REFUSED; every committed version stays byte-untouched") {
     // A fresh checkpoint pointed at an existing store makes the engine
     // deliver batch ids 0,1,… again while manifests v0..vN and their
     // delta dirs already exist. Round 13 only half-fixed this
     // (knownPublishedThrough protected delta DIRS, but writeManifest
-    // still rewrote v0.json in place — shadowing history pins promise
-    // stays byte-untouched — and readLatestManifest kept resolving the
+    // still rewrote v0.json in place — shadowing history time travel
+    // promises stays byte-untouched — and readLatestManifest kept resolving the
     // OLD vN, hiding the new run's writes from the latest view). The
     // round-14 contract: an id strictly below the published ceiling is
     // an operator error and mergeBatch refuses LOUDLY, leaving the
@@ -450,8 +333,7 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
     val e = intercept[IllegalStateException] {
       StreamingUpsert.mergeBatch(spark, st,
         rows((kB, 40L, 4L, "upsert")), 0L, snap, "k",
-        buckets = 2, tombstoneHorizon = Long.MaxValue,
-        knownPublishedThrough = ceiling)
+        buckets = 2, knownPublishedThrough = ceiling)
     }
     assert(e.getMessage.contains("checkpoint"), e.getMessage)
 
@@ -479,109 +361,21 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkTestSession {
       Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
     assert(causes(se).exists(c => c.isInstanceOf[IllegalStateException]
       && c.getMessage.contains("checkpoint")), se.toString)
-    // the failed drain released its lease and changed nothing
-    assert(!Files.exists(java.nio.file.Path.of(
-      StreamingUpsert.leasePath(snap).toUri.getPath)))
+    // the failed drain left nothing at the store root but deltas and
+    // manifests, and changed nothing
+    import scala.jdk.CollectionConverters._
+    val rootNames = Files.list(java.nio.file.Path.of(snap)).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
+    assert(rootNames.forall(n => n.startsWith("delta-v") || n == "_graft_manifest"),
+      s"unexpected files at the store root: $rootNames")
     (0L to 2L).foreach(v => assert(liveAt(v) == before(v), s"v$v changed"))
 
     // the legitimate crash replay (id == ceiling) still proceeds and
     // stays idempotent: replaying v2's content publishes v2 again
     val st2 = StreamingUpsert.mergeBatch(spark, st,
       rows((kA, 30L, 3L, "upsert")), 2L, snap, "k",
-      buckets = 2, tombstoneHorizon = Long.MaxValue,
-      knownPublishedThrough = ceiling)
+      buckets = 2, knownPublishedThrough = ceiling)
     assert(st2.version == 2L)
     assert(liveAt(2L) == before(2L))
-  }
-
-  test("a pinned version survives vacuum; release makes it reclaimable; pinning a missing version fails") {
-    val root = Files.createTempDirectory("graft-upsert-pin")
-    val snap = drain(root, Seq((1L, 10L, 1L, "upsert")), buckets = 1)
-    drain(root, Seq((1L, 11L, 2L, "upsert")), buckets = 1)
-    drain(root, Seq((1L, 12L, 3L, "upsert")), buckets = 1)
-
-    def liveAt(v: Long) =
-      StreamingUpsert.snapshotAt(spark, snap, v)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    // pin the OLDEST version, vacuum to latest-only: the pin must hold
-    val pin = StreamingUpsert.pinVersion(spark, snap, 0L)
-    StreamingUpsert.vacuum(spark, snap, retainLast = 1)
-    assert(liveAt(0L) == Map(1L -> 10L), "pinned v0 must stay readable")
-    assert(liveAt(2L) == Map(1L -> 12L))
-    // the unpinned middle version was reclaimed
-    assertThrows[IllegalStateException](liveAt(1L))
-
-    // release, vacuum again: v0 is now reclaimable
-    pin.release(spark)
-    StreamingUpsert.vacuum(spark, snap, retainLast = 1)
-    assertThrows[IllegalStateException](liveAt(0L))
-    assert(liveAt(2L) == Map(1L -> 12L))
-
-    // pinning a vacuumed (or never-committed) version fails loudly
-    assertThrows[IllegalStateException](
-      StreamingUpsert.pinVersion(spark, snap, 0L))
-    assertThrows[IllegalStateException](
-      StreamingUpsert.pinVersion(spark, snap, 99L))
-    // release is idempotent
-    pin.release(spark)
-  }
-
-  test("pin and drain racing a running vacuum fail loudly at acquisition (marker handshake) and clean up after themselves") {
-    // The round-13 residual: a pin planted after a running vacuum's pin
-    // listing but verified before its manifest delete reported success
-    // on a version the vacuum then reclaimed — a SILENT loss. The
-    // plant-then-check handshake closes it: vacuum plants an
-    // in-progress marker before listing anything, and pinVersion /
-    // mergeStream check the marker after planting their own file, so a
-    // pin that a running vacuum could miss always fails at acquisition.
-    val root = Files.createTempDirectory("graft-upsert-marker")
-    val snap = drain(root, Seq((1L, 10L, 1L, "upsert")), buckets = 1)
-    drain(root, Seq((1L, 11L, 2L, "upsert")), buckets = 1)
-    val marker = java.nio.file.Path.of(
-      StreamingUpsert.vacuumMarkerPath(snap).toUri.getPath)
-
-    // a completed vacuum leaves no marker behind...
-    StreamingUpsert.vacuum(spark, snap, retainLast = 2)
-    assert(!Files.exists(marker), "vacuum leaked its in-progress marker")
-    // ...and neither does one that REFUSES on the drain lease
-    val leaseFile = java.nio.file.Path.of(
-      StreamingUpsert.leasePath(snap).toUri.getPath)
-    Files.createFile(leaseFile)
-    intercept[IllegalStateException] { StreamingUpsert.vacuum(spark, snap) }
-    assert(!Files.exists(marker),
-      "a lease-refused vacuum leaked its in-progress marker")
-    Files.delete(leaseFile)
-
-    // simulate mid-vacuum (exactly what vacuum plants, first thing)
-    Files.createFile(marker)
-
-    // pin racing the vacuum: loud failure, version named, pin file gone
-    val pinErr = intercept[IllegalStateException] {
-      StreamingUpsert.pinVersion(spark, snap, 1L)
-    }
-    assert(pinErr.getMessage.contains("vacuum"), pinErr.getMessage)
-    import scala.jdk.CollectionConverters._
-    def rootNames = Files.list(java.nio.file.Path.of(snap)).iterator().asScala
-      .map(_.getFileName.toString).toSet
-    assert(!rootNames.exists(_.startsWith("_graft_pin_")),
-      "a refused pin left its pin file planted")
-
-    // drain racing the vacuum (store's own checkpoint — the marker
-    // check fires before the stream even starts): loud failure, lease
-    // released, staged-but-undrained data intact for the next run
-    val drainErr = intercept[IllegalStateException] {
-      drain(root, Seq((2L, 20L, 3L, "upsert")), buckets = 1)
-    }
-    assert(drainErr.getMessage.contains("vacuum"), drainErr.getMessage)
-    assert(!Files.exists(leaseFile), "a refused drain left its lease planted")
-
-    // marker cleared (operator recovery / vacuum completion): both
-    // succeed, and the refused run's staged batch drains too
-    Files.delete(marker)
-    val pin = StreamingUpsert.pinVersion(spark, snap, 1L)
-    pin.release(spark)
-    drain(root, Seq((3L, 30L, 4L, "upsert")), buckets = 1)
-    assert(live(snap) == Map(1L -> 11L, 2L -> 20L, 3L -> 30L))
   }
 }

@@ -157,7 +157,7 @@ object UpsertCrashPropertySpec extends Properties("UpsertCrashRecovery") {
         while (committedUpTo < batches.size && guard < 20) {
           guard += 1
           var state = StreamingUpsert.readLatestManifest(spark, dir)
-            .getOrElse(StreamingUpsert.Manifest(SortedMap.empty, Long.MinValue, -1L))
+            .getOrElse(StreamingUpsert.Manifest(SortedMap.empty, -1L))
           // restart-window invariant: every surviving manifest
           // references only directories that are actually on disk
           restartInvariantOk &&= manifestVersions(dir).forall(v =>
@@ -179,8 +179,7 @@ object UpsertCrashPropertySpec extends Properties("UpsertCrashRecovery") {
                 spark, state,
                 batches(i).map(r => (r.k, r.v, r.seq, r.op))
                   .toDF("k", "v", "__seq", "__op"),
-                id, dir, "k", buckets = 2,
-                tombstoneHorizon = Long.MaxValue, crashHook = hook)
+                id, dir, "k", buckets = 2, crashHook = hook)
               committedUpTo = i + 1
             }
           } catch { case _: SimulatedCrash => () }
