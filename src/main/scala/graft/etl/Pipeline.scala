@@ -91,7 +91,7 @@ object Pipeline {
     * other, writes no report row and rethrows the failure as thrown.
     * With a `runKey`, collection `c` lands as batch `runKey/c` and the
     * report rows as batch `runKey/report`: a re-run of the same input
-    * appends no row twice on a sink with a ledger.
+    * appends no row twice on either sink.
     */
   def run(
       spark: SparkSession,
@@ -193,8 +193,8 @@ object Pipeline {
       missingRows.foreach(sink.appendCollection(_, None, audit.auditTable, runKey.map(_ + "/")))
 
     // --- K5 report tables (ui/run_pipeline.py:395-433) --------------------
-    // audit-only frames into the report table: one driver-local write
-    // each, claimed as batch `runKey/report`
+    // audit-only frames into the report table: one write each (from the
+    // driver on Postgres), claimed as batch `runKey/report`
     def report(table: String, rows: DataFrame): Unit =
       sink.appendCollection(Landing.auditOnly(rows.select(
         lit(ingestionDate).cast("date").as("ingestion_date") +:

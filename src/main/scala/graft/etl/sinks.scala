@@ -6,6 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.{ParquetLandingSource, PgLeg}
+
 /** The sink plane (K1–K5). The pipeline writes through this interface so
   * tests run against Parquet while production targets Postgres over the
   * wire protocol ([[PgWireSink]]) — replacing the reference's
@@ -17,11 +19,12 @@ import org.apache.spark.storage.StorageLevel
   * thread, then lands its collections concurrently, so
   * [[appendCollection]] and [[append]] may run on several threads at
   * once, into the same table (every collection appends audit rows, and
-  * two collections may map to one target). [[PgWireSink]] needs nothing
-  * for that: each partition of a write is its own transaction, and
-  * Postgres takes concurrent COPYs into one table. [[ParquetSink]] serialises appends
-  * into one table directory. A decorator that records calls must
-  * record them thread-safely.
+  * two collections may map to one target). Neither sink needs a lock
+  * for that: each partition of a [[PgWireSink]] write is its own
+  * transaction, and Postgres takes concurrent COPYs into one table;
+  * each [[ParquetSink]] write stages its files in a temp directory of
+  * its own. A decorator that records calls must record them
+  * thread-safely.
   */
 trait TableSink {
   def tableExists(tableName: String): Boolean
@@ -51,15 +54,19 @@ trait TableSink {
   /** Lands one collection's [[Landing]] frame: each row's target
     * columns in `targetTable` (None: the rows have no table to land in)
     * unless the row is flagged audit-only, and its audit columns in
-    * `auditTable`. `batchId` names the write for a sink that keeps an
-    * exactly-once ledger; other sinks ignore it.
+    * `auditTable`. `batchId` names the write: writing a batch again
+    * lands no row twice.
+    *
+    * `Pipeline.run` reads its report from metrics observed in `rows`.
+    * Both sinks override this with one write job that lands both tables
+    * and persists nothing, exactly-once per `batchId`.
     *
     * With a target table this default persists `rows` and appends the
     * target and audit projections of that one copy, so the transform
-    * runs once; without one it is one plain append. `Pipeline.run`
-    * reads its report from metrics observed in `rows`. [[PgWireSink]]
-    * overrides it with one write that lands both tables in one
-    * transaction per partition and persists nothing.
+    * runs once; without one it is one plain append. It ignores
+    * `batchId`. It is kept only for the sinks that decorate another
+    * (the benchmark's `TracedSink`, the test decorators), which inherit
+    * it; delete it once `TracedSink` forwards `appendCollection`.
     */
   def appendCollection(rows: DataFrame, targetTable: Option[String],
       auditTable: String, batchId: Option[String] = None): Unit =
@@ -110,13 +117,14 @@ object Landing {
 /** Test/local sink: one parquet directory per table under `baseDir`
   * (`schema.table` → `schema.table/`). Array columns (the audit table's
   * `missing_columns`) are stored as JSON strings to mirror the JSONB
-  * wire format. Appends into one directory take turns: concurrent Spark
-  * file writes into one output path share `<dir>/_temporary/0`, and the
-  * first commit deletes it under the others.
+  * wire format. Every append is one
+  * [[graft.sources.ParquetLandingWrite]]: [[append]] of one leg,
+  * [[appendCollection]] of a target and an audit leg in one job with
+  * nothing persisted, exactly-once per `batchId`. Appends into one
+  * directory run concurrently: each write stages its files in a temp
+  * directory of its own.
   */
 final class ParquetSink(baseDir: String) extends TableSink {
-
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
 
   private def dir(tableName: String) =
     Paths.get(baseDir, SchemaScript.normalizeTableName(tableName))
@@ -132,7 +140,11 @@ final class ParquetSink(baseDir: String) extends TableSink {
     val _ = Files.createDirectories(dir(tableName))
   }
 
-  override def append(df: DataFrame, tableName: String): Unit = {
+  private def leg(tableName: String, columns: Seq[(String, String)], when: Option[String] = None) =
+    PgLeg(dir(tableName).toString, columns, when)
+
+  /** Lands `df` in `legs` as one write job, array columns as JSON. */
+  private def write(df: DataFrame, legs: Seq[PgLeg], batchId: Option[String]): Unit = {
     val jsonified = df.schema.fields.foldLeft(df) { (acc, f) =>
       f.dataType match {
         case _: org.apache.spark.sql.types.ArrayType =>
@@ -140,11 +152,26 @@ final class ParquetSink(baseDir: String) extends TableSink {
         case _ => acc
       }
     }
-    val path = dir(tableName).toString
-    locks.computeIfAbsent(path, _ => new AnyRef).synchronized {
-      jsonified.write.mode("append").parquet(path)
-    }
+    val w = jsonified.write.format(classOf[ParquetLandingSource].getName)
+      .option("legs", PgLeg.encode(legs)).mode("append")
+    batchId.fold(w)(w.option("batchId", _)).save()
   }
+
+  override def append(df: DataFrame, tableName: String): Unit =
+    write(df, Seq(leg(tableName, df.columns.toSeq.map(c => c -> c))), None)
+
+  /** One job: the target leg takes the [[Landing.HasTarget]] rows, the
+    * audit leg every row, and each task writes both tables' files.
+    * With a `batchId`, a partition whose file a table already holds
+    * from an earlier write of the batch lands nothing in it (the naming
+    * in `ParquetLandingWrite.scala`), provided the frame's partition
+    * contents are deterministic.
+    */
+  override def appendCollection(rows: DataFrame, targetTable: Option[String],
+      auditTable: String, batchId: Option[String]): Unit =
+    write(rows, targetTable.map(t => leg(t,
+      Landing.targetColumns(rows).map(c => c -> c), Some(Landing.HasTarget))).toSeq :+
+      leg(auditTable, Landing.auditColumns(rows)), batchId)
 
   def read(spark: org.apache.spark.sql.SparkSession, tableName: String): DataFrame =
     spark.read.parquet(dir(tableName).toString)

@@ -19,9 +19,9 @@ object StreamingEtl {
     * exists and stops (batch-like test/backfill mode); pass
     * `Trigger.ProcessingTime(...)` for continuous ingestion. The query
     * id is kept in the checkpoint, so a replayed epoch keeps its batch
-    * id: exactly-once on a sink with a ledger ([[graft.etl.PgWireSink]]).
-    * [[graft.etl.ParquetSink]] ignores batch ids and appends an epoch
-    * replayed after a crash a second time.
+    * id: an epoch replayed after a crash lands no row twice on either
+    * sink ([[graft.etl.PgWireSink]]'s ledger, [[graft.etl.ParquetSink]]'s
+    * per-batch file names).
     */
   def run(
       spark: SparkSession,

@@ -468,4 +468,61 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(report.columns.toSeq == Seq("ingestion_date", "object_name", "missing_columns"))
     assert(report.count() == 0)
   }
+
+  private def keyedRunInput(): ListMap[String, DataFrame] = ListMap(
+    "customers" -> docs((1 to 20).map(i => s"""{"customer_id": $i, "name": "c$i"}""")),
+    "orders" -> docs((101 to 120).map(i => s"""{"order_id": $i, "amount": ${i % 7}}""")))
+
+  test("two runs under one run key land one run's target, audit and report rows") {
+    val sink = new ParquetSink(Files.createTempDirectory("graft-run-key").toString)
+    val app = appConfig("CREATE TABLE IF NOT EXISTS public.ghost (x TEXT);")
+    val mapping = MappingConfig(ListMap(
+      "customers" -> customersMapping, "orders" -> ordersMapping))
+    def run(key: String) = Pipeline.run(spark, keyedRunInput(), app, mapping, sink,
+      clock = lit("2026-02-03 04:05:06").cast("timestamp"), ingestionDate = "2026-02-03",
+      runKey = Some(key))
+    def landed() = Seq("public.customers", "public.orders", app.audit.auditTable,
+      "doc_audit.missing_collections_report", "doc_audit.missing_attributes_report")
+      .map(sink.read(spark, _).count())
+    run("run-1")
+    assert(landed() == Seq(20L, 20L, 41L, 3L, 2L))
+    run("run-1")
+    assert(landed() == Seq(20L, 20L, 41L, 3L, 2L))
+    // a new key is a new batch
+    run("run-2")
+    assert(landed() == Seq(40L, 40L, 82L, 6L, 4L))
+  }
+
+  test("a Parquet run lands each mapped collection in one job and stores no RDD block") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+    val sink = new ParquetSink(Files.createTempDirectory("graft-receipt").toString)
+    val app = appConfig("")
+    val mapping = MappingConfig(ListMap(
+      "customers" -> customersMapping, "orders" -> ordersMapping))
+    val input = keyedRunInput()
+    val jobs = new AtomicInteger
+    val blocks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { val _ = jobs.incrementAndGet() }
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isRDD && e.blockUpdatedInfo.storageLevel.isValid) {
+          val _ = blocks.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val result =
+      try Pipeline.run(spark, input, app, mapping, sink,
+        clock = lit("2026-02-03 04:05:06").cast("timestamp"), ingestionDate = "2026-02-03")
+      finally { ListenerBusDrain.drain(sc); sc.removeSparkListener(listener) }
+    // one write job per mapped collection, one per report table
+    assert(jobs.get == 2 + 2)
+    assert(blocks.get == 0)
+    assert(Seq("public.customers", "public.orders", app.audit.auditTable)
+      .map(sink.read(spark, _).count()) == Seq(20L, 20L, 40L))
+    assert(ReportReference.observed(result) ==
+      Seq(("customers", 20L, 0L, 0L, 20L), ("orders", 20L, 0L, 0L, 20L)))
+  }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.etl.{ColumnDef, Landing, PgConn, PgWireSink, SchemaManager}
+import graft.etl.{ColumnDef, CrashOnceSink, Landing, PgConn, PgWireSink, SchemaManager}
 
 /** Live-server round trip for the wire-protocol plane (round-14 verdict
   * carried item #1, Postgres half): boots a real scratch PostgreSQL 15
@@ -479,30 +479,6 @@ class PgLiveRoundTripSpec extends AnyFunSuite with SparkTestSession {
     assert(reference == Seq(("customers", 3L, 1L, 0L, 2L)))
     assert(ReportReference.report(landed("doc_audit.missing_attributes_report")) ==
       ReportReference.missingAttributes(audit))
-  }
-
-  /** Forwards every call to `inner`, and throws once, right after the
-    * first inner `appendCollection` for which `crashAfter(targetTable,
-    * batchId)` holds has returned: the window between the database
-    * commit and the caller's own bookkeeping.
-    */
-  private final class CrashOnceSink(inner: graft.etl.TableSink,
-      crashAfter: (Option[String], Option[String]) => Boolean) extends graft.etl.TableSink {
-    import org.apache.spark.sql.DataFrame
-    private val crashed = new java.util.concurrent.atomic.AtomicBoolean
-    override def tableExists(tableName: String): Boolean = inner.tableExists(tableName)
-    override def createSchema(schemaName: String): Unit = inner.createSchema(schemaName)
-    override def createTable(tableName: String, columns: Seq[ColumnDef]): Unit =
-      inner.createTable(tableName, columns)
-    override def append(df: DataFrame, tableName: String): Unit = inner.append(df, tableName)
-    override def prepare(probe: Seq[String],
-        create: Seq[(String, Seq[ColumnDef])]): Set[String] = inner.prepare(probe, create)
-    override def appendCollection(rows: DataFrame, targetTable: Option[String],
-        auditTable: String, batchId: Option[String]): Unit = {
-      inner.appendCollection(rows, targetTable, auditTable, batchId)
-      if (crashAfter(targetTable, batchId) && crashed.compareAndSet(false, true))
-        throw new RuntimeException("injected post-commit crash")
-    }
   }
 
   test("live: StreamingEtl replays an epoch that crashed after its commit without landing a row twice") {

@@ -84,4 +84,40 @@ class StreamingEtlSpec extends AnyFunSuite with SparkTestSession {
       .toDF("doc_id", "ts").withColumn("ts", col("ts").cast("timestamp"))
     assert(deduped.withWatermark("ts", "1 hour").dropDuplicates("doc_id").count() == 2)
   }
+
+  test("ParquetSink: an epoch replayed after a crash past its landing lands every row once") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import spark.implicits._
+    val staging = Files.createTempDirectory("graft-pq-se-staging")
+    Seq(1 to 12, 13 to 25).zipWithIndex.foreach { case (ids, i) =>
+      Files.writeString(staging.resolve(s"part-$i.jsonl"),
+        ids.map(id => s"""{"person_id": $id, "name": "p$id"}""").mkString("", "\n", "\n"))
+    }
+    val checkpoint = Files.createTempDirectory("graft-pq-se-ckpt").toString
+    val sink = new ParquetSink(Files.createTempDirectory("graft-pq-se-sink").toString)
+    val cm = CollectionMapping("public.people_eo", "raw_json", "person_id", ListMap(
+      "person_id" -> AttributeMapping("person_id", "integer"),
+      "name" -> AttributeMapping("name", "text")))
+    sink.createTable(cm.targetTable, Seq.empty)
+    // the first run crashes right after epoch 0 landed, before Spark
+    // commits it in the checkpoint
+    val crashing = new CrashOnceSink(sink, (_, batch) => batch.forall(_.endsWith("/0")))
+    def run(through: TableSink) = StreamingEtl.run(spark, staging.toString, checkpoint,
+      "people", cm, EtlDefaults.runtime, EtlDefaults.audit, through)
+
+    val first = run(crashing)
+    val failed = intercept[StreamingQueryException](first.awaitTermination(60000))
+    assert(failed.getMessage.contains("injected post-commit crash"))
+    val restarted = run(sink) // epoch 0 is replayed under the same query id
+    assert(restarted.awaitTermination(60000))
+    assert(restarted.exception.isEmpty)
+    assert(restarted.id == first.id)
+
+    val people = sink.read(spark, cm.targetTable).select("person_id").as[Int]
+      .collect().sorted.toSeq
+    val audited = sink.read(spark, EtlDefaults.audit.auditTable).select("object_id").as[String]
+      .collect().map(_.toInt).sorted.toSeq
+    assert((people.size, audited.size) == ((25, 25)))
+    assert(people == (1 to 25) && audited == (1 to 25))
+  }
 }
